@@ -95,7 +95,7 @@ object Normalize {
     * normalize.py:123. The formatter is the MEASURED winner: an
     * arithmetic rewrite (8-digit range guard + make_date) was
     * prototyped and rejected — interleaved A/B on sf1.0 orders
-    * (tools.DateParseProbe) has the formatter at 1.7 s vs 2.4 s for
+    * had the formatter at 1.7 s vs 2.4 s for
     * make_date, because MakeDate constructs a validity-checked
     * java.time.LocalDate per row while Spark 4's digit-pattern parse
     * is cheaper than it looks (identical output, 0 divergent rows).
@@ -138,8 +138,7 @@ object Normalize {
   /** yyyyMMdd int → DateType, invalid → NULL
     * ([[graft.plans.YyyymmddToDate]]): the int-typed fast path of
     * [[parseYyyymmdd]] (which stays on the string surface — casts,
-    * junk coercion — where the measured formatter wins; see
-    * tools.DateParseProbe). */
+    * junk coercion — where the measured formatter wins). */
   def yyyymmddToDate(c: Column): Column =
     wrap(graft.plans.YyyymmddToDate(expr(c)))
 

@@ -133,7 +133,7 @@ object Quality {
     // a giant multi-key distinct-agg: measured 14× DuckDB at sf1.0.
     // Here every branch is a parallel stage of one job, each scan is
     // column-pruned, and the only material shuffle is per-column
-    // distinct values (Q35Probe: 8.6 s → ~0.8 s at sf1.0).
+    // distinct values (measured: 8.6 s → ~0.8 s at sf1.0).
     val hashable = all.flatMap { c =>
       Seq(count(col(c)).as(s"__n_$c"),
         count(lit(1)).minus(count(col(c))).cast("long").as(s"__nulls_$c")) ++

@@ -337,7 +337,7 @@ object Similarity {
       planesPerTable, dim, seed).cache()
     banded.count()
     retireBandedCaches(Seq(banded))
-    scoredPairsFromBanded(banded, maxBucketRows)
+    scoredPairsFromBandedJoin(banded, maxBucketRows)
   }
 
   /** The vector-carrying band table (vec_id, v, tbl, bkt) —
@@ -346,7 +346,7 @@ object Similarity {
     * streaming fold can band its batch ONCE, derive the id-only band
     * rows for the stored probe layout (`.drop("v")` flows from the
     * same cache), and feed the vector-carrying rows to
-    * [[scoredPairsFromBanded]]. Caller caches.
+    * [[scoredPairsFromBandedJoin]]. Caller caches.
     *
     * `spread = false` skips the pre-projection repartition for
     * callers whose input is already spread to the session's
@@ -400,11 +400,6 @@ object Similarity {
     * downstream aggregate (s16 at sf1.0: 438 vs 151 CPU-s). This join
     * form remains the general pair source and the test-side equality
     * oracle. See [[bucketLocalScoredPairs]] for the contract. */
-  private[graft] def scoredPairsFromBanded(
-      banded: DataFrame,
-      maxBucketRows: Int): DataFrame =
-    scoredPairsFromBandedJoin(banded, maxBucketRows)
-
   private[graft] def scoredPairsFromBandedJoin(
       banded: DataFrame,
       maxBucketRows: Int): DataFrame = {
@@ -443,8 +438,8 @@ object Similarity {
     // quadratic OUTPUT) and the whole Σm² cosine pass lands on the
     // input's file splits — measured on s16 at sf1.0: 259 s at 2
     // tasks on a cold cache vs 11 s at 32 tasks when a prior run's
-    // materialized cache stats happened to force the shuffle
-    // (tools/D09Probe2). Explicit repartition(n, keys) on BOTH sides
+    // materialized cache stats happened to force the shuffle.
+    // Explicit repartition(n, keys) on BOTH sides
     // makes the plan deterministic: keys match the join's equi-keys
     // verbatim (all non-null, plain ===), so no ENSURE_REQUIREMENTS
     // re-shuffle lands for AQE to coalesce, and the explicit n is
@@ -1255,7 +1250,7 @@ object Similarity {
     * `numTables` separate [[hyperplaneBucket]] columns at seeds
     * `seed + 7919·t`, but the multi-table band builders stop inlining
     * 48 dot-product sub-trees into one giant projection method that
-    * the JIT refuses to compile (R15QProbe: ~120 CPU-s → ~0.3 CPU-s
+    * the JIT refuses to compile (measured: ~120 CPU-s → ~0.3 CPU-s
     * per band build at sf1.0). */
   private[graft] def hyperplaneBuckets(vec: Column, numTables: Int,
       planesPerTable: Int, dim: Int, seed: Long): Column = {
@@ -1765,7 +1760,7 @@ object Similarity {
       // at LOWER cost than the 0.861 cb=32/cm=32 pick: finer books
       // shrink the re-rank's wasted candidates, and the ADC table is
       // still only numSub×64 doubles per broadcast query row) —
-      // R12RecallSweep table in BENCH_FULL.md; the >= 0.9 floor is
+      // recall sweep table in BENCH_FULL.md; the >= 0.9 floor is
       // spec-pinned. Memory: codebooks are numSub×codebookK×subDim
       // doubles (4 KB here) broadcast once — no scale concern.
       codebookK: Int = 64,
@@ -1905,7 +1900,7 @@ object Similarity {
       // round-13 MEASURED production default — the round-12 sweep's
       // own frontier (recall@5 0.928 at LOWER cost than nprobe=8's
       // 0.867: fewer re-rank misses outweigh the extra cell scans at
-      // this cell count) — R12RecallSweep table in BENCH_FULL.md;
+      // this cell count) — recall sweep table in BENCH_FULL.md;
       // >= 0.9 spec-pinned. At this DEFAULT cell count a full probe
       // degenerates IVF's coarse prune into per-cell-codebook PQ,
       // which is exactly what the measurement says to do at 10
@@ -2156,7 +2151,7 @@ object Similarity {
     * the geometry where the coarse prune starts paying (cells must
     * outnumber probes). `replicateMargin` (default 0.1 cosine)
     * controls boundary replication — see the assignment comment
-    * below; R14IvfPqProbe on the 20k fresh corpus measured
+    * below; on the 20k fresh corpus it measured
     * nprobe/numCells = 0.25 → recall 0.747 unreplicated vs 0.935 at
     * margin 0.1 (storage ×2.84 on that worst-case near-uniform
     * fixture; clusterable corpora replicate less because fewer cells

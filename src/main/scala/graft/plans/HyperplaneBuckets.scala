@@ -20,7 +20,7 @@ import scala.util.Random
   * planes the generated projection method grew past what the JIT will
   * compile and the whole band build ran de-optimized — ~120 CPU-s per
   * evaluation for 20k × 64-float rows at sf1.0 (~2 µs per 64-element
-  * dot), measured piecewise in tools/R15QProbe. Here the same 3072
+  * dot), measured piecewise. Here the same 3072
   * multiply-adds per row are a JIT-friendly triple loop.
   *
   * BIT-PARITY with the composition it replaces (bucket ids feed

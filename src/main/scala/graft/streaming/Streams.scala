@@ -1,20 +1,108 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.types.StructType
 
 
-/** Structured Streaming jobs over the events table.
-  *
-  * The parquet directory drives the stream (file source); for
-  * verification the query runs to completion against a memory sink
-  * (`processAllAvailable`), so the same code path serves both the
-  * batch oracle check and a real continuous deployment (swap the sink
-  * for kafka/delta and drop the processAllAvailable).
-  */
-object Streams {
+/** The run-to-completion harness every query in [[Streams]] goes
+  * through. It owns the plumbing the folds share, so each fold states
+  * only its per-batch delta:
+  *   - [[drain]]: start → `processAllAvailable` → stop, the stop also
+  *     on the failure path;
+  *   - [[run]]: the `foreachBatch` wiring — checkpoint at
+  *     `$base/ckpt`, query named `graft_<key>_<uuid>`;
+  *   - [[driver]]/[[tempBase]]/[[tableStream]]: the driver-side temp
+  *     base, the parquet-table file source, and the stream partition
+  *     scope of the `streamingX` drivers;
+  *   - [[latest]]/[[snapshot]]: the `_latest` pointer of the
+  *     small-state snapshot folds. */
+private[graft] object Fold {
+
+  /** Start `w`, drain everything its source has available, stop. The
+    * stop runs when the drain throws too: a failing trigger reaches
+    * the caller (wrapped by Spark in a StreamingQueryException) and
+    * leaves no active query behind. */
+  def drain(w: DataStreamWriter[Row]): Unit = {
+    val q = w.start()
+    try q.processAllAvailable() finally q.stop()
+  }
+
+  /** [[drain]] with the query's checkpoint at `$base/ckpt`. */
+  def drain(w: DataStreamWriter[Row], base: String): Unit =
+    drain(w.option("checkpointLocation", s"$base/ckpt"))
+
+  /** Fold `stream` to completion: `trigger(batch, batchId)` runs once
+    * per micro-batch, the checkpoint lives at `$base/ckpt` and the
+    * query is named `graft_<key>_<uuid>` — the prefix listeners and
+    * the benchmark attribute triggers by. */
+  def run(stream: DataFrame, base: String, key: String)(
+      trigger: (DataFrame, Long) => Unit): Unit =
+    drain(stream.writeStream
+      .foreachBatch((b: Dataset[Row], id: Long) => trigger(b.toDF(), id))
+      .queryName(s"graft_${key}_${java.util.UUID.randomUUID()}"), base)
+
+  /** [[run]] for a fold whose whole state is the one [[LsmState]]
+    * `st` at `base`: each batch appends `delta(batch, id)` as its
+    * part, then compacts when due. Returns the folded state. */
+  def appendFold(stream: DataFrame, base: String, key: String,
+      st: LsmState)(delta: (DataFrame, Long) => DataFrame): DataFrame = {
+    run(stream, base, key) { (batch, id) =>
+      st.append(id, delta(batch, id))
+      st.maybeCompact(id)
+    }
+    st.result()
+  }
+
+  /** Drain `df` into the memory table `name` (an earlier run's query
+    * of that name still active is stopped first) and return the
+    * table. */
+  def toMemory(df: DataFrame, name: String, mode: OutputMode): DataFrame = {
+    val spark = df.sparkSession
+    spark.streams.active.filter(_.name == name).foreach(_.stop())
+    drain(df.writeStream.outputMode(mode).format("memory").queryName(name))
+    spark.table(name)
+  }
+
+  // bases handed out by tempBase, deleted by one JVM-exit hook
+  private lazy val doomed = {
+    val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
+    sys.addShutdownHook(dirs.forEach(d =>
+      { org.apache.hadoop.fs.FileUtil.fullyDelete(d); () }))
+    dirs
+  }
+
+  /** A fresh `graft_<key>*` state base under `java.io.tmpdir`, unique
+    * per call: a fixed shared path would let two concurrent JVMs
+    * (Verify + sbt test on one box) delete each other's live
+    * checkpoint and commit logs mid-stream. The base is deleted
+    * recursively at JVM shutdown — not sooner, because the folds'
+    * results are lazy reads of it. */
+  def tempBase(key: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(s"graft_$key").toFile
+    doomed.add(dir)
+    dir.toString
+  }
+
+  /** The `streamingX` driver scope: a [[tempBase]] for `body` to fold
+    * under, with the stream partition count at 8
+    * ([[withStreamPartitions]]) for the whole drain. */
+  def driver[A](spark: SparkSession, key: String)(body: String => A): A =
+    withStreamPartitions(spark, 8)(body(tempBase(key)))
+
+  /** The parquet table `<name>.parquet` under `dir` as a file stream
+    * (the source wants a directory; the glob filter selects the one
+    * table out of the shared data dir). `schema` defaults to the
+    * table's own. */
+  def tableStream(spark: SparkSession, dir: String, name: String,
+      schema: Option[StructType] = None): DataFrame =
+    spark.readStream
+      .schema(schema.getOrElse(
+        spark.read.parquet(s"$dir/$name.parquet").schema))
+      .option("pathGlobFilter", s"$name.parquet").parquet(dir)
 
   /** Run `body` with `spark.sql.shuffle.partitions` temporarily set
     * for a STREAMING query, restoring the session value after. A
@@ -25,13 +113,45 @@ object Streams {
     * verification-sized streams. Deployments sizing state for real
     * volume would set this themselves; the pinned count lives in the
     * query's own checkpoint either way. */
-  private def withStreamPartitions[A](
-      spark: SparkSession, n: Int)(body: => A): A = {
+  def withStreamPartitions[A](spark: SparkSession, n: Int)(body: => A): A = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
     spark.conf.set(key, n.toString)
     try body finally spark.conf.set(key, prev)
   }
+
+  /** The snapshot a small-state fold under `base` last published
+    * (its `_latest` pointer), if any. */
+  def latest(spark: SparkSession, base: String): Option[String] =
+    StateIO.readString(StateIO.fs(spark, base), s"$base/_latest")
+      .map(_.trim).filter(_.nonEmpty)
+
+  /** [[latest]], required: a drained fold that never published. */
+  def snapshot(spark: SparkSession, base: String): String =
+    latest(spark, base).getOrElse(
+      sys.error("no snapshot: stream produced no batches and none recorded"))
+}
+
+
+/** Structured Streaming jobs over the graft tables, every one run
+  * through the [[Fold]] harness:
+  *   - queries drain to completion (all available input, then stop)
+  *     over the bounded parquet directory, so the same code path
+  *     serves the batch oracle check and a continuous deployment
+  *     (swap the sink, drop the drain);
+  *   - a checkpointed query keeps its checkpoint at `$base/ckpt`,
+  *     beside the fold state it maintains under `base`;
+  *   - `foreachBatch` folds are named `graft_<key>_<uuid>` (`p03`,
+  *     `p15`, …): listeners and the benchmark key triggers on that
+  *     prefix; memory-sink queries are named by their result table;
+  *   - the stream partition count is set by the `streamingX` drivers
+  *     ([[Fold.driver]]: 8, session-scoped for the whole drain), and
+  *     re-sized per trigger by the folds whose batch cost scales with
+  *     its size ([[quadraticParts]], [[rowParts]]); the `incrementalX`
+  *     folds inherit whatever the caller's session sets.
+  */
+object Streams {
+  import Fold.withStreamPartitions
 
   /** Shuffle-partition count for a candidate-QUADRATIC micro-batch
     * (the LSH pair folds): a batch of n vectors examines
@@ -117,8 +237,9 @@ object Streams {
     } finally pool.shutdown()
   }
 
-  /** Publish one snapshot version: run `write` into `out`, then move
-    * the pointer — UNLESS the pointer already names `out`. That
+  /** Publish batch `id`'s snapshot version: run `write` into
+    * `out = $base/v<id>`, then move the `$base/_latest` pointer —
+    * UNLESS the pointer already names `out`. That
     * happens exactly when the batch replays after its pointer move
     * but before its checkpoint commit (the crash window every
     * foreachBatch fold here shares): the fold is already durable, so
@@ -135,9 +256,9 @@ object Streams {
     * [[LsmState]], whose per-batch writes are O(batch) by
     * construction. */
   private def publishSnapshot(
-      spark: SparkSession, latestFile: String, out: String,
-      retain: Int = 0)(
+      spark: SparkSession, base: String, id: Long, retain: Int = 0)(
       write: String => Unit): Unit = {
+    val (latestFile, out) = (s"$base/_latest", s"$base/v$id")
     val fs = StateIO.fs(spark, latestFile)
     val current = StateIO.readString(fs, latestFile)
       .map(_.trim).getOrElse("")
@@ -157,9 +278,7 @@ object Streams {
     // window, the same escape hatch LsmState documents. The sweep
     // runs on the skip path too: a batch replaying after its own
     // pointer move still reaps whatever a pre-crash run left.
-    StateIO.retireVersions(fs,
-      out.substring(0, out.lastIndexOf('/')),
-      out.substring(out.lastIndexOf('/') + 1), retain)
+    StateIO.retireVersions(fs, base, s"v$id", retain)
   }
 
   /** Load the events stream. Schema-adaptive like [[graft.Tables.load]]:
@@ -172,12 +291,8 @@ object Streams {
     // batch-side sniff first: it sets the legacy nanos conf when the
     // data needs it, so the raw schema read below succeeds either way
     graft.Tables.load(spark, dir, "events")
-    val rawSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    // file source wants a directory; the glob filter selects just the
-    // events table out of the shared testdata dir
-    val raw = spark.readStream.schema(rawSchema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-    rawSchema("ts").dataType match {
+    val raw = Fold.tableStream(spark, dir, "events")
+    raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case org.apache.spark.sql.types.TimestampNTZType =>
@@ -196,24 +311,24 @@ object Streams {
       dir: String,
       windowDur: String = "1 day",
       watermark: String = "1 hour"): DataFrame = {
-    val name = "graft_e04_tumbling"
-    spark.streams.active.filter(_.name == name).foreach(_.stop())
-    withStreamPartitions(spark, 8) {
-      val agg = eventsStream(spark, dir)
-        .withWatermark("ts", watermark)
-        .groupBy(window(col("ts"), windowDur).as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value")), 2).as("total_value"))
-      val q = agg.writeStream.outputMode(OutputMode.Complete())
-        .format("memory").queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
+    val counts = withStreamPartitions(spark, 8) {
+      Fold.toMemory(windowCounts(spark, dir, windowDur, watermark),
+        "graft_e04_tumbling", OutputMode.Complete())
     }
-    spark.table(name)
-      .select(date_format(col("w.start"), "yyyy-MM-dd").as("day"),
+    counts.select(date_format(col("w.start"), "yyyy-MM-dd").as("day"),
         col("event_type"), col("n"), col("total_value"))
       .orderBy("day", "event_type")
   }
+
+  /** The watermarked tumbling-window (event type) counts behind
+    * [[tumblingCounts]] and [[tumblingCountsToFiles]]. */
+  private def windowCounts(spark: SparkSession, dir: String,
+      windowDur: String, watermark: String): DataFrame =
+    eventsStream(spark, dir)
+      .withWatermark("ts", watermark)
+      .groupBy(window(col("ts"), windowDur).as("w"), col("event_type"))
+      .agg(count(lit(1)).as("n"),
+        round(sum(col("value")), 2).as("total_value"))
 
   /** PRODUCTION sink shape: tumbling counts in Append mode + watermark
     * written to a parquet FILE SINK with a checkpoint — the
@@ -235,26 +350,15 @@ object Streams {
       watermark: String = "1 hour"): DataFrame = {
     val name = "graft_e08_filesink"
     spark.streams.active.filter(_.name == name).foreach(_.stop())
-    // per-invocation unique sink/checkpoint: a fixed shared path would
-    // let two concurrent JVMs (Verify + sbt test on one box) delete
-    // each other's live _spark_metadata commit log mid-stream
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_e08").toString
-    withStreamPartitions(spark, 8) {
-      val agg = eventsStream(spark, dir)
-        .withWatermark("ts", watermark)
-        .groupBy(window(col("ts"), windowDur).as("w"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-          round(sum(col("value")), 2).as("total_value"))
+    // per-invocation unique sink/checkpoint (Fold.tempBase)
+    val base = Fold.driver(spark, "e08") { base =>
+      val agg = windowCounts(spark, dir, windowDur, watermark)
         .select(date_format(col("w.start"), "yyyy-MM-dd").as("day"),
           col("event_type"), col("n"), col("total_value"))
-      val q = agg.writeStream.outputMode(OutputMode.Append())
-        .format("parquet")
-        .option("path", s"$base/sink")
-        .option("checkpointLocation", s"$base/ckpt")
-        .queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
+      Fold.drain(agg.writeStream.outputMode(OutputMode.Append())
+        .format("parquet").option("path", s"$base/sink").queryName(name),
+        base)
+      base
     }
     spark.read.parquet(s"$base/sink").orderBy("day", "event_type")
   }
@@ -270,8 +374,6 @@ object Streams {
       spark: SparkSession,
       dir: String,
       windowMinutes: Int = 60): DataFrame = {
-    val name = "graft_e09_join"
-    spark.streams.active.filter(_.name == name).foreach(_.stop())
     val ev = eventsStream(spark, dir)
     val purchases = ev.filter(col("event_type") === "purchase")
       .select(col("event_id").as("p_id"), col("user_id"),
@@ -286,13 +388,9 @@ object Streams {
         col("c_ts") >= col("p_ts") - expr(s"INTERVAL $windowMinutes MINUTES") &&
         col("c_ts") <= col("p_ts"))
     withStreamPartitions(spark, 8) {
-      val q = joined.select(col("p_id"), col("c_id"))
-        .writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    spark.table(name).orderBy("p_id", "c_id")
+      Fold.toMemory(joined.select(col("p_id"), col("c_id")),
+        "graft_e09_join", OutputMode.Append())
+    }.orderBy("p_id", "c_id")
   }
 
   /** Streaming deduplication — `dropDuplicatesWithinWatermark` over a
@@ -307,20 +405,13 @@ object Streams {
       spark: SparkSession,
       dir: String,
       keys: Seq[String] = Seq("user_id", "event_type")): DataFrame = {
-    val name = "graft_e10_dedup"
-    spark.streams.active.filter(_.name == name).foreach(_.stop())
     withStreamPartitions(spark, 8) {
-      val distinctKeys = eventsStream(spark, dir)
+      Fold.toMemory(eventsStream(spark, dir)
         .withWatermark("ts", "1 hour")
         .select(col("ts") +: keys.map(col): _*)
         .dropDuplicatesWithinWatermark(keys.head, keys.tail: _*)
-        .select(keys.map(col): _*)
-      val q = distinctKeys.writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(name).start()
-      q.processAllAvailable()
-      q.stop()
-    }
-    spark.table(name).orderBy(keys.map(col): _*)
+        .select(keys.map(col): _*), "graft_e10_dedup", OutputMode.Append())
+    }.orderBy(keys.map(col): _*)
   }
 
   /** PRODUCTION upsert sink: a foreachBatch CDC merge maintaining a
@@ -343,26 +434,15 @@ object Streams {
   def upsertLatestOf(
       stream: DataFrame, base: String, compactEvery: Int = 8): DataFrame = {
     def latestPerUser(df: DataFrame): DataFrame = {
-      val w = org.apache.spark.sql.expressions.Window
-        .partitionBy("user_id")
+      val w = Window.partitionBy("user_id")
         .orderBy(col("ts_us").desc, col("event_id").desc)
       df.withColumn("__rn", row_number().over(w))
         .filter(col("__rn") === 1).drop("__rn")
     }
     val st = new LsmState(
       stream.sparkSession, base, latestPerUser, compactEvery)
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        st.append(id, latestPerUser(batch.toDF()))
-        st.maybeCompact(id)
-        ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .queryName(s"graft_upsert_${java.util.UUID.randomUUID()}")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    st.result()
+    Fold.appendFold(stream, base, "upsert", st)((batch, _) =>
+      latestPerUser(batch))
   }
 
   /** p03: incremental corpus cleaning — the decontaminate →
@@ -402,53 +482,38 @@ object Streams {
     // double-presenting a part — no defensive dedup shuffle at read
     val st = new LsmState(
       stream.sparkSession, base, identity, compactEvery)
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val b = spread(batch.toDF())
-        val flags = graft.operators.Dedup.decontaminate(
-          b, benchmark, col("doc_id"), col("text"), n)
-        val clean = b.join(
-          flags.filter(col("n_overlap") === 0).select("doc_id"),
-          Seq("doc_id"), "left_semi")
-        val withFp = clean.select(col("doc_id"), col("source"),
-          md5(lower(trim(col("text")))).as("fp"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("fp").orderBy("doc_id")
-        val keepB = withFp.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-        val delta = st.view(except = Some(id)) match {
-          case None => keepB
-          case Some(v) =>
-            keepB.join(v.select("fp"), Seq("fp"), "left_anti")
-        }
-        st.append(id, delta)
-        st.maybeCompact(id)
-        ()
+    Fold.appendFold(stream, base, "p03", st) { (batch, id) =>
+      val b = spread(batch)
+      val flags = graft.operators.Dedup.decontaminate(
+        b, benchmark, col("doc_id"), col("text"), n)
+      val clean = b.join(
+        flags.filter(col("n_overlap") === 0).select("doc_id"),
+        Seq("doc_id"), "left_semi")
+      val withFp = clean.select(col("doc_id"), col("source"),
+        md5(lower(trim(col("text")))).as("fp"))
+      val w = Window.partitionBy("fp").orderBy("doc_id")
+      val keepB = withFp.withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1).drop("__rn")
+      st.view(except = Some(id)) match {
+        case None => keepB
+        case Some(v) =>
+          keepB.join(v.select("fp"), Seq("fp"), "left_anti")
       }
-      .option("checkpointLocation", s"$base/ckpt")
-      .queryName(s"graft_p03_${java.util.UUID.randomUUID()}")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    st.result()
+    }
   }
 
   /** [[incrementalClean]] over the documents table: corpus =
     * doc_id % 20 != 0 streamed, benchmark = doc_id % 20 == 0 static
     * (the same split as d10/p02). */
   def streamingCleanCorpus(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p03").toString
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      .filter(col("doc_id") % 20 =!= 0)
-    val bench = spark.read.parquet(s"$dir/documents.parquet")
-      .filter(col("doc_id") % 20 === 0)
-    val snap = withStreamPartitions(spark, 8) {
-      incrementalClean(docs, bench, base)
-    }
-    snap.orderBy("doc_id")
+    Fold.driver(spark, "p03") { base =>
+      incrementalClean(
+        Fold.tableStream(spark, dir, "documents")
+          .filter(col("doc_id") % 20 =!= 0),
+        spark.read.parquet(s"$dir/documents.parquet")
+          .filter(col("doc_id") % 20 === 0),
+        base)
+    }.orderBy("doc_id")
   }
 
   /** p06: the FULL incremental preprocess chain — [[incrementalClean]]'s
@@ -482,76 +547,61 @@ object Streams {
     val st = new LsmState(
       stream.sparkSession, base, identity, compactEvery)
     def trunc4(c: org.apache.spark.sql.Column) = floor(c * 10000) / 10000
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val b = spread(batch.toDF())
-        val flags = graft.operators.Dedup.decontaminate(
-          b, benchmark, col("doc_id"), col("text"), n)
-        val clean = b.join(
-          flags.filter(col("n_overlap") === 0).select("doc_id"),
-          Seq("doc_id"), "left_semi")
-        val withFp = clean.select(col("doc_id"), col("source"), col("text"),
-          md5(lower(trim(col("text")))).as("fp"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("fp").orderBy("doc_id")
-        val keepB = withFp.withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-        // finishing stages, batch-survivors only: t02's quality score
-        // and n07's inject-then-redact (both pure per-row functions)
-        val injected = when(col("doc_id") % 10 === 0,
-          concat(col("text"), lit(" contact user"), col("doc_id"),
-            lit("@example.com or 555-123-4567")))
-          .otherwise(col("text"))
-        val scored = keepB
-          .select(col("doc_id"), col("source"), col("fp"),
-            graft.functions.TextFns.tokensLower(col("text")).as("__toks"),
-            length(col("text")).as("__len"), injected.as("__t"))
-          .select(col("doc_id"), col("source"), col("fp"),
-            trunc4(least(lit(1.0), col("__len") / 500.0) *
-              (lit(0.7) + lit(0.3) *
-                (graft.functions.TextFns.wordSetHits(col("__toks"),
-                  Seq("the", "a", "and", "of", "to", "in")) /
-                  size(col("__toks"))))).as("quality"),
-            size(regexp_extract_all(col("__t"),
-              lit(graft.functions.TextFns.EmailRe), lit(0)))
-              .cast("long").as("n_emails"),
-            size(regexp_extract_all(col("__t"),
-              lit(graft.functions.TextFns.PhoneRe), lit(0)))
-              .cast("long").as("n_phones"),
-            graft.functions.TextFns.redactPii(col("__t")).as("redacted"))
-        val delta = st.view(except = Some(id)) match {
-          case None => scored
-          case Some(v) =>
-            scored.join(v.select("fp"), Seq("fp"), "left_anti")
-        }
-        st.append(id, delta)
-        st.maybeCompact(id)
-        ()
+    Fold.appendFold(stream, base, "p06", st) { (batch, id) =>
+      val b = spread(batch)
+      val flags = graft.operators.Dedup.decontaminate(
+        b, benchmark, col("doc_id"), col("text"), n)
+      val clean = b.join(
+        flags.filter(col("n_overlap") === 0).select("doc_id"),
+        Seq("doc_id"), "left_semi")
+      val withFp = clean.select(col("doc_id"), col("source"), col("text"),
+        md5(lower(trim(col("text")))).as("fp"))
+      val w = Window.partitionBy("fp").orderBy("doc_id")
+      val keepB = withFp.withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1).drop("__rn")
+      // finishing stages, batch-survivors only: t02's quality score
+      // and n07's inject-then-redact (both pure per-row functions)
+      val injected = when(col("doc_id") % 10 === 0,
+        concat(col("text"), lit(" contact user"), col("doc_id"),
+          lit("@example.com or 555-123-4567")))
+        .otherwise(col("text"))
+      val scored = keepB
+        .select(col("doc_id"), col("source"), col("fp"),
+          graft.functions.TextFns.tokensLower(col("text")).as("__toks"),
+          length(col("text")).as("__len"), injected.as("__t"))
+        .select(col("doc_id"), col("source"), col("fp"),
+          trunc4(least(lit(1.0), col("__len") / 500.0) *
+            (lit(0.7) + lit(0.3) *
+              (graft.functions.TextFns.wordSetHits(col("__toks"),
+                Seq("the", "a", "and", "of", "to", "in")) /
+                size(col("__toks"))))).as("quality"),
+          size(regexp_extract_all(col("__t"),
+            lit(graft.functions.TextFns.EmailRe), lit(0)))
+            .cast("long").as("n_emails"),
+          size(regexp_extract_all(col("__t"),
+            lit(graft.functions.TextFns.PhoneRe), lit(0)))
+            .cast("long").as("n_phones"),
+          graft.functions.TextFns.redactPii(col("__t")).as("redacted"))
+      st.view(except = Some(id)) match {
+        case None => scored
+        case Some(v) =>
+          scored.join(v.select("fp"), Seq("fp"), "left_anti")
       }
-      .option("checkpointLocation", s"$base/ckpt")
-      .queryName(s"graft_p06_${java.util.UUID.randomUUID()}")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    st.result()
+    }
   }
 
   /** [[incrementalCleanScore]] over the documents table: the same
     * corpus/benchmark split as p03 (doc_id % 20), finished columns
     * ordered for the oracle. */
   def streamingScoredCorpus(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p06").toString
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      .filter(col("doc_id") % 20 =!= 0)
-    val bench = spark.read.parquet(s"$dir/documents.parquet")
-      .filter(col("doc_id") % 20 === 0)
-    val snap = withStreamPartitions(spark, 8) {
-      incrementalCleanScore(docs, bench, base)
-    }
-    snap.select(col("doc_id"), col("source"), col("quality"),
+    Fold.driver(spark, "p06") { base =>
+      incrementalCleanScore(
+        Fold.tableStream(spark, dir, "documents")
+          .filter(col("doc_id") % 20 =!= 0),
+        spark.read.parquet(s"$dir/documents.parquet")
+          .filter(col("doc_id") % 20 === 0),
+        base)
+    }.select(col("doc_id"), col("source"), col("quality"),
         col("n_emails"), col("n_phones"), col("redacted"))
       .orderBy("doc_id")
   }
@@ -628,48 +678,30 @@ object Streams {
     * ≤ alphabet² rows (versioned dirs + atomic pointer, as e14). */
   def incrementalLmModel(stream: DataFrame, base: String): DataFrame = {
     val spark = stream.sparkSession
-    val stateFs = StateIO.fs(spark, base)
-    def readPtr(): Option[String] =
-      StateIO.readString(stateFs, s"$base/_latest")
-        .map(_.trim).filter(_.nonEmpty)
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val big = lmDelta(spread(batch.toDF()))
-        val merged = readPtr() match {
-          case None => big
-          case Some(p) =>
-            spark.read.parquet(p).unionByName(big)
-              .groupBy("bg").agg(sum(col("nb")).as("nb"))
-        }
-        // the model is bounded by alphabet² rows at ANY corpus scale,
-        // so a single snapshot file is correct even at 100 TB — and
-        // avoids an 8-tiny-file write+list+read roundtrip per batch
-        publishSnapshot(spark, s"$base/_latest", s"$base/v$id") { out =>
-          merged.coalesce(1).write.mode("overwrite").parquet(out)
-        }
-        ()
+    Fold.run(stream, base, "p04") { (batch, id) =>
+      val big = lmDelta(spread(batch))
+      val merged = Fold.latest(spark, base) match {
+        case None => big
+        case Some(p) =>
+          spark.read.parquet(p).unionByName(big)
+            .groupBy("bg").agg(sum(col("nb")).as("nb"))
       }
-      .option("checkpointLocation", s"$base/ckpt")
-      .queryName(s"graft_p04_${java.util.UUID.randomUUID()}")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val snap = readPtr().getOrElse(
-      sys.error("no snapshot: stream produced no batches and none recorded"))
-    spark.read.parquet(snap)
+      // the model is bounded by alphabet² rows at ANY corpus scale,
+      // so a single snapshot file is correct even at 100 TB — and
+      // avoids an 8-tiny-file write+list+read roundtrip per batch
+      publishSnapshot(spark, base, id) { out =>
+        merged.coalesce(1).write.mode("overwrite").parquet(out)
+      }
+    }
+    spark.read.parquet(Fold.snapshot(spark, base))
   }
 
   /** [[incrementalLmModel]] over the documents table, finished with
     * per-prefix totals and the conditional probability column — the
     * full model a scorer would broadcast. */
   def streamingLmModel(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p04").toString
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-    val model = withStreamPartitions(spark, 8) {
-      incrementalLmModel(docs, base)
+    val model = Fold.driver(spark, "p04") { base =>
+      incrementalLmModel(Fold.tableStream(spark, dir, "documents"), base)
     }
     val pc = model.groupBy(substring(col("bg"), 1, 1).as("p"))
       .agg(sum(col("nb")).as("np"))
@@ -691,36 +723,24 @@ object Streams {
     * atomic pointer, as p04). */
   def incrementalDfModel(stream: DataFrame, base: String): DataFrame = {
     val spark = stream.sparkSession
-    val stateFs = StateIO.fs(spark, base)
-    def readPtr(): Option[String] =
-      StateIO.readString(stateFs, s"$base/_latest")
-        .map(_.trim).filter(_.nonEmpty)
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val b = spread(batch.toDF())
-        val delta = dfDelta(b)
-        val nDelta = b.agg(count(lit(1)).as("n"))
-        val (model, meta) = readPtr() match {
-          case None => (delta, nDelta)
-          case Some(p) =>
-            (spark.read.parquet(s"$p/model").unionByName(delta)
-              .groupBy("token").agg(sum(col("df")).as("df")),
-              spark.read.parquet(s"$p/meta").unionByName(nDelta)
-                .agg(sum(col("n")).as("n")))
-        }
-        publishSnapshot(spark, s"$base/_latest", s"$base/v$id") { out =>
-          model.write.mode("overwrite").parquet(s"$out/model")
-          meta.write.mode("overwrite").parquet(s"$out/meta")
-        }
-        ()
+    Fold.run(stream, base, "p07") { (batch, id) =>
+      val b = spread(batch)
+      val delta = dfDelta(b)
+      val nDelta = b.agg(count(lit(1)).as("n"))
+      val (model, meta) = Fold.latest(spark, base) match {
+        case None => (delta, nDelta)
+        case Some(p) =>
+          (spark.read.parquet(s"$p/model").unionByName(delta)
+            .groupBy("token").agg(sum(col("df")).as("df")),
+            spark.read.parquet(s"$p/meta").unionByName(nDelta)
+              .agg(sum(col("n")).as("n")))
       }
-      .option("checkpointLocation", s"$base/ckpt")
-      .queryName(s"graft_p07_${java.util.UUID.randomUUID()}")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val snap = readPtr().getOrElse(
-      sys.error("no snapshot: stream produced no batches and none recorded"))
+      publishSnapshot(spark, base, id) { out =>
+        model.write.mode("overwrite").parquet(s"$out/model")
+        meta.write.mode("overwrite").parquet(s"$out/meta")
+      }
+    }
+    val snap = Fold.snapshot(spark, base)
     spark.read.parquet(s"$snap/model")
       .crossJoin(broadcast(spark.read.parquet(s"$snap/meta")))
   }
@@ -740,46 +760,33 @@ object Streams {
       targetSource: String = "src0",
       dim: Int = 64): DataFrame = {
     val spark = stream.sparkSession
-    val stateFs = StateIO.fs(spark, base)
-    def readPtr(): Option[String] =
-      StateIO.readString(stateFs, s"$base/_latest")
-        .map(_.trim).filter(_.nonEmpty)
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        // cache before the sizing count (shared source read), and
-        // size the trigger by the batch's row mass: the bigram
-        // explode + feature hash is ~4 token-folds of per-row CPU,
-        // and a corpus-sized catch-up batch at the trickle constant
-        // ran the whole extraction on 8 of 32 cores
-        val raw = batch.toDF().cache()
-        try {
-          val bs = raw.sparkSession
-          withStreamPartitions(bs, rowParts(bs, raw.count(), costWeight = 4)) {
-            val delta = dsirDelta(spread(raw), targetSource, dim)
-            val merged = readPtr() match {
-              case None => delta
-              case Some(p) =>
-                spark.read.parquet(p).unionByName(delta)
-                  .groupBy("b")
-                  .agg(sum(col("ct")).as("ct"), sum(col("cr")).as("cr"))
-            }
-            // bounded at dim rows at ANY corpus scale: single-file
-            // snapshot, same rationale as the p04 LM model
-            publishSnapshot(spark, s"$base/_latest", s"$base/v$id") { out =>
-              merged.coalesce(1).write.mode("overwrite").parquet(out)
-            }
+    Fold.run(stream, base, "p11") { (batch, id) =>
+      // cache before the sizing count (shared source read), and
+      // size the trigger by the batch's row mass: the bigram
+      // explode + feature hash is ~4 token-folds of per-row CPU,
+      // and a corpus-sized catch-up batch at the trickle constant
+      // ran the whole extraction on 8 of 32 cores
+      val raw = batch.cache()
+      try {
+        val bs = raw.sparkSession
+        withStreamPartitions(bs, rowParts(bs, raw.count(), costWeight = 4)) {
+          val delta = dsirDelta(spread(raw), targetSource, dim)
+          val merged = Fold.latest(spark, base) match {
+            case None => delta
+            case Some(p) =>
+              spark.read.parquet(p).unionByName(delta)
+                .groupBy("b")
+                .agg(sum(col("ct")).as("ct"), sum(col("cr")).as("cr"))
           }
-        } finally raw.unpersist(blocking = false)
-        ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .queryName(s"graft_p11_${java.util.UUID.randomUUID()}")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val snap = readPtr().getOrElse(
-      sys.error("no snapshot: stream produced no batches and none recorded"))
-    spark.read.parquet(snap)
+          // bounded at dim rows at ANY corpus scale: single-file
+          // snapshot, same rationale as the p04 LM model
+          publishSnapshot(spark, base, id) { out =>
+            merged.coalesce(1).write.mode("overwrite").parquet(out)
+          }
+        }
+      } finally raw.unpersist(blocking = false)
+    }
+    spark.read.parquet(Fold.snapshot(spark, base))
   }
 
   /** [[incrementalDsirModel]] over the documents table, finished as
@@ -787,13 +794,8 @@ object Streams {
     * likelihood ratio from the maintained counts (t22's arithmetic,
     * derived at read time from the monoid state). */
   def streamingDsirModel(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p11").toString
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-    val model = withStreamPartitions(spark, 8) {
-      incrementalDsirModel(docs, base)
+    val model = Fold.driver(spark, "p11") { base =>
+      incrementalDsirModel(Fold.tableStream(spark, dir, "documents"), base)
     }
     val tots = model.agg(sum(col("ct")).as("tt"), sum(col("cr")).as("tr"))
     model.crossJoin(broadcast(tots))
@@ -808,16 +810,9 @@ object Streams {
     * t13 stopword report (df/N > 0.5) — the maintained model must
     * reproduce the batch-derived list exactly. */
   def streamingStopwords(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p07").toString
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-    val model = withStreamPartitions(spark, 8) {
-      incrementalDfModel(docs, base)
-    }
-    model
-      .filter(col("df") / col("n").cast("double") > 0.5)
+    Fold.driver(spark, "p07") { base =>
+      incrementalDfModel(Fold.tableStream(spark, dir, "documents"), base)
+    }.filter(col("df") / col("n").cast("double") > 0.5)
       .select(col("token"), col("df"),
         (floor(col("df") / col("n").cast("double") * 10000) / 10000)
           .as("doc_frac"))
@@ -860,48 +855,41 @@ object Streams {
     // disjoint; the _folded manifest covers compaction crashes
     val pairsSt = new LsmState(spark, s"$base/pairs", identity, compactEvery)
     val bands = new BandState(spark, base, Seq("band", "band_hash"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val b = spread(batch.toDF())
-        // cache (lazy): within-batch self-join (both sides) and the
-        // band append all read this frame — uncached, the batch pays
-        // its MinHash signatures 3x
-        val newBands = graft.operators.Dedup.minHashBandTable(
-          b, col("doc_id"), col("text")).cache()
-        val within = {
-          val a = newBands.alias("a")
-          val bb = newBands.alias("b")
-          a.join(bb, col("a.band") === col("b.band") &&
-              col("a.band_hash") === col("b.band_hash") &&
-              col("a.doc_id") < col("b.doc_id"))
-            .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-        }
-        val cross = bands.scan().map { ob =>
-          newBands.alias("n").join(ob.alias("o"),
-              col("n.band") === col("o.band") &&
-                col("n.band_hash") === col("o.band_hash") &&
-                col("n.doc_id") =!= col("o.doc_id"))
-            .select(least(col("n.doc_id"), col("o.doc_id")).as("a_id"),
-              greatest(col("n.doc_id"), col("o.doc_id")).as("b_id"))
-        }
-        val newPairs = cross.map(within.unionByName(_)).getOrElse(within)
-          .distinct()
-        // pairs part FIRST (it executes the lazy cross-probe against
-        // the band table as it stood BEFORE this batch), bands after;
-        // compactions touch disjoint state and overlap
-        pairsSt.append(id, newPairs)
-        bands.append(id, newBands)
-        runParallel(Seq(
-          () => pairsSt.maybeCompact(id),
-          () => bands.maybeCompact(id, compactEvery)))
-        newBands.unpersist(blocking = false)
-        ()
+    Fold.run(stream, base, "p14") { (batch, id) =>
+      val b = spread(batch)
+      // cache (lazy): within-batch self-join (both sides) and the
+      // band append all read this frame — uncached, the batch pays
+      // its MinHash signatures 3x
+      val newBands = graft.operators.Dedup.minHashBandTable(
+        b, col("doc_id"), col("text")).cache()
+      val within = {
+        val a = newBands.alias("a")
+        val bb = newBands.alias("b")
+        a.join(bb, col("a.band") === col("b.band") &&
+            col("a.band_hash") === col("b.band_hash") &&
+            col("a.doc_id") < col("b.doc_id"))
+          .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
       }
-      .option("checkpointLocation", s"$base/ckpt")
-      .queryName(s"graft_p14_${java.util.UUID.randomUUID()}")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      val cross = bands.scan().map { ob =>
+        newBands.alias("n").join(ob.alias("o"),
+            col("n.band") === col("o.band") &&
+              col("n.band_hash") === col("o.band_hash") &&
+              col("n.doc_id") =!= col("o.doc_id"))
+          .select(least(col("n.doc_id"), col("o.doc_id")).as("a_id"),
+            greatest(col("n.doc_id"), col("o.doc_id")).as("b_id"))
+      }
+      val newPairs = cross.map(within.unionByName(_)).getOrElse(within)
+        .distinct()
+      // pairs part FIRST (it executes the lazy cross-probe against
+      // the band table as it stood BEFORE this batch), bands after;
+      // compactions touch disjoint state and overlap
+      pairsSt.append(id, newPairs)
+      bands.append(id, newBands)
+      runParallel(Seq(
+        () => pairsSt.maybeCompact(id),
+        () => bands.maybeCompact(id, compactEvery)))
+      newBands.unpersist(blocking = false)
+    }
     pairsSt.result()
   }
 
@@ -912,16 +900,12 @@ object Streams {
     * longer needs it (the pairs live in parquet parts); a production
     * fold on a stable base keeps the table and resumes it. */
   def streamingMinhashPairs(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p14").toString
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-    val pairs = withStreamPartitions(spark, 8) {
-      incrementalMinhashPairs(docs, base)
-    }
-    new BandState(spark, base, Seq("band", "band_hash")).drop()
-    pairs.orderBy("a_id", "b_id")
+    Fold.driver(spark, "p14") { base =>
+      val pairs = incrementalMinhashPairs(
+        Fold.tableStream(spark, dir, "documents"), base)
+      new BandState(spark, base, Seq("band", "band_hash")).drop()
+      pairs
+    }.orderBy("a_id", "b_id")
   }
 
   /** Per-node graph prune — the [[LsmState]] fold for the maintained
@@ -989,6 +973,104 @@ object Streams {
           col("e.score").as("sim"))
   }
 
+  /** The banded trigger p15 ([[incrementalKnnGraph]]) and p17
+    * ([[incrementalEmbPairs]]) share. Per micro-batch the vectors are
+    * hyperplane-banded ONCE, scored `within` the batch from the
+    * banded rows, and probed against the ACCUMULATED band table for
+    * cross-batch candidates, each scored once against the stored
+    * vector state; `finish(within, cross)` turns the two scored
+    * streams into the batch's `out` part (p15: pruned symmetrized
+    * edges; p17: thresholded pairs). The batch's vectors and band
+    * rows then append to the `vecs` and band state.
+    *
+    * State, every per-batch write O(batch): bands ([[BandState]], an
+    * appended bucketed table on the `(tbl, bkt)` probe key — zero
+    * index-side exchange in the cross-probe, plan-asserted), vecs
+    * ([[LsmState]] parts, identity fold: one row per vec_id,
+    * delivered once; the _folded manifest covers compaction crashes)
+    * and `out`. */
+  private def bandedFold(
+      stream: DataFrame, base: String, key: String, out: LsmState,
+      numTables: Int, planesPerTable: Int, dim: Int, seed: Long,
+      compactEvery: Int)(
+      within: DataFrame => DataFrame)(
+      finish: (DataFrame, Option[DataFrame]) => DataFrame): Unit = {
+    val spark = stream.sparkSession
+    val vecsSt = new LsmState(spark, s"$base/vecs", identity, compactEvery)
+    val bands = new BandState(spark, base, Seq("tbl", "bkt"))
+    Fold.run(stream, base, key) { (batch, id) =>
+      // cache BEFORE the sizing count: quadraticParts needs the
+      // batch row count up front, and an uncached count would read
+      // and compute the batch source one extra time per trigger
+      // just to size the shuffle — the cache lets sizing and
+      // processing share one source read (unpersisted at batch end)
+      val raw = batch.cache()
+      try {
+        val bs = raw.sparkSession
+        val parts = quadraticParts(bs, raw.count(), numTables,
+          planesPerTable)
+        withStreamPartitions(bs, parts) {
+          val b = spread(raw)
+          val newVecs = b.select(col("vec_id"), col("embedding").as("v"))
+          // cache (lazy): within scoring (both tile sides), cross
+          // probe, and band append all read this frame — uncached,
+          // the batch pays its hyperplane projections 4x. Vectors
+          // ride the band rows (bandedWithVecs) so the WITHIN-batch
+          // candidates are scored bucket-locally — no exchange
+          // carries a candidate pair — and the id-only band rows for
+          // the stored probe layout flow from the same cache.
+          val bandedV = graft.operators.Similarity.bandedWithVecs(
+            b, "vec_id", "embedding", numTables, planesPerTable, dim,
+            seed, spread = false).cache()
+          // eager materialization: the scoring plan reads bandedV
+          // from several concurrent stages; a lazy cache lets each
+          // recompute the projection pass before any commits it
+          // (same race as bucketLocalScoredPairs, measured there)
+          bandedV.count()
+          val newBands = bandedV.select(col("vec_id"), col("tbl"),
+            col("bkt"))
+          val withinScored = within(bandedV)
+          // cross-batch candidates: the batch side carries its vector
+          // on the band row, so only the STORED side needs a vector
+          // fetch (one join against the accumulated vec state instead
+          // of two). One row per shared bucket — `finish` absorbs the
+          // duplicates.
+          val storedVecs = vecsSt.view(except = Some(id))
+          val crossScored = bands.scan().flatMap { ob =>
+            storedVecs.map { sv =>
+              bandedV.alias("n").join(ob.alias("o"),
+                  col("n.tbl") === col("o.tbl") &&
+                    col("n.bkt") === col("o.bkt") &&
+                    col("n.vec_id") =!= col("o.vec_id"))
+                .select(
+                  least(col("n.vec_id"), col("o.vec_id")).as("a_id"),
+                  greatest(col("n.vec_id"), col("o.vec_id")).as("b_id"),
+                  col("n.v").as("nv"), col("o.vec_id").as("o_id"))
+                .join(sv.select(col("vec_id").as("o_id"),
+                  col("v").as("ov")), "o_id")
+                .select(col("a_id"), col("b_id"),
+                  graft.operators.Similarity.cosine(col("nv"), col("ov"))
+                    .as("sim"))
+            }
+          }
+          // `out` part FIRST: it executes every read of the PRE-batch
+          // band/vec state (the lazy cross-probe); the remaining two
+          // appends touch disjoint state and overlap (runParallel —
+          // the p19 trigger treatment), as do the three compactions
+          out.append(id, finish(withinScored, crossScored))
+          runParallel(Seq(
+            () => vecsSt.append(id, newVecs),
+            () => bands.append(id, newBands)))
+          runParallel(Seq(
+            () => out.maybeCompact(id),
+            () => vecsSt.maybeCompact(id),
+            () => bands.maybeCompact(id, compactEvery)))
+          bandedV.unpersist(blocking = false)
+        }
+      } finally raw.unpersist(blocking = false)
+    }
+  }
+
   /** p15: incremental k-NN GRAPH maintenance — s16's corpus-wide
     * neighbor graph folded at ingest: each micro-batch's vectors are
     * hyperplane-banded once, probed against the ACCUMULATED band
@@ -1025,127 +1107,45 @@ object Streams {
       seed: Long = 42L,
       keepThreshold: Option[Double] = None,
       compactEvery: Int = 8): DataFrame = {
-    val spark = stream.sparkSession
-    // vecs: identity fold (one row per vec_id, delivered once; the
-    // _folded manifest covers compaction crashes)
-    val vecsSt = new LsmState(spark, s"$base/vecs", identity, compactEvery)
-    val graphSt = new LsmState(
-      spark, s"$base/graph", graphFold(k, keepThreshold), compactEvery)
-    val bands = new BandState(spark, base, Seq("tbl", "bkt"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        // cache BEFORE the sizing count: quadraticParts needs the
-        // batch row count up front, and an uncached count would read
-        // and compute the batch source one extra time per trigger
-        // just to size the shuffle — the cache lets sizing and
-        // processing share one source read (unpersisted at batch end)
-        val raw = batch.toDF().cache()
-        try {
-        val bs = raw.sparkSession
-        val parts = quadraticParts(bs, raw.count(), numTables,
-          planesPerTable)
-        withStreamPartitions(bs, parts) {
-        val b = spread(raw)
-        val newVecs = b.select(col("vec_id"), col("embedding").as("v"))
-        // cache (lazy): within scoring (both tile sides), cross
-        // probe, and band append all read this frame — uncached, the
-        // batch pays its hyperplane projections 4x. Vectors ride the
-        // band rows (bandedWithVecs) so the WITHIN-batch candidates
-        // are scored bucket-locally — no exchange carries a
-        // candidate pair — and the id-only band rows for the stored
-        // probe layout flow from the same cache.
-        val bandedV = graft.operators.Similarity.bandedWithVecs(
-          b, "vec_id", "embedding", numTables, planesPerTable, dim,
-          seed, spread = false).cache()
-        // eager materialization: the scoring plan reads bandedV from
-        // several concurrent stages; a lazy cache lets each recompute
-        // the projection pass before any commits it (same race as
-        // bucketLocalScoredPairs, measured there)
-        bandedV.count()
-        val newBands = bandedV.select(col("vec_id"), col("tbl"),
-          col("bkt"))
-        // WITHIN-batch edges, pre-pruned INSIDE the scorer (r15): the
-        // fused partial scorer keeps per-node retention buffers in
-        // the Σm² cell loop — the batch's full scored pair stream is
-        // never emitted, symmetrized, or shuffled (it was the fold
-        // trigger's dominant stage: ~85 of 178 CPU-s at sf1.0).
-        // Output-identical by the fold monoid: prune(prune(W) ∪ C) =
-        // prune(W ∪ C) — graphFold's scaladoc.
-        val withinSym = graft.operators.Similarity
-          .symEdgesFromBanded(bandedV, k, keepThreshold,
-            maxBucketRows = 2048)
-        // cross-batch candidates: the batch side carries its vector
-        // on the band row, so only the STORED side needs a vector
-        // fetch (one join against the accumulated vec state instead
-        // of the previous two). One row per shared bucket — the
-        // per-batch pre-prune below absorbs the duplicates.
-        val storedVecs = vecsSt.view(except = Some(id))
-        val crossScored = bands.scan().flatMap { ob =>
-          storedVecs.map { sv =>
-            bandedV.alias("n").join(ob.alias("o"),
-                col("n.tbl") === col("o.tbl") &&
-                  col("n.bkt") === col("o.bkt") &&
-                  col("n.vec_id") =!= col("o.vec_id"))
-              .select(least(col("n.vec_id"), col("o.vec_id")).as("a_id"),
-                greatest(col("n.vec_id"), col("o.vec_id")).as("b_id"),
-                col("n.v").as("nv"), col("o.vec_id").as("o_id"))
-              .join(sv.select(col("vec_id").as("o_id"),
-                col("v").as("ov")), "o_id")
-              .select(col("a_id"), col("b_id"),
-                graft.operators.Similarity.cosine(col("nv"), col("ov"))
-                  .as("sim"))
-          }
-        }
-        // cross edges symmetrize as before (explode both directions
-        // from the single scored row); the within-batch side arrives
-        // already symmetrized and pre-pruned from the fused scorer
-        val crossSym = crossScored.map(_
-          .select(explode(array(
-            struct(col("a_id").as("vec_id"), col("b_id").as("nbr_id"),
-              col("sim")),
-            struct(col("b_id").as("vec_id"), col("a_id").as("nbr_id"),
-              col("sim")))).as("e"))
-          .select(col("e.vec_id"), col("e.nbr_id"), col("e.sim")))
-        val sym = crossSym.map(withinSym.unionByName(_))
-          .getOrElse(withinSym)
-        // Per-batch PRE-PRUNE before the part write: the fold is a
-        // merge-and-truncate monoid (prune(prune(A) ∪ B) =
-        // prune(A ∪ B) — see graphFold), so appending the batch's
-        // pruned edges yields the same folded graph while the part
-        // shrinks from candidate-sized (every scored pair, ~Θ(Σ m²)
-        // rows per batch) to output-sized (k per touched node plus
-        // above-threshold edges). dedupEdges collapses the
-        // bucket-local stream's one-row-per-shared-table duplicates
-        // inside the same bounded heaps. BOTH fold forms are now a
-        // single aggregate pass over the scored stream (the threshold
-        // form's one-pass retention aggregate replaced the persisted
-        // three-reader plan — see graphFold), so the scoring join
-        // runs exactly once with no per-trigger candidate cache.
-        // Edge part FIRST (executes the lazy cross-probe against the
-        // pre-batch band table), then vecs, then bands.
-        graphSt.append(id,
-          graphFold(k, keepThreshold, dedupEdges = true)(sym))
-        // the edge append above executed every read of the PRE-batch
-        // band/vec state (the lazy cross-probe); the remaining two
-        // appends touch disjoint state and overlap (runParallel —
-        // the p19 trigger treatment), as do the three compactions
-        runParallel(Seq(
-          () => vecsSt.append(id, newVecs),
-          () => bands.append(id, newBands)))
-        runParallel(Seq(
-          () => graphSt.maybeCompact(id),
-          () => vecsSt.maybeCompact(id),
-          () => bands.maybeCompact(id, compactEvery)))
-        bandedV.unpersist(blocking = false)
-        }
-        } finally raw.unpersist(blocking = false)
-        ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .queryName(s"graft_p15_${java.util.UUID.randomUUID()}")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    val graphSt = new LsmState(stream.sparkSession, s"$base/graph",
+      graphFold(k, keepThreshold), compactEvery)
+    bandedFold(stream, base, "p15", graphSt, numTables, planesPerTable,
+        dim, seed, compactEvery)(
+      // WITHIN-batch edges, pre-pruned INSIDE the scorer (r15): the
+      // fused partial scorer keeps per-node retention buffers in
+      // the Σm² cell loop — the batch's full scored pair stream is
+      // never emitted, symmetrized, or shuffled (it was the fold
+      // trigger's dominant stage: ~85 of 178 CPU-s at sf1.0).
+      // Output-identical by the fold monoid: prune(prune(W) ∪ C) =
+      // prune(W ∪ C) — graphFold's scaladoc.
+      graft.operators.Similarity.symEdgesFromBanded(_, k, keepThreshold,
+        maxBucketRows = 2048)) { (withinSym, crossScored) =>
+      // cross edges symmetrize (explode both directions from the
+      // single scored row); the within-batch side arrives already
+      // symmetrized and pre-pruned from the fused scorer
+      val crossSym = crossScored.map(_
+        .select(explode(array(
+          struct(col("a_id").as("vec_id"), col("b_id").as("nbr_id"),
+            col("sim")),
+          struct(col("b_id").as("vec_id"), col("a_id").as("nbr_id"),
+            col("sim")))).as("e"))
+        .select(col("e.vec_id"), col("e.nbr_id"), col("e.sim")))
+      // Per-batch PRE-PRUNE before the part write: the fold is a
+      // merge-and-truncate monoid (prune(prune(A) ∪ B) =
+      // prune(A ∪ B) — see graphFold), so appending the batch's
+      // pruned edges yields the same folded graph while the part
+      // shrinks from candidate-sized (every scored pair, ~Θ(Σ m²)
+      // rows per batch) to output-sized (k per touched node plus
+      // above-threshold edges). dedupEdges collapses the
+      // bucket-local stream's one-row-per-shared-table duplicates
+      // inside the same bounded heaps. BOTH fold forms are now a
+      // single aggregate pass over the scored stream (the threshold
+      // form's one-pass retention aggregate replaced the persisted
+      // three-reader plan — see graphFold), so the scoring join
+      // runs exactly once with no per-trigger candidate cache.
+      graphFold(k, keepThreshold, dedupEdges = true)(
+        crossSym.map(withinSym.unionByName(_)).getOrElse(withinSym))
+    }
     val w = Window.partitionBy("vec_id")
       .orderBy(col("sim").desc, col("nbr_id"))
     graphSt.result()
@@ -1158,16 +1158,12 @@ object Streams {
     * batch [[graft.operators.Similarity.knnGraphBucketed]] exactly
     * (rows-only key; the equality IS the replay spec). */
   def streamingKnnGraph(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p15").toString
-    val schema = spark.read.parquet(s"$dir/embeddings.parquet").schema
-    val vecs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-    val graph = withStreamPartitions(spark, 8) {
-      incrementalKnnGraph(vecs, base)
-    }
-    new BandState(spark, base, Seq("tbl", "bkt")).drop()
-    graph.select(col("vec_id"), col("rank"), col("nbr_id"),
+    Fold.driver(spark, "p15") { base =>
+      val graph = incrementalKnnGraph(
+        Fold.tableStream(spark, dir, "embeddings"), base)
+      new BandState(spark, base, Seq("tbl", "bkt")).drop()
+      graph
+    }.select(col("vec_id"), col("rank"), col("nbr_id"),
         (floor(col("sim") * 10000) / 10000).as("sim"))
       .orderBy("vec_id", "rank")
   }
@@ -1190,16 +1186,12 @@ object Streams {
   def streamingGraphClusterDedup(
       spark: SparkSession, dir: String,
       threshold: Double = 0.3, k: Int = 5): DataFrame = {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p18").toString
-    val schema = spark.read.parquet(s"$dir/embeddings.parquet").schema
-    val vecs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-    withStreamPartitions(spark, 8) {
-      incrementalKnnGraph(vecs, base, k = k,
-        keepThreshold = Some(threshold))
+    val base = Fold.driver(spark, "p18") { base =>
+      incrementalKnnGraph(Fold.tableStream(spark, dir, "embeddings"), base,
+        k = k, keepThreshold = Some(threshold))
+      new BandState(spark, base, Seq("tbl", "bkt")).drop()
+      base
     }
-    new BandState(spark, base, Seq("tbl", "bkt")).drop()
     graphClusterVerdict(spark, base, threshold)
   }
 
@@ -1215,14 +1207,21 @@ object Streams {
     // threshold-retaining fold, so every above-threshold edge is
     // present (a prune here would be redundant) and edges/vecs are
     // globally unique — the filter below selects exactly d11's pairs
-    val graphSt = new LsmState(spark, s"$base/graph", identity)
-    val vecsSt = new LsmState(spark, s"$base/vecs", identity)
-    val pairs = graphSt.result()
-      .filter(col("sim") > threshold && col("vec_id") < col("nbr_id"))
-      .select(col("vec_id").as("a_id"), col("nbr_id").as("b_id"))
+    clusterVerdict(spark, base,
+      new LsmState(spark, s"$base/graph", identity).result()
+        .filter(col("sim") > threshold && col("vec_id") < col("nbr_id"))
+        .select(col("vec_id").as("a_id"), col("nbr_id").as("b_id")))
+  }
+
+  /** d11's verdict over the fold's vector state under `base`: CC
+    * leaders over the (a_id, b_id) `pairs`, one keeper per cluster,
+    * singletons keep themselves. */
+  private def clusterVerdict(
+      spark: SparkSession, base: String, pairs: DataFrame): DataFrame = {
     val leaders = graft.operators.Dedup.clusterLeaders(pairs)
       .select(col("doc_id").as("vec_id"), col("leader_id"))
-    vecsSt.result().select(col("vec_id"))
+    new LsmState(spark, s"$base/vecs", identity).result()
+      .select(col("vec_id"))
       .join(leaders, Seq("vec_id"), "left")
       .select(col("vec_id"),
         coalesce(col("leader_id"), col("vec_id")).as("cluster_id"),
@@ -1261,99 +1260,28 @@ object Streams {
       dim: Int = 64,
       seed: Long = 42L,
       compactEvery: Int = 8): DataFrame = {
-    val spark = stream.sparkSession
-    // identity folds on both (vecs delivered once; pairs discovered
-    // once + per-batch distinct; _folded manifest covers crashes)
-    val vecsSt = new LsmState(spark, s"$base/vecs", identity, compactEvery)
-    val pairsSt = new LsmState(spark, s"$base/pairs", identity, compactEvery)
-    val bands = new BandState(spark, base, Seq("tbl", "bkt"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        // cache BEFORE the sizing count (see the p15 fold): one
-        // source read shared by sizing and processing
-        val raw = batch.toDF().cache()
-        try {
-        val bs = raw.sparkSession
-        val parts = quadraticParts(bs, raw.count(), numTables,
-          planesPerTable)
-        withStreamPartitions(bs, parts) {
-        val b = spread(raw)
-        val newVecs = b.select(col("vec_id"), col("embedding").as("v"))
-        // cache (lazy): within scoring (both tile sides), cross
-        // probe, and band append all read this frame — uncached, the
-        // batch pays its hyperplane projections 4x. Vectors ride the
-        // band rows: WITHIN-batch candidates score bucket-locally
-        // (no exchange carries a candidate pair), the id-only band
-        // rows for the stored layout flow from the same cache, and
-        // the cross probe fetches only the STORED side's vector (one
-        // join instead of the previous two).
-        val bandedV = graft.operators.Similarity.bandedWithVecs(
-          b, "vec_id", "embedding", numTables, planesPerTable, dim,
-          seed, spread = false).cache()
-        // eager materialization: the scoring plan reads bandedV from
-        // several concurrent stages; a lazy cache lets each recompute
-        // the projection pass before any commits it (same race as
-        // bucketLocalScoredPairs, measured there)
-        bandedV.count()
-        val newBands = bandedV.select(col("vec_id"), col("tbl"),
-          col("bkt"))
-        // WITHIN-batch survivors, filtered INSIDE the scorer (r15):
-        // only (a_id, b_id) above the threshold leave the cell loop —
-        // the batch's scored pair stream is never emitted (same
-        // output: the filter below distributes over the union)
-        val withinSurv = graft.operators.Similarity
-          .thresholdSurvivorsFromBanded(bandedV, threshold,
-            maxBucketRows = 2048)
-        val storedVecs = vecsSt.view(except = Some(id))
-        val crossScored = bands.scan().flatMap { ob =>
-          storedVecs.map { sv =>
-            bandedV.alias("n").join(ob.alias("o"),
-                col("n.tbl") === col("o.tbl") &&
-                  col("n.bkt") === col("o.bkt") &&
-                  col("n.vec_id") =!= col("o.vec_id"))
-              .select(least(col("n.vec_id"), col("o.vec_id")).as("a_id"),
-                greatest(col("n.vec_id"), col("o.vec_id")).as("b_id"),
-                col("n.v").as("nv"), col("o.vec_id").as("o_id"))
-              .join(sv.select(col("vec_id").as("o_id"),
-                col("v").as("ov")), "o_id")
-              .select(col("a_id"), col("b_id"),
-                graft.operators.Similarity.cosine(col("nv"), col("ov"))
-                  .as("sim"))
-          }
-        }
-        // threshold FIRST, dedup after: the filter runs inside the
-        // scoring loop (within-batch) / stage (cross), so the
-        // distinct that absorbs the one-row-per-shared-table
-        // duplicates is OUTPUT-sized — the previous shape deduped the
-        // full candidate id-pair set before it ever scored a row
-        val crossSurv = crossScored.map(_
-          .filter(col("sim") > threshold)
+    // identity fold (pairs discovered once + per-batch distinct;
+    // _folded manifest covers crashes)
+    val pairsSt = new LsmState(
+      stream.sparkSession, s"$base/pairs", identity, compactEvery)
+    bandedFold(stream, base, "p17", pairsSt, numTables, planesPerTable,
+        dim, seed, compactEvery)(
+      // WITHIN-batch survivors, filtered INSIDE the scorer (r15):
+      // only (a_id, b_id) above the threshold leave the cell loop —
+      // the batch's scored pair stream is never emitted (same
+      // output: the filter below distributes over the union)
+      graft.operators.Similarity.thresholdSurvivorsFromBanded(_, threshold,
+        maxBucketRows = 2048)) { (withinSurv, crossScored) =>
+      // threshold FIRST, dedup after: the filter runs inside the
+      // scoring loop (within-batch) / stage (cross), so the
+      // distinct that absorbs the one-row-per-shared-table
+      // duplicates is OUTPUT-sized — the previous shape deduped the
+      // full candidate id-pair set before it ever scored a row
+      crossScored.map(_.filter(col("sim") > threshold)
           .select(col("a_id"), col("b_id")))
-        val survivors = crossSurv.map(withinSurv.unionByName(_))
-          .getOrElse(withinSurv)
-          .distinct()
-        // pairs part FIRST (executes the lazy cross-probe against the
-        // pre-batch band table); the remaining two appends touch
-        // disjoint state and overlap, as do the compactions
-        // (runParallel — the p19 trigger treatment)
-        pairsSt.append(id, survivors)
-        runParallel(Seq(
-          () => vecsSt.append(id, newVecs),
-          () => bands.append(id, newBands)))
-        runParallel(Seq(
-          () => pairsSt.maybeCompact(id),
-          () => vecsSt.maybeCompact(id),
-          () => bands.maybeCompact(id, compactEvery)))
-        bandedV.unpersist(blocking = false)
-        }
-        } finally raw.unpersist(blocking = false)
-        ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .queryName(s"graft_p17_${java.util.UUID.randomUUID()}")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+        .map(withinSurv.unionByName(_)).getOrElse(withinSurv)
+        .distinct()
+    }
     pairsSt.result()
   }
 
@@ -1363,26 +1291,13 @@ object Streams {
     * the batch [[graft.operators.Dedup.embeddingClusterDedup]]
     * exactly (rows-only key; the equality IS the replay spec). */
   def streamingClusterDedup(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p17").toString
-    val schema = spark.read.parquet(s"$dir/embeddings.parquet").schema
-    val vecs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-    val pairs = withStreamPartitions(spark, 8) {
-      incrementalEmbPairs(vecs, base, threshold = 0.3)
+    val (base, pairs) = Fold.driver(spark, "p17") { base =>
+      val pairs = incrementalEmbPairs(
+        Fold.tableStream(spark, dir, "embeddings"), base, threshold = 0.3)
+      new BandState(spark, base, Seq("tbl", "bkt")).drop()
+      (base, pairs)
     }
-    new BandState(spark, base, Seq("tbl", "bkt")).drop()
-    val corpus = new LsmState(spark, s"$base/vecs", identity)
-      .result().select(col("vec_id"))
-    val leaders = graft.operators.Dedup
-      .clusterLeaders(pairs.select(col("a_id"), col("b_id")))
-      .select(col("doc_id").as("vec_id"), col("leader_id"))
-    corpus.join(leaders, Seq("vec_id"), "left")
-      .select(col("vec_id"),
-        coalesce(col("leader_id"), col("vec_id")).as("cluster_id"),
-        (coalesce(col("leader_id"), col("vec_id")) === col("vec_id"))
-          .cast("long").as("keep"))
-      .orderBy("vec_id")
+    clusterVerdict(spark, base, pairs.select(col("a_id"), col("b_id")))
   }
 
   /** p16: incremental quality-aware KEEPER election — d20's
@@ -1412,21 +1327,14 @@ object Streams {
     val keepersSt = new LsmState(
       spark, s"$base/keepers",
       _.groupBy("fp").agg(min(col("m")).as("m")), compactEvery)
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val newDocs = keeperDocs(spread(batch.toDF()))
-        val batchKeepers = keeperChamps(newDocs)
-        docsSt.append(id, newDocs)
-        keepersSt.append(id, batchKeepers)
-        docsSt.maybeCompact(id)
-        keepersSt.maybeCompact(id)
-        ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .queryName(s"graft_p16_${java.util.UUID.randomUUID()}")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    Fold.run(stream, base, "p16") { (batch, id) =>
+      val newDocs = keeperDocs(spread(batch))
+      val batchKeepers = keeperChamps(newDocs)
+      docsSt.append(id, newDocs)
+      keepersSt.append(id, batchKeepers)
+      docsSt.maybeCompact(id)
+      keepersSt.maybeCompact(id)
+    }
     docsSt.result()
       .join(keepersSt.result()
         .select(col("fp"), col("m.id").as("keeper_id")), Seq("fp"))
@@ -1438,15 +1346,9 @@ object Streams {
     * in d20's column order — the maintained verdicts must reproduce
     * the batch election exactly (shares d20's DuckDB oracle). */
   def streamingQualityKeeper(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p16").toString
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-    val verdicts = withStreamPartitions(spark, 8) {
-      incrementalQualityKeeper(docs, base)
-    }
-    verdicts.orderBy("doc_id")
+    Fold.driver(spark, "p16") { base =>
+      incrementalQualityKeeper(Fold.tableStream(spark, dir, "documents"), base)
+    }.orderBy("doc_id")
   }
 
   /** p19 (documents side): ONE ingest pass maintaining the FIVE
@@ -1493,49 +1395,42 @@ object Streams {
       identity, compactEvery)
     val champsSt = new LsmState(spark, s"$base/keep_champs",
       _.groupBy("fp").agg(min(col("m")).as("m")), compactEvery)
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        // cache BEFORE the sizing count: the count that sizes the
-        // shuffle and the spread that feeds the models share ONE
-        // source read instead of two
-        val raw = batch.toDF().cache()
-        val bs = raw.sparkSession
-        withStreamPartitions(bs, rowParts(bs, raw.count())) {
-        // cache: SEVEN delta extractions read this frame — uncached,
-        // the batch's source rows would be re-read per model, which
-        // is exactly the cost this operator exists to avoid. The
-        // count() materializes the cache eagerly so the seven
-        // consumers read it rather than racing to recompute it.
-        val b = spread(raw).cache()
-        b.count()
-        raw.unpersist(blocking = false) // b is materialized; raw done
-        // seven independent model deltas off the one cached batch:
-        // submit concurrently so the trigger pays max(model) job
-        // latency, not the sum (runParallel doc — the p19 verdict fix)
-        runParallel(Seq(
-          () => lmSt.append(id, lmDelta(b)),
-          () => dfSt.append(id, dfDelta(b)),
-          () => dfMeta.append(id, b.agg(count(lit(1)).as("n"))),
-          () => dsirSt.append(id, dsirDelta(b, targetSource, dim)),
-          () => sigSt.append(id, sigDelta(b, prefixBytes)),
-          () => {
-            // champs derive from docs: keep the dependent pair on one
-            // thread, both reading the cached batch
-            val docs = keeperDocs(b)
-            docsSt.append(id, docs)
-            champsSt.append(id, keeperChamps(docs))
-          }))
-        runParallel(Seq(lmSt, dfSt, dfMeta, dsirSt, sigSt, docsSt,
-          champsSt).map(st => () => st.maybeCompact(id)))
-        b.unpersist(blocking = false)
-        }
-        ()
+    Fold.run(stream, base, "p19") { (batch, id) =>
+      // cache BEFORE the sizing count: the count that sizes the
+      // shuffle and the spread that feeds the models share ONE
+      // source read instead of two
+      val raw = batch.cache()
+      val bs = raw.sparkSession
+      withStreamPartitions(bs, rowParts(bs, raw.count())) {
+      // cache: SEVEN delta extractions read this frame — uncached,
+      // the batch's source rows would be re-read per model, which
+      // is exactly the cost this operator exists to avoid. The
+      // count() materializes the cache eagerly so the seven
+      // consumers read it rather than racing to recompute it.
+      val b = spread(raw).cache()
+      b.count()
+      raw.unpersist(blocking = false) // b is materialized; raw done
+      // seven independent model deltas off the one cached batch:
+      // submit concurrently so the trigger pays max(model) job
+      // latency, not the sum (runParallel doc — the p19 verdict fix)
+      runParallel(Seq(
+        () => lmSt.append(id, lmDelta(b)),
+        () => dfSt.append(id, dfDelta(b)),
+        () => dfMeta.append(id, b.agg(count(lit(1)).as("n"))),
+        () => dsirSt.append(id, dsirDelta(b, targetSource, dim)),
+        () => sigSt.append(id, sigDelta(b, prefixBytes)),
+        () => {
+          // champs derive from docs: keep the dependent pair on one
+          // thread, both reading the cached batch
+          val docs = keeperDocs(b)
+          docsSt.append(id, docs)
+          champsSt.append(id, keeperChamps(docs))
+        }))
+      runParallel(Seq(lmSt, dfSt, dfMeta, dsirSt, sigSt, docsSt,
+        champsSt).map(st => () => st.maybeCompact(id)))
+      b.unpersist(blocking = false)
       }
-      .option("checkpointLocation", s"$base/ckpt")
-      .queryName(s"graft_p19_${java.util.UUID.randomUUID()}")
-      .start()
-    q.processAllAvailable()
-    q.stop()
+    }
     Map(
       "char_lm" -> lmSt.result(),
       "doc_freq" -> dfSt.result(),
@@ -1570,8 +1465,7 @@ object Streams {
     * gated by p15/p18's own equality specs, not the manifest. */
   def streamingModelSuite(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p19").toString
+    val base = Fold.tempBase("p19")
     // The three source drains (documents suite / events disorder /
     // embeddings k-NN) are INDEPENDENT streams over different state
     // roots — run them concurrently (round-12: the sequential chain
@@ -1587,11 +1481,8 @@ object Streams {
     var disorder: DataFrame = null
     runParallel(Seq(
       () => {
-        val schema = s1.read.parquet(s"$dir/documents.parquet").schema
-        val docs = s1.readStream.schema(schema)
-          .option("pathGlobFilter", "documents.parquet").parquet(dir)
         models = withStreamPartitions(s1, 8) {
-          incrementalModelSuite(docs, base)
+          incrementalModelSuite(Fold.tableStream(s1, dir, "documents"), base)
         }
       },
       () => {
@@ -1601,16 +1492,12 @@ object Streams {
         }
       },
       () => {
-        val embSchema =
-          s3.read.parquet(s"$dir/embeddings.parquet").schema
-        val embStream = s3.readStream.schema(embSchema)
-          .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-        // the drain runs eagerly inside (start/processAllAvailable/
-        // stop); the returned graph view is lazy and unread here —
-        // the manifest audits the fold's vector-state coverage, not
-        // the edges
+        // the drain runs eagerly inside (Fold.drain); the returned
+        // graph view is lazy and unread here — the manifest audits
+        // the fold's vector-state coverage, not the edges
         withStreamPartitions(s3, 8) {
-          incrementalKnnGraph(embStream, s"$base/knn"); ()
+          incrementalKnnGraph(
+            Fold.tableStream(s3, dir, "embeddings"), s"$base/knn"); ()
         }
       }))
     // seven manifest counts, one small job each — submitted together
@@ -1653,60 +1540,49 @@ object Streams {
       stream: DataFrame,
       base: String): DataFrame = {
     val spark = stream.sparkSession
-    val stateFs = StateIO.fs(spark, base)
-    def readPtr(): Option[String] =
-      StateIO.readString(stateFs, s"$base/_latest")
-        .map(_.trim).filter(_.nonEmpty)
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val b = spread(batch.toDF())
-        val w = Window.partitionBy("event_type").orderBy("event_id")
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val withUs = b.select(col("event_id"), col("event_type"),
-          unix_micros(col("ts")).as("us"))
-        val prior = readPtr().map(p => spark.read.parquet(s"$p/model"))
-        val seeded = prior match {
-          case None => withUs.withColumn("__pmax", lit(-1L))
-          case Some(m) => withUs.join(
-            m.select(col("event_type"), col("max_us").as("__pmax")),
-            Seq("event_type"), "left")
-        }
-        // -1 sentinel: event times are positive micros, so it orders
-        // below every real timestamp (no-prior-row / no-prior-batch)
-        val late = seeded
-          .withColumn("__run", greatest(
-            coalesce(max(col("us")).over(w), lit(-1L)),
-            coalesce(col("__pmax"), lit(-1L))))
-          .withColumn("late_us",
-            when(col("__run") > col("us"), col("__run") - col("us"))
-              .otherwise(lit(0L)))
-        val delta = late.groupBy("event_type").agg(
-          max(col("us")).as("max_us"),
-          count(lit(1)).as("n_events"),
-          sum(when(col("late_us") > 0, 1L).otherwise(0L)).as("n_late"),
-          max(col("late_us")).as("max_disorder_us"),
-          sum(col("late_us")).as("total_disorder_us"))
-        val model = prior match {
-          case None => delta
-          case Some(m) => m.unionByName(delta).groupBy("event_type").agg(
-            max(col("max_us")).as("max_us"),
-            sum(col("n_events")).as("n_events"),
-            sum(col("n_late")).as("n_late"),
-            max(col("max_disorder_us")).as("max_disorder_us"),
-            sum(col("total_disorder_us")).as("total_disorder_us"))
-        }
-        publishSnapshot(spark, s"$base/_latest", s"$base/v$id") { out =>
-          model.write.mode("overwrite").parquet(s"$out/model")
-        }
-        ()
+    Fold.run(stream, base, "p13") { (batch, id) =>
+      val b = spread(batch)
+      val w = Window.partitionBy("event_type").orderBy("event_id")
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val withUs = b.select(col("event_id"), col("event_type"),
+        unix_micros(col("ts")).as("us"))
+      val prior = Fold.latest(spark, base)
+        .map(p => spark.read.parquet(s"$p/model"))
+      val seeded = prior match {
+        case None => withUs.withColumn("__pmax", lit(-1L))
+        case Some(m) => withUs.join(
+          m.select(col("event_type"), col("max_us").as("__pmax")),
+          Seq("event_type"), "left")
       }
-      .option("checkpointLocation", s"$base/ckpt")
-      .queryName(s"graft_p13_${java.util.UUID.randomUUID()}")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val snap = readPtr().getOrElse(
-      sys.error("no snapshot: stream produced no batches and none recorded"))
+      // -1 sentinel: event times are positive micros, so it orders
+      // below every real timestamp (no-prior-row / no-prior-batch)
+      val late = seeded
+        .withColumn("__run", greatest(
+          coalesce(max(col("us")).over(w), lit(-1L)),
+          coalesce(col("__pmax"), lit(-1L))))
+        .withColumn("late_us",
+          when(col("__run") > col("us"), col("__run") - col("us"))
+            .otherwise(lit(0L)))
+      val delta = late.groupBy("event_type").agg(
+        max(col("us")).as("max_us"),
+        count(lit(1)).as("n_events"),
+        sum(when(col("late_us") > 0, 1L).otherwise(0L)).as("n_late"),
+        max(col("late_us")).as("max_disorder_us"),
+        sum(col("late_us")).as("total_disorder_us"))
+      val model = prior match {
+        case None => delta
+        case Some(m) => m.unionByName(delta).groupBy("event_type").agg(
+          max(col("max_us")).as("max_us"),
+          sum(col("n_events")).as("n_events"),
+          sum(col("n_late")).as("n_late"),
+          max(col("max_disorder_us")).as("max_disorder_us"),
+          sum(col("total_disorder_us")).as("total_disorder_us"))
+      }
+      publishSnapshot(spark, base, id) { out =>
+        model.write.mode("overwrite").parquet(s"$out/model")
+      }
+    }
+    val snap = Fold.snapshot(spark, base)
     spark.read.parquet(s"$snap/model")
   }
 
@@ -1715,13 +1591,9 @@ object Streams {
     * not part of the report) — the maintained profile must reproduce
     * the batch audit exactly (shares e18's DuckDB oracle). */
   def streamingDisorderProfile(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p13").toString
-    val profile = withStreamPartitions(spark, 8) {
+    Fold.driver(spark, "p13") { base =>
       incrementalDisorderProfile(eventsStream(spark, dir), base)
-    }
-    profile
-      .select(col("event_type"), col("n_events"), col("n_late"),
+    }.select(col("event_type"), col("n_events"), col("n_late"),
         col("max_disorder_us"), col("total_disorder_us"))
       .orderBy("event_type")
   }
@@ -1742,32 +1614,20 @@ object Streams {
       base: String,
       prefixBytes: Int = 32): DataFrame = {
     val spark = stream.sparkSession
-    val stateFs = StateIO.fs(spark, base)
-    def readPtr(): Option[String] =
-      StateIO.readString(stateFs, s"$base/_latest")
-        .map(_.trim).filter(_.nonEmpty)
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        val delta = sigDelta(spread(batch.toDF()), prefixBytes)
-        val model = readPtr() match {
-          case None => delta
-          case Some(p) =>
-            spark.read.parquet(s"$p/model").unionByName(delta)
-              .groupBy("fp").agg(sum(col("n_copies")).as("n_copies"),
-                min(col("keeper")).as("keeper"))
-        }
-        publishSnapshot(spark, s"$base/_latest", s"$base/v$id") { out =>
-          model.write.mode("overwrite").parquet(s"$out/model")
-        }
-        ()
+    Fold.run(stream, base, "p12") { (batch, id) =>
+      val delta = sigDelta(spread(batch), prefixBytes)
+      val model = Fold.latest(spark, base) match {
+        case None => delta
+        case Some(p) =>
+          spark.read.parquet(s"$p/model").unionByName(delta)
+            .groupBy("fp").agg(sum(col("n_copies")).as("n_copies"),
+              min(col("keeper")).as("keeper"))
       }
-      .option("checkpointLocation", s"$base/ckpt")
-      .queryName(s"graft_p12_${java.util.UUID.randomUUID()}")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    val snap = readPtr().getOrElse(
-      sys.error("no snapshot: stream produced no batches and none recorded"))
+      publishSnapshot(spark, base, id) { out =>
+        model.write.mode("overwrite").parquet(s"$out/model")
+      }
+    }
+    val snap = Fold.snapshot(spark, base)
     spark.read.parquet(s"$snap/model")
   }
 
@@ -1776,13 +1636,8 @@ object Streams {
     * the maintained signature state must reproduce the batch dedup
     * exactly (shares m05's DuckDB oracle). */
   def streamingPayloadDedup(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p12").toString
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val docs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
-    val model = withStreamPartitions(spark, 8) {
-      incrementalPayloadSig(docs, base)
+    val model = Fold.driver(spark, "p12") { base =>
+      incrementalPayloadSig(Fold.tableStream(spark, dir, "documents"), base)
     }
     spark.read.parquet(s"$dir/documents.parquet")
       .select(col("doc_id").cast("long").as("doc_id"),
@@ -1826,20 +1681,11 @@ object Streams {
     // batch's part; the _folded manifest covers compaction crashes
     val st = new LsmState(
       stream.sparkSession, base, identity, compactEvery)
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        st.append(id, graft.operators.Dedup.semanticDecontaminate(
-          spread(batch.toDF()), eval, col("vec_id"), col("embedding"),
-          threshold))
-        st.maybeCompact(id)
-        ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .queryName(s"graft_p08_${java.util.UUID.randomUUID()}")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    st.result()
+    Fold.appendFold(stream, base, "p08", st) { (batch, _) =>
+      graft.operators.Dedup.semanticDecontaminate(
+        spread(batch), eval, col("vec_id"), col("embedding"),
+        threshold)
+    }
   }
 
   /** [[incrementalSemanticScreen]] over the embeddings table —
@@ -1848,18 +1694,14 @@ object Streams {
     * verbatim. */
   def streamingSemanticScreen(
       spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p08").toString
-    val schema = spark.read.parquet(s"$dir/embeddings.parquet").schema
-    val vecs = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-      .filter(col("vec_id") % 97 =!= 0)
-    val eval = spark.read.parquet(s"$dir/embeddings.parquet")
-      .filter(col("vec_id") % 97 === 0)
-    val snap = withStreamPartitions(spark, 8) {
-      incrementalSemanticScreen(vecs, eval, base, 0.35)
-    }
-    snap.orderBy("vec_id")
+    Fold.driver(spark, "p08") { base =>
+      incrementalSemanticScreen(
+        Fold.tableStream(spark, dir, "embeddings")
+          .filter(col("vec_id") % 97 =!= 0),
+        spark.read.parquet(s"$dir/embeddings.parquet")
+          .filter(col("vec_id") % 97 === 0),
+        base, 0.35)
+    }.orderBy("vec_id")
   }
 
   /** p09: incremental span screening — documents scored per
@@ -1890,20 +1732,11 @@ object Streams {
     // identity fold: one row per doc_id, parts disjoint by stream
     // delivery; the _folded manifest covers compaction crashes
     val st = new LsmState(spark, base, identity, compactEvery)
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        st.append(id, graft.operators.Dedup.dupSpansFromIndex(
-          spark, spread(batch.toDF()), col("doc_id"), col("text"),
-          indexTable, w, minCount = 1L))
-        st.maybeCompact(id)
-        ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .queryName(s"graft_p09_${java.util.UUID.randomUUID()}")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    st.result()
+    Fold.appendFold(stream, base, "p09", st) { (batch, _) =>
+      graft.operators.Dedup.dupSpansFromIndex(
+        spark, spread(batch), col("doc_id"), col("text"),
+        indexTable, w, minCount = 1L)
+    }
   }
 
   /** p10: incremental span REWRITE — the action twin of p09's
@@ -1929,20 +1762,11 @@ object Streams {
     val spark = stream.sparkSession
     // identity fold, as incrementalSpanScreen
     val st = new LsmState(spark, base, identity, compactEvery)
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        st.append(id, graft.operators.Dedup.rewriteFromIndex(
-          spark, spread(batch.toDF()), col("doc_id"), col("text"),
-          indexTable, w, minCount = 1L))
-        st.maybeCompact(id)
-        ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .queryName(s"graft_p10_${java.util.UUID.randomUUID()}")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    st.result()
+    Fold.appendFold(stream, base, "p10", st) { (batch, _) =>
+      graft.operators.Dedup.rewriteFromIndex(
+        spark, spread(batch), col("doc_id"), col("text"),
+        indexTable, w, minCount = 1L)
+    }
   }
 
   /** [[incrementalSpanRewrite]] over the documents table: index from
@@ -1950,21 +1774,17 @@ object Streams {
     * external docs (doc_id % 7 = 0) — the same split as p09, so the
     * whole chain stays DuckDB-expressible. */
   def streamingSpanRewrite(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p10").toString
     val table = "graft_p10_span_idx"
     dropManagedTable(spark, table)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     graft.operators.Dedup.writeSpanIndex(
       docs.filter(col("doc_id") % 7 =!= 0), col("doc_id"), col("text"),
       table, w = 8, numBuckets = 8)
-    val ext = spark.readStream.schema(docs.schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val ext = Fold.tableStream(spark, dir, "documents", Some(docs.schema))
       .filter(col("doc_id") % 7 === 0)
-    val snap = withStreamPartitions(spark, 8) {
+    Fold.driver(spark, "p10") { base =>
       incrementalSpanRewrite(ext, table, base, w = 8)
-    }
-    snap.orderBy("doc_id")
+    }.orderBy("doc_id")
   }
 
   /** Drop a managed table AND its warehouse directory — a previous
@@ -1977,14 +1797,8 @@ object Streams {
       "spark.sql.warehouse.dir", "spark-warehouse")
     val root = if (wh.startsWith("file:"))
       java.nio.file.Paths.get(new java.net.URI(wh)).toString else wh
-    val dir = new java.io.File(root, table.toLowerCase)
-    if (dir.exists()) {
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(); ()
-      }
-      rm(dir)
-    }
+    org.apache.hadoop.fs.FileUtil.fullyDelete(
+      new java.io.File(root, table.toLowerCase))
   }
 
   /** [[incrementalSpanScreen]] over the documents table: the index is
@@ -1995,21 +1809,17 @@ object Streams {
     * the whole chain is DuckDB-expressible (window counts over the
     * corpus subset, probe from the external subset). */
   def streamingSpanScreen(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p09").toString
     val table = "graft_p09_span_idx"
     dropManagedTable(spark, table)
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     graft.operators.Dedup.writeSpanIndex(
       docs.filter(col("doc_id") % 7 =!= 0), col("doc_id"), col("text"),
       table, w = 8, numBuckets = 8)
-    val ext = spark.readStream.schema(docs.schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val ext = Fold.tableStream(spark, dir, "documents", Some(docs.schema))
       .filter(col("doc_id") % 7 === 0)
-    val snap = withStreamPartitions(spark, 8) {
+    Fold.driver(spark, "p09") { base =>
       incrementalSpanScreen(ext, table, base, w = 8)
-    }
-    snap.orderBy("doc_id")
+    }.orderBy("doc_id")
   }
 
   /** p05: incremental ANN-index maintenance — the coarse quantizer is
@@ -2043,19 +1853,10 @@ object Streams {
     val st = new LsmState(
       stream.sparkSession, base,
       _.groupBy("vec_id").agg(min(col("cell")).as("cell")), compactEvery)
-    val q = stream.writeStream
-      .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], id: Long) =>
-        st.append(id, graft.operators.Similarity
-          .assignCells(batch.toDF(), "vec_id", "embedding", centroids))
-        st.maybeCompact(id)
-        ()
-      }
-      .option("checkpointLocation", s"$base/ckpt")
-      .queryName(s"graft_p05_${java.util.UUID.randomUUID()}")
-      .start()
-    q.processAllAvailable()
-    q.stop()
-    st.result()
+    Fold.appendFold(stream, base, "p05", st) { (batch, _) =>
+      graft.operators.Similarity
+        .assignCells(batch, "vec_id", "embedding", centroids)
+    }
   }
 
   /** [[incrementalIvfIndex]] over the embeddings table: quantizer
@@ -2063,14 +1864,12 @@ object Streams {
     * streamed — output is the (vec_id, cell) index plus per-cell
     * occupancy, which must equal the batch kmeansCells assignment. */
   def streamingIvfIndex(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p05").toString
     val emb = spark.read.parquet(s"$dir/embeddings.parquet")
     val cents = graft.operators.Similarity
       .trainCentroids(emb, "vec_id", "embedding", 10)
-    val stream = spark.readStream.schema(emb.schema)
-      .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-    val idx = withStreamPartitions(spark, 8) {
+    val stream =
+      Fold.tableStream(spark, dir, "embeddings", Some(emb.schema))
+    val idx = Fold.driver(spark, "p05") { base =>
       incrementalIvfIndex(stream, cents, base)
     }
     val occ = idx.groupBy("cell").agg(count(lit(1)).as("cell_size"))
@@ -2104,27 +1903,14 @@ object Streams {
       emb.filter(col("vec_id") % 5 =!= 0), "vec_id", "embedding", table,
       numCells = 16, numBuckets = 8, numSub = 8, codebookK = 32,
       sampleN = 1024, trainIters = 4, coarseIters = 2)
-    val stream = spark.readStream.schema(emb.schema)
-      .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
+    val stream = Fold.tableStream(spark, dir, "embeddings", Some(emb.schema))
       .filter(col("vec_id") % 5 === 0)
-    val q = withStreamPartitions(spark, 8) {
-      stream.writeStream
-        .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          if (!batch.isEmpty) {
-            graft.operators.Similarity
-              .appendIvfPqLayout(batch.toDF(), "vec_id", "embedding", table)
-              .collect()
-            ()
-          }
-        }
-        .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft_p20").toString
-            + "/ckpt")
-        .queryName(s"graft_p20_${java.util.UUID.randomUUID()}")
-        .start()
+    Fold.driver(spark, "p20") { base =>
+      Fold.run(stream, base, "p20") { (batch, _) =>
+        if (!batch.isEmpty) graft.operators.Similarity
+          .appendIvfPqLayout(batch, "vec_id", "embedding", table).collect()
+      }
     }
-    q.processAllAvailable()
-    q.stop()
     spark.table(table)
       .groupBy("cell")
       .agg(count(lit(1)).as("n_codes"),
@@ -2137,16 +1923,11 @@ object Streams {
   /** [[upsertLatestOf]] over the events table: the maintained
     * snapshot is the latest event per user. */
   def streamingUpsertLatest(spark: SparkSession, dir: String): DataFrame = {
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_e14").toString
     val ev = eventsStream(spark, dir)
       .select(col("user_id"), unix_micros(col("ts")).as("ts_us"),
         col("event_id"), col("event_type"),
         round(col("value"), 2).as("value"))
-    val snap = withStreamPartitions(spark, 8) {
-      upsertLatestOf(ev, base)
-    }
-    snap.orderBy("user_id")
+    Fold.driver(spark, "e14")(upsertLatestOf(ev, _)).orderBy("user_id")
   }
 
   // public: encoder codegen needs to reach these from generated code

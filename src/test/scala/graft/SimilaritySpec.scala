@@ -513,7 +513,7 @@ class SimilaritySpec extends SparkSuite {
     val recall = (pq intersect brute).size.toDouble / brute.size
     info(s"PQ recall@5 (8 subspaces x 32 codes, candMult=32) = $recall")
     // floor raised 0.6 -> 0.85 with the round-12 tuned default
-    // (candMult=32; R12RecallSweep: 0.861 on the sf0.1 corpus)
+    // (candMult=32; measured 0.861 on the sf0.1 corpus)
     assert(recall >= 0.85, s"PQ recall too low: $recall")
   }
 

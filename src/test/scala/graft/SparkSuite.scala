@@ -1,6 +1,8 @@
 package graft
 
+import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
+import org.scalatest.{BeforeAndAfterAll, Suite}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session base: one local SparkSession per suite, configured
@@ -20,4 +22,17 @@ trait SparkSuite extends AnyFunSuite {
     .getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"
+}
+
+/** One temp root per suite, named `rootName`, removed when the suite
+  * ends; `tmpDir` hands out fresh dirs under it. */
+trait SuiteTempDirs extends BeforeAndAfterAll { this: Suite =>
+  protected def rootName: String
+  private lazy val suiteRoot = Files.createTempDirectory(rootName)
+  protected def tmpDir(prefix: String): String =
+    Files.createTempDirectory(suiteRoot, prefix).toString
+
+  override def afterAll(): Unit =
+    try super.afterAll()
+    finally org.apache.hadoop.fs.FileUtil.fullyDelete(suiteRoot.toFile)
 }

@@ -5,7 +5,10 @@ import org.apache.spark.sql.functions._
 import graft.operators.Temporal
 import graft.streaming.Streams
 
-class StreamsSpec extends SparkSuite {
+class StreamsSpec extends SparkSuite with SuiteTempDirs {
+
+  // every source and state dir the specs write lives under this root
+  protected val rootName = "graft_streams_spec"
 
   test("stateful session counts equal the window-function form") {
     val stateful = Streams.statefulSessionCounts(spark, sfDir)
@@ -76,13 +79,11 @@ class StreamsSpec extends SparkSuite {
         col("event_id"), col("event_type"))
     // split the input into 3 files and force one file per micro-batch,
     // so the merge path (snapshot ⊕ delta) actually runs across batches
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft_e14_src").toString
+    val srcDir = tmpDir("graft_e14_src")
     ev.repartition(3).write.mode("overwrite").parquet(srcDir)
     val stream = spark.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_e14_spec").toString
+    val base = tmpDir("graft_e14_spec")
     val snap = Streams.upsertLatestOf(stream, base)
       .collect()
       .map(r => r.getAs[Long]("user_id") ->
@@ -109,8 +110,7 @@ class StreamsSpec extends SparkSuite {
     // id-range splits written as separate files, replayed one file per
     // micro-batch IN doc_id ORDER (file source replays in input order) —
     // the cross-batch anti-join dedup path must actually run
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft_p03_src").toString
+    val srcDir = tmpDir("graft_p03_src")
     val ids = corpus.select(max(col("doc_id"))).head.getLong(0)
     val cut1 = ids / 3; val cut2 = 2 * ids / 3
     Seq(
@@ -123,8 +123,7 @@ class StreamsSpec extends SparkSuite {
     val stream = spark.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$srcDir/part*")
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p03_spec").toString
+    val base = tmpDir("graft_p03_spec")
     val got = graft.streaming.Streams.incrementalClean(stream, bench, base)
       .collect().map(r => (r.getAs[Long]("doc_id"),
         r.getAs[String]("source"), r.getAs[String]("fp"))).toSet
@@ -156,8 +155,7 @@ class StreamsSpec extends SparkSuite {
     val bench = docs.filter(col("doc_id") % 20 === 0)
     // same forced id-ordered 3-file replay as the p03 spec: the
     // cross-batch anti-join AND the batch-local finishing must compose
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft_p06_src").toString
+    val srcDir = tmpDir("graft_p06_src")
     val ids = corpus.select(max(col("doc_id"))).head.getLong(0)
     val cut1 = ids / 3; val cut2 = 2 * ids / 3
     Seq(
@@ -170,8 +168,7 @@ class StreamsSpec extends SparkSuite {
     val stream = spark.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$srcDir/part*")
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p06_spec").toString
+    val base = tmpDir("graft_p06_spec")
     def key(r: org.apache.spark.sql.Row) =
       (r.getAs[Long]("doc_id"), r.getAs[String]("source"),
         r.getAs[Double]("quality"), r.getAs[Long]("n_emails"),
@@ -224,13 +221,11 @@ class StreamsSpec extends SparkSuite {
     val docs = Tables.load(spark, sfDir, "documents")
     // arbitrary 3-way chunking — counts merge is a commutative
     // monoid, so ANY chunking must reproduce batch training exactly
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft_p04_src").toString
+    val srcDir = tmpDir("graft_p04_src")
     docs.repartition(3).write.mode("overwrite").parquet(srcDir)
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p04_spec").toString
+    val base = tmpDir("graft_p04_spec")
     val got = graft.streaming.Streams.incrementalLmModel(stream, base)
       .collect()
       .map(r => r.getAs[String]("bg") -> r.getAs[Long]("nb")).toMap
@@ -260,8 +255,7 @@ class StreamsSpec extends SparkSuite {
     val chunks = Seq(
       docs.filter(col("doc_id") <= n / 2),
       docs.filter(col("doc_id") > n / 2))
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft_p04_replay_src").toString
+    val srcDir = tmpDir("graft_p04_replay_src")
     chunks.zipWithIndex.foreach { case (chunk, i) =>
       chunk.coalesce(1).write.mode("overwrite").parquet(s"$srcDir/c$i")
       val f = new java.io.File(s"$srcDir/c$i").listFiles()
@@ -278,8 +272,7 @@ class StreamsSpec extends SparkSuite {
           |    i -> substr(t, i, 2))
           |  ELSE array() END""".stripMargin)).as("bg"))
       .groupBy("bg").agg(count(lit(1)).as("nb"))
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p04_replay").toString
+    val base = tmpDir("graft_p04_replay")
     // what a committed batch 0 published, pointer included
     bigrams(chunks(0)).coalesce(1).write
       .mode("overwrite").parquet(s"$base/v0")
@@ -300,13 +293,11 @@ class StreamsSpec extends SparkSuite {
 
   test("incremental df model: multi-batch fold equals batch derivation") {
     val docs = Tables.load(spark, sfDir, "documents")
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft_p07_src").toString
+    val srcDir = tmpDir("graft_p07_src")
     docs.repartition(3).write.mode("overwrite").parquet(srcDir)
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p07_spec").toString
+    val base = tmpDir("graft_p07_spec")
     val model = graft.streaming.Streams.incrementalDfModel(stream, base)
     val got = model.collect()
       .map(r => r.getAs[String]("token") ->
@@ -328,13 +319,11 @@ class StreamsSpec extends SparkSuite {
   test("incremental minhash pairs: multi-batch discovery equals batch d02") {
     val docs = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft_p14_src").toString
+    val srcDir = tmpDir("graft_p14_src")
     docs.repartition(3).write.mode("overwrite").parquet(srcDir)
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p14_spec").toString
+    val base = tmpDir("graft_p14_spec")
     val got = graft.streaming.Streams
       .incrementalMinhashPairs(stream, base)
       .collect().map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id")))
@@ -353,13 +342,11 @@ class StreamsSpec extends SparkSuite {
   test("incremental knn graph: multi-batch fold equals batch s16 graph") {
     val emb = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft_p15_src").toString
+    val srcDir = tmpDir("graft_p15_src")
     emb.repartition(3).write.mode("overwrite").parquet(srcDir)
     val stream = spark.readStream.schema(emb.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p15_spec").toString
+    val base = tmpDir("graft_p15_spec")
     val got = graft.streaming.Streams
       .incrementalKnnGraph(stream, base, k = 5)
       .collect()
@@ -415,13 +402,11 @@ class StreamsSpec extends SparkSuite {
   test("incremental cluster dedup: multi-batch pair fold equals batch d11") {
     val emb = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft_p17_src").toString
+    val srcDir = tmpDir("graft_p17_src")
     emb.repartition(3).write.mode("overwrite").parquet(srcDir)
     val stream = spark.readStream.schema(emb.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p17_spec").toString
+    val base = tmpDir("graft_p17_spec")
     val pairs = graft.streaming.Streams
       .incrementalEmbPairs(stream, base, threshold = 0.3)
       .collect().map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id")))
@@ -459,13 +444,11 @@ class StreamsSpec extends SparkSuite {
 
   test("incremental quality keeper: multi-batch election equals batch d20") {
     val docs = Tables.load(spark, sfDir, "documents")
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft_p16_src").toString
+    val srcDir = tmpDir("graft_p16_src")
     docs.repartition(3).write.mode("overwrite").parquet(srcDir)
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p16_spec").toString
+    val base = tmpDir("graft_p16_spec")
     val got = graft.streaming.Streams
       .incrementalQualityKeeper(stream, base)
       .collect()
@@ -508,8 +491,7 @@ class StreamsSpec extends SparkSuite {
     val chunks = Seq(
       docs.filter(col("doc_id") <= n / 2),
       docs.filter(col("doc_id") > n / 2))
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft_p14_replay_src").toString
+    val srcDir = tmpDir("graft_p14_replay_src")
     chunks.zipWithIndex.foreach { case (chunk, i) =>
       chunk.coalesce(1).write.mode("overwrite").parquet(s"$srcDir/c$i")
       val f = new java.io.File(s"$srcDir/c$i").listFiles()
@@ -518,8 +500,7 @@ class StreamsSpec extends SparkSuite {
       java.nio.file.Files.move(f.toPath, dst.toPath)
       assert(dst.setLastModified(1000000L * (i + 1)))
     }
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p14_replay").toString
+    val base = tmpDir("graft_p14_replay")
     // Seed exactly what a committed batch 0 leaves durable: its bands
     // appended to the fold's bucketed band table (+ marker per the
     // window under test) and its pairs as LSM part b0.
@@ -578,8 +559,7 @@ class StreamsSpec extends SparkSuite {
       .select(col("event_id"), col("event_type"), col("ts"))
     val n = ev.count()
     val cuts = Seq(n / 3, 2 * n / 3)
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft_p13_src").toString
+    val srcDir = tmpDir("graft_p13_src")
     // three INGEST-ORDERED chunks: the file source replays files in
     // modification-time order, which we pin explicitly
     val ranges = Seq(
@@ -597,8 +577,7 @@ class StreamsSpec extends SparkSuite {
     val stream = spark.readStream.schema(ev.schema)
       .option("maxFilesPerTrigger", "1")
       .option("pathGlobFilter", "chunk*.parquet").parquet(srcDir)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p13_spec").toString
+    val base = tmpDir("graft_p13_spec")
     val got = graft.streaming.Streams
       .incrementalDisorderProfile(stream, base)
       .collect().map(r => r.getAs[String]("event_type") ->
@@ -626,13 +605,11 @@ class StreamsSpec extends SparkSuite {
 
   test("incremental payload signatures: multi-batch fold equals batch dedup") {
     val docs = Tables.load(spark, sfDir, "documents")
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft_p12_src").toString
+    val srcDir = tmpDir("graft_p12_src")
     docs.repartition(3).write.mode("overwrite").parquet(srcDir)
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p12_spec").toString
+    val base = tmpDir("graft_p12_spec")
     val model = graft.streaming.Streams.incrementalPayloadSig(stream, base)
     val got = model.collect()
       .map(r => r.getAs[String]("fp") ->
@@ -650,13 +627,11 @@ class StreamsSpec extends SparkSuite {
 
   test("incremental DSIR model: multi-batch fold equals batch counts") {
     val docs = Tables.load(spark, sfDir, "documents")
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft_p11_src").toString
+    val srcDir = tmpDir("graft_p11_src")
     docs.repartition(3).write.mode("overwrite").parquet(srcDir)
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p11_spec").toString
+    val base = tmpDir("graft_p11_spec")
     val model = graft.streaming.Streams.incrementalDsirModel(stream, base)
     val got = model.collect()
       .map(r => r.getAs[Long]("b") ->
@@ -682,13 +657,11 @@ class StreamsSpec extends SparkSuite {
     val emb = Tables.load(spark, sfDir, "embeddings")
     val corpus = emb.filter(col("vec_id") % 97 =!= 0)
     val eval = emb.filter(col("vec_id") % 97 === 0)
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft_p08_src").toString
+    val srcDir = tmpDir("graft_p08_src")
     corpus.repartition(3).write.mode("overwrite").parquet(srcDir)
     val stream = spark.readStream.schema(corpus.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p08_spec").toString
+    val base = tmpDir("graft_p08_spec")
     val got = graft.streaming.Streams
       .incrementalSemanticScreen(stream, eval, base, 0.35)
       .collect().map(r => r.getAs[Long]("vec_id") ->
@@ -715,13 +688,11 @@ class StreamsSpec extends SparkSuite {
     try {
       graft.operators.Dedup.writeSpanIndex(
         corpus, col("doc_id"), col("text"), table, w = 8, numBuckets = 8)
-      val srcDir = java.nio.file.Files
-        .createTempDirectory("graft_p09_src").toString
+      val srcDir = tmpDir("graft_p09_src")
       ext.repartition(3).write.mode("overwrite").parquet(srcDir)
       val stream = spark.readStream.schema(ext.schema)
         .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_p09_spec").toString
+      val base = tmpDir("graft_p09_spec")
       def asMap(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => r.getAs[Long]("doc_id") ->
           (r.getAs[Long]("n_windows"), r.getAs[Long]("n_dup"),
@@ -751,13 +722,11 @@ class StreamsSpec extends SparkSuite {
     try {
       graft.operators.Dedup.writeSpanIndex(
         corpus, col("doc_id"), col("text"), table, w = 8, numBuckets = 8)
-      val srcDir = java.nio.file.Files
-        .createTempDirectory("graft_p10_src").toString
+      val srcDir = tmpDir("graft_p10_src")
       ext.repartition(3).write.mode("overwrite").parquet(srcDir)
       val stream = spark.readStream.schema(ext.schema)
         .option("maxFilesPerTrigger", "1").parquet(srcDir)
-      val base = java.nio.file.Files
-        .createTempDirectory("graft_p10_spec").toString
+      val base = tmpDir("graft_p10_spec")
       def asMap(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => r.getAs[Long]("doc_id") ->
           (r.getAs[Long]("n_tokens"), r.getAs[Long]("n_removed"),
@@ -786,13 +755,11 @@ class StreamsSpec extends SparkSuite {
     // batch build exactly, and re-delivered ids must stay idempotent
     val cents = graft.operators.Similarity
       .trainCentroids(emb, "vec_id", "embedding", 10)
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft_p05_src").toString
+    val srcDir = tmpDir("graft_p05_src")
     emb.repartition(3).write.mode("overwrite").parquet(srcDir)
     val stream = spark.readStream.schema(emb.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p05_spec").toString
+    val base = tmpDir("graft_p05_spec")
     val got = graft.streaming.Streams
       .incrementalIvfIndex(stream, cents, base)
       .collect()
@@ -819,13 +786,11 @@ class StreamsSpec extends SparkSuite {
     val emb = Tables.load(spark, sfDir, "embeddings")
     val cents = graft.operators.Similarity
       .trainCentroids(emb, "vec_id", "embedding", 10)
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft_p05c_src").toString
+    val srcDir = tmpDir("graft_p05c_src")
     emb.repartition(3).write.mode("overwrite").parquet(srcDir)
     val stream = spark.readStream.schema(emb.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p05c_spec").toString
+    val base = tmpDir("graft_p05c_spec")
     // compactEvery=2 forces at least one compaction across 3 batches
     val got = graft.streaming.Streams
       .incrementalIvfIndex(stream, cents, base, compactEvery = 2)
@@ -855,8 +820,7 @@ class StreamsSpec extends SparkSuite {
 
   test("fold-state inspection reads pointers/parts/generations without scanning data") {
     import spark.implicits._
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_state_cmd").toString
+    val base = tmpDir("graft_state_cmd")
     // a compacted sub-store (pointer set, parts folded away) ...
     val docsSt = new graft.streaming.LsmState(
       spark, s"$base/docs", identity, compactEvery = 2)
@@ -912,8 +876,7 @@ class StreamsSpec extends SparkSuite {
       chunks: Seq[org.apache.spark.sql.DataFrame],
       schema: org.apache.spark.sql.types.StructType,
       prefix: String): (org.apache.spark.sql.DataFrame, Seq[Long]) = {
-    val srcDir = java.nio.file.Files
-      .createTempDirectory(prefix).toString
+    val srcDir = tmpDir(prefix)
     val counts = chunks.zipWithIndex.map { case (chunk, i) =>
       chunk.coalesce(1).write.mode("overwrite").parquet(s"$srcDir/c$i")
       val f = new java.io.File(s"$srcDir/c$i").listFiles()
@@ -944,8 +907,7 @@ class StreamsSpec extends SparkSuite {
       docs.filter(col("doc_id") > 2 * n / 3))
     val (stream, counts) = orderedChunkStream(
       chunks, docs.schema, "graft_lsm_obatch_src")
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_lsm_obatch").toString
+    val base = tmpDir("graft_lsm_obatch")
     graft.streaming.Streams
       .incrementalQualityKeeper(stream, base).collect()
     val partsDir = new java.io.File(s"$base/docs/parts")
@@ -966,13 +928,11 @@ class StreamsSpec extends SparkSuite {
 
   test("LSM fold state: compaction folds parts behind the pointer, result unchanged") {
     val docs = Tables.load(spark, sfDir, "documents")
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft_lsm_compact_src").toString
+    val srcDir = tmpDir("graft_lsm_compact_src")
     docs.repartition(3).write.mode("overwrite").parquet(srcDir)
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_lsm_compact").toString
+    val base = tmpDir("graft_lsm_compact")
     // compactEvery=2 forces at least one compaction across 3 batches
     val got = graft.streaming.Streams
       .incrementalQualityKeeper(stream, base, compactEvery = 2)
@@ -1022,8 +982,7 @@ class StreamsSpec extends SparkSuite {
       docs.filter(col("doc_id") <= n / 3),
       docs.filter(col("doc_id") > n / 3 && col("doc_id") <= 2 * n / 3),
       docs.filter(col("doc_id") > 2 * n / 3))
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft_resume_src").toString
+    val srcDir = tmpDir("graft_resume_src")
     def land(i: Int): Unit = {
       chunks(i).coalesce(1).write.mode("overwrite").parquet(s"$srcDir/c$i")
       val f = new java.io.File(s"$srcDir/c$i").listFiles()
@@ -1033,8 +992,7 @@ class StreamsSpec extends SparkSuite {
       assert(dst.setLastModified(1000000L * (i + 1)))
     }
     land(0); land(1)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_resume").toString
+    val base = tmpDir("graft_resume")
     def stream() = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1")
       .option("pathGlobFilter", "chunk*.parquet").parquet(srcDir)
@@ -1086,8 +1044,7 @@ class StreamsSpec extends SparkSuite {
     val chunks = Seq(
       docs.filter(col("doc_id") <= n / 2),
       docs.filter(col("doc_id") > n / 2))
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft_resume14_src").toString
+    val srcDir = tmpDir("graft_resume14_src")
     def land(i: Int): Unit = {
       chunks(i).coalesce(1).write.mode("overwrite").parquet(s"$srcDir/c$i")
       val f = new java.io.File(s"$srcDir/c$i").listFiles()
@@ -1097,8 +1054,7 @@ class StreamsSpec extends SparkSuite {
       assert(dst.setLastModified(1000000L * (i + 1)))
     }
     land(0)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_resume14").toString
+    val base = tmpDir("graft_resume14")
     def stream() = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1")
       .option("pathGlobFilter", "chunk*.parquet").parquet(srcDir)
@@ -1136,13 +1092,11 @@ class StreamsSpec extends SparkSuite {
     // dedup verdict must still match their batch twins exactly.
     val emb = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft_p18c_src").toString
+    val srcDir = tmpDir("graft_p18c_src")
     emb.repartition(3).write.mode("overwrite").parquet(srcDir)
     val stream = spark.readStream.schema(emb.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p18c_spec").toString
+    val base = tmpDir("graft_p18c_spec")
     val kView = graft.streaming.Streams
       .incrementalKnnGraph(stream, base, k = 5,
         keepThreshold = Some(0.3), compactEvery = 2)
@@ -1196,13 +1150,11 @@ class StreamsSpec extends SparkSuite {
 
   test("one-pass model suite (p19): every maintained model equals its batch twin") {
     val docs = Tables.load(spark, sfDir, "documents")
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft_p19_src").toString
+    val srcDir = tmpDir("graft_p19_src")
     docs.repartition(3).write.mode("overwrite").parquet(srcDir)
     val stream = spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p19_spec").toString
+    val base = tmpDir("graft_p19_spec")
     val models = graft.streaming.Streams
       .incrementalModelSuite(stream, base)
     // char-LM counts == batch bigram training
@@ -1276,8 +1228,7 @@ class StreamsSpec extends SparkSuite {
 
   test("LsmState: _folded manifest masks leftover parts after a compaction crash") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_lsm_manifest").toString
+    val root = tmpDir("graft_lsm_manifest")
     val st = new graft.streaming.LsmState(
       spark, root, identity, compactEvery = 2)
     st.append(0, Seq((1L, "a")).toDF("id", "v"))
@@ -1310,13 +1261,11 @@ class StreamsSpec extends SparkSuite {
   test("incremental graph-cluster dedup (p18): maintained-graph verdict equals batch d11") {
     val emb = Tables.load(spark, sfDir, "embeddings")
       .select(col("vec_id"), col("embedding"))
-    val srcDir = java.nio.file.Files
-      .createTempDirectory("graft_p18_src").toString
+    val srcDir = tmpDir("graft_p18_src")
     emb.repartition(3).write.mode("overwrite").parquet(srcDir)
     val stream = spark.readStream.schema(emb.schema)
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
-    val base = java.nio.file.Files
-      .createTempDirectory("graft_p18_spec").toString
+    val base = tmpDir("graft_p18_spec")
     // ONE maintained graph state serves both views: the fold runs
     // with threshold retention…
     val kView = graft.streaming.Streams
