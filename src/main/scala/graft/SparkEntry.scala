@@ -101,10 +101,10 @@ object SparkEntry {
         col("o_orderstatus"), col("o_totalprice") > 100000)
       .orderBy("o_custkey")
 
-  /** q07: inline lookup-table decode (broadcast literal dim) —
-    * status_codes decode. */
+  /** q07: inline code-book decode (literal map lookup, unknown codes
+    * to a default) — status_codes decode. */
   private def q07(s: SparkSession, dir: String): DataFrame =
-    Relational.decode(s, T(s, dir, "orders"), "o_orderstatus",
+    Relational.decode(T(s, dir, "orders"), "o_orderstatus",
         Seq("O" -> "Open", "F" -> "Finished", "P" -> "Pending"),
         "status_descr", default = Some("Unknown"))
       .groupBy("status_descr").agg(count(lit(1)).as("n"))

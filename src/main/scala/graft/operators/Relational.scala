@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -12,32 +12,30 @@ import graft.functions.Normalize
   */
 object Relational {
 
-  /** Decode a code column through a small literal lookup table, LEFT
-    * JOIN semantics — the reference's status_codes /
-    * airworthiness_classes / owner_types decode
-    * (pipelines/publish.py:75-149, views at :156-198). Unknown codes
-    * decode to NULL (the reference's LEFT JOIN behavior) unless a
-    * `default` is supplied.
+  /** Decode a code column through a small literal code book — the
+    * reference's status_codes / airworthiness_classes / owner_types
+    * decode (pipelines/publish.py:75-149, views at :156-198). Unknown
+    * and NULL codes decode to NULL (the reference's LEFT JOIN
+    * behavior) unless a `default` is supplied; `outCol` is appended
+    * (or replaced in place), the other columns keep their order.
     *
-    * The lookup side is an explicitly broadcast literal DataFrame:
-    * at 100 TB the fact side never moves, each executor decodes
-    * map-side. */
+    * The code book is a literal map expression looked up per row, not
+    * a joined table: no lookup relation, no broadcast job, and the
+    * fact side never moves. A missing key yields NULL with ANSI on or
+    * off. Codes must be distinct — a join would have multiplied rows
+    * on a duplicate, a map would silently keep one. */
   def decode(
-      spark: SparkSession,
       df: DataFrame,
       codeCol: String,
       mapping: Seq[(String, String)],
       outCol: String,
       default: Option[String] = None): DataFrame = {
-    import spark.implicits._
-    val lookup = mapping.toDF("__code", "__descr")
-    val decoded = default match {
-      case Some(d) => coalesce(col("__descr"), lit(d))
-      case None => col("__descr")
-    }
-    df.join(broadcast(lookup), df(codeCol) === col("__code"), "left")
-      .withColumn(outCol, decoded)
-      .drop("__code", "__descr")
+    val dups = mapping.groupBy(_._1).collect { case (c, xs) if xs.size > 1 => c }
+    require(dups.isEmpty,
+      s"decode of $codeCol: duplicate codes ${dups.toSeq.sorted.mkString(", ")}")
+    val book = typedLit(mapping.toMap)
+    val descr = book(col(codeCol))
+    df.withColumn(outCol, default.fold(descr)(d => coalesce(descr, lit(d))))
   }
 
   /** Normalized exact-key lookup + enrichment joins — hb.search()

@@ -1,5 +1,6 @@
 package graft.registry
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,10 +24,19 @@ import graft.operators.Relational
   *   hb.schema(t)        -> registry.schemaOf(t)
   *
   * Instead of materializing DuckDB/SQLite indexes, views are lazy
-  * DataFrames: the decode dims are broadcast literal tables, the FTS
-  * analog is a token inverted index (explode + hash shuffle) — both
-  * forms that scale out, where the reference's single-file databases
-  * cannot.
+  * DataFrames: the code books decode through literal map expressions,
+  * the FTS analog is a token inverted index (explode + hash shuffle) —
+  * both forms that scale out, where the reference's single-file
+  * databases cannot.
+  *
+  * Like the reference's one `load_data()` then many calls, an
+  * instance resolves each published table and derived view once per
+  * snapshot: the lazy frame is kept and reused while a driver-side
+  * listing of the table's files (path, length, modification time; no
+  * Spark job) is unchanged, and re-resolved on the next call after a
+  * rewrite (e.g. [[RegistryNormalize.normalizeIncremental]]). Only
+  * plans are kept — no cached data, files or threads — and only for
+  * the instance's lifetime.
   */
 class Registry(
     spark: SparkSession,
@@ -58,8 +68,51 @@ class Registry(
         "Run the update pipeline (Ingest.fromZip / normalize) to refresh.")
     }
 
-  def table(name: String): DataFrame =
-    spark.read.parquet(s"$dataDir/$name.parquet")
+  /** Resolved tables and views, by name: the stamp each was resolved
+    * under and its lazy frame. A table's stamp is its file listing; a
+    * view's is its input frames, which compare by identity (Dataset
+    * keeps Object.equals). Concurrent callers share it; a race
+    * resolves twice and keeps either answer. */
+  private val resolved =
+    new java.util.concurrent.ConcurrentHashMap[String, (Seq[Any], DataFrame)]()
+
+  private def memo(name: String, stamp: Seq[Any])(
+      resolve: => DataFrame): DataFrame = {
+    val hit = resolved.get(name)
+    if (hit != null && hit._1 == stamp) hit._2
+    else {
+      val df = resolve
+      resolved.put(name, (stamp, df))
+      df
+    }
+  }
+
+  private lazy val fs = new Path(dataDir)
+    .getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** (path, length, modification time) of every file under `dir`,
+    * sorted; None when `dir` does not exist. */
+  private def listing(dir: String): Option[Seq[(String, Long, Long)]] =
+    try {
+      val it = fs.listFiles(new Path(dir), true)
+      val files = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      Some(files.result().sorted)
+    } catch { case _: java.io.FileNotFoundException => None }
+
+  /** A published table, re-read only when its files changed since the
+    * last call; a missing table raises what `spark.read.parquet`
+    * raises. */
+  def table(name: String): DataFrame = {
+    val dir = s"$dataDir/$name.parquet"
+    listing(dir) match {
+      case Some(files) => memo(name, files)(spark.read.parquet(dir))
+      case None => spark.read.parquet(dir)
+    }
+  }
 
   /** Freshness + integrity report — `status --watch`'s one decision
     * table, folding [[Lineage]]'s manifest into the live registry:
@@ -99,18 +152,24 @@ class Registry(
   }
 
   /** aircraft_decoded view (publish.py:156-183): fact LEFT JOIN
-    * make/model dim + literal code books, all broadcast. */
+    * broadcast make/model and registration dims, code books decoded
+    * in place. */
   def aircraftDecoded: DataFrame = {
     val a = table("aircraft")
     val m = table("aircraft_make_model")
     val r = table("registrations")
+    memo("aircraft_decoded", Seq(a, m, r))(decodedView(a, m, r))
+  }
+
+  private def decodedView(
+      a: DataFrame, m: DataFrame, r: DataFrame): DataFrame = {
     val withDims = a
       .join(broadcast(m.select(col("mfr_mdl_code"), col("maker"), col("model"))),
         Seq("mfr_mdl_code"), "left")
       .join(broadcast(r.select(col("n_number"), col("cert_issue_date"))),
         Seq("n_number"), "left")
-    val decoded = Relational.decode(spark,
-      Relational.decode(spark, withDims,
+    val decoded = Relational.decode(
+      Relational.decode(withDims,
         "reg_status", Schemas.statusCodes, "reg_status_descr"),
       "airworthiness_class", Schemas.airworthinessClasses,
       "airworthiness_descr")
@@ -131,8 +190,9 @@ class Registry(
   }
 
   /** owners_clean view (publish.py:185-198). */
-  def ownersClean: DataFrame =
-    Relational.decode(spark, table("owners"),
+  def ownersClean: DataFrame = {
+    val o = table("owners")
+    memo("owners_clean", Seq(o))(Relational.decode(o,
         "owner_type", Schemas.ownerTypes, "owner_type_descr")
       .select(col("n_number"),
         col("owner_type").as("owner_type_code"),
@@ -141,16 +201,19 @@ class Registry(
         col("address_all_std").as("address"),
         col("city_std").as("city"),
         col("state_std").as("state"),
-        col("zip5").as("zip"))
+        col("zip5").as("zip")))
+  }
 
   /** owners_summary roll-up (publish.py:58-67). */
-  def ownersSummary: DataFrame =
-    Relational.groupSummary(table("owners"), "n_number",
+  def ownersSummary: DataFrame = {
+    val o = table("owners")
+    memo("owners_summary", Seq(o))(Relational.groupSummary(o, "n_number",
         col("owner_name_std"),
         col("owner_type").isin("2", "4", "5"))
       .withColumnRenamed("member_count", "owner_count")
       .withColumnRenamed("members_concat", "owner_names_concat")
-      .withColumnRenamed("any_flag", "any_trust_flag")
+      .withColumnRenamed("any_flag", "any_trust_flag"))
+  }
 
   /** N-number lookup with owner enrichment (api.py:153-197). */
   def search(nNumber: String): DataFrame = {
@@ -158,9 +221,12 @@ class Registry(
     // trim BEFORE stripping the N prefix (api.py:171-174 order):
     // " N221LA" must normalize to "221LA", not keep its N
     val key = nNumber.trim.toUpperCase.replaceAll("^N", "")
-    aircraftDecoded
-      .filter(Normalize.normalizeKey(col("n_number")) === key)
-      .join(ownersClean, Seq("n_number"), "left")
+    val byKey = Normalize.normalizeKey(col("n_number")) === key
+    // the owners side gets the key filter explicitly (not left to
+    // constraint inference) and is broadcast: a one-stage plan instead
+    // of a sort-merge join AQE only converts after two shuffle stages
+    aircraftDecoded.filter(byKey)
+      .join(broadcast(ownersClean.filter(byKey)), Seq("n_number"), "left")
   }
 
   /** Fleet search: pipe-separated OR terms over owner names, optional

@@ -7,7 +7,9 @@ import java.util.zip.{ZipEntry, ZipOutputStream}
   * `update` (unzip → normalize → manifest), then every query
   * subcommand runs against the published tables, with the staleness
   * warning surfacing through the injectable sink. */
-class CliSpec extends SparkSuite {
+class CliSpec extends SparkSuite with SuiteTempDirs {
+
+  protected val rootName = "graft_cli_spec"
 
   private def writeZip(dest: String, files: Map[String, String]): Unit = {
     val zos = new ZipOutputStream(Files.newOutputStream(Paths.get(dest)))
@@ -34,7 +36,7 @@ class CliSpec extends SparkSuite {
       |""".stripMargin
 
   private lazy val dataRoot = {
-    val root = Files.createTempDirectory("graft_cli").toString
+    val root = tmpDir("graft_cli")
     val zip = s"$root/snapshot.zip"
     writeZip(zip, Map(
       "MASTER.txt" -> master, "ACFTREF.txt" -> acftref,
@@ -57,11 +59,11 @@ class CliSpec extends SparkSuite {
   }
 
   test("zip-slip entries are rejected") {
-    val zip = s"${Files.createTempDirectory("graft_slip")}/evil.zip"
+    val zip = s"${tmpDir("graft_slip")}/evil.zip"
     writeZip(zip, Map("../escape.txt" -> "nope"))
     val err = intercept[IllegalArgumentException] {
       graft.registry.Ingest.unzip(zip,
-        Files.createTempDirectory("graft_slip_out").toString)
+        tmpDir("graft_slip_out"))
     }
     assert(err.getMessage.contains("escapes"))
   }
@@ -74,7 +76,7 @@ class CliSpec extends SparkSuite {
   }
 
   test("fetch verifies the checksum then ingests like update") {
-    val root = Files.createTempDirectory("graft_cli_fetch").toString
+    val root = tmpDir("graft_cli_fetch")
     val zip = s"$root/snapshot.zip"
     writeZip(zip, Map(
       "MASTER.txt" -> master, "ACFTREF.txt" -> acftref,
@@ -97,7 +99,7 @@ class CliSpec extends SparkSuite {
   }
 
   test("fetch downloads a file:// URL end-to-end (retry path wired)") {
-    val root = Files.createTempDirectory("graft_cli_url").toString
+    val root = tmpDir("graft_cli_url")
     val zip = s"$root/src/snapshot.zip"
     new java.io.File(s"$root/src").mkdirs()
     writeZip(zip, Map(
@@ -113,7 +115,7 @@ class CliSpec extends SparkSuite {
   }
 
   test("HttpIngest retries with backoff, checksum mismatch is retryable") {
-    val dir = Files.createTempDirectory("graft_httpingest").toString
+    val dir = tmpDir("graft_httpingest")
     val payload = "payload-bytes".getBytes("UTF-8")
     val md = java.security.MessageDigest.getInstance("SHA-256")
     val goodHex = md.digest(payload).map("%02x".format(_)).mkString
@@ -267,7 +269,7 @@ class CliSpec extends SparkSuite {
   }
 
   test("fts --ranked orders by tf-idf relevance, keeps AND semantics") {
-    val root = Files.createTempDirectory("graft_cli_rank").toString
+    val root = tmpDir("graft_cli_rank")
     val zip = s"$root/snapshot.zip"
     val rankMaster =
       """N-NUMBER ,SERIAL NUMBER,MFR MDL CODE,ENG MFR MDL,YEAR MFR,TYPE AIRCRAFT,STATUS CODE,LAST ACTION DATE,EXPIRATION DATE,CERT ISSUE DATE,CERTIFICATION,MODE S CODE,MODE S CODE HEX,NAME,STREET,STREET2,CITY,STATE,ZIP CODE,TYPE REGISTRANT
@@ -305,7 +307,7 @@ class CliSpec extends SparkSuite {
   }
 
   test("diff reports added/removed/changed vs another snapshot root") {
-    val root2 = Files.createTempDirectory("graft_cli2").toString
+    val root2 = tmpDir("graft_cli2")
     val zip2 = s"$root2/snapshot.zip"
     // vs dataRoot: 221LA's year changes (an aircraft-table column),
     // 757AF is missing, 999ZZ is new
@@ -377,7 +379,7 @@ class CliSpec extends SparkSuite {
   }
 
   test("normalize works on an already-unpacked raw dir") {
-    val root = Files.createTempDirectory("graft_cli_norm").toString
+    val root = tmpDir("graft_cli_norm")
     val raw = s"$root/rawdir"
     Files.createDirectories(Paths.get(raw))
     Files.writeString(Paths.get(s"$raw/MASTER.txt"), master)
@@ -392,7 +394,7 @@ class CliSpec extends SparkSuite {
   }
 
   test("refresh re-normalizes only changed dumps through the CLI") {
-    val root = Files.createTempDirectory("graft_cli_refresh").toString
+    val root = tmpDir("graft_cli_refresh")
     val raw = s"$root/rawdir"
     Files.createDirectories(Paths.get(raw))
     Files.writeString(Paths.get(s"$raw/MASTER.txt"), master)
@@ -497,7 +499,7 @@ class CliSpec extends SparkSuite {
   }
 
   test("fleet --export writes the result CSV with the N prefix (cli.py:655-660)") {
-    val out = Files.createTempDirectory("graft_cli_export")
+    val out = Paths.get(tmpDir("graft_cli_export"))
       .resolve("fleet.csv").toString
     var messages = List.empty[String]
     val df = Cli.run(spark, dataRoot,
@@ -536,9 +538,9 @@ class CliSpec extends SparkSuite {
     // download itself fails fast here (zero egress), but the failure
     // must be the download, not a path error; exercise the pure
     // sanitizer via a file:// URL with a traversal-looking name
-    val weird = Files.createTempDirectory("graft_cli_fetch")
+    val weird = tmpDir("graft_cli_fetch")
     val msg = intercept[IllegalArgumentException] {
-      Cli.run(spark, weird.toString,
+      Cli.run(spark, weird,
         Seq("fetch", "http://host.invalid/a/..?q=1"), _ => ())
     }.getMessage
     assert(msg.contains("download failed"),

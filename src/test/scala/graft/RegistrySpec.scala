@@ -6,11 +6,13 @@ import graft.registry.{Lineage, Registry, RegistryNormalize}
 /** End-to-end registry pipeline: FAA-shaped CSV → typed parquet →
   * decoded views → search/fleet/FTS — the reference's whole
   * fetch-normalize-publish-query loop minus the network fetch. */
-class RegistrySpec extends SparkSuite {
+class RegistrySpec extends SparkSuite with SuiteTempDirs {
+
+  protected val rootName = "graft_registry_spec"
 
   private lazy val dirs = {
-    val raw = Files.createTempDirectory("graft_raw").toString
-    val pub = Files.createTempDirectory("graft_pub").toString
+    val raw = tmpDir("graft_raw")
+    val pub = tmpDir("graft_pub")
     Files.writeString(java.nio.file.Paths.get(s"$raw/MASTER.txt"),
       """N-NUMBER ,SERIAL NUMBER,MFR MDL CODE,ENG MFR MDL,YEAR MFR,TYPE AIRCRAFT,STATUS CODE,LAST ACTION DATE,EXPIRATION DATE,CERT ISSUE DATE,CERTIFICATION,MODE S CODE,MODE S CODE HEX,NAME,STREET,STREET2,CITY,STATE,ZIP CODE,TYPE REGISTRANT
         |221LA,SN001,C172,ENG1,2015,4,V,20240101,20270101,20150601,1,50000001,A00001,LOS ANGELES POLICE DEPT , 100 W 1ST ST ,SUITE 2,LOS ANGELES,California,90012-1234,5
@@ -68,11 +70,81 @@ class RegistrySpec extends SparkSuite {
 
   test("unknown codes decode to NULL like the reference LEFT JOIN") {
     import org.apache.spark.sql.functions.col
-    val d = operators.Relational.decode(spark,
+    val d = operators.Relational.decode(
       registry.table("aircraft"), "reg_status",
       Seq("V" -> "Valid"), "reg_status_descr")
     assert(d.filter(col("reg_status") === "E")
       .collect().forall(_.isNullAt(d.columns.indexOf("reg_status_descr"))))
+  }
+
+  private def withConf[T](key: String, value: String)(body: => T): T = {
+    val prior = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try body finally spark.conf.set(key, prior)
+  }
+
+  /** The join-form decode the literal map lookup replaced, kept as the
+    * oracle for its NULL/default semantics. */
+  private def decodeByJoin(df: org.apache.spark.sql.DataFrame,
+      codeCol: String, mapping: Seq[(String, String)], outCol: String,
+      default: Option[String]): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val lookup = mapping.toDF("__code", "__descr")
+    df.join(broadcast(lookup), df(codeCol) === col("__code"), "left")
+      .withColumn(outCol,
+        default.fold(col("__descr"))(d => coalesce(col("__descr"), lit(d))))
+      .drop("__code", "__descr")
+  }
+
+  for (ansi <- Seq(false, true))
+    test(s"decode: unknown/NULL codes, default, duplicates (ANSI $ansi)") {
+      import spark.implicits._
+      withConf("spark.sql.ansi.enabled", ansi.toString) {
+        val codes = Seq(Some("V"), Some("X"), None).toDF("code")
+          .withColumn("id", org.apache.spark.sql.functions
+            .monotonically_increasing_id())
+        val book = Seq("V" -> "Valid", "E" -> "Revoked")
+        val plain = operators.Relational.decode(codes, "code", book, "descr")
+        assert(plain.columns.toSeq == Seq("code", "id", "descr"))
+        assert(plain.orderBy("id").collect().map(r =>
+            Option(r.getAs[String]("descr"))).toSeq ==
+          Seq(Some("Valid"), None, None))
+        val dflt = operators.Relational.decode(codes, "code", book, "descr",
+          default = Some("Unknown"))
+        assert(dflt.orderBy("id").collect().map(_.getAs[String]("descr"))
+          .toSeq == Seq("Valid", "Unknown", "Unknown"))
+        // q07's shape over the orders table, with its full code book and
+        // with one code left to the default: same groups as the join form
+        val orders = spark.read.parquet(s"$sfDir/orders.parquet")
+        def q07(df: org.apache.spark.sql.DataFrame) =
+          df.groupBy("status_descr").count().orderBy("status_descr")
+            .collect().toSeq
+        for (q07Book <- Seq("O" -> "Open", "F" -> "Finished", "P" -> "Pending")
+            .inits.take(2))
+          assert(q07(operators.Relational.decode(orders, "o_orderstatus",
+              q07Book, "status_descr", Some("Unknown"))) ==
+            q07(decodeByJoin(orders, "o_orderstatus", q07Book, "status_descr",
+              Some("Unknown"))))
+        // a duplicated code multiplied rows as a join; it is refused now
+        val dup = intercept[IllegalArgumentException] {
+          operators.Relational.decode(codes, "code",
+            book :+ ("V" -> "Valid again"), "descr")
+        }
+        assert(dup.getMessage.contains("duplicate codes V"))
+      }
+    }
+
+  test("decoded views keep the reference column names and order") {
+    assert(registry.aircraftDecoded.columns.toSeq == Seq("n_number",
+      "serial_no", "mfr_mdl_code", "maker", "model", "engine_code",
+      "year_mfr", "airworthiness_code", "airworthiness_class", "seats",
+      "engines", "status_code", "reg_status", "status_date",
+      "reg_expiration", "cert_issue_date", "mode_s_code", "mode_s_code_hex",
+      "is_deregistered"))
+    assert(registry.ownersClean.columns.toSeq == Seq("n_number",
+      "owner_type_code", "owner_type", "owner_name", "address", "city",
+      "state", "zip"))
   }
 
   test("search normalizes the N prefix and enriches with owner") {
@@ -180,8 +252,7 @@ class RegistrySpec extends SparkSuite {
   test("freshnessReport folds manifest counts, age and staleness into one table") {
     // isolated publish dir: the shared fixture must stay manifest-free
     // (warnIfStale tests depend on the absent-manifest path)
-    val pub = java.nio.file.Files
-      .createTempDirectory("graft_fresh_pub").toString
+    val pub = tmpDir("graft_fresh_pub")
     RegistryNormalize.normalize(spark, dirs._1, pub)
     val reg = new Registry(spark, pub)
     // no manifest yet: the report flags it instead of throwing
@@ -206,9 +277,86 @@ class RegistrySpec extends SparkSuite {
       "43-day-old snapshot must flag stale")
   }
 
+  /** Jobs `body` runs, counted by a listener on the fixture session. */
+  private def jobsIn[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+      (out, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a warm search runs no job to build and at most 4 to answer") {
+    registry.search("N221LA").collect() // warm-up: resolves the snapshot
+    val (df, buildJobs) = jobsIn(registry.search("N221LA"))
+    val (rows, execJobs) = jobsIn(df.collect())
+    assert(rows.length == 1 &&
+      rows.head.getAs[String]("owner_name") == "LOS ANGELES POLICE DEPT")
+    assert(buildJobs == 0, s"search built with $buildJobs jobs")
+    assert(buildJobs + execJobs <= 4,
+      s"search ran $buildJobs + $execJobs jobs")
+    registry.status.collect()
+    val (_, statusJobs) = jobsIn(registry.status)
+    assert(statusJobs == 0, s"status built with $statusJobs jobs")
+  }
+
+  test("search broadcasts the key-filtered owners side, never shuffles") {
+    // size-based broadcast off: only the explicit hint can avoid a
+    // sort-merge join of the owners side
+    withConf("spark.sql.autoBroadcastJoinThreshold", "-1") {
+      val df = registry.search("N221LA")
+      assert(df.collect().length == 1)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("SortMergeJoin") && !plan.contains("hashpartitioning"),
+        s"expected broadcast joins only in:\n$plan")
+    }
+  }
+
+  test("a live Registry sees a table rewritten under it, reuses the rest") {
+    val (raw0, _) = dirs
+    val raw = tmpDir("graft_raw_fresh")
+    for (f <- Seq("MASTER.txt", "ACFTREF.txt", "ENGINE.txt"))
+      Files.copy(java.nio.file.Paths.get(s"$raw0/$f"),
+        java.nio.file.Paths.get(s"$raw/$f"))
+    val pub = tmpDir("graft_pub_fresh")
+    RegistryNormalize.normalizeIncremental(spark, raw, pub)
+    val reg = new Registry(spark, pub)
+    def counts = reg.status.collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val engines0 = counts("engines")
+    assert(reg.search("N221LA").count() == 1)
+    val (aircraft, engines, decoded) =
+      (reg.table("aircraft"), reg.table("engines"), reg.aircraftDecoded)
+    // no rewrite: the same resolved frames come back
+    assert(reg.table("aircraft") eq aircraft)
+    assert(reg.table("engines") eq engines)
+    assert(reg.aircraftDecoded eq decoded)
+    val enginePath = java.nio.file.Paths.get(s"$raw/ENGINE.txt")
+    Files.writeString(enginePath,
+      Files.readString(enginePath) + "ENG9,GE,CF6,5,0,50000\n")
+    assert(RegistryNormalize.normalizeIncremental(spark, raw, pub) ==
+      Seq("engines"))
+    // same instance: the rewritten table is re-read, the others reused
+    assert(counts("engines") == engines0 + 1)
+    assert(reg.schemaOf("engines").count() == 6)
+    assert(reg.table("engines") ne engines)
+    assert(reg.table("aircraft") eq aircraft)
+    assert(reg.aircraftDecoded eq decoded)
+    assert(reg.search("N221LA").count() == 1)
+  }
+
   test("normalizeIncremental refreshes only tables whose raw source changed") {
     val (raw, _) = dirs
-    val pub2 = Files.createTempDirectory("graft_pub_inc").toString
+    val pub2 = tmpDir("graft_pub_inc")
     // cold start: no checksum record — everything refreshes
     val first = RegistryNormalize.normalizeIncremental(spark, raw, pub2)
     assert(first.toSet == RegistryNormalize.tableSources.keySet)
@@ -231,11 +379,11 @@ class RegistrySpec extends SparkSuite {
   test("normalizeIncremental fails fast when a raw dump disappears") {
     val (raw, _) = dirs
     // copy the raw snapshot so we can delete from it safely
-    val raw2 = Files.createTempDirectory("graft_raw_del").toString
+    val raw2 = tmpDir("graft_raw_del")
     for (f <- Seq("MASTER.txt", "ACFTREF.txt", "ENGINE.txt"))
       Files.copy(java.nio.file.Paths.get(s"$raw/$f"),
         java.nio.file.Paths.get(s"$raw2/$f"))
-    val pub3 = Files.createTempDirectory("graft_pub_del").toString
+    val pub3 = tmpDir("graft_pub_del")
     assert(RegistryNormalize.normalizeIncremental(spark, raw2, pub3).nonEmpty)
     Files.delete(java.nio.file.Paths.get(s"$raw2/ENGINE.txt"))
     val ex = intercept[IllegalStateException] {
