@@ -797,21 +797,19 @@ object Dedup {
     * verification above the threshold. The scale path that replaces
     * [[embeddingNearDupPairs]]'s all-pairs block form.
     *
-    * Plan shape (ROUND 11 — bucket-local): candidates are scored IN
-    * PLACE inside each (table, bucket) group through
-    * [[Similarity.bucketLocalScoredPairs]] — vectors ride on the
-    * band rows, the within-bucket pair join's output flows straight
-    * into the codegen cosine and the threshold filter in the same
-    * stage, and only the SURVIVORS (the output pair set) reach an
-    * exchange for the cross-table dedup. The previous shape carried
-    * bare id pairs through a candidate-sized distinct and re-joined
-    * vectors afterwards; the 10× replica corpus showed that distinct
-    * growing 100× (Θ(Σ m²) rows) while the banded-corpus shuffle the
-    * local form pays is linear — see the helper's scaladoc for the
-    * crossover argument and the hot-bucket triangle sub-blocking
-    * guard (per-task work capped at maxBucketRows² dots,
-    * result-invisible). The old form survives as
-    * [[embeddingNearDupPairsCandidateJoin]], the equality oracle.
+    * Plan shape: candidates are scored IN PLACE inside each
+    * (table, bucket) group by the band-cell scorer
+    * ([[Similarity.bucketLocalThresholdPairs]]) — quantized codes ride
+    * on the band rows, a rigorous cosine upper bound prunes inside the
+    * cell loop, and only the SURVIVORS (the output pair set plus a
+    * bound-width margin) reach an exchange, are deduped and re-scored
+    * exactly. A candidate-join shape (bare id pairs through a
+    * candidate-sized distinct, vectors re-joined afterwards) showed
+    * that distinct growing 100× (Θ(Σ m²) rows) on the 10× replica
+    * corpus, while the banded-corpus shuffle is linear; the hot-bucket
+    * triangle sub-blocking caps per-task work at maxBucketRows² pairs,
+    * result-invisibly. The candidate-join form is kept under src/test
+    * as the equality oracle.
     *
     * Recall is tunable: a pair at angle θ collides in one table with
     * p₁ = (1 − θ/π)^planesPerTable and overall 1 − (1 − p₁)^numTables.
@@ -833,8 +831,8 @@ object Dedup {
     // r15: the THRESHOLD engine — band rows carry an int8-quantized
     // payload (~3× fewer banded-shuffle bytes), buckets prune with a
     // rigorous cosine upper bound, and only the survivors are scored
-    // exactly — the emitted pair set and sims are IDENTICAL to the
-    // float engine's (see bucketLocalThresholdPairs; equality + the
+    // exactly — the emitted pair set and sims are IDENTICAL to float
+    // scoring's (see bucketLocalThresholdPairs; equality + the
     // boundary-adversarial spec in DedupSpec). The engine returns one
     // row per DISTINCT candidate pair, sim exact, so no cross-table
     // dedup aggregate is needed anymore — one less exchange.
@@ -843,53 +841,6 @@ object Dedup {
         threshold, numTables, planesPerTable, dim, seed, maxBucketRows)
       .filter(col("sim") > threshold)
       .select(col("a_id"), col("b_id"), round(col("sim"), 4).as("cos_sim"))
-
-  /** The candidate-JOIN form embeddingNearDupPairsBucketed used
-    * through round 10 — bare-id pairs → candidate-sized distinct →
-    * two vector-fetch joins → cosine → threshold. Output-identical
-    * to the bucket-local form above (equality spec'd in DedupSpec);
-    * kept as the test-side oracle. */
-  private[graft] def embeddingNearDupPairsCandidateJoin(
-      df: DataFrame,
-      idCol: Column,
-      vecCol: Column,
-      threshold: Double,
-      numTables: Int = 12,
-      planesPerTable: Int = 4,
-      dim: Int = 64,
-      seed: Long = 42L): DataFrame = {
-    val v = df.select(idCol.as("vec_id"), vecCol.as("v"))
-    val tableBuckets = (0 until numTables).map { t =>
-      struct(lit(t).as("tbl"),
-        Similarity.hyperplaneBucket(col("v"), planesPerTable, dim,
-          seed + 7919L * t).as("bkt"))
-    }
-    // cache (lazy): the self-join below evaluates this frame for BOTH
-    // sides — uncached, every row pays its numTables × planesPerTable
-    // hyperplane dot products twice (caching measured 1.9× at sf0.1).
-    // Deliberately not unpersisted: the returned frame is lazy, so
-    // there is no safe point inside the operator; blocks are
-    // recomputable and Spark evicts them LRU under memory pressure —
-    // long-lived sessions calling this repeatedly can
-    // spark.catalog.clearCache() between corpora
-    val banded = v
-      .select(col("vec_id"), explode(array(tableBuckets: _*)).as("tb"))
-      .select(col("vec_id"), col("tb.tbl").as("tbl"), col("tb.bkt").as("bkt"))
-      .cache()
-    val a = banded.alias("a")
-    val b = banded.alias("b")
-    val pairs = a.join(b,
-        col("a.tbl") === col("b.tbl") && col("a.bkt") === col("b.bkt") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
-      .distinct()
-    pairs
-      .join(v.select(col("vec_id").as("a_id"), col("v").as("va")), "a_id")
-      .join(v.select(col("vec_id").as("b_id"), col("v").as("vb")), "b_id")
-      .withColumn("sim", Similarity.cosine(col("va"), col("vb")))
-      .filter(col("sim") > threshold)
-      .select(col("a_id"), col("b_id"), round(col("sim"), 4).as("cos_sim"))
-  }
 
   /** SemDeDup-shape embedding cluster dedup, end to end: hyperplane-
     * bucketed near-dup pairs ([[embeddingNearDupPairsBucketed]]) →

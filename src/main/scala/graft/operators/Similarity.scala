@@ -1,10 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructType}
 
-import scala.util.Random
+import scala.collection.mutable.ArrayBuffer
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`).
@@ -18,10 +19,16 @@ import scala.util.Random
   *  - [[ivfAnn]]: IVF-style coarse quantization — centroids from the
   *    data, queries probe the nearest `nprobe` cells only.
   *
-  * All vector math is built-in higher-order functions
-  * (zip_with/aggregate) evaluated in double precision — no UDFs, no
-  * collect. A native Catalyst Expression with doGenCode is the
-  * planned round-2 upgrade for the dot-product inner loop.
+  * The per-row and per-pair vector math is native codegen'd Catalyst
+  * expressions in double precision: [[graft.plans.CosineSim]]
+  * ([[cosine]]), [[graft.plans.DotProduct]] ([[dotNative]]),
+  * [[graft.plans.ByteDot]] ([[byteDot]], int8 codes) and
+  * [[graft.plans.HyperplaneBuckets]] (every LSH bucket id). Per-query
+  * and per-node top-k retention is the bounded-heap aggregates
+  * [[graft.plans.TopKPairs]] / [[graft.plans.ThresholdTopKPairs]];
+  * the banded engines score within-bucket pairs in one partition
+  * scorer over primitive arrays (the band-cell scorer below).
+  * Higher-order functions remain for norms and elementwise casts.
   */
 object Similarity {
 
@@ -158,21 +165,6 @@ object Similarity {
         col("col.id").as("cand_id"))
   }
 
-  /** Bucket-bounded k-NN GRAPH over the whole corpus: every vector's
-    * top-k nearest neighbors among its LSH bucket co-occupants — the
-    * all-nodes neighbor graph SemDeDup-style cluster dedup and graph
-    * clustering consume (vs [[knnBruteAgg]], which answers a BOUNDED
-    * query set exactly; an all-pairs brute graph is O(n²) and never
-    * viable at corpus scale). Candidates come from the same
-    * multi-table hyperplane buckets as the embedding near-dup path:
-    * a bucket equi-join bounds pair generation, each undirected
-    * candidate pair is scored once (one codegen cosine), and the
-    * per-node top-k is the bounded-heap aggregate — map-side
-    * partials, k-row state, no per-node sort. At 100 TB: one banded
-    * shuffle + one pair shuffle, both LSH-bounded; recall is tuned by
-    * numTables/planesPerTable exactly as d07.
-    * Output: (vec_id, rank, nbr_id, sim), rank 1..≤k (a node in no
-    * shared bucket yields no rows — isolated under this banding). */
   /** The exploded (vec_id, tbl, bkt) multi-table hyperplane band
     * table — the ANN candidate-generation shuffle key, factored out
     * so it can feed the one-shot graph ([[knnGraphBucketed]]) or be
@@ -192,6 +184,23 @@ object Similarity {
       .select(col("vec_id"), col("pos").as("tbl"), col("col").as("bkt"))
   }
 
+  /** Bucket-bounded k-NN GRAPH over the whole corpus: every vector's
+    * top-k nearest neighbors among its LSH bucket co-occupants — the
+    * all-nodes neighbor graph SemDeDup-style cluster dedup and graph
+    * clustering consume (vs [[knnBruteAgg]], which answers a BOUNDED
+    * query set exactly; an all-pairs brute graph is O(n²) and never
+    * viable at corpus scale). Candidates come from the same
+    * multi-table hyperplane buckets as the embedding near-dup path;
+    * the band-cell scorer (retention mode) scores each within-bucket
+    * pair once and keeps per-node top-k buffers inside its cell loop,
+    * and the per-node top-k of their partials is the bounded-heap
+    * aggregate — k-row state, no per-node sort. At 100 TB: one banded
+    * shuffle + one partials shuffle, both LSH-bounded; recall is
+    * tuned by numTables/planesPerTable exactly as d07.
+    * Ids must be integral (tinyint/smallint/int/bigint) and come back
+    * as bigint. Output: (vec_id, rank, nbr_id, sim), rank 1..≤k (a
+    * node in no shared bucket yields no rows — isolated under this
+    * banding). */
   def knnGraphBucketed(
       corpus: DataFrame,
       idCol: String,
@@ -201,112 +210,35 @@ object Similarity {
       planesPerTable: Int = 4,
       dim: Int = 64,
       seed: Long = 42L,
-      maxBucketRows: Int = 2048): DataFrame =
-    // bigint ids: the FUSED top-k partition scorer — per-node k-heaps
-    // maintained inside the Σm² cell loop, so the pair stream is
-    // never materialized at all (the pair-emitting forms push every
-    // candidate through a row encoder or SMJ row plumbing just for
-    // the aggregate to throw it away — see symTopKFromBanded).
-    if (corpus.schema(idCol).dataType ==
-        org.apache.spark.sql.types.LongType) {
-      val banded = bandedWithVecs(corpus, idCol, vecCol, numTables,
-        planesPerTable, dim, seed).cache()
-      banded.count()
-      retireBandedCaches(Seq(banded))
-      symTopKFromBanded(banded, k, dedupIds = true, maxBucketRows)
-    } else symTopK(
-      bucketLocalScoredPairs(corpus, idCol, vecCol, numTables,
-        planesPerTable, dim, seed, maxBucketRows),
-      k, dedupIds = true)
-
-  /** The candidate-JOIN form knnGraphBucketed used through round 10:
-    * bare-id pairs → global distinct → two vector-fetch joins →
-    * cosine → top-k. Output-identical to the bucket-local form (the
-    * equality is spec'd in SimilaritySpec), but every within-bucket
-    * candidate OCCURRENCE becomes a shuffled row and the distinct is
-    * a candidate-sized exchange — at sf1.0 that exchange (~10⁸ rows)
-    * was 90+ % of s16's wall. Kept as the test-side oracle. */
-  private[graft] def knnGraphCandidateJoin(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      numTables: Int = 12,
-      planesPerTable: Int = 4,
-      dim: Int = 64,
-      seed: Long = 42L): DataFrame = {
-    val v = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("v"))
-    // cache (lazy): the bucket self-join reads this frame for both
-    // sides — same rationale as the near-dup pair generator
-    val banded = embBandTable(corpus, idCol, vecCol, numTables,
-      planesPerTable, dim, seed).cache()
-    val pairs = banded.alias("a").join(banded.alias("b"),
-        col("a.tbl") === col("b.tbl") && col("a.bkt") === col("b.bkt") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
-      .distinct()
-    val scored = pairs
-      .join(v.select(col("vec_id").as("a_id"), col("v").as("va")), "a_id")
-      .join(v.select(col("vec_id").as("b_id"), col("v").as("vb")), "b_id")
-      .select(col("a_id"), col("b_id"),
-        cosine(col("va"), col("vb")).as("sim"))
-    symTopK(scored, k)
+      maxBucketRows: Int = 2048): DataFrame = {
+    val banded = longIds(bandedWithVecs(corpus, idCol, vecCol, numTables,
+      planesPerTable, dim, seed)).cache()
+    banded.count()
+    retireBandedCaches(Seq(banded))
+    symTopKFromBanded(banded, k, maxBucketRows)
   }
 
-  /** Bucket-LOCAL LSH pair scoring — the shared candidate engine of
-    * the embedding near-dup pairs ([[graft.operators.Dedup
-    * .embeddingNearDupPairsBucketed]]) and the k-NN graph
-    * ([[knnGraphBucketed]]). Same multi-table hyperplane banding as
-    * [[embBandTable]] (identical buckets for identical params/seed),
-    * but vectors RIDE ON the band rows and each (tbl, bkt) bucket is
-    * scored in place: the pair join's output flows straight into the
-    * codegen cosine inside the same stage — no exchange ever carries
-    * a candidate pair. What shuffles is the banded corpus itself
-    * (n·numTables rows × dim floats — linear in corpus size and
-    * independent of dup mass), vs the candidate-join form's Θ(Σ m²)
-    * bare-id pair exchange + distinct, which the 10× replica corpus
-    * showed growing 100× (BENCH_FULL.md round 11: the sf1.0 pair
-    * monsters). The crossover favors id-pairs only when candidates
-    * are SPARSER than n·dim/4 — never true for near-dup banding,
-    * whose buckets are sized to catch pairs.
+  /** Banded-cache lifecycle. [[knnGraphBucketed]] and
+    * [[bucketLocalThresholdPairs]] cache their band frames and
+    * materialize them EAGERLY (one count): the scoring plan reads the
+    * frame from several places (the bucket-size count, the cell
+    * shuffle, AQE's concurrent exchange materialization), and a lazy
+    * cache lets those race — each stage recomputes the full projection
+    * pass before any one of them commits the cache (measured: 4
+    * parallel 4.3 s stages doing identical work at sf1.0). One eager
+    * pass pays the projections once; downstream stages read the cache.
     *
-    * Hot-bucket guard (result-invisible): same triangle sub-blocking
-    * as [[graft.operators.Dedup.fuzzyMatchPairs]] — bucket sizes are
-    * measured (one narrow count, broadcast back: O(tables·2^planes)
-    * rows), buckets above `maxBucketRows` split into g deterministic
-    * sub-blocks by id hash, and each unordered sub-block CELL (i ≤ j)
-    * scores once, so per-task work is capped at maxBucketRows² dots
-    * and per-task memory at the join's bounded key group — a hot
-    * bucket becomes more tasks, not a bigger one. Cold buckets take
-    * g = 1 (exactly the plain within-bucket join), so the emitted
-    * pair set is IDENTICAL for any cap.
-    *
-    * Output: (a_id, b_id, sim) with a_id < b_id, self-pairs excluded,
-    * one row per SHARED table (duplicates across tables carry
-    * bit-equal sims — CosineSim is exactly symmetric and the pair's
-    * vectors are the same in every occurrence); consumers dedup at
-    * output granularity (near-dup: filter-then-distinct; graph:
-    * the id-deduping top-k heap). The banded frame is cached and
-    * materialized EAGERLY (one count): the scoring plan reads it
-    * from four places (count frame, both tile sides, and AQE's
-    * concurrent exchange materialization), and a lazy cache lets
-    * those race — each stage recomputes the full projection pass
-    * before any one of them commits the cache (measured: 4 parallel
-    * 4.3 s stages doing identical work at sf1.0). One eager pass
-    * pays the projections once; downstream stages read the cache.
-    *
-    * Cache lifecycle: the cached banded frame must outlive THIS
-    * call (the returned pair plan is lazy and reads it at the
-    * consumer's action), so it cannot unpersist here — instead each
-    * call RETIRES the previous call's banded cache (generation
-    * slot), capping residency at one n·numTables-row vector frame
-    * per session instead of one per batch call; [[releaseBandedCache]]
+    * The cached frame must outlive the call (the returned plan is lazy
+    * and reads it at the consumer's action), so it cannot unpersist
+    * there — instead each call RETIRES the previous call's banded
+    * cache (generation slot), capping residency at one generation per
+    * session instead of one per batch call; [[releaseBandedCache]]
     * drops the last one deterministically once its consumer has
     * acted. */
   private val liveBanded =
     new java.util.concurrent.atomic.AtomicReference[Seq[DataFrame]](Nil)
 
-  /** Unpersist the most recent [[bucketLocalScoredPairs]] /
+  /** Unpersist the most recent [[knnGraphBucketed]] /
     * [[bucketLocalThresholdPairs]] banded caches. Safe to call after
     * the consuming action; a later call that still needs one would
     * transparently recompute. */
@@ -316,37 +248,25 @@ object Similarity {
   }
 
   /** Install this call's cached frames as the live banded generation,
-    * retiring the previous call's (capping cache residency at one
-    * generation per session — see [[bucketLocalScoredPairs]]'s
-    * lifecycle note). */
+    * retiring the previous call's (see [[liveBanded]]). */
   private def retireBandedCaches(dfs: Seq[DataFrame]): Unit = {
     val prev = liveBanded.getAndSet(dfs)
     prev.filterNot(p => dfs.exists(_ eq p)).foreach(_.unpersist(false))
   }
 
-  private[graft] def bucketLocalScoredPairs(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      numTables: Int,
-      planesPerTable: Int,
-      dim: Int,
-      seed: Long,
-      maxBucketRows: Int): DataFrame = {
-    val banded = bandedWithVecs(corpus, idCol, vecCol, numTables,
-      planesPerTable, dim, seed).cache()
-    banded.count()
-    retireBandedCaches(Seq(banded))
-    scoredPairsFromBandedJoin(banded, maxBucketRows)
-  }
-
-  /** The vector-carrying band table (vec_id, v, tbl, bkt) —
-    * [[embBandTable]] plus the vector riding each row, identical
-    * bucket assignment for identical params/seed. Factored out so a
-    * streaming fold can band its batch ONCE, derive the id-only band
+  /** The vector-carrying band table (vec_id, v, __n, tbl, bkt) —
+    * [[embBandTable]] plus the vector and its norm riding each row,
+    * identical bucket assignment for identical params/seed. Vectors
+    * ride the band rows so the band-cell scorer scores each bucket in
+    * place: what shuffles is the banded corpus itself (n·numTables
+    * rows × dim floats — linear in corpus size and independent of dup
+    * mass), vs a candidate-join form's Θ(Σ m²) bare-id pair exchange +
+    * distinct, which the 10× replica corpus showed growing 100×
+    * (BENCH_FULL.md round 11: the sf1.0 pair monsters). Factored out so
+    * a streaming fold can band its batch ONCE, derive the id-only band
     * rows for the stored probe layout (`.drop("v")` flows from the
-    * same cache), and feed the vector-carrying rows to
-    * [[scoredPairsFromBandedJoin]]. Caller caches.
+    * same cache), and feed the vector-carrying rows to the scorer.
+    * Caller caches.
     *
     * `spread = false` skips the pre-projection repartition for
     * callers whose input is already spread to the session's
@@ -388,108 +308,41 @@ object Similarity {
         col("col").as("bkt"))
   }
 
-  /** The scoring half of [[bucketLocalScoredPairs]]: triangle-tiled
-    * within-bucket pair JOIN over a [[bandedWithVecs]] frame, cosine
-    * inline. NOTE (r15): when the consumer immediately prunes or
-    * filters the pair stream, the fused partition-scorer forms beat
-    * this join ([[symRetainedPartialsFromBanded]] for the per-node
-    * retention folds, [[thresholdSurvivorsFromBanded]] for
-    * threshold-filter callers) — a pair-EMITTING mapPartitions form
-    * was measured and REJECTED: pushing the Σm² stream through a row
-    * encoder costs more than SMJ feeding codegen straight into the
-    * downstream aggregate (s16 at sf1.0: 438 vs 151 CPU-s). This join
-    * form remains the general pair source and the test-side equality
-    * oracle. See [[bucketLocalScoredPairs]] for the contract. */
-  private[graft] def scoredPairsFromBandedJoin(
-      banded: DataFrame,
-      maxBucketRows: Int): DataFrame = {
-    require(maxBucketRows > 0, s"maxBucketRows must be positive: $maxBucketRows")
-    // measure: bucket sizes (narrow keys, map-side-combined count),
-    // broadcast back — the count frame is O(numTables · 2^planes)
-    // rows regardless of corpus size. Fresh aliases on the count side
-    // (counts derives from banded — self-join ambiguity otherwise).
-    val counts = banded.groupBy(col("tbl"), col("bkt"))
-      .agg(count(lit(1)).as("__m"))
-      .select(col("tbl").as("__ctbl"), col("bkt").as("__cbkt"),
-        col("__m"))
-    val withSub = banded
-      .join(broadcast(counts),
-        col("tbl") === col("__ctbl") && col("bkt") === col("__cbkt"))
-      .select(col("vec_id"), col("v"), col("__n"), col("tbl"), col("bkt"),
-        when(col("__m") > maxBucketRows,
-          ceil(col("__m") / lit(maxBucketRows.toDouble)).cast("long"))
-          .otherwise(lit(1L)).as("__g"))
-      .withColumn("__u", pmod(xxhash64(col("vec_id")), col("__g")))
-    // triangle cells exactly as fuzzyMatchPairs: left owns the row
-    // coordinate (i = u, j explodes up), right owns the column
-    // (j = u, i explodes down) — every within-bucket pair lands in
-    // exactly one (i, j) cell per shared table
-    val left = withSub
-      .withColumn("__j", explode(sequence(col("__u"), col("__g") - 1)))
-      .withColumnRenamed("__u", "__i").drop("__g")
-    val right = withSub
-      .withColumn("__i", explode(sequence(lit(0L), col("__u"))))
-      .withColumnRenamed("__u", "__j").drop("__g")
-    // The quadratic scoring's parallelism must come from the
-    // (table, bucket, cell) HASH, never from whatever partitioning
-    // the banded frame happens to carry: left to the planner, the
-    // byte-small band table gets broadcast (or its exchange
-    // AQE-coalesced on input-byte stats that are blind to the join's
-    // quadratic OUTPUT) and the whole Σm² cosine pass lands on the
-    // input's file splits — measured on s16 at sf1.0: 259 s at 2
-    // tasks on a cold cache vs 11 s at 32 tasks when a prior run's
-    // materialized cache stats happened to force the shuffle.
-    // Explicit repartition(n, keys) on BOTH sides
-    // makes the plan deterministic: keys match the join's equi-keys
-    // verbatim (all non-null, plain ===), so no ENSURE_REQUIREMENTS
-    // re-shuffle lands for AQE to coalesce, and the explicit n is
-    // never coalesced. Shuffled rows are the banded inputs
-    // (linear + O(m²/maxBucketRows) hot-tile replication), not pairs.
-    val nParts = banded.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "32").toInt
-    val cellCols = Seq(col("tbl"), col("bkt"), col("__i"), col("__j"))
-    val a = left.repartition(nParts, cellCols: _*).alias("a")
-    val b = right.repartition(nParts, cellCols: _*).alias("b")
-    // diagonal cells hold both orderings of each pair — keep one by
-    // id (also excludes self-pairs); off-diagonal cells hold each
-    // pair once (a vector's sub-block is a function of its id)
-    val onceOnly = (col("a.__i") =!= col("a.__j")) ||
-      (col("a.vec_id") < col("b.vec_id"))
-    // dot / (a.__n · b.__n): the dot is the only per-pair loop — the
-    // norms ride the band rows (computed once per corpus row in
-    // [[bandedWithVecs]]), and the expression reproduces CosineSim's
-    // dot / (sqrt(na) · sqrt(nb)) BIT-identically (same element casts,
-    // same left-to-right double accumulation, sqrt exactly rounded;
-    // equality spec'd against the candidate-join oracle, which still
-    // scores with CosineSim). NULL parity holds too: unequal lengths
-    // or a null element NULL the dot, and a null element NULLs __n.
-    a.join(b,
-        col("a.tbl") === col("b.tbl") && col("a.bkt") === col("b.bkt") &&
-          col("a.__i") === col("b.__i") && col("a.__j") === col("b.__j") &&
-          onceOnly)
-      .select(least(col("a.vec_id"), col("b.vec_id")).as("a_id"),
-        greatest(col("a.vec_id"), col("b.vec_id")).as("b_id"),
-        (dotNative(col("a.v"), col("b.v")) / (col("a.__n") * col("b.__n")))
-          .as("sim"))
-  }
-
-  // ---- r15 PARTITION SCORER ---------------------------------------
+  // ---- THE BAND-CELL SCORER ---------------------------------------
   //
-  // The triangle-cell pair loop as a mapPartitions over cell-sorted
-  // band rows instead of a self-join: the join form pushed every
-  // candidate PAIR through SMJ row materialization (~1 µs/pair —
-  // 170 CPU-s of plumbing per 1.6e8 candidates at sf1.0 for ~10 CPU-s
-  // of dot products). Here each (tbl, bkt, i, j) cell is buffered once
-  // (≤ 2·maxBucketRows rows) and its pairs are scored in a tight
-  // primitive loop; what shuffles is unchanged (the tagged band rows,
-  // linear + hot-tile replication), so the 100 TB posture is the same.
+  // The one pair engine behind every banded caller: the k-NN graph
+  // ([[knnGraphBucketed]]), the streaming graph and pair folds
+  // ([[graft.streaming.Streams.incrementalKnnGraph]],
+  // [[graft.streaming.Streams.incrementalEmbPairs]]) and the quantized
+  // near-dup prune ([[bucketLocalThresholdPairs]]). Band rows are
+  // tagged with their triangle cells, shuffled on (tbl, bkt, i, j) and
+  // sorted by cell ([[cellSorted]]); one cell loop ([[cellLoop]])
+  // buffers a cell at a time (≤ 2·maxBucketRows rows) and scores its
+  // pairs in a tight primitive loop. What shuffles is the band rows
+  // (linear in the corpus + hot-tile replication), never a candidate
+  // pair: a self-join form pushed every candidate through SMJ row
+  // materialization (~1 µs/pair — 170 CPU-s of plumbing per 1.6e8
+  // candidates at sf1.0 for ~10 CPU-s of dot products).
   //
-  // Cell tagging mirrors the join form's tiling EXACTLY: a row with
+  // Hot-bucket guard (result-invisible): bucket sizes are measured (one
+  // narrow count, broadcast back: O(tables·2^planes) rows), a bucket
+  // above maxBucketRows splits into g deterministic sub-blocks by id
+  // hash, and each unordered sub-block CELL (i ≤ j) scores once — a
+  // hot bucket becomes more tasks, not a bigger one. A row with
   // sub-block u owns the ROW coordinate of cells (u, j), j ∈ [u, g)
   // (side 0) and the COLUMN coordinate of cells (i, u), i ∈ [0, u)
-  // (side 1). The diagonal cell appears ONCE on side 0 — the join
-  // form carried it on both sides and kept `a.vec_id < b.vec_id`,
-  // which is exactly "each unordered pair of the sub-block once".
+  // (side 1); a diagonal cell scores the unordered pairs of its side-0
+  // rows, an off-diagonal cell side 0 × side 1. Every within-bucket
+  // pair lands in exactly one cell per shared table, and cold buckets
+  // take g = 1, so the pair set is IDENTICAL for any cap.
+  //
+  // Two modes. Retention ([[symRetainedPartialsFromBanded]]) updates
+  // per-node top-k / threshold buffers in place and emits only their
+  // partials. Threshold ([[survivorPairs]]) emits the pairs a bound or
+  // exact cosine keeps. Either way the Σm² pair stream never leaves
+  // the loop: a pair-EMITTING form was measured and rejected (pushing
+  // every candidate through a row encoder: s16 at sf1.0, 438 vs 151
+  // CPU-s).
 
   /** Triangle-cell tags for one band row: array of (i, j, side). */
   private def cellTags(u: Column, g: Column): Column = concat(
@@ -500,125 +353,100 @@ object Similarity {
       struct(i.cast("int").as("i"), u.cast("int").as("j"),
         lit(1).as("s"))))
 
-  /** (__m per bucket broadcast back, __g sub-block count, __u this
-    * row's sub-block) — identical derivation in the join and
-    * partition forms. */
-  private def withSubBlocks(banded: DataFrame, maxBucketRows: Int,
+  /** The `payload` columns of every band row (one of them `vec_id`),
+    * once per triangle cell the row belongs to, followed by tbl, bkt,
+    * __i, __j and __sd (the side), hash-partitioned on the cell and
+    * sorted by it — the layout [[cellLoop]] streams.
+    *
+    * The shuffle is explicit: left to the planner, the byte-small band
+    * table gets its exchange AQE-coalesced on input-byte stats that are
+    * blind to the quadratic scoring, and the whole Σm² pass lands on a
+    * few tasks (s16 at sf1.0: 259 s at 2 tasks vs 11 s at 32). */
+  private def cellSorted(banded: DataFrame, maxBucketRows: Int,
       payload: Seq[String]): DataFrame = {
+    require(maxBucketRows > 0, s"maxBucketRows must be positive: $maxBucketRows")
+    val nParts = banded.sparkSession.conf
+      .get("spark.sql.shuffle.partitions", "32").toInt
+    // fresh names on the count side (counts derives from banded —
+    // self-join ambiguity otherwise)
     val counts = banded.groupBy(col("tbl"), col("bkt"))
       .agg(count(lit(1)).as("__m"))
       .select(col("tbl").as("__ctbl"), col("bkt").as("__cbkt"),
         col("__m"))
+    val p = payload.map(col)
     banded
       .join(broadcast(counts),
         col("tbl") === col("__ctbl") && col("bkt") === col("__cbkt"))
-      .select((payload.map(col) ++ Seq(col("tbl"), col("bkt"),
+      .select(p ++ Seq(col("tbl"), col("bkt"),
         when(col("__m") > maxBucketRows,
           ceil(col("__m") / lit(maxBucketRows.toDouble)).cast("long"))
-          .otherwise(lit(1L)).as("__g"))): _*)
+          .otherwise(lit(1L)).as("__g")): _*)
       .withColumn("__u", pmod(xxhash64(col("vec_id")), col("__g")))
+      .select(p ++ Seq(col("tbl"), col("bkt"),
+        explode(cellTags(col("__u"), col("__g"))).as("c")): _*)
+      .select(p ++ Seq(col("tbl"), col("bkt"), col("c.i").as("__i"),
+        col("c.j").as("__j"), col("c.s").as("__sd")): _*)
+      .repartition(nParts, col("tbl"), col("bkt"), col("__i"), col("__j"))
+      .sortWithinPartitions("tbl", "bkt", "__i", "__j")
   }
 
-  /** Numeric vector → primitive doubles + null-element flag (the
-    * float/double element cast the column form applied per pair is
-    * done once per band row here). */
-  private def vecToDoubles(a: Any): (Array[Double], Boolean) = a match {
-    case null => (null, false)
-    case s: scala.collection.Seq[_] =>
-      val out = new Array[Double](s.length)
-      var nullElem = false
-      var i = 0
-      val it = s.iterator
-      while (it.hasNext) {
-        it.next() match {
-          case null => nullElem = true
-          case f: java.lang.Float => out(i) = f.toDouble
-          case d: java.lang.Double => out(i) = d
-          case x: java.lang.Number => out(i) = x.doubleValue()
-        }
-        i += 1
-      }
-      (out, nullElem)
-    case other => throw new IllegalArgumentException(
-      s"unexpected vector value: ${other.getClass}")
-  }
-
-  private def vecToBytes(a: Any): (Array[Byte], Boolean) = a match {
-    case null => (null, false)
-    case s: scala.collection.Seq[_] =>
-      val out = new Array[Byte](s.length)
-      var nullElem = false
-      var i = 0
-      val it = s.iterator
-      while (it.hasNext) {
-        it.next() match {
-          case null => nullElem = true
-          case b: java.lang.Byte => out(i) = b.byteValue()
-        }
-        i += 1
-      }
-      (out, nullElem)
-    case other => throw new IllegalArgumentException(
-      s"unexpected code value: ${other.getClass}")
-  }
-
-  /** Stream cell-sorted rows, buffer one cell at a time (side 0 → A,
-    * side 1 → B; ≤ 2·maxBucketRows rows live), and emit each cell's
-    * pairs lazily. `parse` reads a row; `pairs` scores one cell
-    * (diag = i == j: unordered pairs of A; off-diagonal: A × B). */
-  private def cellStream[R, O](
-      rows: Iterator[org.apache.spark.sql.Row],
-      tblIdx: Int, parse: org.apache.spark.sql.Row => R,
-      pairs: (scala.collection.mutable.ArrayBuffer[R],
-        scala.collection.mutable.ArrayBuffer[R], Boolean) => Iterator[O])
-      : Iterator[O] = new scala.collection.AbstractIterator[O] {
-    private val buf = rows.buffered
-    private var inner: Iterator[O] = Iterator.empty
-    private val a = new scala.collection.mutable.ArrayBuffer[R]
-    private val b = new scala.collection.mutable.ArrayBuffer[R]
-    private def sameCell(r: org.apache.spark.sql.Row,
-        t: Int, k: Int, i: Int, j: Int): Boolean =
-      r.getInt(tblIdx) == t && r.getInt(tblIdx + 1) == k &&
-        r.getInt(tblIdx + 2) == i && r.getInt(tblIdx + 3) == j
-    private def loadCell(): Unit = {
-      val h = buf.head
-      val (t, k, i, j) = (h.getInt(tblIdx), h.getInt(tblIdx + 1),
-        h.getInt(tblIdx + 2), h.getInt(tblIdx + 3))
-      a.clear(); b.clear()
-      while (buf.hasNext && sameCell(buf.head, t, k, i, j)) {
-        val r = buf.next()
-        if (r.getInt(tblIdx + 4) == 0) a += parse(r) else b += parse(r)
-      }
-      inner = pairs(a, b, i == j)
-    }
-    override def hasNext: Boolean = {
-      while (!inner.hasNext && buf.hasNext) loadCell()
-      inner.hasNext
-    }
-    override def next(): O = { hasNext; inner.next() }
-  }
-
-  /** Lazy pair iterator over one cell: diagonal = unordered index
-    * pairs of A; off-diagonal = A × B. `score` returns the output
-    * tuple or null to skip the pair. */
-  private def cellPairs[R, O >: Null](
-      a: scala.collection.mutable.ArrayBuffer[R],
-      b: scala.collection.mutable.ArrayBuffer[R],
-      diag: Boolean, score: (R, R) => O): Iterator[O] =
+  /** The one cell loop: streams [[cellSorted]] rows (whose cell columns
+    * start at `tblIdx`), buffers one cell at a time (side 0 → A, side
+    * 1 → B) and scores its pairs lazily — a diagonal cell the unordered
+    * pairs of A, an off-diagonal cell A × B. `score` returns an output
+    * or null; `afterCell` and `atEnd` emit what a stateful scorer
+    * drains after each cell and once the input is exhausted. */
+  private def cellLoop[R, O >: Null](
+      rows: Iterator[Row], tblIdx: Int, parse: Row => R,
+      score: (R, R) => O,
+      afterCell: () => Iterator[O] = () => Iterator.empty,
+      atEnd: () => Iterator[O] = () => Iterator.empty): Iterator[O] =
     new scala.collection.AbstractIterator[O] {
-      private val bb = if (diag) a else b
-      private var i = 0
-      private var j = if (diag) 1 else 0
+      private val buf = rows.buffered
+      private val a = new ArrayBuffer[R]
+      private val b = new ArrayBuffer[R]
+      private var bb = a
+      private var diag = true
+      private var i, j = 0
+      private var open = false // the loaded cell has pairs left to score
+      private var ended = false
+      private var drained: Iterator[O] = Iterator.empty
       private var out: O = null
+      private def cell(r: Row, c: Int): Int = r.getInt(tblIdx + c)
+      private def sameCell(r: Row, h: Row): Boolean =
+        cell(r, 0) == cell(h, 0) && cell(r, 1) == cell(h, 1) &&
+          cell(r, 2) == cell(h, 2) && cell(r, 3) == cell(h, 3)
+      private def loadCell(): Unit = {
+        val h = buf.head
+        a.clear(); b.clear()
+        while (buf.hasNext && sameCell(buf.head, h)) {
+          val r = buf.next()
+          if (cell(r, 4) == 0) a += parse(r) else b += parse(r)
+        }
+        diag = cell(h, 2) == cell(h, 3)
+        bb = if (diag) a else b
+        i = 0
+        j = if (diag) 1 else 0
+        open = true
+      }
       private def advance(): Boolean = {
-        while (i < a.length) {
-          while (j < bb.length) {
-            val o = score(a(i), bb(j))
-            j += 1
-            if (o != null) { out = o; return true }
-          }
-          i += 1
-          j = if (diag) i + 1 else 0
+        while (true) {
+          if (drained.hasNext) { out = drained.next(); return true }
+          if (open) {
+            while (i < a.length) {
+              while (j < bb.length) {
+                val o = score(a(i), bb(j))
+                j += 1
+                if (o != null) { out = o; return true }
+              }
+              i += 1
+              j = if (diag) i + 1 else 0
+            }
+            open = false
+            drained = afterCell()
+          } else if (buf.hasNext) loadCell()
+          else if (!ended) { ended = true; drained = atEnd() }
+          else return false
         }
         false
       }
@@ -629,277 +457,238 @@ object Similarity {
       }
     }
 
-  private final class FRow(val id: Long, val v: Array[Double],
-    val nullElem: Boolean, val nNull: Boolean, val n: Double)
+  /** A parsed band row; `id` is `vec_id` as its Spark value. */
+  private abstract class BandRow(val id: Any)
 
-  /** FUSED symmetrize + per-node retention over a [[bandedWithVecs]]
-    * frame (bigint ids): the triangle-cell loop, but each scored pair
-    * updates BOTH endpoints' bounded retention buffers in place
-    * instead of being emitted — only the per-partition partials leave
-    * the scorer (vs the Σm² pair stream, which the pair-emitting
-    * forms pushed through a row encoder or SMJ row plumbing just for
-    * the downstream aggregate to throw away). `keepThreshold = None`
-    * retains per-node top-k ([[graft.plans.TopKBuffer]]); `Some(t)`
-    * retains rank ≤ k OR sim > t ([[graft.plans.ThresholdTopKBuffer]])
-    * — the two [[graft.streaming.Streams]] graph-fold prunes. The
-    * emitted (vec_id, sim, nbr_id) partials feed the SAME downstream
-    * aggregate as before: retention-of-partition-retentions equals
-    * global retention (both buffers are merge-and-truncate monoids
-    * under the (score, id) total order — graphFold's scaladoc), null
-    * sims are skipped exactly as the aggregates' update skips null
-    * scores, and NaN behaves identically (top-k: ranks above all;
-    * threshold: joins neither side). Per-partition state is bounded:
-    * past `FlushHeapNodes` live nodes the partials flush into the
-    * output stream and the map restarts — monoid-safe, so a 100 TB
-    * partition degrades to more partial rows, not more memory. */
-  private[graft] var FlushHeapNodes: Int = 1 << 20
+  /** Float payload (vec_id, v, __n). `v` is null when every pair of the
+    * row scores NULL under CosineSim: a null vector, element or norm. */
+  private final class FRow(id: Any, val v: Array[Double], val n: Double)
+    extends BandRow(id)
 
-  private[graft] def symRetainedPartialsFromBanded(
-      banded: DataFrame, k: Int, keepThreshold: Option[Double],
-      dedupIds: Boolean, maxBucketRows: Int): DataFrame = {
-    require(maxBucketRows > 0, s"maxBucketRows must be positive: $maxBucketRows")
-    val spark = banded.sparkSession
-    val nParts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val flushAt = FlushHeapNodes
-    val tagged = withSubBlocks(banded, maxBucketRows,
-        Seq("vec_id", "v", "__n"))
-      .select(col("vec_id"), col("v"), col("__n"), col("tbl"), col("bkt"),
-        explode(cellTags(col("__u"), col("__g"))).as("c"))
-      .select(col("vec_id"), col("v"), col("__n"), col("tbl"), col("bkt"),
-        col("c.i").as("__i"), col("c.j").as("__j"), col("c.s").as("__sd"))
-      .repartition(nParts, col("tbl"), col("bkt"), col("__i"), col("__j"))
-      .sortWithinPartitions("tbl", "bkt", "__i", "__j")
-    val parse = (r: org.apache.spark.sql.Row) => {
-      val (v, nullElem) = vecToDoubles(r.get(1))
-      val nNull = r.isNullAt(2)
-      new FRow(r.getLong(0), v, nullElem, nNull,
-        if (nNull) 0.0 else r.getDouble(2))
-    }
-    // buffer strategy, closed over serializably
-    val thresholdOpt = keepThreshold
-    implicit val enc = org.apache.spark.sql.Encoders.tuple(
-      org.apache.spark.sql.Encoders.scalaLong,
-      org.apache.spark.sql.Encoders.scalaDouble,
-      org.apache.spark.sql.Encoders.scalaLong)
-    val triples = tagged.mapPartitions { rows =>
-      val mkBuf: () => AnyRef = thresholdOpt match {
-        case Some(t) => () => new graft.plans.ThresholdTopKBuffer(k, t, dedupIds)
-        case None => () => new graft.plans.TopKBuffer(k, dedupIds)
-      }
-      val addTo: (AnyRef, Double, Long) => Unit = thresholdOpt match {
-        case Some(_) => (b, s, i) =>
-          b.asInstanceOf[graft.plans.ThresholdTopKBuffer].add(s, i)
-        case None => (b, s, i) =>
-          b.asInstanceOf[graft.plans.TopKBuffer].add(s, i)
-      }
-      val drainBuf: AnyRef => Array[(Double, Long)] = thresholdOpt match {
-        case Some(_) => b =>
-          b.asInstanceOf[graft.plans.ThresholdTopKBuffer].held
-        case None => b =>
-          b.asInstanceOf[graft.plans.TopKBuffer].sortedDesc
-      }
-      var heaps = new java.util.HashMap[Long, AnyRef]()
-      var flushed: List[Array[(Long, Double, Long)]] = Nil
-      def drain(): Array[(Long, Double, Long)] = {
-        val out = new scala.collection.mutable.ArrayBuffer[(Long, Double, Long)](
-          heaps.size * math.min(k, 8))
-        val it = heaps.entrySet().iterator()
-        while (it.hasNext) {
-          val e = it.next()
-          drainBuf(e.getValue).foreach(p => out += ((e.getKey, p._1, p._2)))
-        }
-        heaps = new java.util.HashMap[Long, AnyRef]()
-        out.toArray
-      }
-      def heap(id: Long): AnyRef = {
-        var h = heaps.get(id)
-        if (h == null) { h = mkBuf(); heaps.put(id, h) }
-        h
-      }
-      def addPair(x: FRow, y: FRow): Unit = {
-        // null sims are SKIPPED exactly as the aggregates' update
-        // skips null scores; NaN flows to the buffers (top-k: ranks
-        // above all; threshold: joins neither side)
-        if (x.v == null || y.v == null || x.v.length != y.v.length ||
-            x.nullElem || y.nullElem || x.nNull || y.nNull) return
-        var dot = 0.0
-        var i = 0
-        val n = x.v.length
-        while (i < n) { dot += x.v(i) * y.v(i); i += 1 }
-        val sim = dot / (x.n * y.n)
-        addTo(heap(x.id), sim, y.id)
-        addTo(heap(y.id), sim, x.id)
-      }
-      val buf = rows.buffered
-      val a = new scala.collection.mutable.ArrayBuffer[FRow]
-      val b = new scala.collection.mutable.ArrayBuffer[FRow]
-      while (buf.hasNext) {
-        val h = buf.head
-        val (t, kk, ci, cj) = (h.getInt(3), h.getInt(4), h.getInt(5),
-          h.getInt(6))
-        a.clear(); b.clear()
-        while (buf.hasNext && {
-          val r = buf.head
-          r.getInt(3) == t && r.getInt(4) == kk && r.getInt(5) == ci &&
-            r.getInt(6) == cj
-        }) {
-          val r = buf.next()
-          if (r.getInt(7) == 0) a += parse(r) else b += parse(r)
-        }
-        if (ci == cj) {
-          var i = 0
-          while (i < a.length) {
-            var j = i + 1
-            while (j < a.length) { addPair(a(i), a(j)); j += 1 }
-            i += 1
-          }
-        } else {
-          var i = 0
-          while (i < a.length) {
-            var j = 0
-            while (j < b.length) { addPair(a(i), b(j)); j += 1 }
-            i += 1
-          }
-        }
-        if (heaps.size > flushAt) flushed ::= drain()
-      }
-      val last = drain()
-      flushed.iterator.flatMap(_.iterator) ++ last.iterator
-    }.toDF("vec_id", "sim", "nbr_id")
-    triples
+  private def parseFloat(r: Row): FRow = {
+    val v = vecToDoubles(r.get(1))
+    if (v == null || r.isNullAt(2)) new FRow(r.get(0), null, 0.0)
+    else new FRow(r.get(0), v, r.getDouble(2))
   }
 
-  private def symTopKFromBanded(banded: DataFrame, k: Int,
-      dedupIds: Boolean, maxBucketRows: Int): DataFrame =
-    symRetainedPartialsFromBanded(banded, k, None, dedupIds, maxBucketRows)
+  /** Whether CosineSim(x.v, y.v) is non-NULL: both rows score and the
+    * lengths agree. */
+  private def scorable(x: FRow, y: FRow): Boolean =
+    x.v != null && y.v != null && x.v.length == y.v.length
+
+  /** dot / (x.n · y.n) for a [[scorable]] pair — BIT-identical to
+    * CosineSim(x.v, y.v): same element casts, same left-to-right double
+    * accumulation, and the norms ride the band rows (computed once per
+    * corpus row in [[bandedWithVecs]] with CosineSim's norm loop, sqrt
+    * exactly rounded). A zero norm gives NaN, as CosineSim does. */
+  private def pairCosine(x: FRow, y: FRow): Double = {
+    var dot = 0.0
+    var i = 0
+    val n = x.v.length
+    while (i < n) { dot += x.v(i) * y.v(i); i += 1 }
+    dot / (x.n * y.n)
+  }
+
+  /** Quantized payload (vec_id, qv, __s, __n, __sa) — see
+    * [[bucketLocalThresholdPairs]]. `q` is null when the bound is NULL
+    * for every pair of the row: a null code vector, element or scalar. */
+  private final class QRow(id: Any, val q: Array[Byte], val s: Double,
+      val n: Double, val sa: Long) extends BandRow(id)
+
+  private def parseQuantized(r: Row): QRow = {
+    val q = vecToBytes(r.get(1))
+    if (q == null || r.isNullAt(2) || r.isNullAt(3) || r.isNullAt(4))
+      new QRow(r.get(0), null, 0.0, 0.0, 0L)
+    else new QRow(r.get(0), q, r.getDouble(2), r.getDouble(3), r.getLong(4))
+  }
+
+  /** Numeric vector → primitive doubles, or null for a null vector or a
+    * null element (the element cast CosineSim applies per pair is done
+    * once per band row here). */
+  private def vecToDoubles(a: Any): Array[Double] = a match {
+    case null => null
+    case s: scala.collection.Seq[_] =>
+      val out = new Array[Double](s.length)
+      var i = 0
+      val it = s.iterator
+      while (it.hasNext) {
+        it.next() match {
+          case null => return null
+          case f: java.lang.Float => out(i) = f.toDouble
+          case d: java.lang.Double => out(i) = d
+          case x: java.lang.Number => out(i) = x.doubleValue()
+        }
+        i += 1
+      }
+      out
+    case other => throw new IllegalArgumentException(
+      s"unexpected vector value: ${other.getClass}")
+  }
+
+  private def vecToBytes(a: Any): Array[Byte] = a match {
+    case null => null
+    case s: scala.collection.Seq[_] =>
+      val out = new Array[Byte](s.length)
+      var i = 0
+      val it = s.iterator
+      while (it.hasNext) {
+        it.next() match {
+          case null => return null
+          case b: java.lang.Byte => out(i) = b.byteValue()
+        }
+        i += 1
+      }
+      out
+    case other => throw new IllegalArgumentException(
+      s"unexpected code value: ${other.getClass}")
+  }
+
+  /** Retention mode keys its buffers on bigint ids, as
+    * [[graft.plans.TopKPairs]] and the graph folds downstream do:
+    * integral ids widen to bigint before the shuffle, and any other id
+    * type is refused here instead of reaching the aggregate's cast. */
+  private def longIds(banded: DataFrame): DataFrame = {
+    val t = banded.schema("vec_id").dataType
+    require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
+      "k-NN graph ids must be tinyint, smallint, int or bigint, got " +
+        t.simpleString)
+    banded.withColumn("vec_id", col("vec_id").cast("long"))
+  }
+
+  /** Retention mode over a [[bandedWithVecs]] frame: symmetrize +
+    * per-node retention FUSED into the cell loop. Each scored pair
+    * updates BOTH endpoints' bounded buffers in place instead of being
+    * emitted, and only the per-partition partials leave the scorer.
+    * `keepThreshold = None` retains per-node top-k
+    * ([[graft.plans.TopKBuffer]]); `Some(t)` retains rank ≤ k OR
+    * sim > t ([[graft.plans.ThresholdTopKBuffer]]) — the two
+    * [[graft.streaming.Streams]] graph-fold prunes. The emitted
+    * (vec_id, nbr_id, sim) partials feed the SAME downstream aggregate
+    * as a scored pair stream would: retention-of-partition-retentions
+    * equals global retention (both buffers are merge-and-truncate
+    * monoids under the (score, id) total order — graphFold's scaladoc),
+    * null sims are skipped exactly as the aggregates' update skips null
+    * scores, and NaN behaves identically (top-k: ranks above all;
+    * threshold: joins neither side). */
+  private[graft] def symRetainedPartialsFromBanded(
+      banded: DataFrame, k: Int, keepThreshold: Option[Double],
+      dedupIds: Boolean, maxBucketRows: Int,
+      flushHeapNodes: Int = 1 << 20): DataFrame = {
+    implicit val enc = Encoders.tuple(Encoders.scalaLong,
+      Encoders.scalaLong, Encoders.scalaDouble)
+    cellSorted(longIds(banded), maxBucketRows, Seq("vec_id", "v", "__n"))
+      .mapPartitions(
+        retainedPartials(_, k, keepThreshold, dedupIds, flushHeapNodes))
+      .toDF("vec_id", "nbr_id", "sim")
+  }
+
+  /** Retention mode's per-partition function over [[cellSorted]] rows
+    * (vec_id, v, __n, tbl, bkt, __i, __j, __sd) with bigint ids.
+    * Per-partition state is bounded: once a cell leaves more than
+    * `flushHeapNodes` live buffers, their partials are emitted and the
+    * map restarts — monoid-safe, so a 100 TB partition degrades to more
+    * partial rows, not more memory. */
+  private[graft] def retainedPartials(rows: Iterator[Row], k: Int,
+      keepThreshold: Option[Double], dedupIds: Boolean,
+      flushHeapNodes: Int): Iterator[(Long, Long, Double)] = {
+    val newBuf: () => AnyRef = keepThreshold match {
+      case Some(t) => () => new graft.plans.ThresholdTopKBuffer(k, t, dedupIds)
+      case None => () => new graft.plans.TopKBuffer(k, dedupIds)
+    }
+    var heaps = new java.util.HashMap[Any, AnyRef]()
+    def add(id: Any, sim: Double, nbr: Any): Unit = {
+      var h = heaps.get(id)
+      if (h == null) { h = newBuf(); heaps.put(id, h) }
+      h match {
+        case b: graft.plans.TopKBuffer => b.add(sim, nbr.asInstanceOf[Long])
+        case b: graft.plans.ThresholdTopKBuffer =>
+          b.add(sim, nbr.asInstanceOf[Long])
+      }
+    }
+    def drain(): Iterator[(Long, Long, Double)] = {
+      val out = new ArrayBuffer[(Long, Long, Double)](
+        heaps.size * math.min(k, 8))
+      heaps.forEach { (id, h) =>
+        val held = h match {
+          case b: graft.plans.TopKBuffer => b.sortedDesc
+          case b: graft.plans.ThresholdTopKBuffer => b.held
+        }
+        held.foreach(p => out += ((id.asInstanceOf[Long], p._2, p._1)))
+      }
+      heaps = new java.util.HashMap[Any, AnyRef]()
+      out.iterator
+    }
+    cellLoop[FRow, (Long, Long, Double)](rows, 3, parseFloat,
+      (x, y) => {
+        // a NULL sim is skipped (scorable); NaN flows to the buffers
+        if (scorable(x, y)) {
+          val sim = pairCosine(x, y)
+          add(x.id, sim, y.id)
+          add(y.id, sim, x.id)
+        }
+        null
+      },
+      afterCell = () =>
+        if (heaps.size > flushHeapNodes) drain() else Iterator.empty,
+      atEnd = () => drain())
+  }
+
+  private[graft] def symTopKFromBanded(banded: DataFrame, k: Int,
+      maxBucketRows: Int, flushHeapNodes: Int = 1 << 20): DataFrame =
+    symRetainedPartialsFromBanded(banded, k, None, dedupIds = true,
+        maxBucketRows, flushHeapNodes)
       .groupBy(col("vec_id"))
-      .agg(topKAgg(col("sim"), col("nbr_id"), k, dedupIds).as("top"))
+      .agg(topKAgg(col("sim"), col("nbr_id"), k, dedupIds = true).as("top"))
       .select(col("vec_id"), posexplode(col("top")))
       .select(col("vec_id"), (col("pos") + 1).cast("long").as("rank"),
         col("col.id").as("nbr_id"), col("col.score").as("sim"))
 
-  /** Symmetrized, per-batch-PRE-PRUNED edges for the streaming graph
-    * folds ([[graft.streaming.Streams.incrementalKnnGraph]]): bigint
-    * ids take the fused partial scorer above; other id types fall
-    * back to the pair join + two-direction explode (the pre-r15
-    * shape, output-identical by the fold monoid). Output columns:
-    * (vec_id, nbr_id, sim). */
-  private[graft] def symEdgesFromBanded(
-      banded: DataFrame, k: Int, keepThreshold: Option[Double],
-      maxBucketRows: Int): DataFrame =
-    if (banded.schema("vec_id").dataType ==
-        org.apache.spark.sql.types.LongType)
-      symRetainedPartialsFromBanded(banded, k, keepThreshold,
-        dedupIds = true, maxBucketRows)
-        .select(col("vec_id"), col("nbr_id"), col("sim"))
-    else
-      scoredPairsFromBandedJoin(banded, maxBucketRows)
-        .select(explode(array(
-          struct(col("a_id").as("vec_id"), col("b_id").as("nbr_id"),
-            col("sim")),
-          struct(col("b_id").as("vec_id"), col("a_id").as("nbr_id"),
-            col("sim")))).as("e"))
-        .select(col("e.vec_id"), col("e.nbr_id"), col("e.sim"))
-
-  /** WITHIN-batch survivors for the incremental pair fold
-    * ([[graft.streaming.Streams.incrementalEmbPairs]]): the float
-    * cell loop with the caller's `sim > threshold` filter fused in —
-    * only surviving (a_id, b_id) leave the scorer (NaN sims survive,
-    * Spark's NaN-above-all `>`; null sims drop), one row per shared
-    * bucket, deduped by the caller. Non-bigint ids fall back to the
-    * pair join + filter. */
-  private[graft] def thresholdSurvivorsFromBanded(
-      banded: DataFrame, threshold: Double,
-      maxBucketRows: Int): DataFrame = {
-    if (banded.schema("vec_id").dataType !=
-        org.apache.spark.sql.types.LongType)
-      return scoredPairsFromBandedJoin(banded, maxBucketRows)
-        .filter(col("sim") > threshold)
-        .select(col("a_id"), col("b_id"))
-    val spark = banded.sparkSession
-    val nParts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val tagged = withSubBlocks(banded, maxBucketRows,
-        Seq("vec_id", "v", "__n"))
-      .select(col("vec_id"), col("v"), col("__n"), col("tbl"), col("bkt"),
-        explode(cellTags(col("__u"), col("__g"))).as("c"))
-      .select(col("vec_id"), col("v"), col("__n"), col("tbl"), col("bkt"),
-        col("c.i").as("__i"), col("c.j").as("__j"), col("c.s").as("__sd"))
-      .repartition(nParts, col("tbl"), col("bkt"), col("__i"), col("__j"))
-      .sortWithinPartitions("tbl", "bkt", "__i", "__j")
-    val parse = (r: org.apache.spark.sql.Row) => {
-      val (v, nullElem) = vecToDoubles(r.get(1))
-      val nNull = r.isNullAt(2)
-      new FRow(r.getLong(0), v, nullElem, nNull,
-        if (nNull) 0.0 else r.getDouble(2))
-    }
-    val score = (x: FRow, y: FRow) => {
-      if (x.v == null || y.v == null || x.v.length != y.v.length ||
-          x.nullElem || y.nullElem || x.nNull || y.nNull) null
-      else {
-        var dot = 0.0
-        var i = 0
-        val n = x.v.length
-        while (i < n) { dot += x.v(i) * y.v(i); i += 1 }
-        val sim = dot / (x.n * y.n)
-        // Spark's `>` is NaN-safe: NaN orders above any threshold
-        if (sim > threshold || java.lang.Double.isNaN(sim))
-          (if (x.id < y.id) (x.id, y.id) else (y.id, x.id))
-        else null
-      }
-    }
-    implicit val enc = org.apache.spark.sql.Encoders.tuple(
-      org.apache.spark.sql.Encoders.scalaLong,
-      org.apache.spark.sql.Encoders.scalaLong)
-    tagged.mapPartitions { rows =>
-      cellStream(rows, 3, parse,
-        (a: scala.collection.mutable.ArrayBuffer[FRow],
-         b: scala.collection.mutable.ArrayBuffer[FRow], diag: Boolean) =>
-          cellPairs[FRow, (Long, Long)](a, b, diag, (x, y) => score(x, y)))
-    }.toDF("a_id", "b_id")
+  /** Threshold mode: every pair `keep` accepts, as (a_id, b_id) with
+    * a_id < b_id — one row per shared bucket, deduped by the caller.
+    * Ids of any type ride the cell loop as their Spark values and leave
+    * it unordered through a Row encoder of the banded id type; the
+    * least/greatest projection orders them as Spark orders that type. */
+  private def survivorPairs[R <: BandRow](banded: DataFrame,
+      maxBucketRows: Int, payload: Seq[String], parse: Row => R,
+      keep: (R, R) => Boolean): DataFrame = {
+    val id = banded.schema("vec_id")
+    val enc = Encoders.row(StructType(Seq(id.copy(name = "__x"),
+      id.copy(name = "__y"))))
+    val tblIdx = payload.length
+    cellSorted(banded, maxBucketRows, payload)
+      .mapPartitions((rows: Iterator[Row]) =>
+        cellLoop[R, Row](rows, tblIdx, parse,
+          (x, y) => if (keep(x, y)) Row(x.id, y.id) else null))(enc)
+      .select(least(col("__x"), col("__y")).as("a_id"),
+        greatest(col("__x"), col("__y")).as("b_id"))
   }
 
-  private final class QRow(val id: Long, val q: Array[Byte],
-    val nullElem: Boolean, val anyNull: Boolean, val s: Double,
-    val n: Double, val sa: Long)
+  /** WITHIN-batch survivors for the incremental pair fold
+    * ([[graft.streaming.Streams.incrementalEmbPairs]]): the float cell
+    * loop with the caller's `sim > threshold` filter fused in — only
+    * surviving (a_id, b_id) leave the scorer (NaN sims survive, Spark's
+    * NaN-above-all `>`; null sims drop), one row per shared bucket,
+    * deduped by the caller. */
+  private[graft] def thresholdSurvivorsFromBanded(
+      banded: DataFrame, threshold: Double,
+      maxBucketRows: Int): DataFrame =
+    survivorPairs[FRow](banded, maxBucketRows, Seq("vec_id", "v", "__n"),
+      parseFloat, (x, y) => scorable(x, y) && {
+        val sim = pairCosine(x, y)
+        sim > threshold || java.lang.Double.isNaN(sim)
+      })
 
-  /** The quantized prune of [[bucketLocalThresholdPairs]] as a
-    * partition scorer (bigint ids): same rigorous upper bound, same
-    * survivor rule (`ub > threshold` with Spark's NaN-above-everything
-    * comparison; NULL bound → pair dropped), emitting only surviving
-    * (a_id, b_id) — one row per shared bucket, deduped downstream. */
-  private def prunedPairsPartition(
-      qbanded: DataFrame,
-      threshold: Double,
-      maxBucketRows: Int): DataFrame = {
-    val spark = qbanded.sparkSession
-    val nParts = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
-    val tagged = withSubBlocks(qbanded, maxBucketRows,
-        Seq("vec_id", "qv", "__s", "__n", "__sa"))
-      .select(col("vec_id"), col("qv"), col("__s"), col("__n"), col("__sa"),
-        col("tbl"), col("bkt"),
-        explode(cellTags(col("__u"), col("__g"))).as("c"))
-      .select(col("vec_id"), col("qv"), col("__s"), col("__n"), col("__sa"),
-        col("tbl"), col("bkt"),
-        col("c.i").as("__i"), col("c.j").as("__j"), col("c.s").as("__sd"))
-      .repartition(nParts, col("tbl"), col("bkt"), col("__i"), col("__j"))
-      .sortWithinPartitions("tbl", "bkt", "__i", "__j")
-    val parse = (r: org.apache.spark.sql.Row) => {
-      val (q, nullElem) = vecToBytes(r.get(1))
-      val sNull = r.isNullAt(2)
-      val nNull = r.isNullAt(3)
-      val saNull = r.isNullAt(4)
-      new QRow(r.getLong(0), q, nullElem,
-        q == null || nullElem || sNull || nNull || saNull,
-        if (sNull) 0.0 else r.getDouble(2),
-        if (nNull) 0.0 else r.getDouble(3),
-        if (saNull) 0L else r.getLong(4))
-    }
-    val score = (x: QRow, y: QRow) => {
-      if (x.anyNull || y.anyNull || x.q.length != y.q.length) null
-      else {
-        // EXACTLY the column form's arithmetic shape (see the ub
-        // Column in bucketLocalThresholdPairs): ((Q + 0.5·(sa_a+sa_b))
-        // + 0.25·d), scaled by s_a·s_b, over n_a·n_b, plus 1e-6
+  /** The quantized prune of [[bucketLocalThresholdPairs]]: pairs whose
+    * rigorous upper bound clears the threshold (`ub > threshold` with
+    * Spark's NaN-above-everything comparison; a NULL bound drops the
+    * pair), one row per shared bucket, deduped by the caller. */
+  private def prunedPairs(qbanded: DataFrame, threshold: Double,
+      maxBucketRows: Int): DataFrame =
+    survivorPairs[QRow](qbanded, maxBucketRows,
+      Seq("vec_id", "qv", "__s", "__n", "__sa"), parseQuantized,
+      (x, y) => x.q != null && y.q != null && x.q.length == y.q.length && {
+        // ((Q + 0.5·(sa_a+sa_b)) + 0.25·d), scaled by s_a·s_b, over
+        // n_a·n_b, plus 1e-6 — see bucketLocalThresholdPairs
         var q = 0L
         var i = 0
         val d = x.q.length
@@ -907,65 +696,13 @@ object Similarity {
         val ub = x.s * y.s *
           (q.toDouble + 0.5 * (x.sa + y.sa).toDouble + 0.25 * d.toDouble) /
           (x.n * y.n) + 1e-6
-        // Spark's `>` on doubles is NaN-safe: NaN orders above all
-        if (ub > threshold || java.lang.Double.isNaN(ub))
-          (if (x.id < y.id) (x.id, y.id) else (y.id, x.id))
-        else null
-      }
-    }
-    implicit val enc = org.apache.spark.sql.Encoders.tuple(
-      org.apache.spark.sql.Encoders.scalaLong,
-      org.apache.spark.sql.Encoders.scalaLong)
-    tagged.mapPartitions { rows =>
-      cellStream(rows, 5, parse,
-        (a: scala.collection.mutable.ArrayBuffer[QRow],
-         b: scala.collection.mutable.ArrayBuffer[QRow], diag: Boolean) =>
-          cellPairs[QRow, (Long, Long)](a, b, diag, (x, y) => score(x, y)))
-    }.toDF("a_id", "b_id")
-  }
-
-  /** The pair-JOIN form of the quantized prune — kept for non-bigint
-    * ids and as the test-side equality oracle for
-    * [[prunedPairsPartition]]. Emits surviving (a_id, b_id), one row
-    * per shared bucket occurrence (NOT distinct — the caller dedups,
-    * same as the partition form). */
-  private[graft] def prunedPairsJoin(
-      qbanded: DataFrame,
-      threshold: Double,
-      maxBucketRows: Int,
-      nParts: Int): DataFrame = {
-    val withSub = withSubBlocks(qbanded, maxBucketRows,
-      Seq("vec_id", "qv", "__s", "__n", "__sa"))
-    val left = withSub
-      .withColumn("__j", explode(sequence(col("__u"), col("__g") - 1)))
-      .withColumnRenamed("__u", "__i").drop("__g")
-    val right = withSub
-      .withColumn("__i", explode(sequence(lit(0L), col("__u"))))
-      .withColumnRenamed("__u", "__j").drop("__g")
-    val cellCols = Seq(col("tbl"), col("bkt"), col("__i"), col("__j"))
-    val a = left.repartition(nParts, cellCols: _*).alias("a")
-    val b = right.repartition(nParts, cellCols: _*).alias("b")
-    val onceOnly = (col("a.__i") =!= col("a.__j")) ||
-      (col("a.vec_id") < col("b.vec_id"))
-    // rigorous upper bound on CosineSim(a.v, b.v) — see scaladoc
-    val ub = (col("a.__s") * col("b.__s") *
-        (byteDot(col("a.qv"), col("b.qv")).cast("double") +
-          lit(0.5) * (col("a.__sa") + col("b.__sa")).cast("double") +
-          lit(0.25) * size(col("a.qv")).cast("double"))) /
-      (col("a.__n") * col("b.__n")) + lit(1e-6)
-    a.join(b,
-        col("a.tbl") === col("b.tbl") && col("a.bkt") === col("b.bkt") &&
-          col("a.__i") === col("b.__i") && col("a.__j") === col("b.__j") &&
-          onceOnly)
-      .filter(ub > threshold)
-      .select(least(col("a.vec_id"), col("b.vec_id")).as("a_id"),
-        greatest(col("a.vec_id"), col("b.vec_id")).as("b_id"))
-  }
+        ub > threshold || java.lang.Double.isNaN(ub)
+      })
 
   /** THRESHOLD-mode banded pair engine (r15 — guide §2.3 "shuffle
     * keys and metadata instead of payloads", §8): same multi-table
-    * hyperplane buckets, triangle tiling and hot-bucket guard as
-    * [[bucketLocalScoredPairs]], but the band rows carry an
+    * hyperplane buckets and band-cell scorer as [[knnGraphBucketed]]
+    * (threshold mode), but the band rows carry an
     * int8-QUANTIZED payload instead of the float vector — per row,
     * `qv` (one byte per dim), the per-row symmetric scale
     * `__s = max|x|/127`, the exact L2 norm `__n` and the code mass
@@ -974,8 +711,9 @@ object Similarity {
     * bytes at identical bucket assignment (buckets hash the ORIGINAL
     * vector before it is dropped).
     *
-    * Within a bucket, each candidate pair is scored with the integer
-    * [[byteDot]] and a RIGOROUS upper bound on its true cosine:
+    * Within a cell, each candidate pair is scored with the integer
+    * dot ([[byteDot]]'s arithmetic) and a RIGOROUS upper bound on its
+    * true cosine:
     * x_i = s_x·(q_i − δ_i) with |δ_i| ≤ 0.5 (round-half-up, clamp
     * only at ±127 where the error is still ≤ 0.5), so
     *   |dot(a,b)/(s_a·s_b) − Q| ≤ 0.5·(Σ|q_a| + Σ|q_b|) + 0.25·d
@@ -991,13 +729,13 @@ object Similarity {
     * id from the cached corpus projection — the re-attach join is
     * affordable precisely because it runs on survivors, not
     * candidates). A caller filtering `sim > threshold` therefore gets
-    * EXACTLY the pair set and sims of the float engine — no false
+    * EXACTLY the pair set and sims of float scoring — no false
     * negatives by the bound, no false positives by the exact re-score
     * (boundary-adversarial equality spec in DedupSpec).
     *
     * Returns (a_id, b_id, sim): one row per DISTINCT candidate pair
     * with bound > threshold, sim exact. Degenerate rows flow as in
-    * the float engine: a zero-norm side makes the bound ±Inf/NaN
+    * float scoring: a zero-norm side makes the bound ±Inf/NaN
     * (kept — Spark orders NaN above every value) and the exact
     * re-score reproduces CosineSim's NaN/NULL verbatim. */
   private[graft] def bucketLocalThresholdPairs(
@@ -1044,24 +782,16 @@ object Similarity {
           (acc, x) => acc + abs(x.cast("long"))).as("__sa"),
         col("pos").as("tbl"), col("col").as("bkt"))
       .cache()
-    // eager materialization (one count): same concurrent-stage race as
-    // bucketLocalScoredPairs — and this one pass also populates vc,
-    // which the re-rank joins then read from cache
+    // eager materialization (one count, see liveBanded) — this one
+    // pass also populates vc, which the re-rank joins then read from
+    // cache
     qbanded.count()
     retireBandedCaches(Seq(vc, qbanded))
-    // the quantized prune: partition scorer for bigint ids (every
-    // production caller), pair-join form otherwise + as the test-side
-    // equality oracle (see the r15 PARTITION SCORER block)
-    val pruned =
-      (if (qbanded.schema("vec_id").dataType ==
-          org.apache.spark.sql.types.LongType)
-        prunedPairsPartition(qbanded, threshold, maxBucketRows)
-      else prunedPairsJoin(qbanded, threshold, maxBucketRows, nParts))
-      .distinct()
+    val pruned = prunedPairs(qbanded, threshold, maxBucketRows).distinct()
     // ---- exact re-rank on the survivors only: fetch the original
     // vectors by id and score with CosineSim — the sims (and the final
-    // thresholding the caller applies) are bit-identical to the float
-    // engine's. Survivor-sized side; AQE picks the join strategy from
+    // thresholding the caller applies) are bit-identical to float
+    // scoring's. Survivor-sized side; AQE picks the join strategy from
     // its RUNTIME size, so locally this broadcasts and at scale it
     // degrades to one linear corpus shuffle.
     pruned
@@ -1229,43 +959,23 @@ object Similarity {
     lshAnn(caug, qaug, "id", "va", k, numPlanes, dim + 1, seed, probeBits)
   }
 
-  /** Deterministic ±1 random hyperplanes (seeded). */
-  private def planes(numPlanes: Int, dim: Int, seed: Long): Seq[Seq[Double]] = {
-    val rnd = new Random(seed)
-    Seq.fill(numPlanes)(Seq.fill(dim)(if (rnd.nextBoolean()) 1.0 else -1.0))
-  }
-
-  /** Sign-bit bucket id from `numPlanes` seeded random hyperplanes —
-    * shared by the ANN index ([[lshAnn]]) and the corpus-scale
-    * embedding near-dup path ([[Dedup.embeddingNearDupPairsBucketed]]).
-    * Two vectors collide with probability (1 − θ/π)^numPlanes for
-    * angle θ, so fewer planes = bigger buckets = higher recall. */
-  private[graft] def hyperplaneBucket(
-      vec: Column, numPlanes: Int, dim: Int, seed: Long): Column =
-    bucketCol(vec, planes(numPlanes, dim, seed))
-
-  /** ALL `numTables` bucket ids of a vector as one array<int>, through
-    * the single fused-loop native expression
+  /** ALL `numTables` sign-bit bucket ids of a vector as one
+    * array<int>, through the single fused-loop native expression
     * ([[graft.plans.HyperplaneBuckets]]) — bit-identical bucket ids to
-    * `numTables` separate [[hyperplaneBucket]] columns at seeds
-    * `seed + 7919·t`, but the multi-table band builders stop inlining
-    * 48 dot-product sub-trees into one giant projection method that
-    * the JIT refuses to compile (measured: ~120 CPU-s → ~0.3 CPU-s
-    * per band build at sf1.0). */
+    * `numTables` separate per-plane `when(dot >= 0)` compositions at
+    * seeds `seed + 7919·t` (the test-side oracle), but the multi-table
+    * band builders stop inlining 48 dot-product sub-trees into one
+    * giant projection method that the JIT refuses to compile
+    * (measured: ~120 CPU-s → ~0.3 CPU-s per band build at sf1.0).
+    * Two vectors collide in a table with probability
+    * (1 − θ/π)^planesPerTable for angle θ, so fewer planes = bigger
+    * buckets = higher recall. */
   private[graft] def hyperplaneBuckets(vec: Column, numTables: Int,
       planesPerTable: Int, dim: Int, seed: Long): Column = {
     import org.apache.spark.sql.GraftBridge
     GraftBridge.column(graft.plans.HyperplaneBuckets(
       GraftBridge.expression(vec), numTables, planesPerTable, dim, seed))
   }
-
-  /** Sign-bit bucket id from hyperplane projections — planes × dims
-    * fused multiply-adds per row through the codegen dot product (the
-    * HOF form made bucketing the dominant cost of the LSH paths). */
-  private def bucketCol(vec: Column, ps: Seq[Seq[Double]]): Column =
-    ps.zipWithIndex.map { case (p, j) =>
-      when(dotNative(vec, typedLit(p)) >= 0, lit(1 << j)).otherwise(lit(0))
-    }.reduce(_ + _)
 
   /** Random-hyperplane LSH ANN: bucket the corpus once, probe each
     * query's bucket plus all neighbors within `probeBits` bit flips,
@@ -1291,9 +1001,13 @@ object Similarity {
       seed: Long = 42L,
       probeBits: Int = 2): DataFrame = {
     require(probeBits >= 0 && probeBits <= 2, s"probeBits 0..2: $probeBits")
-    val ps = planes(numPlanes, dim, seed)
+    // table 0 of the fused bucketing at `seed`: the planes drawn from
+    // Random(seed), the sign bits summed exactly as a per-plane
+    // when(dot >= 0) composition would
+    def bucket(v: Column): Column =
+      element_at(hyperplaneBuckets(v, 1, numPlanes, dim, seed), 1)
     val c = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"),
-      bucketCol(col(vecCol), ps).as("bucket"))
+      bucket(col(vecCol)).as("bucket"))
     val oneBit =
       if (probeBits < 1) Seq.empty
       else (0 until numPlanes).map(j => col("qb").bitwiseXOR(lit(1 << j)))
@@ -1304,7 +1018,7 @@ object Similarity {
       } yield col("qb").bitwiseXOR(lit((1 << i) | (1 << j)))
     val q = broadcast(queries
       .select(col(idCol).as("q_id"), col(vecCol).as("qv"),
-        bucketCol(col(vecCol), ps).as("qb"))
+        bucket(col(vecCol)).as("qb"))
       .withColumn("probe",
         explode(array((col("qb") +: oneBit) ++ twoBit: _*))))
     val w = Window.partitionBy(col("q_id"))

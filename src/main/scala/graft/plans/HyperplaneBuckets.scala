@@ -26,7 +26,8 @@ import scala.util.Random
   * BIT-PARITY with the composition it replaces (bucket ids feed
   * rows-only oracles — they must not move):
   *   - plane coefficients: `Random(seed + 7919·t)`, `numPlanes × dim`
-  *     draws of ±1.0 in the same order as Similarity.planes;
+  *     draws of ±1.0 per table, plane by plane, as the test-side
+  *     per-table oracle draws them;
   *   - dot: left-to-right double accumulation of
   *     `vec(i).toDouble * plane(i)` — exactly [[DotProduct]];
   *   - sign test: Spark's `>=` on doubles is NaN-safe (NaN ≥ 0 is
@@ -66,8 +67,8 @@ case class HyperplaneBuckets(
   private def elemIsFloat: Boolean =
     child.dataType.asInstanceOf[ArrayType].elementType == FloatType
 
-  /** Flat [t][j][i] plane coefficients — identical draw order to
-    * Similarity.planes(planesPerTable, dim, seed + 7919·t). */
+  /** Flat [t][j][i] plane coefficients — table t draws
+    * planesPerTable × dim signs from Random(seed + 7919·t). */
   @transient private lazy val planeData: Array[Double] = {
     val out = new Array[Double](numTables * planesPerTable * dim)
     var t = 0

@@ -1025,7 +1025,8 @@ object Streams {
           // eager materialization: the scoring plan reads bandedV
           // from several concurrent stages; a lazy cache lets each
           // recompute the projection pass before any commits it
-          // (same race as bucketLocalScoredPairs, measured there)
+          // (same race as the batch banded caches, measured at
+          // Similarity.liveBanded)
           bandedV.count()
           val newBands = bandedV.select(col("vec_id"), col("tbl"),
             col("bkt"))
@@ -1118,8 +1119,8 @@ object Streams {
       // trigger's dominant stage: ~85 of 178 CPU-s at sf1.0).
       // Output-identical by the fold monoid: prune(prune(W) ∪ C) =
       // prune(W ∪ C) — graphFold's scaladoc.
-      graft.operators.Similarity.symEdgesFromBanded(_, k, keepThreshold,
-        maxBucketRows = 2048)) { (withinSym, crossScored) =>
+      graft.operators.Similarity.symRetainedPartialsFromBanded(_, k,
+        keepThreshold, dedupIds = true, maxBucketRows = 2048)) { (withinSym, crossScored) =>
       // cross edges symmetrize (explode both directions from the
       // single scored row); the within-batch side arrives already
       // symmetrized and pre-pruned from the fused scorer

@@ -201,7 +201,7 @@ class DedupSpec extends SparkSuite {
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
       df.collect().map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"),
         r.getAs[Double]("cos_sim"))).toSet
-    val oracle = rows(Dedup.embeddingNearDupPairsCandidateJoin(
+    val oracle = rows(Oracles.embeddingNearDupPairsCandidateJoin(
       emb, col("vec_id"), col("embedding"), 0.3))
     assert(oracle.nonEmpty)
     assert(rows(Dedup.embeddingNearDupPairsBucketed(
@@ -241,7 +241,7 @@ class DedupSpec extends SparkSuite {
     def rows(d: org.apache.spark.sql.DataFrame): Set[(Long, Long, Double)] =
       d.collect().map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"),
         r.getAs[Double]("cos_sim"))).toSet
-    val oracle = rows(Dedup.embeddingNearDupPairsCandidateJoin(
+    val oracle = rows(Oracles.embeddingNearDupPairsCandidateJoin(
       df, col("vec_id"), col("embedding"), 0.3, dim = 8))
     assert(oracle.nonEmpty)
     assert(rows(Dedup.embeddingNearDupPairsBucketed(

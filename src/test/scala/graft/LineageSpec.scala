@@ -3,7 +3,9 @@ package graft
 import java.nio.file.Files
 import graft.registry.Lineage
 
-class LineageSpec extends SparkSuite {
+class LineageSpec extends SparkSuite with SuiteTempDirs {
+
+  protected val rootName = "graft_lineage_spec"
 
   test("checksums manifest is deterministic and complete") {
     val a = Lineage.checksums(spark, sfDir, "*.parquet").collect()
@@ -14,7 +16,7 @@ class LineageSpec extends SparkSuite {
   }
 
   test("writeManifest records counts, hashes and snapshot date") {
-    val out = Files.createTempDirectory("graft_lineage").toString
+    val out = tmpDir("graft_lineage")
     Tables.load(spark, sfDir, "region").write.mode("overwrite")
       .parquet(s"$out/region.parquet")
     Lineage.writeManifest(spark, out, Seq("region"), "2026-08-12")
@@ -26,7 +28,7 @@ class LineageSpec extends SparkSuite {
   }
 
   test("per-table checksum aggregates part files deterministically") {
-    val out = Files.createTempDirectory("graft_lineage_tbl").toString
+    val out = tmpDir("graft_lineage_tbl")
     Tables.load(spark, sfDir, "region").repartition(3).write
       .mode("overwrite").parquet(s"$out/region.parquet")
     val a = Lineage.tableChecksums(spark, out, Seq("region")).collect()
@@ -39,7 +41,7 @@ class LineageSpec extends SparkSuite {
   }
 
   test("manifest carries the per-table aggregated checksum section") {
-    val out = Files.createTempDirectory("graft_lineage_m2").toString
+    val out = tmpDir("graft_lineage_m2")
     Tables.load(spark, sfDir, "region").write.mode("overwrite")
       .parquet(s"$out/region.parquet")
     Lineage.writeManifest(spark, out, Seq("region"), "2026-08-12")
@@ -52,7 +54,7 @@ class LineageSpec extends SparkSuite {
   test("manifest per-table checksum is byte-identical to tableChecksums") {
     // writeManifest derives the rollup from its single hash pass on
     // the driver; it must agree with the distributed tableChecksums
-    val out = Files.createTempDirectory("graft_lineage_m3").toString
+    val out = tmpDir("graft_lineage_m3")
     Tables.load(spark, sfDir, "region").repartition(3).write
       .mode("overwrite").parquet(s"$out/region.parquet")
     Lineage.writeManifest(spark, out, Seq("region"), "2026-08-12")

@@ -8,7 +8,9 @@ import graft.streaming.LsmState
   * the streaming folds built on it: for arbitrary append/compact
   * interleavings the folded view must equal the direct fold of every
   * delta ever appended — the store's one invariant. */
-class LsmStateSpec extends SparkSuite {
+class LsmStateSpec extends SparkSuite with SuiteTempDirs {
+
+  protected val rootName = "graft_lsm_spec"
 
   private def delta(rng: scala.util.Random, n: Int) = {
     import spark.implicits._
@@ -19,8 +21,7 @@ class LsmStateSpec extends SparkSuite {
   test("fold(view) equals fold(all deltas) under every compaction cadence") {
     val rng = new scala.util.Random(42)
     for (cadence <- Seq(1, 2, 3, 10)) {
-      val root = java.nio.file.Files
-        .createTempDirectory(s"graft_lsm_prop_$cadence").toString
+      val root = tmpDir(s"graft_lsm_prop_$cadence")
       val st = new LsmState(spark, root,
         _.groupBy("k").agg(sum(col("v")).as("v")), cadence)
       val deltas = (0 until 5).map(i => delta(rng, 10 + rng.nextInt(20)))
@@ -54,8 +55,7 @@ class LsmStateSpec extends SparkSuite {
 
   test("view(except) hides exactly the named batch's part") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_lsm_except").toString
+    val root = tmpDir("graft_lsm_except")
     val st = new LsmState(spark, root, identity, compactEvery = 10)
     st.append(0, Seq((1L, "a")).toDF("id", "v"))
     st.append(1, Seq((2L, "b")).toDF("id", "v"))
@@ -70,8 +70,7 @@ class LsmStateSpec extends SparkSuite {
 
   test("refresh() lets a detached reader observe a foreign writer's appends") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_lsm_refresh").toString
+    val root = tmpDir("graft_lsm_refresh")
     val writer = new LsmState(spark, root, identity, compactEvery = 2)
     writer.append(0, Seq((1L, "a")).toDF("id", "v"))
     val reader = new LsmState(spark, root, identity, compactEvery = 2)
@@ -88,8 +87,7 @@ class LsmStateSpec extends SparkSuite {
 
   test("re-appending a batch id overwrites, never duplicates (replay contract)") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_lsm_replay").toString
+    val root = tmpDir("graft_lsm_replay")
     val st = new LsmState(spark, root, identity, compactEvery = 10)
     st.append(0, Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
     st.append(0, Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
@@ -98,8 +96,7 @@ class LsmStateSpec extends SparkSuite {
 
   test("crash between pointer move and part cleanup: manifest masks folded parts") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_lsm_crash_parts").toString
+    val root = tmpDir("graft_lsm_crash_parts")
     val st = new LsmState(spark, root, identity, compactEvery = 2)
     st.append(0, Seq((1L, "a")).toDF("id", "v"))
     st.append(1, Seq((2L, "b")).toDF("id", "v"))
@@ -124,8 +121,7 @@ class LsmStateSpec extends SparkSuite {
 
   test("crash between pointer move and retirement: next sweep reaps stale snapshots") {
     import spark.implicits._
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_lsm_crash_vers").toString
+    val root = tmpDir("graft_lsm_crash_vers")
     val st = new LsmState(spark, root, identity, compactEvery = 2)
     st.append(0, Seq((1L, "a")).toDF("id", "v"))
     st.append(1, Seq((2L, "b")).toDF("id", "v"))
@@ -150,8 +146,7 @@ class LsmStateSpec extends SparkSuite {
   }
 
   test("empty-state result raises; empty view is None") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft_lsm_empty").toString
+    val root = tmpDir("graft_lsm_empty")
     val st = new LsmState(spark, root, identity)
     assert(st.view().isEmpty)
     val e = intercept[RuntimeException](st.result())

@@ -10,7 +10,9 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
   * silently breaks pushdown (e.g. wrapping a filter column in a
   * non-pushable expression) fails the suite, not the bill.
   */
-class PushdownSpec extends SparkSuite {
+class PushdownSpec extends SparkSuite with SuiteTempDirs {
+
+  protected val rootName = "graft_pushdown_spec"
 
   private def scans(name: String): Seq[FileSourceScanExec] = {
     val plan = SparkEntry.queries(name)(spark, sfDir)
@@ -113,8 +115,7 @@ class PushdownSpec extends SparkSuite {
 
   test("q16 footer counts cache against the snapshot fingerprint") {
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_q16_cache").toString
+    val dir = tmpDir("graft_q16_cache")
     val path = s"$dir/t.parquet"
     Seq(1L, 2L, 3L).toDF("x").write.mode("overwrite").parquet(path)
     assert(SparkEntry.cachedFooterCount(spark, path) == 3L)
@@ -139,8 +140,7 @@ class PushdownSpec extends SparkSuite {
     // now the verbatim name:len:mtime list, so ANY rewrite (same file
     // count included) moves it by construction.
     import spark.implicits._
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft_q16_samecount").toString
+    val dir = tmpDir("graft_q16_samecount")
     val path = s"$dir/t.parquet"
     Seq(1L, 2L, 3L).toDF("x")
       .repartition(1).write.mode("overwrite").parquet(path)

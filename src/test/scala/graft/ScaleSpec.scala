@@ -1,10 +1,11 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.operators.Scale
 
-class ScaleSpec extends SparkSuite {
+class ScaleSpec extends SparkSuite with SuiteTempDirs {
+
+  protected val rootName = "graft_scale_spec"
 
   test("saltedJoin returns identical results to a plain join") {
     val li = Tables.load(spark, sfDir, "lineitem")
@@ -158,8 +159,8 @@ class ScaleSpec extends SparkSuite {
   }
 
   test("compact merges a many-small-file layout, preserving rows") {
-    val src = Files.createTempDirectory("graft_compact_src").toString
-    val dest = Files.createTempDirectory("graft_compact_dst").toString + "/out"
+    val src = tmpDir("graft_compact_src")
+    val dest = tmpDir("graft_compact_dst") + "/out"
     val orders = Tables.load(spark, sfDir, "orders")
     orders.repartition(40).write.mode("overwrite").parquet(src)
     val smallFiles = new java.io.File(src).listFiles()
@@ -189,10 +190,10 @@ class ScaleSpec extends SparkSuite {
         perFile.count { case (lo, hi) => lo <= v && v <= hi }.toDouble /
           perFile.length).sum / picked.length
     }
-    val zdir = Files.createTempDirectory("graft_z").toString + "/z"
+    val zdir = tmpDir("graft_z") + "/z"
     Scale.zOrderedWrite(li, zdir, "l_partkey", "l_suppkey", numFiles = 16)
     assert(spark.read.parquet(zdir).count() == li.count())
-    val sdir = Files.createTempDirectory("graft_z").toString + "/s"
+    val sdir = tmpDir("graft_z") + "/s"
     li.repartitionByRange(16, col("l_partkey"))
       .sortWithinPartitions("l_partkey")
       .write.mode("overwrite").parquet(sdir)
@@ -209,7 +210,7 @@ class ScaleSpec extends SparkSuite {
   }
 
   test("partitionedWrite produces a layout that prunes partitions") {
-    val out = Files.createTempDirectory("graft_layout").toString + "/docs"
+    val out = tmpDir("graft_layout") + "/docs"
     val docs = Tables.load(spark, sfDir, "documents")
     Scale.partitionedWrite(docs, out, Seq("lang"), Seq("doc_id"))
     val scan = spark.read.parquet(out).filter(col("lang") === "en")

@@ -240,38 +240,44 @@ class SimilaritySpec extends SparkSuite {
     // normal vectors + every degenerate shape the band builders can
     // meet: zero vector, NaN element, Infinity element, null element,
     // wrong length, empty, NULL vector — the old composition mapped
-    // all the non-computable ones to bucket 0 per table
-    val rnd = new scala.util.Random(7)
-    val normal = (0L until 50L).map(i =>
-      (i, Option(Seq.fill(8)(Option(rnd.nextFloat() * 2 - 1)))))
-    val degenerate = Seq(
-      (100L, Option(Seq.fill(8)(Option(0f)))),
-      (101L, Option(Option(Float.NaN) +: Seq.fill(7)(Option(1f)))),
-      (102L, Option(Option(Float.PositiveInfinity) +:
-        Seq.fill(7)(Option(-1f)))),
-      (103L, Option(Option.empty[Float] +: Seq.fill(7)(Option(1f)))),
-      (104L, Option(Seq.fill(3)(Option(1f)))),
-      (105L, Option(Seq.empty[Option[Float]])),
-      (106L, Option.empty[Seq[Option[Float]]]))
-    val df = (normal ++ degenerate).toDF("vec_id", "v")
-    val oldForm = df.select(col("vec_id"), explode(array((0 until 12).map {
-        t => struct(lit(t).as("tbl"), Similarity.hyperplaneBucket(
-          col("v"), 4, 8, 42L + 7919L * t).as("bkt"))
-      }: _*)).as("tb"))
-      .select(col("vec_id"), col("tb.tbl"), col("tb.bkt"))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
-    val newForm = df.select(col("vec_id"),
-        posexplode(Similarity.hyperplaneBuckets(col("v"), 12, 4, 8, 42L)))
-      .select(col("vec_id"), col("pos"), col("col"))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
-    assert(newForm == oldForm,
-      "fused bucket ids must equal the per-table composition")
-    // the NON-computable rows (null element, wrong length, empty,
-    // NULL vector) really take the all-zero branch; NaN/Inf elements
-    // still produce sign-testable dots (NaN orders above 0) and the
-    // zero vector's dot is +0.0 ≥ 0 — those bucket normally
-    assert(Seq(103L, 104L, 105L, 106L).forall(id =>
-      newForm.filter(_._1 == id).forall(_._3 == 0)))
+    // all the non-computable ones to bucket 0 per table. Two shapes:
+    // the band builders' (12 tables × 4 planes, dim 8 here) and
+    // lshAnn's (1 table × 5 planes, dim 64).
+    for ((numTables, numPlanes, dim) <- Seq((12, 4, 8), (1, 5, 64))) {
+      val rnd = new scala.util.Random(7)
+      val normal = (0L until 50L).map(i =>
+        (i, Option(Seq.fill(dim)(Option(rnd.nextFloat() * 2 - 1)))))
+      val degenerate = Seq(
+        (100L, Option(Seq.fill(dim)(Option(0f)))),
+        (101L, Option(Option(Float.NaN) +: Seq.fill(dim - 1)(Option(1f)))),
+        (102L, Option(Option(Float.PositiveInfinity) +:
+          Seq.fill(dim - 1)(Option(-1f)))),
+        (103L, Option(Option.empty[Float] +: Seq.fill(dim - 1)(Option(1f)))),
+        (104L, Option(Seq.fill(3)(Option(1f)))),
+        (105L, Option(Seq.empty[Option[Float]])),
+        (106L, Option.empty[Seq[Option[Float]]]))
+      val df = (normal ++ degenerate).toDF("vec_id", "v")
+      val oldForm = df.select(col("vec_id"),
+          explode(array((0 until numTables).map { t =>
+            struct(lit(t).as("tbl"), Oracles.hyperplaneBucket(
+              col("v"), numPlanes, dim, 42L + 7919L * t).as("bkt"))
+          }: _*)).as("tb"))
+        .select(col("vec_id"), col("tb.tbl"), col("tb.bkt"))
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
+      val newForm = df.select(col("vec_id"),
+          posexplode(Similarity.hyperplaneBuckets(col("v"), numTables,
+            numPlanes, dim, 42L)))
+        .select(col("vec_id"), col("pos"), col("col"))
+        .collect().map(r => (r.getLong(0), r.getInt(1), r.getInt(2))).toSet
+      assert(newForm == oldForm,
+        "fused bucket ids must equal the per-table composition")
+      // the NON-computable rows (null element, wrong length, empty,
+      // NULL vector) really take the all-zero branch; NaN/Inf elements
+      // still produce sign-testable dots (NaN orders above 0) and the
+      // zero vector's dot is +0.0 ≥ 0 — those bucket normally
+      assert(Seq(103L, 104L, 105L, 106L).forall(id =>
+        newForm.filter(_._1 == id).forall(_._3 == 0)))
+    }
   }
 
   test("partition scorer: degenerate vectors match the candidate-join " +
@@ -296,7 +302,7 @@ class SimilaritySpec extends SparkSuite {
     def rows(d: org.apache.spark.sql.DataFrame): Set[(Long, Long, String)] =
       d.collect().map(r => (r.getAs[Long]("a_id"), r.getAs[Long]("b_id"),
         r.getAs[Double]("cos_sim").toString)).toSet
-    val oracle = rows(Dedup.embeddingNearDupPairsCandidateJoin(
+    val oracle = rows(Oracles.embeddingNearDupPairsCandidateJoin(
       df, col("vec_id"), col("embedding"), 0.3, dim = 4))
     assert(oracle.exists(_._3 == "NaN"),
       "fixture must produce NaN sims through the zero vector")
@@ -313,7 +319,7 @@ class SimilaritySpec extends SparkSuite {
     def graph(d: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long, String)] =
       d.collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("rank"),
         r.getAs[Long]("nbr_id"), r.getAs[Double]("sim").toString)).toSet
-    val gOracle = graph(Similarity.knnGraphCandidateJoin(
+    val gOracle = graph(Oracles.knnGraphCandidateJoin(
       df, "vec_id", "embedding", k = 3, dim = 4))
     assert(graph(Similarity.knnGraphBucketed(
       df, "vec_id", "embedding", k = 3, dim = 4)) == gOracle,
@@ -332,12 +338,25 @@ class SimilaritySpec extends SparkSuite {
     def rows(d: org.apache.spark.sql.DataFrame): Set[(String, String, Double)] =
       d.collect().map(r => (r.getAs[String]("a_id"), r.getAs[String]("b_id"),
         r.getAs[Double]("cos_sim"))).toSet
-    val oracle = rows(Dedup.embeddingNearDupPairsCandidateJoin(
+    val oracle = rows(Oracles.embeddingNearDupPairsCandidateJoin(
       df, col("vec_id"), col("embedding"), 0.3, dim = 4))
     assert(oracle.nonEmpty)
     assert(rows(Dedup.embeddingNearDupPairsBucketed(
       df, col("vec_id"), col("embedding"), 0.3, dim = 4)) == oracle,
       "string-id threshold engine (join prune) must equal the oracle")
+    // string ids take the band-cell scorer: no join is keyed on the
+    // triangle cell (the rendered AQE plan sees through its stages)
+    val pairs = Dedup.embeddingNearDupPairsBucketed(
+      df, col("vec_id"), col("embedding"), 0.3, dim = 4)
+    pairs.collect()
+    val exec = (pairs.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+        a.executedPlan
+      case p => p
+    }).toString
+    val cellJoins = exec.linesIterator.filter(l =>
+      l.contains("Join") && (l.contains("__i") || l.contains("__j"))).toSeq
+    assert(cellJoins.isEmpty, s"string ids still join on the cell:\n$exec")
   }
 
   test("lloydMeans driver-combine equals the aggregate oracle, " +
@@ -372,7 +391,7 @@ class SimilaritySpec extends SparkSuite {
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long, Double)] =
       df.collect().map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("rank"),
         r.getAs[Long]("nbr_id"), r.getAs[Double]("sim"))).toSet
-    val oracle = rows(Similarity.knnGraphCandidateJoin(
+    val oracle = rows(Oracles.knnGraphCandidateJoin(
       emb, "vec_id", "embedding", k = 5))
     assert(rows(Similarity.knnGraphBucketed(
       emb, "vec_id", "embedding", k = 5)) == oracle,
@@ -384,13 +403,56 @@ class SimilaritySpec extends SparkSuite {
       "triangle tiling must not change the graph")
     // heap-flush generations (the fused scorer's bounded-memory
     // degradation) must be merge-invisible
-    val oldFlush = Similarity.FlushHeapNodes
-    try {
-      Similarity.FlushHeapNodes = 4
-      assert(rows(Similarity.knnGraphBucketed(
-        emb, "vec_id", "embedding", k = 5)) == oracle,
-        "flushed partial heaps must merge to the same graph")
-    } finally Similarity.FlushHeapNodes = oldFlush
+    assert(rows(Similarity.symTopKFromBanded(
+      Similarity.bandedWithVecs(emb, "vec_id", "embedding", 12, 4, 64, 42L),
+      k = 5, maxBucketRows = 2048, flushHeapNodes = 4)) == oracle,
+      "flushed partial heaps must merge to the same graph")
+  }
+
+  test("retention scorer emits flushed partials before its input ends") {
+    import org.apache.spark.sql.Row
+    // three diagonal cells of six distinct ids each, in the cell-sorted
+    // layout (vec_id, v, __n, tbl, bkt, __i, __j, __sd): every cell
+    // leaves six live buffers, above a flush threshold of 4
+    val input = for (c <- 0 until 3; i <- 0 until 6) yield {
+      val v = Seq(1f, i.toFloat)
+      Row((c * 6 + i).toLong, v, math.sqrt(1.0 + i * i), 0, c, 0, 0, 0)
+    }
+    var handedOut = 0
+    val counted = input.iterator.map { r => handedOut += 1; r }
+    val out = Similarity.retainedPartials(counted, k = 2,
+      keepThreshold = None, dedupIds = true, flushHeapNodes = 4)
+    assert(out.hasNext)
+    val first = out.next()
+    assert(handedOut < input.length,
+      s"first partial came out after all $handedOut input rows")
+    // the cells share no id, so the flushed partials are exactly the
+    // unflushed ones
+    val unflushed = Similarity.retainedPartials(input.iterator, k = 2,
+      keepThreshold = None, dedupIds = true, flushHeapNodes = 1 << 20)
+    assert((first +: out.toSeq).toSet == unflushed.toSet)
+  }
+
+  test("knn graph: int ids equal the candidate-join oracle as longs; " +
+      "non-integral ids are refused") {
+    def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, Long, Long, Double)] =
+      df.collect().map(r => (r.getAs[Number]("vec_id").longValue,
+        r.getAs[Long]("rank"), r.getAs[Number]("nbr_id").longValue,
+        r.getAs[Double]("sim"))).toSet
+    val intIds = emb.withColumn("vec_id", col("vec_id").cast("int"))
+    val oracle = rows(Oracles.knnGraphCandidateJoin(
+      intIds, "vec_id", "embedding", k = 5))
+    assert(oracle.nonEmpty)
+    assert(rows(Similarity.knnGraphBucketed(
+      intIds, "vec_id", "embedding", k = 5)) == oracle)
+    for (t <- Seq("string", "double")) {
+      val e = intercept[IllegalArgumentException](Similarity.knnGraphBucketed(
+        emb.withColumn("vec_id", col("vec_id").cast(t)),
+        "vec_id", "embedding", k = 5))
+      assert(e.getMessage.contains(
+        s"k-NN graph ids must be tinyint, smallint, int or bigint, got $t"),
+        e.getMessage)
+    }
   }
 
   test("knn graph: ranks well-formed, sims exact, top-1 recall vs brute") {
