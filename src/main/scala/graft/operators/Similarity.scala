@@ -7,6 +7,8 @@ import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, S
 
 import scala.collection.mutable.ArrayBuffer
 
+import graft.plans.PqCodebook
+
 /** Approximate-nearest-neighbor search over an embedding column
   * (`array<float>`).
   *
@@ -22,13 +24,20 @@ import scala.collection.mutable.ArrayBuffer
   * The per-row and per-pair vector math is native codegen'd Catalyst
   * expressions in double precision: [[graft.plans.CosineSim]]
   * ([[cosine]]), [[graft.plans.DotProduct]] ([[dotNative]]),
-  * [[graft.plans.ByteDot]] ([[byteDot]], int8 codes) and
-  * [[graft.plans.HyperplaneBuckets]] (every LSH bucket id). Per-query
-  * and per-node top-k retention is the bounded-heap aggregates
+  * [[graft.plans.ByteDot]] ([[byteDot]], int8 codes),
+  * [[graft.plans.HyperplaneBuckets]] (every LSH bucket id) and the
+  * product-quantization kernel [[graft.plans.PqEncode]] /
+  * [[graft.plans.PqAdcTable]] (every PQ and IVF-PQ encode and ADC
+  * table; their norms are native self dots). Per-query and per-node
+  * top-k retention is the bounded-heap aggregates
   * [[graft.plans.TopKPairs]] / [[graft.plans.ThresholdTopKPairs]];
   * the banded engines score within-bucket pairs in one partition
   * scorer over primitive arrays (the band-cell scorer below).
-  * Higher-order functions remain for norms and elementwise casts.
+  * Higher-order functions remain, each an interpreted lambda per
+  * element (Spark evaluates them as CodegenFallback), in: the banded
+  * tables' norms and int8 quantization, the cell-tiling sequences,
+  * [[quantizedKnn]], the MIPS paths, [[centroids]], and the
+  * [[dot]]/[[cosineHof]] portability baselines.
   */
 object Similarity {
 
@@ -1034,7 +1043,7 @@ object Similarity {
   /** Nearest-centroid column against FROZEN centroids (embedded as
     * literals — pure map-side): argmax cosine via struct max, ties
     * toward the smaller cell id. */
-  private def nearestCellCol(vec: Column, centroids: Seq[Seq[Double]]): Column = {
+  private[graft] def nearestCellCol(vec: Column, centroids: Seq[Seq[Double]]): Column = {
     val scored = centroids.zipWithIndex.map { case (c, i) =>
       struct(cosine(vec, typedLit(c)).as("sim"), lit(-i).as("negCell"))
     }
@@ -1121,7 +1130,27 @@ object Similarity {
       vecCol: String,
       k: Int,
       maxIter: Int = 10,
-      seed: Long = 42L): Seq[Seq[Double]] = {
+      seed: Long = 42L): Seq[Seq[Double]] =
+    trainCentroids(df, idCol, vecCol, k, maxIter, seed,
+      minPersistBytes = BigInt(64L << 20))
+
+  /** [[trainCentroids]] with the Lloyd-run persist gate as an argument
+    * (specs exercise both paths on small fixtures).
+    *
+    * @param minPersistBytes below this optimizer-estimated input size,
+    *   1+maxIter rescans of the source are cheaper than materializing a
+    *   cache (measured at sf0.1: the unconditional r14 persist cost
+    *   p05/s05 more than it saved on their ≤5 MB corpora). The public
+    *   form passes 64 MB ≈ half a default scan split — past it the
+    *   rescans dominate. */
+  private[graft] def trainCentroids(
+      df: DataFrame,
+      idCol: String,
+      vecCol: String,
+      k: Int,
+      maxIter: Int,
+      seed: Long,
+      minPersistBytes: BigInt): Seq[Seq[Double]] = {
     require(k > 0, s"k must be positive: $k")
     // persisted for the whole Lloyd run WHEN RE-SCANNING IS THE COST:
     // the init sample plus every iteration re-reads these rows
@@ -1138,7 +1167,7 @@ object Similarity {
     // core-count-based, so local[8] and local[32] take the same path.
     val proj = df.select(col(idCol).as("__id"), col(vecCol).as("__v"))
     val estBytes = proj.queryExecution.optimizedPlan.stats.sizeInBytes
-    val doPersist = maxIter > 1 && estBytes >= MinTrainPersistBytes
+    val doPersist = maxIter > 1 && estBytes >= minPersistBytes
     val v =
       if (doPersist)
         proj.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -1147,7 +1176,7 @@ object Similarity {
     // seeded deterministic init: k hash-ordered rows
     var centroids: Array[Seq[Double]] = v
       .orderBy(xxhash64(col("__id"), lit(seed)), col("__id")).limit(k)
-      .select(transform(col("__v"), _.cast("double")).as("c"))
+      .select(col("__v").cast("array<double>").as("c"))
       .collect().map(_.getSeq[Double](0))
     var iter = 0
     var moved = true
@@ -1168,14 +1197,17 @@ object Similarity {
 
   /** One Lloyd round's per-cell means as per-PARTITION partial
     * (cell, pos) sums combined on the driver — ONE job and ZERO
-    * exchanges per iteration. The aggregate form it replaces
-    * ([[lloydMeansAgg]], kept as the test-side equality oracle)
-    * planned two exchanges, which AQE executes as ~3 stage-jobs per
+    * exchanges per iteration. The aggregate form it replaces (kept as
+    * the test-side equality oracle in `Oracles`) planned two
+    * exchanges, which AQE executes as ~3 stage-jobs per
     * iteration: of s08's 36 Spark jobs, 18 were the coarse trainer's
-    * scheduling overhead, ~130 ms each at bench scale (guide §1.2 —
-    * remove passes; §5 — bounded driver state: partials are
-    * k·dim·nParts (sum, count) pairs, ~160 KB at the defaults, and
-    * production k·dim caps them regardless of corpus size).
+    * scheduling overhead, ~130 ms each at bench scale.
+    *
+    * DRIVER BOUND: each partition emits one row per non-empty cell,
+    * carrying that cell's per-position `sums[]` and `counts[]`, so the
+    * collect is at most nParts × k rows of 2·dim numbers (dim = the
+    * longest vector in the cell) — independent of the row count;
+    * ~160 KB at k = 10, dim = 64 and 16 partitions.
     *
     * BIT-PARITY with the aggregate form: the in-loop assignment
     * reproduces nearestCellCol's struct-max EXACTLY (CosineSim's
@@ -1187,18 +1219,13 @@ object Similarity {
     * + mapId-ordered final merge; null elements are skipped per
     * position (avg semantics) and a cell's mean vector is its
     * populated positions in ascending order (the
-    * collect_list+array_sort shape). Spec'd against [[lloydMeansAgg]]
-    * in SimilaritySpec on degenerate fixtures. */
+    * collect_list+array_sort shape). Spec'd against the oracle in
+    * SimilaritySpec on degenerate fixtures. */
   private[graft] def lloydMeans(v: DataFrame,
       centroids: Seq[Seq[Double]]): Map[Int, Seq[Double]] = {
     val cents: Array[Array[Double]] = centroids.map(_.toArray).toArray
     val k = cents.length
-    implicit val enc = org.apache.spark.sql.Encoders.tuple(
-      org.apache.spark.sql.Encoders.scalaInt,
-      org.apache.spark.sql.Encoders.scalaInt,
-      org.apache.spark.sql.Encoders.scalaInt,
-      org.apache.spark.sql.Encoders.scalaDouble,
-      org.apache.spark.sql.Encoders.scalaLong)
+    implicit val enc = Encoders.product[(Int, Int, Array[Double], Array[Long])]
     val partials = v.mapPartitions { rows =>
       val pid = org.apache.spark.TaskContext.getPartitionId()
       val sums = Array.fill(k)(new Array[Double](0))
@@ -1262,47 +1289,26 @@ object Similarity {
           }
         }
       }
-      (0 until k).iterator.flatMap { c =>
-        (0 until sums(c).length).iterator
-          .filter(p => cnts(c)(p) > 0L)
-          .map(p => (pid, c, p, sums(c)(p), cnts(c)(p)))
-      }
+      (0 until k).iterator.filter(c => cnts(c).exists(_ > 0L))
+        .map(c => (pid, c, sums(c), cnts(c)))
     }.collect()
-    // combine in partition order — HashAggregate's mapId-ordered merge
-    val bySum = new scala.collection.mutable.HashMap[(Int, Int), Double]()
-    val byCnt = new scala.collection.mutable.HashMap[(Int, Int), Long]()
-    partials.sortBy(t => (t._1, t._2, t._3)).foreach {
-      case (_, c, p, s, n) =>
-        bySum((c, p)) = bySum.getOrElse((c, p), 0.0) + s
-        byCnt((c, p)) = byCnt.getOrElse((c, p), 0L) + n
+    // combine per (cell, pos) in partition order — HashAggregate's
+    // mapId-ordered merge; a partition that saw no value at a position
+    // contributes nothing there
+    val tot = scala.collection.mutable.HashMap.empty[Int, (Array[Double], Array[Long])]
+    partials.sortBy(t => (t._1, t._2)).foreach { case (_, c, s, n) =>
+      val (ts0, tn0) =
+        tot.getOrElse(c, (Array.emptyDoubleArray, Array.emptyLongArray))
+      val len = math.max(ts0.length, s.length)
+      val (ts, tn) =
+        (java.util.Arrays.copyOf(ts0, len), java.util.Arrays.copyOf(tn0, len))
+      for (p <- s.indices if n(p) > 0L) { ts(p) += s(p); tn(p) += n(p) }
+      tot(c) = (ts, tn)
     }
-    bySum.keys.groupBy(_._1).map { case (c, keys) =>
-      c -> keys.map(_._2).toSeq.sorted
-        .map(p => bySum((c, p)) / byCnt((c, p)))
-    }
+    tot.map { case (c, (ts, tn)) =>
+      c -> ts.indices.filter(tn(_) > 0L).map(p => ts(p) / tn(p))
+    }.toMap
   }
-
-  /** The two-exchange aggregate form of one Lloyd round — the
-    * test-side equality oracle for [[lloydMeans]]. */
-  private[graft] def lloydMeansAgg(v: DataFrame,
-      centroids: Seq[Seq[Double]]): Map[Int, Seq[Double]] =
-    v.select(col("__v"), nearestCellCol(col("__v"), centroids))
-      .select(col("cell"), posexplode(col("__v")))
-      .groupBy(col("cell"), col("pos"))
-      .agg(avg(col("col")).as("m"))
-      .groupBy(col("cell"))
-      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
-        s => s.getField("m")).as("centroid"))
-      .collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
-
-  /** Size gate for [[trainCentroids]]'s Lloyd-run persist: below this
-    * optimizer-estimated input size, 1+maxIter rescans of the source
-    * are cheaper than materializing a cache (measured at sf0.1: the
-    * unconditional r14 persist cost p05/s05 more than it saved on
-    * their ≤5 MB corpora). 64 MB ≈ half a default scan split — past
-    * it the rescans dominate. Mutable only so the spec can exercise
-    * both paths on small fixtures; production never writes it. */
-  private[graft] var MinTrainPersistBytes: BigInt = BigInt(64L << 20)
 
   /** K-means cell assignment — trains the IVF coarse codebook when no
     * natural partition column exists (a real IVF index quantizes; it
@@ -1343,6 +1349,37 @@ object Similarity {
     GraftBridge.column(graft.plans.ByteDot(
       GraftBridge.expression(a), GraftBridge.expression(b)))
   }
+
+  /** Product-quantization encode ([[graft.plans.PqEncode]]):
+    * struct<codes: array<int>, qerr: double> of `vec` against `pq`,
+    * `cell` selecting the centroid and book set when `pq` has them. */
+  private def pqEncode(vec: Column, cell: Column, pq: PqCodebook): Column = {
+    import org.apache.spark.sql.GraftBridge
+    GraftBridge.column(graft.plans.PqEncode(
+      GraftBridge.expression(vec), GraftBridge.expression(cell), pq))
+  }
+
+  /** The flat `numSub × codebookK` ADC table of `vec` against `pq`'s
+    * books ([[graft.plans.PqAdcTable]]). */
+  private def pqAdcTable(vec: Column, cell: Column, pq: PqCodebook): Column = {
+    import org.apache.spark.sql.GraftBridge
+    GraftBridge.column(graft.plans.PqAdcTable(
+      GraftBridge.expression(vec), GraftBridge.expression(cell), pq))
+  }
+
+  /** `__c0..__c{numSub-1}` out of a [[pqEncode]] column `enc`. */
+  private def pqCodes(enc: String, numSub: Int): Seq[Column] =
+    (0 until numSub).map(s => col(s"$enc.codes").getItem(s).as(s"__c$s"))
+
+  /** Approximate dot of a candidate's codes through a flat ADC table
+    * column: `Σ_s table[s·codebookK + c_s]`, summed in subspace order. */
+  private def adcSum(table: Column, numSub: Int, codebookK: Int): Column =
+    (0 until numSub).map(s =>
+      element_at(table, col(s"__c$s") + (s * codebookK + 1))).reduce(_ + _)
+
+  /** L2 norm as the native self dot product: the same left-to-right
+    * double accumulation as the `aggregate` form, in one codegen loop. */
+  private def l2normNative(v: Column): Column = sqrt(dotNative(v, v))
 
   /** KNN over int8-quantized embeddings with exact re-scoring — the
     * memory-bound scale path: a 100 TB float corpus is 25 TB at int8,
@@ -1402,6 +1439,21 @@ object Similarity {
         col("col.id").as("cand_id"))
   }
 
+  /** The residual `x − c` of a collected vector (column `i` of `r`)
+    * against centroid `c`, exactly as the `zip_with` residual column
+    * read back through `getSeq[Double].toArray`: in double over
+    * `max(len x, len c)` positions, a padded or NULL position as 0.0.
+    * Residual samples are driver-sized, so they are formed here
+    * instead of in a per-row column. */
+  private def residualOf(r: Row, i: Int, c: Array[Double]): Array[Double] = {
+    val x = r.getSeq[Any](i)
+    Array.tabulate(math.max(x.length, c.length)) { p =>
+      if (p < x.length && p < c.length && x(p) != null)
+        x(p).asInstanceOf[Number].doubleValue - c(p)
+      else 0.0
+    }
+  }
+
   /** Plain-Scala Lloyd iterations on a driver-held sample — PQ
     * sub-codebook training. Deterministic: init = first k sample
     * points (the sample itself is hash-ordered), empty cells keep
@@ -1452,13 +1504,13 @@ object Similarity {
     * `dim/numSub`-dim slices) via Lloyd on a bounded hash-ordered
     * sample held on the driver — the standard PQ regime (codebooks
     * train on ~10⁴–10⁵ samples regardless of corpus size; encoding
-    * is the distributed part). Encode: per subspace, argmin-L2 code
-    * via `x·c − ‖c‖²/2` codegen dots against literal centroids
-    * (subvector materialized ONCE per subspace — no lambda-scope
-    * re-evaluation). Score: classic ADC — each query precomputes its
-    * codebookK-entry dot table per subspace (in its broadcast row), a
-    * (query, candidate) pair then costs `numSub` array lookups, not a
-    * dim-length loop; approximate cosine divides by the codebook-
+    * is the distributed part). Encode: per subspace, the argmin-L2
+    * code via `x·c − ‖c‖²/2`, one native [[graft.plans.PqEncode]]
+    * call per row. Score: classic ADC — each query precomputes its
+    * `numSub × codebookK` dot table ([[graft.plans.PqAdcTable]], in
+    * its broadcast row), a (query, candidate) pair then costs
+    * `numSub` array lookups, not a dim-length loop; approximate
+    * cosine divides by the codebook-
     * derived norm. Top `k × candMult` per query via the bounded heap,
     * exact float cosine re-rank of the survivors. Recall floor
     * asserted in SimilaritySpec. */
@@ -1490,8 +1542,7 @@ object Similarity {
     require(dim % numSub == 0, s"dim $dim not divisible by $numSub")
     val subDim = dim / numSub
     val sample = corpus
-      .select(col(idCol).as("__id"),
-        transform(col(vecCol), _.cast("double")).as("__v"))
+      .select(col(idCol).as("__id"), col(vecCol).cast("array<double>").as("__v"))
       .orderBy(xxhash64(col("__id"), lit(seed)), col("__id"))
       .limit(sampleN)
       .collect().map(_.getSeq[Double](1).toArray)
@@ -1503,18 +1554,11 @@ object Similarity {
     }.toArray
     val bookNormSq: Array[Array[Double]] =
       books.map(_.map(c => c.map(x => x * x).sum))
+    val pq = PqCodebook(Seq(books), perCellBooks = false, centroids = null)
 
-    def subCol(v: Column, s: Int): Column =
-      slice(transform(v, _.cast("double")), s * subDim + 1, subDim)
-
-    // ---- encode: codes + codebook-derived norm. Scoring loops over
-    // a LITERAL packed codebook via transform (a codegen loop) rather
-    // than codebookK unrolled struct exprs — the unrolled form blows
-    // janino's method limits at 8 × 32 inline dot loops and drops the
-    // whole stage to interpreted mode. Scores materialize in their
-    // own select so the argmax's two references don't re-evaluate
-    // the transform (no CSE), then argmin-L2 code =
-    // first position of the max of `x·c − ‖c‖²/2`.
+    // ---- encode: per subspace the argmin-L2 code (first maximum of
+    // `x·c − ‖c‖²/2`), one native call per row against the codebook in
+    // the plan reference; + the codebook-derived norm.
     //
     // Spread the corpus first: encode + ADC scoring + heap partials
     // all run map-side on the corpus's partitioning, and the
@@ -1524,43 +1568,20 @@ object Similarity {
     // tasks). One narrow (id, vector) shuffle, linear in the corpus.
     val corpusSpread = corpus.repartition(corpus.sparkSession.conf
       .get("spark.sql.shuffle.partitions", "32").toInt)
-    val withSubs = corpusSpread.select(
-      (col(idCol).as("cand_id") +: col(vecCol).as("cv") +:
-        (0 until numSub).map(s => subCol(col(vecCol), s).as(s"__s$s"))): _*)
-    val withScores = withSubs.select(
-      (col("cand_id") +: col("cv") +:
-        (0 until numSub).map { s =>
-          val packed = typedLit(books(s).zipWithIndex.map { case (c, j) =>
-            (c.toSeq, bookNormSq(s)(j))
-          }.toSeq)
-          transform(packed, e =>
-            dotNative(col(s"__s$s"), e.getField("_1")) -
-              e.getField("_2") / 2).as(s"__sc$s")
-        }): _*)
-    val encoded = withScores
-      .select((col("cand_id") +: col("cv") +:
-        (0 until numSub).map { s =>
-          (array_position(col(s"__sc$s"), array_max(col(s"__sc$s"))) - 1)
-            .cast("int").as(s"__c$s")
-        }): _*)
+    val encoded = corpusSpread
+      .select(col(idCol).as("cand_id"), col(vecCol).as("cv"),
+        pqEncode(col(vecCol), lit(0), pq).as("__enc"))
+      .select((col("cand_id") +: col("cv") +: pqCodes("__enc", numSub)): _*)
       .withColumn("__anorm", sqrt((0 until numSub).map(s =>
         element_at(typedLit(bookNormSq(s).toSeq), col(s"__c$s") + 1))
         .reduce(_ + _)))
 
-    // ---- queries: per-subspace ADC tables + exact norm, broadcast
-    val qsubs = queries.select(
-      (col(idCol).as("q_id") +: col(vecCol).as("qv") +:
-        (0 until numSub).map(s => subCol(col(vecCol), s).as(s"__qs$s"))): _*)
-    val qtabs = qsubs.select(
-      (col("q_id") +: col("qv") +:
-        l2norm(transform(col("qv"), _.cast("double"))).as("__qnorm") +:
-        (0 until numSub).map { s =>
-          transform(typedLit(books(s).map(_.toSeq).toSeq),
-            c => dotNative(col(s"__qs$s"), c)).as(s"__t$s")
-        }): _*)
+    // ---- queries: the flat ADC table + exact norm, broadcast
+    val qtabs = queries.select(col(idCol).as("q_id"), col(vecCol).as("qv"),
+      l2normNative(col(vecCol)).as("__qnorm"),
+      pqAdcTable(col(vecCol), lit(0), pq).as("__t"))
 
-    val approx = (0 until numSub).map(s =>
-      element_at(col(s"__t$s"), col(s"__c$s") + 1)).reduce(_ + _) /
+    val approx = adcSum(col("__t"), numSub, codebookK) /
       (col("__anorm") * col("__qnorm"))
     val cands = encoded.join(broadcast(qtabs), col("cand_id") =!= col("q_id"))
       .select(col("q_id"), approx.as("asim"), col("cand_id"))
@@ -1639,55 +1660,54 @@ object Similarity {
     // (No up-front corpus spread here, unlike pqKnn: kmeansCells
     // re-executes its input per Lloyd iteration, so a repartition
     // would be re-paid coarseIters times — measured NET-NEGATIVE,
-    // 7.8 → 10.9 s at sf1.0. The encode/ADC stages inherit the
-    // assignment join's shuffled partitioning instead.)
-    // ---- coarse quantizer: cell assignment + per-cell centroids.
-    // The assignment is a per-row map against the driver-held trained
-    // centroids, and the VECTOR RIDES THE ASSIGNED ROW — the r13 form
-    // dropped it (kmeansCells returns bare (id, cell)) and then paid
-    // TWO corpus×assignment joins BY ID to re-attach it (once for the
-    // per-cell means, once for the residuals): at scale that is the
-    // whole corpus shuffled on a key that has nothing to do with
-    // where rows are going (the guide's §8 anti-pattern), and locally
-    // it was two exchanges + two joins of pure re-attachment.
-    // Residuals materialize in their OWN select (zip_with output
-    // referenced by later lambdas would re-evaluate per element).
+    // 7.8 → 10.9 s at sf1.0. The encode/ADC stages run on the
+    // corpus's own partitioning instead.)
+    // ---- coarse quantizer: trained centroids, then the per-cell
+    // means of the final assignment as ONE driver-combined Lloyd round
+    // ([[lloydMeans]], bit-equal to the per-(cell, pos) avg aggregate)
+    // — a k·dim driver table, so the probe side below crosses a local
+    // relation instead of re-running a two-exchange aggregate.
     val centroidSeqs = trainCentroids(corpus, idCol, vecCol, numCells,
       maxIter = coarseIters, seed = seed)
-    val assigned = corpus
-      .select(col(idCol), col(vecCol), nearestCellCol(col(vecCol),
-        centroidSeqs))
-    val cents = broadcast(centroids(assigned, "cell", vecCol))
-    // cached: consumed by BOTH the driver-side residual sample and
-    // the distributed encode pass (no CSE across jobs — uncached, the
-    // assignment map would run twice)
-    val withRes = assigned
-      .join(cents, Seq("cell"))
-      .select(col("cell"), col(idCol).as("cand_id"), col(vecCol).as("cv"),
-        zip_with(transform(col(vecCol), _.cast("double")), col("centroid"),
-          (a, b) => a - b).as("__res"))
-      .cache()
+    val means: Map[Int, Array[Double]] =
+      lloydMeans(corpus.select(col(idCol), col(vecCol)), centroidSeqs)
+        .map { case (c, m) => c -> m.toArray }
+    val cellIds = means.keys.toSeq.sorted
+    val session = corpus.sparkSession
+    import session.implicits._
+    val cents = broadcast(cellIds.map(c => (c, means(c))).toDF("cell", "centroid"))
+    // The assignment is a per-row map against the driver-held trained
+    // centroids, and the VECTOR RIDES THE ASSIGNED ROW (re-attaching
+    // it by id would shuffle the whole corpus on a key unrelated to
+    // where rows go — the guide's §8 anti-pattern). A cell with no
+    // mean (only NULL or empty vectors) is dropped, as the inner join
+    // against the mean table used to. Cached: consumed by BOTH the
+    // driver-side residual sample and the distributed encode pass (no
+    // CSE across jobs — uncached, the assignment map would run twice).
+    val assignedAll = corpus.select(col(idCol).as("cand_id"),
+      col(vecCol).as("cv"), nearestCellCol(col(vecCol), centroidSeqs))
+    val assigned = (
+      if (centroidSeqs.indices.forall(means.contains)) assignedAll
+      else assignedAll.filter(col("cell").isin(cellIds: _*))).cache()
     // ---- PQ codebooks Lloyd-trained PER CELL on bounded residual
     // samples (Jégou et al. §IV: "local" codebooks per Voronoi cell):
     // residual distributions differ across cells, so per-cell books
     // quantize finer at the same budget than one global set. Cells
     // whose sample cannot support codebookK centers fall back to
     // global books trained on the pooled sample (also what keeps tiny
-    // corpora working). The books travel as a broadcast-JOINED table
-    // keyed by cell — bounded driver/broadcast state
-    // (numCells × numSub × codebookK × subDim doubles), and unlike a
-    // plan literal it scales to large cell counts without bloating
-    // the plan. The per-row books array in the encode projection is
-    // map-side-transient: dropped before any shuffle.
+    // corpora working). The books ride the plan as one flat codebook
+    // reference — bounded driver state (numCells × numSub × codebookK
+    // × subDim doubles), never a per-row column.
     val perCellN = math.max(codebookK * 2, sampleN / numCells)
     val ws = Window.partitionBy(col("cell"))
       .orderBy(xxhash64(col("cand_id"), lit(seed + 1)), col("cand_id"))
-    val sampleRows = withRes
+    val sampleRows = assigned
       .withColumn("__rn", row_number().over(ws))
       .filter(col("__rn") <= perCellN)
-      .select(col("cell"), col("__res"))
+      .select(col("cell"), col("cv"))
       .collect()
-    val pooled = sampleRows.map(_.getSeq[Double](1).toArray)
+      .map(r => (r.getInt(0), residualOf(r, 1, means(r.getInt(0)))))
+    val pooled = sampleRows.map(_._2)
     require(pooled.length >= codebookK,
       s"residual sample ${pooled.length} < codebookK $codebookK")
     def trainBooks(rs: Array[Array[Double]]): Array[Array[Array[Double]]] =
@@ -1702,76 +1722,44 @@ object Similarity {
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    val booksRows: Seq[(Int, Seq[Seq[(Seq[Double], Double)]])] =
+    val booksByCell: Map[Int, Array[Array[Array[Double]]]] =
       Await.result(
-        Future.traverse(sampleRows.groupBy(_.getInt(0)).toSeq.sortBy(_._1)) {
+        Future.traverse(sampleRows.groupBy(_._1).toSeq.sortBy(_._1)) {
           case (c, rows) => Future {
-            val rs = rows.map(_.getSeq[Double](1).toArray)
-            val bks =
-              if (rs.length >= codebookK) trainBooks(rs) else globalBooks
-            (c, bks.toSeq.map(_.toSeq.map(cent =>
-              (cent.toSeq, cent.map(x => x * x).sum))))
+            val rs = rows.map(_._2)
+            c -> (if (rs.length >= codebookK) trainBooks(rs) else globalBooks)
           }
-        }, Duration.Inf)
-    val session = corpus.sparkSession
-    import session.implicits._
-    val booksDf = broadcast(booksRows.toDF("cell", "__books"))
+        }, Duration.Inf).toMap
+    // every cell with rows has sampled rows, hence books; the codebook
+    // is indexed by cell id
+    val slots = 0 to cellIds.max
+    val pq = PqCodebook(slots.map(c => booksByCell.getOrElse(c, globalBooks)),
+      perCellBooks = true,
+      centroids = slots.map(c => means.getOrElse(c, Array.empty[Double])))
     // ---- encode: argmin-L2 residual codes against the OWN cell's
-    // books (codegen transform loop, as in pqKnn — unrolled struct
-    // argmax blows janino limits) + the exact vector norm (one float;
-    // IP/cosine IVF-PQ keeps it)
-    // subvectors projected BEFORE the books join: the wide per-cell
-    // books column then flows through exactly one projection (the
-    // scoring select drops it) instead of being row-copied twice
-    val withSubs = withRes.select(
-      (col("cell") +: col("cand_id") +: col("cv") +:
-        l2norm(transform(col("cv"), _.cast("double"))).as("__cnorm") +:
-        (0 until numSub).map(s =>
-          slice(col("__res"), s * subDim + 1, subDim).as(s"__s$s"))): _*)
-      .join(booksDf, Seq("cell"))
-    val withScores = withSubs.select(
-      (col("cell") +: col("cand_id") +: col("cv") +: col("__cnorm") +:
-        (0 until numSub).map { s =>
-          transform(element_at(col("__books"), s + 1), e =>
-            dotNative(col(s"__s$s"), e.getField("_1")) -
-              e.getField("_2") / 2).as(s"__sc$s")
-        }): _*)
-    val encoded = withScores.select(
-      (col("cell") +: col("cand_id") +: col("cv") +: col("__cnorm") +:
-        (0 until numSub).map { s =>
-          (array_position(col(s"__sc$s"), array_max(col(s"__sc$s"))) - 1)
-            .cast("int").as(s"__c$s")
-        }): _*)
-    // ---- probe: top-nprobe cells per query + per-query ADC tables
+    // books + the exact vector norm (one float; IP/cosine IVF-PQ
+    // keeps it)
+    val encoded = assigned
+      .select(col("cell"), col("cand_id"), l2normNative(col("cv")).as("__cnorm"),
+        pqEncode(col("cv"), col("cell"), pq).as("__enc"))
+      .select((col("cell") +: col("cand_id") +: col("__cnorm") +:
+        pqCodes("__enc", numSub)): _*)
+    // ---- probe: top-nprobe cells per query + per-(query, probed-cell)
+    // ADC tables against THAT cell's books — dot(q_s, c_j) no longer
+    // decomposes cell-independently once books are local, so tables
+    // live on the (q, cell) probe row
     val wq = Window.partitionBy(col("q_id"))
       .orderBy(col("csim").desc, col("cell"))
-    val probed = queries.select(col(idCol).as("q_id"), col(vecCol).as("qv"))
+    val qd = queries.select(col(idCol).as("q_id"), col(vecCol).as("qv"))
       .crossJoin(cents)
       .withColumn("csim", cosine(col("qv"), col("centroid")))
       .withColumn("crank", row_number().over(wq))
       .filter(col("crank") <= nprobe)
-      .select(col("q_id"), col("qv"), col("cell"),
-        dotNative(transform(col("qv"), _.cast("double")), col("centroid"))
-          .as("__qdotc"))
-    val qd = probed.join(booksDf, Seq("cell"))
-      .select((col("q_id") +: col("qv") +: col("cell") +: col("__qdotc") +:
-        col("__books") +:
-        l2norm(transform(col("qv"), _.cast("double"))).as("__qnorm") +:
-        (0 until numSub).map(s =>
-          slice(transform(col("qv"), _.cast("double")),
-            s * subDim + 1, subDim).as(s"__qs$s"))): _*)
-      // per-(query, probed-cell) ADC tables against THAT cell's books
-      // — dot(q_s, c_j) no longer decomposes cell-independently once
-      // books are local, so tables live on the (q, cell) probe row
-      .select((col("q_id") +: col("cell") +: col("__qdotc") +:
-        col("__qnorm") +:
-        (0 until numSub).map { s =>
-          transform(element_at(col("__books"), s + 1),
-            e => dotNative(col(s"__qs$s"), e.getField("_1"))).as(s"__t$s")
-        }): _*)
-    val approx = (col("__qdotc") +
-      (0 until numSub).map(s =>
-        element_at(col(s"__t$s"), col(s"__c$s") + 1)).reduce(_ + _)) /
+      .select(col("q_id"), col("cell"),
+        dotNative(col("qv"), col("centroid")).as("__qdotc"),
+        l2normNative(col("qv")).as("__qnorm"),
+        pqAdcTable(col("qv"), col("cell"), pq).as("__t"))
+    val approx = (col("__qdotc") + adcSum(col("__t"), numSub, codebookK)) /
       (col("__cnorm") * col("__qnorm"))
     val cands = encoded.join(broadcast(qd), Seq("cell"))
       .filter(col("cand_id") =!= col("q_id"))
@@ -1918,23 +1906,21 @@ object Similarity {
       corpus, idCol, vecCol, cents, replicateMargin, maxAssign)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // global residual books on ONE pooled hash-ordered sample:
-    // residual = v − centroid(cell(v)), computed map-side against the
-    // broadcast centroid table
+    // residual = v − centroid(cell(v)), formed on the driver for the
+    // sampleN collected rows
+    val centArr = cents.map(_.toArray).toArray
     val sample = assigned
-      .join(broadcast(centsDf), Seq("cell"))
-      .select(col("vec_id"),
-        zip_with(transform(col("embedding"), _.cast("double")),
-          col("centroid"), (a, b) => a - b).as("__res"))
       .orderBy(xxhash64(col("vec_id"), lit(seed + 1)), col("vec_id"))
       .limit(sampleN)
-      .select(col("__res")).collect().map(_.getSeq[Double](0).toArray)
+      .select(col("cell"), col("embedding")).collect()
+      .map(r => residualOf(r, 1, centArr(r.getInt(0))))
     require(sample.length >= codebookK,
       s"residual sample ${sample.length} < codebookK $codebookK")
     val books: Array[Array[Array[Double]]] = (0 until numSub).map { s =>
       lloydEuclid(sample.map(_.slice(s * subDim, (s + 1) * subDim)),
         codebookK, trainIters)
     }.toArray
-    val encoded = encodeIvfPqCodes(assigned, centsDf, books, numSub, subDim)
+    val encoded = encodeIvfPqCodes(assigned, cents, books)
     val baseProps = Map(
       "numCells" -> cellsN.toString, "numSub" -> numSub.toString,
       "codebookK" -> codebookK.toString, "seed" -> seed.toString,
@@ -2034,58 +2020,30 @@ object Similarity {
           col("__sc.cell").as("cell"))
     }
 
-  /** Residual-PQ encode against FROZEN global books — argmin-L2 code
-    * per subspace via the LITERAL-book codegen transform loop (as in
-    * pqKnn) + the exact vector norm for the approx-cosine
-    * denominator. Per-row deterministic (literal books, first-max
-    * argmax), which is the whole batch/incremental equivalence the
-    * append path's replay spec rests on. The extra `__qerr` column is
-    * the ADC reconstruction error Σ_s ‖r_s − book_s[c_s]‖², read off
-    * the argmax pass for free (max score_s = (‖r_s‖² −
-    * min_j‖r_s − c_j‖²)/2), so staleness audits never need a decode
-    * pass. Returns (cell, vec_id, embedding, __cnorm, __c0..,
-    * __qerr). */
+  /** Residual-PQ encode against FROZEN global books — one native
+    * [[graft.plans.PqEncode]] call per row (residual against the
+    * row's cell centroid, argmin-L2 code per subspace, first maximum
+    * on a tie) + the exact vector norm for the approx-cosine
+    * denominator. Per-row deterministic (books and centroids are plan
+    * constants), which is the whole batch/incremental equivalence the
+    * append path's replay spec rests on. `__qerr` is the ADC
+    * reconstruction error Σ_s ‖r_s − book_s[c_s]‖², read off the
+    * argmax pass for free (max score_s = (‖r_s‖² − min_j‖r_s −
+    * c_j‖²)/2), so staleness audits never need a decode pass. Returns
+    * (cell, vec_id, embedding, __cnorm, __c0.., __qerr). */
   private[graft] def encodeIvfPqCodes(
       assigned: DataFrame,
-      centsDf: DataFrame,
-      books: Array[Array[Array[Double]]],
-      numSub: Int,
-      subDim: Int): DataFrame = {
-    val bookNormSq: Array[Array[Double]] =
-      books.map(_.map(c => c.map(x => x * x).sum))
-    val withRes = assigned
-      .join(broadcast(centsDf), Seq("cell"))
+      cents: Seq[Seq[Double]],
+      books: Array[Array[Array[Double]]]): DataFrame = {
+    val pq = PqCodebook(Seq(books), perCellBooks = false,
+      centroids = cents.map(_.toArray))
+    assigned
       .select(col("cell"), col("vec_id"), col("embedding"),
-        zip_with(transform(col("embedding"), _.cast("double")),
-          col("centroid"), (a, b) => a - b).as("__res"))
-    val withSubs = withRes.select(
-      (col("cell") +: col("vec_id") +: col("embedding") +:
-        l2norm(transform(col("embedding"), _.cast("double")))
-          .as("__cnorm") +:
-        dotNative(col("__res"), col("__res")).as("__resn2") +:
-        (0 until numSub).map(s =>
-          slice(col("__res"), s * subDim + 1, subDim).as(s"__s$s"))): _*)
-    val withScores = withSubs.select(
-      (col("cell") +: col("vec_id") +: col("embedding") +:
-        col("__cnorm") +: col("__resn2") +:
-        (0 until numSub).map { s =>
-          val packed = typedLit(books(s).zipWithIndex.map { case (c, j) =>
-            (c.toSeq, bookNormSq(s)(j))
-          }.toSeq)
-          transform(packed, e =>
-            dotNative(col(s"__s$s"), e.getField("_1")) -
-              e.getField("_2") / 2).as(s"__sc$s")
-        }): _*)
-    withScores.select(
-      ((col("cell") +: col("vec_id") +: col("embedding") +:
-        col("__cnorm") +:
-        (0 until numSub).map { s =>
-          (array_position(col(s"__sc$s"), array_max(col(s"__sc$s"))) - 1)
-            .cast("int").as(s"__c$s")
-        }) :+
-        greatest(lit(0.0), col("__resn2") -
-          (0 until numSub).map(s => array_max(col(s"__sc$s")) * 2)
-            .reduce(_ + _)).as("__qerr")): _*)
+        l2normNative(col("embedding")).as("__cnorm"),
+        pqEncode(col("embedding"), col("cell"), pq).as("__enc"))
+      .select(((col("cell") +: col("vec_id") +: col("embedding") +:
+        col("__cnorm") +: pqCodes("__enc", books.length)) :+
+        col("__enc.qerr").as("__qerr")): _*)
   }
 
   /** Incrementally append a batch into a [[writeIvfPqLayout]] index —
@@ -2134,7 +2092,6 @@ object Similarity {
     val numBuckets = man.getInt(1)
     val props = man.getString(2).split(";").map(_.split("=", 2))
       .collect { case Array(k0, v) => k0 -> v }.toMap
-    val numSub = props("numSub").toInt
     val numCells = props("numCells").toInt
     val replicateMargin =
       props.getOrElse("replicateMargin", "0.0").toDouble
@@ -2151,13 +2108,10 @@ object Similarity {
           r.getSeq[scala.collection.Seq[Double]](1)
             .map(_.toArray).toArray)
         .sortBy(_._1).map(_._2)
-    val subDim = cents.head.length / numSub
-    val centsDf = cents.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("cell", "centroid")
     val encoded = encodeIvfPqCodes(
       assignIvfCells(batch, idCol, vecCol, cents, replicateMargin,
         maxAssign),
-      centsDf, books, numSub, subDim)
+      cents, books)
       .persist() // batch-bounded: the write + the audit share one encode
     // batch_vecs counts the SOURCE batch (ids are unique per batch by
     // contract — each arrival is one new vector): independent of the
@@ -2281,44 +2235,39 @@ object Similarity {
       if (nprobe > 0) nprobe
       else props.getOrElse("nprobe_default",
         math.max(1, props("numCells").toInt / 4).toString).toInt
-    // tiny driver reads: the global books (numSub·codebookK·subDim
-    // doubles) become plan literals for the query-side dot tables
-    val books: Map[Int, Seq[Seq[Double]]] =
+    // tiny driver read: the global books (numSub·codebookK·subDim
+    // doubles) become the query-side ADC kernel's codebook
+    val books: Array[Array[Array[Double]]] =
       spark.table(s"${table}_books").collect()
-        .map(r => r.getInt(0) -> r.getSeq[Seq[Double]](1)).toMap
+        .map(r => r.getInt(0) ->
+          r.getSeq[scala.collection.Seq[Double]](1).map(_.toArray).toArray)
+        .sortBy(_._1).map(_._2)
+    val pq = PqCodebook(Seq(books), perCellBooks = false, centroids = null)
     val dim = queries.select(size(col(vecCol))).head.getInt(0)
-    require(dim % numSub == 0, s"query dim $dim not divisible by $numSub")
-    val subDim = dim / numSub
+    require(dim == numSub * pq.subDim,
+      s"query dim $dim != index dim ${numSub * pq.subDim}")
     val cents = broadcast(spark.table(s"${table}_centroids"))
     val wq = Window.partitionBy(col("q_id"))
       .orderBy(col("csim").desc, col("cell"))
     // probe rows carry q·centroid (the cell-dependent ADC term) and
-    // the per-subspace dot tables (cell-INdependent — global books)
+    // the flat dot table (cell-INdependent — global books)
     val probed = queries.select(col(idCol).as("q_id"), col(vecCol).as("qv"))
       .crossJoin(cents)
       .withColumn("csim", cosine(col("qv"), col("centroid")))
       .withColumn("crank", row_number().over(wq))
       .filter(col("crank") <= np)
       .select(col("q_id"), col("qv"), col("cell"),
-        dotNative(transform(col("qv"), _.cast("double")), col("centroid"))
-          .as("__qdotc"))
-    val qd = probed.select(
-      (col("q_id") +: col("cell") +: col("__qdotc") +:
-        l2norm(transform(col("qv"), _.cast("double"))).as("__qnorm") +:
-        (0 until numSub).map { s =>
-          transform(typedLit(books(s)), c =>
-            dotNative(slice(transform(col("qv"), _.cast("double")),
-              s * subDim + 1, subDim), c)).as(s"__t$s")
-        }): _*)
+        dotNative(col("qv"), col("centroid")).as("__qdotc"))
+    val qd = probed.select(col("q_id"), col("cell"), col("__qdotc"),
+      l2normNative(col("qv")).as("__qnorm"),
+      pqAdcTable(col("qv"), lit(0), pq).as("__t"))
     // literal probe-cell set (bounded by |queries|·nprobe) so the
     // bucketed scan prunes to the probed buckets; relies on the
     // session-wide autoBucketedScan=false default (see [[Layouts]])
     val cells = probed.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).toSeq
     val pruned = spark.table(table).filter(col("cell").isin(cells: _*))
-    val approx = (col("__qdotc") +
-      (0 until numSub).map(s =>
-        element_at(col(s"__t$s"), col(s"__c$s") + 1)).reduce(_ + _)) /
+    val approx = (col("__qdotc") + adcSum(col("__t"), numSub, pq.codebookK)) /
       (col("__cnorm") * col("__qnorm"))
     val cands = pruned.join(broadcast(qd), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))

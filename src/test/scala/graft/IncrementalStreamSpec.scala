@@ -1,16 +1,16 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 /** True incremental streaming: the source is split into multiple
   * files and consumed one file per trigger, so the windowed state
   * genuinely carries across micro-batches (not a single-batch
   * replay). */
-class IncrementalStreamSpec extends SparkSuite {
+class IncrementalStreamSpec extends SparkSuite with SuiteTempDirs {
+  protected val rootName = "graft_incremental_stream_spec"
 
   test("windowed counts accumulate correctly across micro-batches") {
-    val dir = Files.createTempDirectory("graft_stream").toString
+    val dir = tmpDir("stream")
     val events = Tables.load(spark, sfDir, "events")
     // 4 files -> 4 micro-batches with maxFilesPerTrigger=1
     events.repartition(4).write.mode("overwrite").parquet(dir)

@@ -6,7 +6,8 @@ import graft.operators.Similarity
 
 import scala.util.Random
 
-/** Equality oracles for the banded embedding engines: the forms the
+/** Equality oracles for the banded embedding engines, the Lloyd
+  * driver combine and the product-quantization kernel: the forms the
   * production paths replaced, kept only so specs can pin the
   * replacements to them bit for bit. */
 object Oracles {
@@ -106,5 +107,69 @@ object Oracles {
       .withColumn("sim", Similarity.cosine(col("va"), col("vb")))
       .filter(col("sim") > threshold)
       .select(col("a_id"), col("b_id"), round(col("sim"), 4).as("cos_sim"))
+  }
+
+  /** The two-exchange aggregate form of one Lloyd round — the
+    * equality oracle for `Similarity.lloydMeans`. */
+  def lloydMeansAgg(v: DataFrame,
+      centroids: Seq[Seq[Double]]): Map[Int, Seq[Double]] =
+    v.select(col("__v"), Similarity.nearestCellCol(col("__v"), centroids))
+      .select(col("cell"), posexplode(col("__v")))
+      .groupBy(col("cell"), col("pos"))
+      .agg(avg(col("col")).as("m"))
+      .groupBy(col("cell"))
+      .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
+        s => s.getField("m")).as("centroid"))
+      .collect().map(r => r.getInt(0) -> r.getSeq[Double](1)).toMap
+
+  /** The higher-order-function product-quantization encode that
+    * [[graft.plans.PqEncode]] replaced: the residual via `zip_with`
+    * against `centroidCol` (or the vector itself), per subspace the
+    * `transform` of a literal packed codebook into `x·c − ‖c‖²/2`
+    * scores, code = `array_position(array_max)` − 1, and `__qerr` =
+    * `greatest(0, ‖r‖² − Σ_s 2·max_s)`. Scores materialize in their
+    * own select, as the production form did. Adds `__c0..` and
+    * `__qerr` to `df`'s columns. */
+  def pqEncodeHof(df: DataFrame, vecCol: String, centroidCol: Option[String],
+      books: Array[Array[Array[Double]]]): DataFrame = {
+    val numSub = books.length
+    val subDim = books.head.head.length
+    val bookNormSq = books.map(_.map(c => c.map(x => x * x).sum))
+    val vd = transform(col(vecCol), _.cast("double"))
+    val res = centroidCol.fold(vd)(c => zip_with(vd, col(c), (a, b) => a - b))
+    val base = df.columns.toSeq.map(col)
+    val withSubs = df.select((base :+ res.as("__res")): _*)
+      .select((base :+ Similarity.dotNative(col("__res"), col("__res"))
+        .as("__resn2")) ++
+        (0 until numSub).map(s =>
+          slice(col("__res"), s * subDim + 1, subDim).as(s"__s$s")): _*)
+    val withScores = withSubs.select((base :+ col("__resn2")) ++
+      (0 until numSub).map { s =>
+        val packed = typedLit(books(s).zipWithIndex.map { case (c, j) =>
+          (c.toSeq, bookNormSq(s)(j))
+        }.toSeq)
+        transform(packed, e =>
+          Similarity.dotNative(col(s"__s$s"), e.getField("_1")) -
+            e.getField("_2") / 2).as(s"__sc$s")
+      }: _*)
+    withScores.select(((base ++ (0 until numSub).map { s =>
+      (array_position(col(s"__sc$s"), array_max(col(s"__sc$s"))) - 1)
+        .cast("int").as(s"__c$s")
+    }) :+ greatest(lit(0.0), col("__resn2") -
+      (0 until numSub).map(s => array_max(col(s"__sc$s")) * 2)
+        .reduce(_ + _)).as("__qerr")): _*)
+  }
+
+  /** The `transform(books_s, c => dot(slice_s(x), c))` ADC-table
+    * columns that [[graft.plans.PqAdcTable]] replaced, one `__t<s>`
+    * array per subspace, added to `df`'s columns. */
+  def pqAdcTablesHof(df: DataFrame, vecCol: String,
+      books: Array[Array[Array[Double]]]): DataFrame = {
+    val subDim = books.head.head.length
+    df.select((df.columns.toSeq.map(col) ++ books.indices.map { s =>
+      transform(typedLit(books(s).map(_.toSeq).toSeq), c =>
+        Similarity.dotNative(slice(transform(col(vecCol), _.cast("double")),
+          s * subDim + 1, subDim), c)).as(s"__t$s")
+    }): _*)
   }
 }

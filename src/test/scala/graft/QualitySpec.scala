@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.operators.Quality
 
-class QualitySpec extends SparkSuite {
+class QualitySpec extends SparkSuite with SuiteTempDirs {
+  protected val rootName = "graft_quality_spec"
   import spark.implicits._
 
   test("expectAll counts each violation class in one scan") {
@@ -75,8 +76,7 @@ class QualitySpec extends SparkSuite {
       "values (NaN, -0.0, all-null, longs, non-ASCII) and a filter " +
       "defeats its gate") {
     import org.apache.spark.sql.functions.{col, lit}
-    val tmp = java.nio.file.Files
-      .createTempDirectory("profspec").toString + "/t.parquet"
+    val tmp = tmpDir("profspec") + "/t.parquet"
     Seq[(Option[Double], Option[Long], Option[Double], Option[String])](
       (Some(1.5), Some(7L), None, Some("a")),
       (Some(Double.NaN), Some(-3L), None, Some("éclair")),

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.tools.ScaleGen
 
@@ -9,13 +8,13 @@ import graft.tools.ScaleGen
   * distribution replication, internally consistent FK graphs per
   * copy, fixed dimensions, and the embedding nudge that breaks
   * exact top-k ties without moving vectors materially. */
-class ScaleGenSpec extends SparkSuite {
+class ScaleGenSpec extends SparkSuite with SuiteTempDirs {
+  protected val rootName = "graft_scalegen_spec"
 
   private lazy val outDir: String = {
-    val d = Files.createTempDirectory("scalegen").toFile
-    d.deleteOnExit()
-    ScaleGen.run(spark, sfDir, d.getAbsolutePath, copies = 2)
-    d.getAbsolutePath
+    val d = tmpDir("scalegen")
+    ScaleGen.run(spark, sfDir, d, copies = 2)
+    d
   }
 
   private def src(name: String) = Tables.load(spark, sfDir, name)

@@ -75,16 +75,11 @@ class SimilaritySpec extends SparkSuite {
     // persist. Both paths must train BIT-identical centroids — the
     // cached partition layout equals the scan's, so partial-agg order
     // is unchanged either way.
-    val orig = Similarity.MinTrainPersistBytes
-    try {
-      Similarity.MinTrainPersistBytes = BigInt(Long.MaxValue) // never persist
-      val a = Similarity.trainCentroids(emb, "vec_id", "embedding", 8,
-        maxIter = 5)
-      Similarity.MinTrainPersistBytes = BigInt(0) // always persist
-      val b = Similarity.trainCentroids(emb, "vec_id", "embedding", 8,
-        maxIter = 5)
-      assert(a == b, "persist guard must not change trained centroids")
-    } finally Similarity.MinTrainPersistBytes = orig
+    val a = Similarity.trainCentroids(emb, "vec_id", "embedding", 8,
+      maxIter = 5, seed = 42L, minPersistBytes = BigInt(Long.MaxValue)) // never persist
+    val b = Similarity.trainCentroids(emb, "vec_id", "embedding", 8,
+      maxIter = 5, seed = 42L, minPersistBytes = BigInt(0)) // always persist
+    assert(a == b, "persist guard must not change trained centroids")
   }
 
   test("ivfAnn over trained k-means cells keeps usable recall") {
@@ -380,7 +375,7 @@ class SimilaritySpec extends SparkSuite {
     def bits(m: Map[Int, Seq[Double]]): Map[Int, Seq[Long]] =
       m.map { case (c, s) =>
         c -> s.map(java.lang.Double.doubleToLongBits) }
-    val agg = Similarity.lloydMeansAgg(v, cents)
+    val agg = Oracles.lloydMeansAgg(v, cents)
     assert(agg.nonEmpty)
     assert(bits(Similarity.lloydMeans(v, cents)) == bits(agg),
       "driver-combined Lloyd means must be bit-identical to the " +

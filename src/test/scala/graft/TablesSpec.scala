@@ -12,7 +12,8 @@ import org.apache.spark.sql.types._
   * events.ts as EITHER int64-nanos or a native parquet timestamp, always
   * surfacing it as a session-zoned TimestampType.
   */
-class TablesSpec extends SparkSuite {
+class TablesSpec extends SparkSuite with SuiteTempDirs {
+  protected val rootName = "graft_tables_spec"
 
   private val expectedCols: Map[String, Seq[String]] = Map(
     "region"     -> Seq("r_regionkey", "r_name"),
@@ -64,7 +65,7 @@ class TablesSpec extends SparkSuite {
     // carried. Staged into a temp dir so Tables.load sees events.parquet.
     val fixture = Paths.get("src/test/resources/events_nanos.parquet")
     assume(Files.exists(fixture), "nanos fixture missing")
-    val dir = Files.createTempDirectory("graft_nanos_")
+    val dir = Paths.get(tmpDir("nanos"))
     Files.copy(fixture, dir.resolve("events.parquet"), StandardCopyOption.REPLACE_EXISTING)
     try {
       val legacy = Tables.load(spark, dir.toString, "events")

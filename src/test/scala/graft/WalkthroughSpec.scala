@@ -9,7 +9,8 @@ import java.util.zip.{ZipEntry, ZipOutputStream}
   * rot: every step the walkthrough tells a new user to run is run
   * here, in the documented order, against a fresh data root and the
   * sf0.001 testdata. */
-class WalkthroughSpec extends SparkSuite {
+class WalkthroughSpec extends SparkSuite with SuiteTempDirs {
+  protected val rootName = "graft_walkthrough_spec"
 
   private def writeZip(dest: String, files: Map[String, String]): Unit = {
     val zos = new ZipOutputStream(Files.newOutputStream(Paths.get(dest)))
@@ -37,7 +38,7 @@ class WalkthroughSpec extends SparkSuite {
       |""".stripMargin
 
   test("the walkthrough runs end to end as documented") {
-    val root = Files.createTempDirectory("graft_walk").toString
+    val root = tmpDir("walk")
     val zip = s"$root/snapshot.zip"
     writeZip(zip, Map("MASTER.txt" -> master, "ACFTREF.txt" -> acftref,
       "ENGINE.txt" -> engine))
