@@ -2305,9 +2305,9 @@ object SparkEntry {
 
   /** s01: brute-force cosine top-5 for queries vec_id < 10, through
     * the bounded-heap aggregate ([[Similarity.knnBruteAgg]]) — the
-    * window-sort form ([[Similarity.knnBrute]]) buffers the whole
-    * corpus per query in one task and survives only as the test-side
-    * oracle (SimilaritySpec asserts exact equality of the two). */
+    * window-sort form (`Oracles.knnBrute`) buffers the whole corpus
+    * per query in one task and survives only as the test-side oracle
+    * (SimilaritySpec asserts exact equality of the two). */
   private def s01(s: SparkSession, dir: String): DataFrame = {
     val emb = T(s, dir, "embeddings")
     Similarity.knnBruteAgg(emb, emb.filter(col("vec_id") < 10),

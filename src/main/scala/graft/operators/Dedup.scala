@@ -923,13 +923,8 @@ object Dedup {
       idCol: Column,
       textCol: Column,
       n: Int): DataFrame = {
-    def ngrams(df: DataFrame) = df
-      .select(idCol.as("doc_id"), TextFns.tokensLower(textCol).as("__tk"))
-      .select(col("doc_id"),
-        explode(array_distinct(TextFns.wordNgrams(col("__tk"), n))).as("g"))
-    val benchGrams = ngrams(benchmark).select("g").distinct()
-    val hits = ngrams(corpus)
-      .join(benchGrams, Seq("g"))
+    val hits = docNgrams(corpus, idCol, textCol, n)
+      .join(benchNgrams(benchmark, idCol, textCol, n), Seq("g"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_overlap"))
     corpus.select(idCol.as("doc_id"))
@@ -938,6 +933,45 @@ object Dedup {
         coalesce(col("n_overlap"), lit(0L)).as("n_overlap"),
         (coalesce(col("n_overlap"), lit(0L)) > 0).as("contaminated"))
   }
+
+  /** The benchmark side of [[decontaminate]]: the distinct word
+    * `n`-grams of `benchmark`'s texts, one column `g`. */
+  def benchNgrams(
+      benchmark: DataFrame, idCol: Column, textCol: Column,
+      n: Int): DataFrame =
+    docNgrams(benchmark, idCol, textCol, n).select("g").distinct()
+
+  /** The rows of `corpus` sharing no word `n`-gram with `benchGrams`
+    * (a [[benchNgrams]] set, built once by a caller that cleans many
+    * batches against one benchmark: the incremental clean folds p03
+    * and p06). A row is dropped when ANY row of its id has a hit, and
+    * a row without an id is dropped — the semantics of
+    * [[decontaminate]]'s flag table filtered to zero overlap and
+    * semi-joined back on the id, which stays the batch form and the
+    * oracle. The hits are a semi-join, so the planner sizes them from
+    * the corpus side alone: one anti-join against them, broadcast
+    * while the batch is small. */
+  def withoutNgramHits(
+      corpus: DataFrame, benchGrams: DataFrame, idCol: Column,
+      textCol: Column, n: Int): DataFrame = {
+    val hits = docNgrams(corpus, idCol, textCol, n)
+      .join(benchGrams, Seq("g"), "left_semi")
+      .select(col("doc_id").as("__hit_id"))
+    corpus.filter(idCol.isNotNull)
+      .join(hits, idCol === col("__hit_id"), "left_anti")
+  }
+
+  /** One row per (doc, distinct word `n`-gram of its lower-cased
+    * tokens): `(doc_id, g)`, the n-gram side of [[decontaminate]] and
+    * [[withoutNgramHits]]. The token column is computed
+    * BEFORE `wordNgrams` reads it: inlined, the tokenizer would re-run
+    * inside the n-gram lambda once per gram element (lambda bodies get
+    * no common-subexpression elimination). */
+  private def docNgrams(
+      df: DataFrame, idCol: Column, textCol: Column, n: Int): DataFrame =
+    df.select(idCol.as("doc_id"), TextFns.tokensLower(textCol).as("__tk"))
+      .select(col("doc_id"),
+        explode(array_distinct(TextFns.wordNgrams(col("__tk"), n))).as("g"))
 
   /** Embedding-space decontamination: for every corpus vector, the
     * max cosine against a (small) eval/benchmark embedding set, plus

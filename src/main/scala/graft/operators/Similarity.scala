@@ -13,7 +13,7 @@ import graft.plans.PqCodebook
   * (`array<float>`).
   *
   * Three paths:
-  *  - [[knnBrute]]: exact cosine top-k. O(N·Q): the query set is
+  *  - [[knnBruteAgg]]: exact cosine top-k. O(N·Q): the query set is
   *    broadcast, the corpus streams — correct baseline and the
   *    recall oracle for the approximate paths.
   *  - [[lshAnn]]: random-hyperplane LSH. Buckets cut the candidate
@@ -81,31 +81,6 @@ object Similarity {
     dot(ad, bd) / (l2norm(ad) * l2norm(bd))
   }
 
-  /** Exact cosine top-k: for each row of `queries`, the k nearest
-    * rows of `corpus` (self excluded by id). Queries are broadcast;
-    * the per-query top-k is a window over (query, sim) — which sorts
-    * the WHOLE corpus per query in a single task. Test-oracle only:
-    * [[knnBruteAgg]] is the identical-output scale path (map-side
-    * k-row heaps, no per-query sort) and is what SparkEntry wires. */
-  def knnBrute(
-      corpus: DataFrame,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int): DataFrame = {
-    val q = broadcast(
-      queries.select(col(idCol).as("q_id"), col(vecCol).as("qv")))
-    val c = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("cand_id"))
-    c.join(q, col("cand_id") =!= col("q_id"))
-      .withColumn("sim", cosine(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank").cast("long").as("rank"),
-        col("cand_id"))
-  }
-
   /** Top-k per group via the bounded-heap aggregate
     * ([[graft.plans.TopKPairs]]): identical output to the window
     * row_number form, but the plan is a hash aggregate with k-row
@@ -155,8 +130,12 @@ object Similarity {
         .toAggregateExpression())
   }
 
-  /** knnBrute with the aggregate-based top-k (same results, scalable
-    * plan: no window sort). */
+  /** Exact cosine top-k: for each row of `queries`, the k nearest
+    * rows of `corpus` (self excluded by id), ranked by (sim desc,
+    * cand_id). The per-query top-k is the bounded-heap aggregate
+    * (map-side k-row heaps, no per-query sort of the corpus); the
+    * window-sort form it replaced is `Oracles.knnBrute`, its
+    * test-side equality oracle. */
   def knnBruteAgg(
       corpus: DataFrame,
       queries: DataFrame,
@@ -370,26 +349,38 @@ object Similarity {
     * The shuffle is explicit: left to the planner, the byte-small band
     * table gets its exchange AQE-coalesced on input-byte stats that are
     * blind to the quadratic scoring, and the whole Σm² pass lands on a
-    * few tasks (s16 at sf1.0: 259 s at 2 tasks vs 11 s at 32). */
+    * few tasks (s16 at sf1.0: 259 s at 2 tasks vs 11 s at 32).
+    *
+    * `tableRows` is an upper bound on the rows of one table the caller
+    * already knows (a streaming batch's count): at most maxBucketRows
+    * means no bucket can be hot, so every bucket takes g = 1 without
+    * the bucket-size measurement and its two jobs — the same g the
+    * measurement would give. */
   private def cellSorted(banded: DataFrame, maxBucketRows: Int,
-      payload: Seq[String]): DataFrame = {
+      payload: Seq[String], tableRows: Long = Long.MaxValue): DataFrame = {
     require(maxBucketRows > 0, s"maxBucketRows must be positive: $maxBucketRows")
     val nParts = banded.sparkSession.conf
       .get("spark.sql.shuffle.partitions", "32").toInt
-    // fresh names on the count side (counts derives from banded —
-    // self-join ambiguity otherwise)
-    val counts = banded.groupBy(col("tbl"), col("bkt"))
-      .agg(count(lit(1)).as("__m"))
-      .select(col("tbl").as("__ctbl"), col("bkt").as("__cbkt"),
-        col("__m"))
     val p = payload.map(col)
-    banded
-      .join(broadcast(counts),
-        col("tbl") === col("__ctbl") && col("bkt") === col("__cbkt"))
-      .select(p ++ Seq(col("tbl"), col("bkt"),
-        when(col("__m") > maxBucketRows,
-          ceil(col("__m") / lit(maxBucketRows.toDouble)).cast("long"))
-          .otherwise(lit(1L)).as("__g")): _*)
+    val sized =
+      if (tableRows <= maxBucketRows)
+        banded.select(p ++ Seq(col("tbl"), col("bkt"), lit(1L).as("__g")): _*)
+      else {
+        // fresh names on the count side (counts derives from banded —
+        // self-join ambiguity otherwise)
+        val counts = banded.groupBy(col("tbl"), col("bkt"))
+          .agg(count(lit(1)).as("__m"))
+          .select(col("tbl").as("__ctbl"), col("bkt").as("__cbkt"),
+            col("__m"))
+        banded
+          .join(broadcast(counts),
+            col("tbl") === col("__ctbl") && col("bkt") === col("__cbkt"))
+          .select(p ++ Seq(col("tbl"), col("bkt"),
+            when(col("__m") > maxBucketRows,
+              ceil(col("__m") / lit(maxBucketRows.toDouble)).cast("long"))
+              .otherwise(lit(1L)).as("__g")): _*)
+      }
+    sized
       .withColumn("__u", pmod(xxhash64(col("vec_id")), col("__g")))
       .select(p ++ Seq(col("tbl"), col("bkt"),
         explode(cellTags(col("__u"), col("__g"))).as("c")): _*)
@@ -582,10 +573,12 @@ object Similarity {
   private[graft] def symRetainedPartialsFromBanded(
       banded: DataFrame, k: Int, keepThreshold: Option[Double],
       dedupIds: Boolean, maxBucketRows: Int,
-      flushHeapNodes: Int = 1 << 20): DataFrame = {
+      flushHeapNodes: Int = 1 << 20,
+      tableRows: Long = Long.MaxValue): DataFrame = {
     implicit val enc = Encoders.tuple(Encoders.scalaLong,
       Encoders.scalaLong, Encoders.scalaDouble)
-    cellSorted(longIds(banded), maxBucketRows, Seq("vec_id", "v", "__n"))
+    cellSorted(longIds(banded), maxBucketRows, Seq("vec_id", "v", "__n"),
+      tableRows)
       .mapPartitions(
         retainedPartials(_, k, keepThreshold, dedupIds, flushHeapNodes))
       .toDF("vec_id", "nbr_id", "sim")
@@ -659,12 +652,12 @@ object Similarity {
     * least/greatest projection orders them as Spark orders that type. */
   private def survivorPairs[R <: BandRow](banded: DataFrame,
       maxBucketRows: Int, payload: Seq[String], parse: Row => R,
-      keep: (R, R) => Boolean): DataFrame = {
+      keep: (R, R) => Boolean, tableRows: Long = Long.MaxValue): DataFrame = {
     val id = banded.schema("vec_id")
     val enc = Encoders.row(StructType(Seq(id.copy(name = "__x"),
       id.copy(name = "__y"))))
     val tblIdx = payload.length
-    cellSorted(banded, maxBucketRows, payload)
+    cellSorted(banded, maxBucketRows, payload, tableRows)
       .mapPartitions((rows: Iterator[Row]) =>
         cellLoop[R, Row](rows, tblIdx, parse,
           (x, y) => if (keep(x, y)) Row(x.id, y.id) else null))(enc)
@@ -680,12 +673,12 @@ object Similarity {
     * deduped by the caller. */
   private[graft] def thresholdSurvivorsFromBanded(
       banded: DataFrame, threshold: Double,
-      maxBucketRows: Int): DataFrame =
+      maxBucketRows: Int, tableRows: Long = Long.MaxValue): DataFrame =
     survivorPairs[FRow](banded, maxBucketRows, Seq("vec_id", "v", "__n"),
       parseFloat, (x, y) => scorable(x, y) && {
         val sim = pairCosine(x, y)
         sim > threshold || java.lang.Double.isNaN(sim)
-      })
+      }, tableRows)
 
   /** The quantized prune of [[bucketLocalThresholdPairs]]: pairs whose
     * rigorous upper bound clears the threshold (`ub > threshold` with

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 
 /** LSM-shaped durable fold state for `foreachBatch` pipelines — the
@@ -71,6 +72,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * appends/compactions must call [[refresh]] (or construct anew) to
   * re-read the control state. Every in-repo caller is shape (1) or
   * (2).
+  *
+  * ==Schema contract==
+  * Every part of one store has the same schema (one `delta` function
+  * writes them all), and so does every snapshot (one `fold`). [[view]]
+  * therefore reads the sources of one schema as ONE multi-path parquet
+  * relation with that schema given, never a bare
+  * `spark.read.parquet(path)` per source: a bare read infers the
+  * schema with a footer-reading Spark job, one per source per view,
+  * which was most of a steady trigger's jobs. Where the schema comes
+  * from, per reader shape:
+  *   - the single writer knows it: [[append]] records the delta's
+  *     schema and [[maybeCompact]] the folded view's (both as written:
+  *     parquet stores every column nullable), so building a view after
+  *     the instance's own writes runs no Spark job at all;
+  *   - a fresh reader of an existing store infers it on first read,
+  *     once per kind of source (parts, snapshot), from one source of
+  *     that kind, and keeps it — at most two schema jobs for the life
+  *     of the instance. [[refresh]] forgets them with the rest of the
+  *     control state.
   */
 final class LsmState(
     spark: SparkSession,
@@ -106,6 +126,11 @@ final class LsmState(
   private[this] var ptrCache: Option[Option[String]] = None
   private[this] var partsCache: Option[Vector[String]] = None
   private[this] var foldedCache: Option[(Option[String], Set[String])] = None
+  // the schema of every part and of every snapshot, by kind (class
+  // doc's schema contract): set by this instance's own writes, else
+  // inferred once from one source of the kind
+  private[this] val schemas =
+    scala.collection.mutable.Map.empty[String, StructType]
 
   /** Drop the cached control state so the next read re-lists the
     * store — for a detached long-lived reader that must observe
@@ -115,6 +140,7 @@ final class LsmState(
     ptrCache = None
     partsCache = None
     foldedCache = None
+    schemas.clear()
   }
 
   def readPtr(): Option[String] = synchronized {
@@ -179,10 +205,22 @@ final class LsmState(
     val folded = foldedParts()
     val live = listParts(except).filterNot(folded.contains)
       .map(n => s"$root/parts/$n")
-    val srcs = readPtr().toSeq ++ live
-    if (srcs.isEmpty) None
-    else Some(fold(srcs.map(spark.read.parquet(_)).reduce(_ unionByName _)))
+    val srcs = readPtr().map(p => schemaOf("snapshot", p) -> Seq(p)).toSeq ++
+      live.headOption.map(p => schemaOf("parts", p) -> live)
+    // sources of one schema are one relation: an identity fold's
+    // snapshot and parts scan as a single multi-path read
+    val rels = srcs match {
+      case Seq((a, snap), (b, parts)) if a == b => Seq(a -> (snap ++ parts))
+      case _ => srcs
+    }
+    rels.map { case (sc, paths) => spark.read.schema(sc).parquet(paths: _*) }
+      .reduceOption(_ unionByName _).map(fold)
   }
+
+  private def schemaOf(kind: String, anySource: String): StructType =
+    synchronized {
+      schemas.getOrElseUpdate(kind, spark.read.parquet(anySource).schema)
+    }
 
   /** O(batch): write this batch's delta as its own part dir,
     * overwrite-keyed on the batch id (checkpoint replays are
@@ -190,6 +228,7 @@ final class LsmState(
   def append(id: Long, delta: DataFrame): Unit = {
     delta.write.mode("overwrite").parquet(s"$root/parts/b$id")
     synchronized {
+      schemas("parts") = LsmState.asWritten(delta.schema)
       partsCache = partsCache.map(ps =>
         if (ps.contains(s"b$id")) ps else (ps :+ s"b$id").sorted)
     }
@@ -227,6 +266,7 @@ final class LsmState(
       StateIO.writeString(fs, s"$out/_folded", folded.mkString("\n"))
       StateIO.writeStringAtomic(spark, fs, latestFile, out)
       synchronized {
+        schemas("snapshot") = LsmState.asWritten(v.schema)
         ptrCache = Some(Some(out))
         foldedCache = Some((Some(out), folded.toSet))
       }
@@ -253,6 +293,24 @@ final class LsmState(
     * stream drains. */
   def result(): DataFrame = view().getOrElse(
     sys.error(s"no state at $root: stream produced no batches"))
+}
+
+private[graft] object LsmState {
+  import org.apache.spark.sql.types.{ArrayType, DataType, MapType}
+
+  /** `schema` as a parquet write stores it and a read returns it:
+    * every field, element and value nullable. */
+  def asWritten(schema: StructType): StructType =
+    nullable(schema).asInstanceOf[StructType]
+
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+      valueContainsNull = true)
+    case other => other
+  }
 }
 
 /** Control-file IO for the durable fold state, behind the Hadoop
@@ -377,17 +435,24 @@ private[graft] object StateIO {
   *
   * Lifecycle: the table name is a SHA-256 digest of the fold's base
   * dir (collision-proof across concurrent folds, unlike a 32-bit
-  * hashCode), so a restarted fold on the same base resumes the same
-  * table. Appends grow the table's FILE count by O(buckets) per
-  * trigger — a year of 1-minute triggers is millions of small files,
-  * the classic HDFS/S3 small-files failure — so [[maybeCompact]]
-  * periodically rewrites the live generation into a fresh table with
-  * one file per bucket behind a durable generation pointer, the same
-  * amortized trade as [[LsmState.maybeCompact]]. Short-lived callers
-  * (the verification wrappers) drop every generation once the fold's
-  * result is materialized ([[drop]]); a production fold keeps the
-  * live one for the life of the pipeline and drops it at
-  * decommission. */
+  * hashCode). Each generation's files live under the fold's own base
+  * (`bands/<table>`), registered as an EXTERNAL table: the data is
+  * fold state like the LSM parts beside it, and the catalog entry is
+  * only the name the bucketed scan needs while triggers probe it. The
+  * fold unregisters its entries when its drain ends ([[release]]),
+  * keeping the files, and any instance on an existing base registers
+  * the live generation again from its files on first use — so a
+  * restarted fold (same JVM or a new one) resumes the same index, and
+  * a finished call leaves nothing in the session catalog. Appends grow
+  * the table's FILE count by O(buckets) per trigger — a year of
+  * 1-minute triggers is millions of small files, the classic HDFS/S3
+  * small-files failure — so [[maybeCompact]] periodically rewrites
+  * the live generation into a fresh table with one file per bucket
+  * behind a durable generation pointer, the same amortized trade as
+  * [[LsmState.maybeCompact]]. Short-lived callers (the verification
+  * wrappers) delete every generation once the fold's result is
+  * materialized ([[drop]]); a production fold keeps the live one for
+  * the life of the pipeline and drops it at decommission. */
 private[graft] final class BandState(
     spark: SparkSession,
     base: String,
@@ -406,6 +471,40 @@ private[graft] final class BandState(
     StateIO.readString(fs, ptrFile).map(_.trim).filter(_.nonEmpty)
       .getOrElse(table)
 
+  /** Where generation `gen`'s files live: under the fold's base. */
+  private def location(gen: String): String = s"$base/bands/$gen"
+
+  /** Does the live generation hold data (registered, or data files on
+    * disk waiting to be registered)? */
+  def liveExists: Boolean = {
+    val t = liveTable
+    spark.catalog.tableExists(t) || hasData(t)
+  }
+
+  /** Does generation `gen`'s location hold a data file? Not after a
+    * crash inside the generation's first append (only the committer's
+    * `_temporary` is left), nor when every append so far was an empty
+    * batch (a bucketed write of zero rows leaves only `_SUCCESS`):
+    * such a location holds no bands and no schema to read. */
+  private def hasData(gen: String): Boolean =
+    StateIO.listNames(fs, location(gen))
+      .exists(n => !n.startsWith("_") && !n.startsWith("."))
+
+  /** Register generation `gen` from its files when it has data files
+    * but no catalog entry (an earlier drain released it, or an earlier
+    * JVM died with it). The schema is read from the files: one schema
+    * job per fresh instance. */
+  private def register(gen: String): Unit =
+    if (!spark.catalog.tableExists(gen) && hasData(gen)) {
+      // a bucketed CREATE needs its column list: read it off the files
+      val schema = spark.read.parquet(location(gen)).schema
+      val cols = bucketCols.mkString(", ")
+      val loc = location(gen).replace("'", "\\'")
+      spark.sql(s"CREATE TABLE $gen (${schema.toDDL}) USING parquet " +
+        s"CLUSTERED BY ($cols) SORTED BY ($cols) INTO $numBuckets BUCKETS " +
+        s"LOCATION '$loc'")
+    }
+
   /** The accumulated band index, or None before the first append.
     * Refreshes the relation first: the per-batch appends run through
     * the micro-batch's CLONED session, whose write-side cache
@@ -414,6 +513,7 @@ private[graft] final class BandState(
     * set and misses cross-batch candidates. */
   def scan(): Option[DataFrame] = {
     val t = liveTable
+    register(t)
     if (spark.catalog.tableExists(t)) {
       spark.catalog.refreshTable(t)
       Some(spark.table(t))
@@ -421,18 +521,21 @@ private[graft] final class BandState(
   }
 
   /** Append one batch's bands, marker-guarded for replay idempotence.
-    * The first append clears any stale managed location a crashed
-    * prior JVM left behind (its catalog entry died with it). */
+    * The first append of a generation creates its external table
+    * under the base; the create overwrites the location, so what a
+    * location without data files holds ([[hasData]]) never reaches
+    * the table. */
   def append(id: Long, bands: DataFrame): Unit = {
     val mark = s"$base/band_marks/b$id"
     if (!StateIO.exists(fs, mark)) {
       val t = liveTable
-      if (!spark.catalog.tableExists(t))
-        Streams.dropManagedTable(spark, t)
-      bands.write
+      register(t)
+      val w = bands.write
         .bucketBy(numBuckets, bucketCols.head, bucketCols.drop(1): _*)
         .sortBy(bucketCols.head, bucketCols.drop(1): _*)
-        .mode("append").saveAsTable(t)
+        .mode("append")
+      if (spark.catalog.tableExists(t)) w.saveAsTable(t)
+      else w.option("path", location(t)).saveAsTable(t)
       StateIO.writeString(fs, mark, "")
       // prune dead markers: only the latest not-yet-checkpointed
       // batch can ever replay, and batch `id` running means every
@@ -463,22 +566,23 @@ private[graft] final class BandState(
     if ((id + 1) % compactEvery == 0) {
       val cur = liveTable
       val next = s"${table}_c$id"
+      register(cur)
       if (cur != next && spark.catalog.tableExists(cur)) {
         import org.apache.spark.sql.functions.col
         spark.catalog.refreshTable(cur)
-        Streams.dropManagedTable(spark, next) // pre-crash litter
+        dropGeneration(next) // pre-crash litter
         spark.table(cur)
           .repartition(numBuckets, bucketCols.map(col): _*)
           .write
           .bucketBy(numBuckets, bucketCols.head, bucketCols.drop(1): _*)
           .sortBy(bucketCols.head, bucketCols.drop(1): _*)
-          .mode("overwrite").saveAsTable(next)
+          .mode("overwrite").option("path", location(next)).saveAsTable(next)
         StateIO.writeStringAtomic(spark, fs, ptrFile, next)
         // retain, like LsmState's: newest superseded generations
         // survive as a grace window for detached readers
         generations().filterNot(_ == next)
           .sortBy(genId).dropRight(retain)
-          .foreach(Streams.dropManagedTable(spark, _))
+          .foreach(dropGeneration)
       }
     }
 
@@ -486,29 +590,48 @@ private[graft] final class BandState(
     if (name == table) -1L else name.drop(table.length + 2).toLong
 
   /** Every generation of this fold's band table: catalog entries
-    * UNION warehouse directories. The disk side matters after a JVM
-    * crash — an in-memory catalog dies with its JVM, so a stale
-    * `_c` generation written before a crash would otherwise be
-    * invisible to the sweep and leak a full O(index) copy forever.
-    * (With a durable metastore the catalog side already covers it;
-    * the union is correct in both worlds.) The disk listing goes
-    * through the Hadoop FileSystem API like every other control-file
-    * read here — a java.io.File listing would silently see nothing
-    * under a non-local warehouse (HDFS/S3) and leak the pre-crash
-    * `_c` generation exactly where the sweep matters most. */
+    * UNION generation directories on disk — under the base, and in
+    * the warehouse where earlier builds kept them as managed tables.
+    * The disk side matters after a JVM crash: an in-memory catalog
+    * dies with its JVM, so a stale `_c` generation written before a
+    * crash would otherwise be invisible to the sweep and leak a full
+    * O(index) copy forever. (With a durable metastore the catalog
+    * side already covers it; the union is correct in both worlds.)
+    * The disk listing goes through the Hadoop FileSystem API like
+    * every other control-file read here, so it sees a non-local
+    * (HDFS/S3) base or warehouse too. */
   private[streaming] def generations(): Seq[String] = {
-    val inCatalog = spark.catalog.listTables().collect().map(_.name)
+    // the session catalog's own listing: `spark.catalog.listTables`
+    // collects a Dataset, one Spark job per call
+    val inCatalog = spark.sessionState.catalog
+      .listTables(spark.catalog.currentDatabase).map(_.table)
     val whRoot = BandState.warehouseRoot(spark)
-    val onDisk = StateIO.listNames(StateIO.fs(spark, whRoot), whRoot)
-    (inCatalog ++ onDisk).toSeq.distinct.filter { n =>
+    val inWarehouse = StateIO.listNames(StateIO.fs(spark, whRoot), whRoot)
+    val underBase = StateIO.listNames(fs, s"$base/bands")
+    (inCatalog ++ inWarehouse ++ underBase).toSeq.distinct.filter { n =>
       val id = n.drop(table.length + 2)
       n == table || (n.startsWith(s"${table}_c") &&
         id.nonEmpty && id.forall(_.isDigit))
     }
   }
 
+  /** Remove generation `gen`: its catalog entry and its files, under
+    * the base or (an earlier build's managed table) the warehouse. */
+  private def dropGeneration(gen: String): Unit = {
+    Streams.dropManagedTable(spark, gen)
+    StateIO.delete(fs, location(gen))
+  }
+
+  /** Unregister this fold's generations from the session catalog and
+    * keep their files under the base — the end of a drain. A table
+    * the fold did not create there (a managed one) is left as found. */
+  def release(): Unit =
+    generations().filter(g => StateIO.exists(fs, location(g)))
+      .foreach(g => spark.sql(s"DROP TABLE IF EXISTS $g"))
+
   def drop(): Unit = {
-    generations().foreach(Streams.dropManagedTable(spark, _))
+    generations().foreach(dropGeneration)
+    StateIO.delete(fs, s"$base/bands")
     StateIO.delete(fs, ptrFile)
   }
 }

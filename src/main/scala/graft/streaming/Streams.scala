@@ -211,6 +211,30 @@ object Streams {
     df.repartition(
       df.sparkSession.conf.get("spark.sql.shuffle.partitions", "8").toInt)
 
+  /** Round-robin repartition a LARGE micro-batch to `nParts` — one
+    * whose planned input (the source's own size estimate, no job) is
+    * at least [[SpreadBytes]]; without an estimate the batch counts as
+    * large. A smaller batch runs its per-row transforms on the splits
+    * it was read as, and its trigger saves the shuffle's job. */
+  private[graft] def spreadLarge(df: DataFrame, nParts: Int): DataFrame =
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes >= SpreadBytes)
+      df.repartition(nParts)
+    else df
+
+  /** The planned micro-batch size from which [[spreadLarge]] spreads,
+    * set between the measured crossovers of the two folds that use it.
+    * One-batch folds over a single parquet file, local[4] on a
+    * 4-core host with 4 shuffle partitions, median of 3, spread vs
+    * not:
+    *   - p03: 1,000 docs (116 KB) 1.27 vs 1.18 s; 4,750 (546 KB) 1.23
+    *     vs 1.36 s; 19,000 (2.2 MB) 1.90 vs 2.96 s;
+    *   - p15: 200 vectors (34 KB) 1.33 vs 1.25 s; 2,000 (400 KB) 1.70
+    *     vs 1.76 s; 8,000 (2.1 MB) 3.83 vs 4.36 s.
+    * A one-file batch is one read task, so below ~100 KB the shuffle's
+    * job costs more than the per-row work it parallelizes, and from
+    * ~500 KB it pays. */
+  private val SpreadBytes: BigInt = BigInt(256L << 10)
+
   /** Run independent per-model state actions (part appends,
     * compactions) CONCURRENTLY within one trigger. A multi-model
     * fold otherwise pays one full Spark-job latency per model per
@@ -449,13 +473,17 @@ object Streams {
     * exact-dedup front of the corpus pipeline (p02's first two
     * stages) maintained INCREMENTALLY over a document stream, the
     * shape of a production ingest that cleans each day's crawl
-    * without rescanning the accepted corpus. Per micro-batch:
-    * word-8-gram overlap flags against the STATIC benchmark set
-    * (broadcast-sized grams), contaminated docs dropped, keep the
-    * min doc_id per text fingerprint WITHIN the batch, anti-join the
-    * batch survivors against the accumulated accepted-fingerprint
-    * snapshot, append (versioned snapshot dirs + atomic pointer, the
-    * same durable-state pattern as [[upsertLatestOf]]).
+    * without rescanning the accepted corpus. Per micro-batch: the
+    * batch's documents sharing a word `n`-gram with the STATIC
+    * benchmark set are dropped (one anti-join against the batch's
+    * hits), keep the min doc_id per text fingerprint WITHIN the batch,
+    * anti-join the batch survivors against the accumulated
+    * accepted-fingerprint state, append.
+    *
+    * The benchmark's distinct n-gram set is built ONCE per call, not
+    * per trigger ([[withBenchGrams]]), and the contaminated documents
+    * leave with one anti-join
+    * ([[graft.operators.Dedup.withoutNgramHits]], shared with p06).
     *
     * Cross-batch the rule is first-arrival-wins; with the file
     * source's in-order replay that equals the batch keep-min-id
@@ -482,25 +510,48 @@ object Streams {
     // double-presenting a part — no defensive dedup shuffle at read
     val st = new LsmState(
       stream.sparkSession, base, identity, compactEvery)
-    Fold.appendFold(stream, base, "p03", st) { (batch, id) =>
-      val b = spread(batch)
-      val flags = graft.operators.Dedup.decontaminate(
-        b, benchmark, col("doc_id"), col("text"), n)
-      val clean = b.join(
-        flags.filter(col("n_overlap") === 0).select("doc_id"),
-        Seq("doc_id"), "left_semi")
-      val withFp = clean.select(col("doc_id"), col("source"),
-        md5(lower(trim(col("text")))).as("fp"))
-      val w = Window.partitionBy("fp").orderBy("doc_id")
-      val keepB = withFp.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-      st.view(except = Some(id)) match {
-        case None => keepB
-        case Some(v) =>
-          keepB.join(v.select("fp"), Seq("fp"), "left_anti")
+    withBenchGrams(benchmark, n) { benchGrams =>
+      Fold.appendFold(stream, base, "p03", st) { (batch, id) =>
+        val b = spreadLarge(batch, batch.sparkSession.conf
+          .get("spark.sql.shuffle.partitions", "8").toInt)
+        val clean = graft.operators.Dedup.withoutNgramHits(
+          b, benchGrams, col("doc_id"), col("text"), n)
+        val withFp = clean.select(col("doc_id"), col("source"),
+          md5(lower(trim(col("text")))).as("fp"))
+        val w = Window.partitionBy("fp").orderBy("doc_id")
+        val keepB = withFp.withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") === 1).drop("__rn")
+        st.view(except = Some(id)) match {
+          case None => keepB
+          case Some(v) =>
+            keepB.join(v.select("fp"), Seq("fp"), "left_anti")
+        }
       }
     }
   }
+
+  /** Run `body` with `benchmark`'s distinct word `n`-gram set
+    * ([[graft.operators.Dedup.benchNgrams]]) built ONCE: cached and
+    * materialized before the stream starts, unpersisted when `body`
+    * returns. Every trigger of p03/p06 joins its batch's grams against
+    * this cache instead of recomputing the benchmark's distinct. It
+    * stays a Dataset, never collected to the driver: a trigger's join
+    * broadcasts it while it is under the broadcast threshold and
+    * shuffle-joins it beyond, as the batch
+    * [[graft.operators.Dedup.decontaminate]] does. Memory: the cached
+    * set in the executors' storage for the life of the call; the
+    * driver holds a copy only while building a trigger's broadcast,
+    * so never more than the broadcast threshold. */
+  private def withBenchGrams[T](benchmark: DataFrame, n: Int)(
+      body: DataFrame => T): T = {
+    val grams = graft.operators.Dedup
+      .benchNgrams(benchmark, col("doc_id"), col("text"), n).cache()
+    try {
+      grams.count()
+      body(grams)
+    } finally grams.unpersist()
+  }
+
 
   /** [[incrementalClean]] over the documents table: corpus =
     * doc_id % 20 != 0 streamed, benchmark = doc_id % 20 == 0 static
@@ -547,45 +598,44 @@ object Streams {
     val st = new LsmState(
       stream.sparkSession, base, identity, compactEvery)
     def trunc4(c: org.apache.spark.sql.Column) = floor(c * 10000) / 10000
-    Fold.appendFold(stream, base, "p06", st) { (batch, id) =>
-      val b = spread(batch)
-      val flags = graft.operators.Dedup.decontaminate(
-        b, benchmark, col("doc_id"), col("text"), n)
-      val clean = b.join(
-        flags.filter(col("n_overlap") === 0).select("doc_id"),
-        Seq("doc_id"), "left_semi")
-      val withFp = clean.select(col("doc_id"), col("source"), col("text"),
-        md5(lower(trim(col("text")))).as("fp"))
-      val w = Window.partitionBy("fp").orderBy("doc_id")
-      val keepB = withFp.withColumn("__rn", row_number().over(w))
-        .filter(col("__rn") === 1).drop("__rn")
-      // finishing stages, batch-survivors only: t02's quality score
-      // and n07's inject-then-redact (both pure per-row functions)
-      val injected = when(col("doc_id") % 10 === 0,
-        concat(col("text"), lit(" contact user"), col("doc_id"),
-          lit("@example.com or 555-123-4567")))
-        .otherwise(col("text"))
-      val scored = keepB
-        .select(col("doc_id"), col("source"), col("fp"),
-          graft.functions.TextFns.tokensLower(col("text")).as("__toks"),
-          length(col("text")).as("__len"), injected.as("__t"))
-        .select(col("doc_id"), col("source"), col("fp"),
-          trunc4(least(lit(1.0), col("__len") / 500.0) *
-            (lit(0.7) + lit(0.3) *
-              (graft.functions.TextFns.wordSetHits(col("__toks"),
-                Seq("the", "a", "and", "of", "to", "in")) /
-                size(col("__toks"))))).as("quality"),
-          size(regexp_extract_all(col("__t"),
-            lit(graft.functions.TextFns.EmailRe), lit(0)))
-            .cast("long").as("n_emails"),
-          size(regexp_extract_all(col("__t"),
-            lit(graft.functions.TextFns.PhoneRe), lit(0)))
-            .cast("long").as("n_phones"),
-          graft.functions.TextFns.redactPii(col("__t")).as("redacted"))
-      st.view(except = Some(id)) match {
-        case None => scored
-        case Some(v) =>
-          scored.join(v.select("fp"), Seq("fp"), "left_anti")
+    withBenchGrams(benchmark, n) { benchGrams =>
+      Fold.appendFold(stream, base, "p06", st) { (batch, id) =>
+        val b = spread(batch)
+        val clean = graft.operators.Dedup.withoutNgramHits(
+          b, benchGrams, col("doc_id"), col("text"), n)
+        val withFp = clean.select(col("doc_id"), col("source"), col("text"),
+          md5(lower(trim(col("text")))).as("fp"))
+        val w = Window.partitionBy("fp").orderBy("doc_id")
+        val keepB = withFp.withColumn("__rn", row_number().over(w))
+          .filter(col("__rn") === 1).drop("__rn")
+        // finishing stages, batch-survivors only: t02's quality score
+        // and n07's inject-then-redact (both pure per-row functions)
+        val injected = when(col("doc_id") % 10 === 0,
+          concat(col("text"), lit(" contact user"), col("doc_id"),
+            lit("@example.com or 555-123-4567")))
+          .otherwise(col("text"))
+        val scored = keepB
+          .select(col("doc_id"), col("source"), col("fp"),
+            graft.functions.TextFns.tokensLower(col("text")).as("__toks"),
+            length(col("text")).as("__len"), injected.as("__t"))
+          .select(col("doc_id"), col("source"), col("fp"),
+            trunc4(least(lit(1.0), col("__len") / 500.0) *
+              (lit(0.7) + lit(0.3) *
+                (graft.functions.TextFns.wordSetHits(col("__toks"),
+                  Seq("the", "a", "and", "of", "to", "in")) /
+                  size(col("__toks"))))).as("quality"),
+            size(regexp_extract_all(col("__t"),
+              lit(graft.functions.TextFns.EmailRe), lit(0)))
+              .cast("long").as("n_emails"),
+            size(regexp_extract_all(col("__t"),
+              lit(graft.functions.TextFns.PhoneRe), lit(0)))
+              .cast("long").as("n_phones"),
+            graft.functions.TextFns.redactPii(col("__t")).as("redacted"))
+        st.view(except = Some(id)) match {
+          case None => scored
+          case Some(v) =>
+            scored.join(v.select("fp"), Seq("fp"), "left_anti")
+        }
       }
     }
   }
@@ -855,7 +905,7 @@ object Streams {
     // disjoint; the _folded manifest covers compaction crashes
     val pairsSt = new LsmState(spark, s"$base/pairs", identity, compactEvery)
     val bands = new BandState(spark, base, Seq("band", "band_hash"))
-    Fold.run(stream, base, "p14") { (batch, id) =>
+    try Fold.run(stream, base, "p14") { (batch, id) =>
       val b = spread(batch)
       // cache (lazy): within-batch self-join (both sides) and the
       // band append all read this frame — uncached, the batch pays
@@ -889,7 +939,7 @@ object Streams {
         () => pairsSt.maybeCompact(id),
         () => bands.maybeCompact(id, compactEvery)))
       newBands.unpersist(blocking = false)
-    }
+    } finally bands.release()
     pairsSt.result()
   }
 
@@ -976,61 +1026,64 @@ object Streams {
   /** The banded trigger p15 ([[incrementalKnnGraph]]) and p17
     * ([[incrementalEmbPairs]]) share. Per micro-batch the vectors are
     * hyperplane-banded ONCE, scored `within` the batch from the
-    * banded rows, and probed against the ACCUMULATED band table for
-    * cross-batch candidates, each scored once against the stored
-    * vector state; `finish(within, cross)` turns the two scored
-    * streams into the batch's `out` part (p15: pruned symmetrized
-    * edges; p17: thresholded pairs). The batch's vectors and band
-    * rows then append to the `vecs` and band state.
+    * banded rows and their vector count (each band table has that
+    * many rows, so a batch no larger than the scorer's bucket cap
+    * skips its hot-bucket measurement), and probed against the
+    * ACCUMULATED band table for cross-batch candidates, each scored
+    * once against the stored vector state; `finish(within, cross)`
+    * turns the two scored streams into the batch's `out` part (p15:
+    * pruned symmetrized edges; p17: thresholded pairs). The batch's
+    * vectors and band rows then append to the `vecs` and band state.
+    *
+    * One eager action per trigger before scoring: the count that
+    * materializes the banded rows' cache. Sizing reads that count —
+    * numTables band rows per banded vector — so the batch is read and
+    * projected once, and the scoring shuffle gets the same
+    * [[quadraticParts]] task count as a separate row count gave it. A
+    * large batch ([[spreadLarge]]: planned input of at least 256 KB) is
+    * spread before the projection to the most tasks quadraticParts
+    * can pick, never fewer than it was projected on before; a smaller
+    * one is projected on the splits it was read as.
     *
     * State, every per-batch write O(batch): bands ([[BandState]], an
     * appended bucketed table on the `(tbl, bkt)` probe key — zero
     * index-side exchange in the cross-probe, plan-asserted), vecs
     * ([[LsmState]] parts, identity fold: one row per vec_id,
     * delivered once; the _folded manifest covers compaction crashes)
-    * and `out`. */
+    * and `out`. The fold's band table is unregistered when the drain
+    * ends ([[BandState.release]]); its files stay under `base`. */
   private def bandedFold(
       stream: DataFrame, base: String, key: String, out: LsmState,
       numTables: Int, planesPerTable: Int, dim: Int, seed: Long,
       compactEvery: Int)(
-      within: DataFrame => DataFrame)(
+      within: (DataFrame, Long) => DataFrame)(
       finish: (DataFrame, Option[DataFrame]) => DataFrame): Unit = {
     val spark = stream.sparkSession
     val vecsSt = new LsmState(spark, s"$base/vecs", identity, compactEvery)
     val bands = new BandState(spark, base, Seq("tbl", "bkt"))
-    Fold.run(stream, base, key) { (batch, id) =>
-      // cache BEFORE the sizing count: quadraticParts needs the
-      // batch row count up front, and an uncached count would read
-      // and compute the batch source one extra time per trigger
-      // just to size the shuffle — the cache lets sizing and
-      // processing share one source read (unpersisted at batch end)
-      val raw = batch.cache()
+    try Fold.run(stream, base, key) { (batch, id) =>
+      val bs = batch.sparkSession
+      // Vectors ride the band rows (bandedWithVecs) so the
+      // WITHIN-batch candidates are scored bucket-locally — no
+      // exchange carries a candidate pair — and the id-only band rows
+      // for the stored probe layout flow from the same cache.
+      val spreadTo = math.max(
+        bs.conf.get("spark.sql.shuffle.partitions", "8").toInt,
+        bs.sparkContext.defaultParallelism)
+      val bandedV = graft.operators.Similarity.bandedWithVecs(
+        spreadLarge(batch, spreadTo), "vec_id", "embedding", numTables,
+        planesPerTable, dim, seed, spread = false).cache()
       try {
-        val bs = raw.sparkSession
-        val parts = quadraticParts(bs, raw.count(), numTables,
-          planesPerTable)
-        withStreamPartitions(bs, parts) {
-          val b = spread(raw)
-          val newVecs = b.select(col("vec_id"), col("embedding").as("v"))
-          // cache (lazy): within scoring (both tile sides), cross
-          // probe, and band append all read this frame — uncached,
-          // the batch pays its hyperplane projections 4x. Vectors
-          // ride the band rows (bandedWithVecs) so the WITHIN-batch
-          // candidates are scored bucket-locally — no exchange
-          // carries a candidate pair — and the id-only band rows for
-          // the stored probe layout flow from the same cache.
-          val bandedV = graft.operators.Similarity.bandedWithVecs(
-            b, "vec_id", "embedding", numTables, planesPerTable, dim,
-            seed, spread = false).cache()
-          // eager materialization: the scoring plan reads bandedV
-          // from several concurrent stages; a lazy cache lets each
-          // recompute the projection pass before any commits it
-          // (same race as the batch banded caches, measured at
-          // Similarity.liveBanded)
-          bandedV.count()
-          val newBands = bandedV.select(col("vec_id"), col("tbl"),
-            col("bkt"))
-          val withinScored = within(bandedV)
+        // the trigger's ONE eager action before scoring: it
+        // materializes the cache (the scoring plan reads bandedV from
+        // several concurrent stages, and a lazy cache lets each
+        // recompute the projection before any commits it), and its
+        // count sizes the scoring shuffle. Counted on the internal-row
+        // RDD: one job, where Dataset.count adds an aggregate exchange.
+        val rows = bandedV.queryExecution.toRdd.count() / numTables
+        withStreamPartitions(bs,
+            quadraticParts(bs, rows, numTables, planesPerTable)) {
+          val withinScored = within(bandedV, rows)
           // cross-batch candidates: the batch side carries its vector
           // on the band row, so only the STORED side needs a vector
           // fetch (one join against the accumulated vec state instead
@@ -1057,19 +1110,26 @@ object Streams {
           // `out` part FIRST: it executes every read of the PRE-batch
           // band/vec state (the lazy cross-probe); the remaining two
           // appends touch disjoint state and overlap (runParallel —
-          // the p19 trigger treatment), as do the three compactions
+          // the p19 trigger treatment), as do the three compactions.
+          // The vectors append straight from the batch's own input
+          // splits, and the band rows from as few tasks as hold ~1M
+          // rows each: every task of a bucketed write writes one file
+          // per bucket it sees.
           out.append(id, finish(withinScored, crossScored))
+          val bandTasks =
+            math.max(1, math.ceil(rows * numTables / 1e6).toInt)
           runParallel(Seq(
-            () => vecsSt.append(id, newVecs),
-            () => bands.append(id, newBands)))
+            () => vecsSt.append(id,
+              batch.select(col("vec_id"), col("embedding").as("v"))),
+            () => bands.append(id, bandedV.select(col("vec_id"),
+              col("tbl"), col("bkt")).coalesce(bandTasks))))
           runParallel(Seq(
             () => out.maybeCompact(id),
             () => vecsSt.maybeCompact(id),
             () => bands.maybeCompact(id, compactEvery)))
-          bandedV.unpersist(blocking = false)
         }
-      } finally raw.unpersist(blocking = false)
-    }
+      } finally bandedV.unpersist(blocking = false)
+    } finally bands.release()
   }
 
   /** p15: incremental k-NN GRAPH maintenance — s16's corpus-wide
@@ -1119,8 +1179,10 @@ object Streams {
       // trigger's dominant stage: ~85 of 178 CPU-s at sf1.0).
       // Output-identical by the fold monoid: prune(prune(W) ∪ C) =
       // prune(W ∪ C) — graphFold's scaladoc.
-      graft.operators.Similarity.symRetainedPartialsFromBanded(_, k,
-        keepThreshold, dedupIds = true, maxBucketRows = 2048)) { (withinSym, crossScored) =>
+      (banded, rows) => graft.operators.Similarity
+        .symRetainedPartialsFromBanded(banded, k, keepThreshold,
+          dedupIds = true, maxBucketRows = 2048, tableRows = rows)) {
+      (withinSym, crossScored) =>
       // cross edges symmetrize (explode both directions from the
       // single scored row); the within-batch side arrives already
       // symmetrized and pre-pruned from the fused scorer
@@ -1271,8 +1333,10 @@ object Streams {
       // only (a_id, b_id) above the threshold leave the cell loop —
       // the batch's scored pair stream is never emitted (same
       // output: the filter below distributes over the union)
-      graft.operators.Similarity.thresholdSurvivorsFromBanded(_, threshold,
-        maxBucketRows = 2048)) { (withinSurv, crossScored) =>
+      (banded, rows) => graft.operators.Similarity
+        .thresholdSurvivorsFromBanded(banded, threshold,
+          maxBucketRows = 2048, tableRows = rows)) {
+      (withinSurv, crossScored) =>
       // threshold FIRST, dedup after: the filter runs inside the
       // scoring loop (within-batch) / stage (cross), so the
       // distinct that absorbs the one-row-per-shared-table
@@ -2026,18 +2090,16 @@ object Streams {
     }
     val top = StateIO.listNames(fs, base)
     val stores = storeRow(".", base).toSeq ++ top.sorted
-      .filterNot(Set("parts", "ckpt", "band_marks").contains)
+      .filterNot(Set("parts", "ckpt", "band_marks", "bands").contains)
       .filter(n => isDir(s"$base/$n"))
       .flatMap(n => storeRow(n, s"$base/$n"))
     val bands = new BandState(spark, base, Nil)
     val bandRow =
-      if (StateIO.exists(fs, s"$base/band_gen") ||
-          spark.catalog.tableExists(bands.table)) {
-        val live = bands.liveTable
+      if (StateIO.exists(fs, s"$base/band_gen") || bands.liveExists) {
         val marks = StateIO.listNames(fs, s"$base/band_marks")
           .count(_.startsWith("b")).toLong
-        Seq(("band_index", live,
-          if (spark.catalog.tableExists(live)) 1L else 0L, 1L, marks))
+        Seq(("band_index", bands.liveTable,
+          if (bands.liveExists) 1L else 0L, 1L, marks))
       } else Nil
     (stores ++ bandRow)
       .toDF("store", "pointer", "live_parts", "versions", "markers")

@@ -78,7 +78,7 @@ class IvfPqAppendSpec extends SparkSuite {
         .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("cand_id"))).toSet
       val nq = queries.count()
       assert(got.size == 5 * nq && !got.exists(p => p._1 == p._2))
-      val brute = Similarity.knnBrute(emb, queries, "vec_id", "embedding", 5)
+      val brute = Oracles.knnBrute(emb, queries, "vec_id", "embedding", 5)
         .collect()
         .map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("cand_id"))).toSet
       val recall = (got intersect brute).size.toDouble / brute.size

@@ -35,6 +35,11 @@ class LsmStateSpec extends SparkSuite with SuiteTempDirs {
         .groupBy("k").agg(sum(col("v")).as("v"))
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(got == expect, s"cadence $cadence diverged")
+      // a fresh reader (schemas inferred, not recorded) folds the same
+      val fresh = new LsmState(spark, root,
+        _.groupBy("k").agg(sum(col("v")).as("v")), cadence).result()
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(fresh == expect, s"cadence $cadence: fresh reader diverged")
       // cadence 1 compacts every batch: no live parts remain
       if (cadence == 1) {
         val parts = Option(new java.io.File(s"$root/parts").listFiles())
@@ -151,5 +156,59 @@ class LsmStateSpec extends SparkSuite with SuiteTempDirs {
     assert(st.view().isEmpty)
     val e = intercept[RuntimeException](st.result())
     assert(e.getMessage.contains("no state"))
+  }
+
+  /** A delta with the column shapes the folds write: non-nullable
+    * longs, a nullable string and an array of non-null floats — the
+    * schema a view states must be the one parquet reads back. */
+  private def richDelta(rng: scala.util.Random, n: Int) = {
+    import spark.implicits._
+    Seq.fill(n)((rng.nextInt(20).toLong, rng.nextInt(100).toLong,
+        Option(rng.nextInt(3).toString).filter(_ != "0"),
+        Array.fill(2)(rng.nextFloat())))
+      .toDF("k", "v", "s", "arr")
+  }
+
+  private def rows(df: org.apache.spark.sql.DataFrame) =
+    df.select("k", "v", "s", "arr").collect()
+      .map(r => (r.getLong(0), r.getLong(1), Option(r.getString(2)),
+        r.getSeq[Float](3).toList))
+      .toSeq.sortBy(_.toString)
+
+  test("building a view after the instance's own append or compaction runs no job") {
+    val root = tmpDir("graft_lsm_nojob")
+    val st = new LsmState(spark, root, identity, compactEvery = 2)
+    val rng = new scala.util.Random(7)
+    val deltas = (0 until 4).map(_ => richDelta(rng, 15))
+    deltas.zipWithIndex.foreach { case (d, i) =>
+      st.append(i.toLong, d)
+      val (_, afterAppend) = jobsIn(st.view(except = Some(i.toLong)))
+      assert(afterAppend == 0, s"view after append $i ran $afterAppend jobs")
+      st.maybeCompact(i.toLong)
+      val (_, afterCompact) = jobsIn(st.view())
+      assert(afterCompact == 0,
+        s"view after compaction check $i ran $afterCompact jobs")
+    }
+    assert(rows(st.result()) == rows(deltas.reduce(_ unionByName _)))
+  }
+
+  test("a fresh reader infers the schema at most once per kind of source") {
+    val root = tmpDir("graft_lsm_fresh")
+    val writer = new LsmState(spark, root, identity, compactEvery = 3)
+    val rng = new scala.util.Random(11)
+    val deltas = (0 until 5).map(_ => richDelta(rng, 10))
+    deltas.zipWithIndex.foreach { case (d, i) =>
+      writer.append(i.toLong, d)
+      writer.maybeCompact(i.toLong)
+    }
+    // a snapshot (v2) and two live parts (b3, b4): two kinds of source
+    val reader = new LsmState(spark, root, identity, compactEvery = 3)
+    val (first, firstJobs) = jobsIn(reader.view().get)
+    assert(firstJobs <= 2, s"fresh reader's first view ran $firstJobs jobs")
+    val (_, againJobs) = jobsIn(reader.view(except = Some(4L)).get)
+    assert(againJobs == 0, s"second view re-inferred: $againJobs jobs")
+    assert(rows(first) == rows(deltas.reduce(_ unionByName _)))
+    assert(first.schema == writer.view().get.schema,
+      "fresh reader and writer disagree on the schema")
   }
 }

@@ -6,11 +6,34 @@ import graft.operators.Similarity
 
 import scala.util.Random
 
-/** Equality oracles for the banded embedding engines, the Lloyd
-  * driver combine and the product-quantization kernel: the forms the
-  * production paths replaced, kept only so specs can pin the
-  * replacements to them bit for bit. */
+/** Equality oracles for exact k-NN, the banded embedding engines, the
+  * Lloyd driver combine and the product-quantization kernel: the
+  * forms the production paths replaced, kept only so specs can pin
+  * the replacements to them bit for bit. */
 object Oracles {
+
+  /** Exact cosine top-k through a window over (query, sim) — which
+    * sorts the WHOLE corpus per query in a single task. The equality
+    * oracle for [[Similarity.knnBruteAgg]] (identical output) and the
+    * exact baseline of the recall specs. */
+  def knnBrute(
+      corpus: DataFrame,
+      queries: DataFrame,
+      idCol: String,
+      vecCol: String,
+      k: Int): DataFrame = {
+    val q = broadcast(
+      queries.select(col(idCol).as("q_id"), col(vecCol).as("qv")))
+    val c = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"))
+    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("q_id"))
+      .orderBy(col("sim").desc, col("cand_id"))
+    c.join(q, col("cand_id") =!= col("q_id"))
+      .withColumn("sim", Similarity.cosine(col("qv"), col("cv")))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("q_id"), col("rank").cast("long").as("rank"),
+        col("cand_id"))
+  }
 
   /** Deterministic ±1 random hyperplanes (seeded). */
   private def planes(numPlanes: Int, dim: Int, seed: Long): Seq[Seq[Double]] = {

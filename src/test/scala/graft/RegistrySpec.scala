@@ -277,24 +277,6 @@ class RegistrySpec extends SparkSuite with SuiteTempDirs {
       "43-day-old snapshot must flag stale")
   }
 
-  /** Jobs `body` runs, counted by a listener on the fixture session. */
-  private def jobsIn[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val out = body
-      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
-      (out, jobs.get())
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   test("a warm search runs no job to build and at most 4 to answer") {
     registry.search("N221LA").collect() // warm-up: resolves the snapshot
     val (df, buildJobs) = jobsIn(registry.search("N221LA"))

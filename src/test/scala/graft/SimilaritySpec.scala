@@ -12,7 +12,7 @@ class SimilaritySpec extends SparkSuite {
     df.collect().map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("cand_id"))).toSet
 
   private lazy val brute =
-    resultSet(Similarity.knnBrute(emb, queries, "vec_id", "embedding", 5))
+    resultSet(Oracles.knnBrute(emb, queries, "vec_id", "embedding", 5))
 
   test("knnBrute returns exactly k per query, self excluded") {
     assert(brute.size == 50)
@@ -30,7 +30,7 @@ class SimilaritySpec extends SparkSuite {
     val agg = Similarity.knnBruteAgg(emb, queries, "vec_id", "embedding", 5)
       .collect().map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("rank"),
         r.getAs[Long]("cand_id"))).toSet
-    val win = Similarity.knnBrute(emb, queries, "vec_id", "embedding", 5)
+    val win = Oracles.knnBrute(emb, queries, "vec_id", "embedding", 5)
       .collect().map(r => (r.getAs[Long]("q_id"), r.getAs[Long]("rank"),
         r.getAs[Long]("cand_id"))).toSet
     assert(agg == win)

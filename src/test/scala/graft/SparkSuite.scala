@@ -22,6 +22,24 @@ trait SparkSuite extends AnyFunSuite {
     .getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Jobs `body` runs, counted by a listener on the fixture session. */
+  protected def jobsIn[T](body: => T): (T, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+      (out, jobs.get())
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
 }
 
 /** One temp root per suite, named `rootName`, removed when the suite

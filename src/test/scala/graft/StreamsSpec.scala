@@ -1084,6 +1084,61 @@ class StreamsSpec extends SparkSuite with SuiteTempDirs {
       spark, base, Seq("band", "band_hash")).drop()
   }
 
+  test("knn fold starts over a band location left without data files") {
+    // two states a band generation's location can be left in with no
+    // data file: a crash inside its first append (only the committer's
+    // _temporary, holding a task it had committed) and appends of
+    // empty batches only (a zero-row bucketed write leaves _SUCCESS)
+    val emb = Tables.load(spark, sfDir, "embeddings")
+      .select(col("vec_id"), col("embedding"))
+    val srcDir = tmpDir("graft_p15_stale_src")
+    emb.repartition(3).write.mode("overwrite").parquet(srcDir)
+    val expect = graft.operators.Similarity
+      .knnGraphBucketed(emb, "vec_id", "embedding", k = 5)
+      .collect()
+      .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("rank"),
+        r.getAs[Long]("nbr_id")))
+      .toSet
+    for (leftover <- Seq("_temporary", "_SUCCESS")) {
+      val base = tmpDir("graft_p15_stale")
+      val loc = java.nio.file.Paths.get(base, "bands",
+        graft.streaming.BandState.tableName(base))
+      if (leftover == "_temporary") {
+        // a committed task's band rows, which must not reach the index
+        val task = loc.resolve("_temporary/0/task_000000000000_0000_m_000000")
+        graft.operators.Similarity.embBandTable(emb, "vec_id", "embedding")
+          .select("vec_id", "tbl", "bkt").coalesce(1)
+          .write.parquet(s"$base/seed")
+        java.nio.file.Files.createDirectories(task)
+        new java.io.File(s"$base/seed").listFiles()
+          .filter(_.getName.endsWith(".parquet"))
+          .foreach(f => java.nio.file.Files.move(f.toPath,
+            task.resolve(f.getName)))
+      } else {
+        java.nio.file.Files.createDirectories(loc)
+        java.nio.file.Files.write(loc.resolve("_SUCCESS"),
+          Array.emptyByteArray)
+      }
+      val stream = spark.readStream.schema(emb.schema)
+        .option("maxFilesPerTrigger", "1").parquet(srcDir)
+      val got = graft.streaming.Streams
+        .incrementalKnnGraph(stream, base, k = 5)
+        .collect()
+        .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("rank"),
+          r.getAs[Long]("nbr_id")))
+        .toSet
+      assert(got == expect, s"$leftover: graph diverges from batch: " +
+        s"extra=${(got -- expect).take(3)}, missing=${(expect -- got).take(3)}")
+      // the index holds exactly the streamed vectors' band rows
+      val bands = new graft.streaming.BandState(spark, base, Seq("tbl", "bkt"))
+      val stored = bands.scan().get
+      assert(stored.count() == stored.distinct().count() &&
+        stored.select("vec_id").distinct().count() == emb.count(),
+        s"$leftover: band index does not hold the streamed vectors once")
+      bands.drop()
+    }
+  }
+
   test("graph fold compacts mid-stream: pruned snapshot still yields exact s16 + d11") {
     // compactEvery=2 over 3 batches forces a compaction of the edge
     // state THROUGH the threshold-retaining prune — the
@@ -1139,11 +1194,17 @@ class StreamsSpec extends SparkSuite with SuiteTempDirs {
     val live = bands.liveTable
     assert(live.startsWith(s"${gen0}_c"),
       s"band generation pointer did not advance: $live")
-    assert(!spark.catalog.tableExists(gen0),
+    // the fold unregisters its generations when the drain ends, so
+    // the sweep shows on disk: generation 0's files are gone
+    assert(!spark.catalog.tableExists(gen0) &&
+      !new java.io.File(s"$base/bands/$gen0").exists(),
       "superseded band generation 0 was not dropped")
+    assert(new java.io.File(s"$base/bands/$live").exists(),
+      "live band generation has no files under the base")
     assert(bands.scan().get.count() > 0, "live band generation unreadable")
     bands.drop()
     assert(!spark.catalog.tableExists(live) &&
+      !new java.io.File(s"$base/bands").exists() &&
       !new java.io.File(s"$base/band_gen").exists(),
       "drop() left band generations or the pointer behind")
   }
@@ -1332,5 +1393,196 @@ class StreamsSpec extends SparkSuite with SuiteTempDirs {
     assert(got.count(_._1 == 1L) == 40, "above-threshold edges truncated")
     assert(got.count(_._1 == 2L) == 5, "straddling node must hold rank<=k")
     assert(got.count(_._1 == 3L) == 5, "below-threshold node is pure top-k")
+  }
+
+  /** Write `chunks` as single-file parquet inputs `chunkNN.parquet`
+    * under `dir`, with ascending modification times so the file
+    * source replays them in order; an empty chunk still lands as one
+    * file (its trigger is an empty batch). */
+  private def landChunks(chunks: Seq[org.apache.spark.sql.DataFrame],
+      dir: String): Unit =
+    chunks.zipWithIndex.foreach { case (chunk, i) =>
+      chunk.coalesce(1).write.mode("overwrite").parquet(s"$dir/c$i")
+      val f = new java.io.File(s"$dir/c$i").listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      val dst = new java.io.File(dir, f"chunk$i%02d.parquet")
+      java.nio.file.Files.move(f.toPath, dst.toPath)
+      assert(dst.setLastModified(1000000L * (i + 1)))
+    }
+
+  test("incremental clean equals the batch oracle on edge-case batches") {
+    import spark.implicits._
+    val benchText = "one two three four five six seven eight nine ten"
+    val bench = Seq((900L, benchText, "eval"))
+      .toDF("doc_id", "text", "source")
+    val hot = "zero one two three four five six seven eight"
+    def docs(rows: (java.lang.Long, String, String)*) =
+      rows.toDF("doc_id", "text", "source")
+    val chunks = Seq(
+      docs(
+        (null, "a document without an id but plenty of words in it", "web"),
+        // duplicate id, one copy contaminated: the id is dropped whole
+        (1L, hot, "web"), (1L, "a clean copy sharing the id of a hit", "web"),
+        // duplicate id, both clean with distinct texts: both kept
+        (2L, "first text of the second id with many more words", "web"),
+        (2L, "second text of the second id with other words", "books"),
+        // shorter than n tokens: no grams, never contaminated
+        (3L, "too short", "web"),
+        (4L, "  ONE two THREE four five six seven eight  ", "web"),
+        (5L, "shared text across batches for the fp rule", "web")),
+      docs(),
+      docs(
+        (6L, "too short", "books"),
+        (7L, "Shared text across batches for the fp rule", "books"),
+        (8L, "", "web"),
+        (9L, "x", "web")))
+    val corpus = chunks.reduce(_ unionByName _)
+    val srcDir = tmpDir("graft_p03_edge_src")
+    landChunks(chunks, srcDir)
+    val stream = spark.readStream.schema(corpus.schema)
+      .option("maxFilesPerTrigger", "1")
+      .option("pathGlobFilter", "chunk*.parquet").parquet(srcDir)
+    val base = tmpDir("graft_p03_edge")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id", "source", "fp").collect()
+        .map(r => (Option(r.get(0)), r.getString(1), r.getString(2))).toSet
+    val got = rows(graft.streaming.Streams.incrementalClean(stream, bench, base))
+    val flags = graft.operators.Dedup.decontaminate(
+      corpus, bench, col("doc_id"), col("text"), 8)
+    val clean = corpus.join(
+      flags.filter(col("n_overlap") === 0).select("doc_id"),
+      Seq("doc_id"), "left_semi")
+      .select(col("doc_id"), col("source"),
+        md5(lower(trim(col("text")))).as("fp"))
+    val w = Window.partitionBy("fp").orderBy("doc_id")
+    val expect = rows(clean.withColumn("rn", row_number().over(w))
+      .filter(col("rn") === 1))
+    assert(got == expect,
+      s"missing=${expect -- got} extra=${got -- expect}")
+    // the fixture exercises what it names
+    val ids = expect.flatMap(_._1)
+    assert(!ids.contains(1L) && !ids.contains(4L) && !ids.contains(7L) &&
+      expect.count(_._1.contains(2L)) == 2 && ids.contains(3L) &&
+      !ids.contains(6L) && ids.contains(8L), s"fixture drifted: $expect")
+    val parts = new java.io.File(s"$base/parts").listFiles()
+      .map(_.getName).filter(_.startsWith("b"))
+    assert(parts.length == 3, s"expected one part per batch: ${parts.toSeq}")
+  }
+
+  test("a batch above the spread threshold is spread, with the same answers") {
+    // the sf0.1 tables are one file each above the threshold (~600 KB
+    // of documents, ~800 KB of embeddings), the sf0.001 documents one
+    // file below it (~64 KB)
+    val sf01 = s"${new java.io.File(sfDir).getParent}/sf0.1"
+    def spreads(df: org.apache.spark.sql.DataFrame) = Streams
+      .spreadLarge(df, 4).queryExecution.optimizedPlan.toString
+      .contains("Repartition")
+    val docs = spark.read.parquet(s"$sf01/documents.parquet")
+    assert(spreads(docs) &&
+      spreads(spark.read.parquet(s"$sf01/embeddings.parquet")) &&
+      !spreads(spark.read.parquet(s"$sfDir/documents.parquet")),
+      "the spread gate does not split the test tables as documented")
+    // one-batch folds over the whole table: the spread path end to end
+    val corpus = docs.filter(col("doc_id") % 20 =!= 0)
+    val bench = docs.filter(col("doc_id") % 20 === 0)
+    val got = Streams.incrementalClean(
+      graft.streaming.Fold.tableStream(spark, sf01, "documents")
+        .filter(col("doc_id") % 20 =!= 0), bench, tmpDir("graft_p03_large"))
+      .select("doc_id", "source", "fp").collect().map(r =>
+        (r.getLong(0), r.getString(1), r.getString(2))).toSet
+    val flags = graft.operators.Dedup.decontaminate(
+      corpus, bench, col("doc_id"), col("text"), 8)
+    val w = Window.partitionBy("fp").orderBy("doc_id")
+    val expect = corpus.join(
+      flags.filter(col("n_overlap") === 0).select("doc_id"),
+      Seq("doc_id"), "left_semi")
+      .select(col("doc_id"), col("source"),
+        md5(lower(trim(col("text")))).as("fp"))
+      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+      .toSet
+    assert(got == expect,
+      s"p03 missing=${(expect -- got).take(3)} extra=${(got -- expect).take(3)}")
+    val emb = Tables.load(spark, sf01, "embeddings")
+      .select(col("vec_id"), col("embedding"))
+    def edges(df: org.apache.spark.sql.DataFrame) =
+      df.select("vec_id", "rank", "nbr_id").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    val graph = edges(Streams.incrementalKnnGraph(
+      graft.streaming.Fold.tableStream(spark, sf01, "embeddings")
+        .select(col("vec_id"), col("embedding")), tmpDir("graft_p15_large")))
+    val graphExpect = edges(graft.operators.Similarity
+      .knnGraphBucketed(emb, "vec_id", "embedding", k = 5))
+    assert(graph == graphExpect,
+      s"p15 extra=${(graph -- graphExpect).take(3)}, " +
+        s"missing=${(graphExpect -- graph).take(3)}")
+  }
+
+  /** Mean and max jobs per micro-batch of the `graft_<key>` fold run
+    * by `body`. A job belongs to the fold's trigger by the local
+    * properties the stream thread sets (and the folds' helper threads
+    * inherit): the job description starts with the query name, and
+    * the batch id names the trigger. */
+  private def triggerJobs(key: String)(body: => Unit): (Double, Int) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val perBatch = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        def prop(k: String) =
+          Option(e.properties).flatMap(p => Option(p.getProperty(k)))
+        if (prop("spark.job.description").exists(_.startsWith(s"graft_${key}_")))
+          prop("streaming.sql.batchId").foreach(b =>
+            perBatch.merge(b, 1, (a: Integer, c: Integer) => a + c))
+      }
+    }
+    org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    val counts =
+      perBatch.values().toArray.map(_.asInstanceOf[Integer].intValue)
+    assert(counts.length == 3, s"expected 3 triggers, saw ${perBatch}")
+    (counts.sum.toDouble / counts.length, counts.max)
+  }
+
+  test("a steady trigger of the clean and k-NN folds runs a bounded number of jobs") {
+    val docs = Tables.load(spark, sfDir, "documents")
+    val corpus = docs.filter(col("doc_id") % 20 =!= 0)
+    val bench = docs.filter(col("doc_id") % 20 === 0)
+    val n = corpus.select(max(col("doc_id"))).head.getLong(0)
+    val docDir = tmpDir("graft_jobs_p03_src")
+    landChunks((0 until 3).map(i => corpus.filter(
+      col("doc_id") > n * i / 3 && col("doc_id") <= n * (i + 1) / 3)), docDir)
+    val (cleanMean, cleanMax) = triggerJobs("p03") {
+      Streams.incrementalClean(spark.readStream.schema(corpus.schema)
+        .option("maxFilesPerTrigger", "1")
+        .option("pathGlobFilter", "chunk*.parquet").parquet(docDir),
+        bench, tmpDir("graft_jobs_p03"))
+    }
+    val emb = Tables.load(spark, sfDir, "embeddings")
+      .select(col("vec_id"), col("embedding"))
+    val m = emb.select(max(col("vec_id"))).head.getLong(0)
+    val vecDir = tmpDir("graft_jobs_p15_src")
+    landChunks((0 until 3).map(i => emb.filter(
+      col("vec_id") > m * i / 3 && col("vec_id") <= m * (i + 1) / 3)), vecDir)
+    val (knnMean, knnMax) = triggerJobs("p15") {
+      Streams.incrementalKnnGraph(spark.readStream.schema(emb.schema)
+        .option("maxFilesPerTrigger", "1")
+        .option("pathGlobFilter", "chunk*.parquet").parquet(vecDir),
+        tmpDir("graft_jobs_p15"))
+    }
+    info(f"jobs per trigger: clean $cleanMean%.2f (max $cleanMax), " +
+      f"knn $knnMean%.2f (max $knnMax)")
+    // pinned at the counts this layout runs (the flag-table clean
+    // trigger with per-source schema reads ran up to 13, the k-NN
+    // trigger with its sizing count up to 19): clean = benchmark-gram
+    // and hits broadcasts, fingerprint shuffle, state broadcast, part
+    // write;
+    // k-NN = the one eager count, band and vector broadcasts, cell
+    // shuffle, prune shuffle, part write, vector and band appends
+    assert(cleanMax <= 5, s"a clean trigger ran $cleanMax jobs")
+    assert(knnMax <= 8, s"a k-NN trigger ran $knnMax jobs")
   }
 }
