@@ -269,44 +269,20 @@ object SparkEntry {
       meta: SparkSession, path: String): DataFrame =
     meta.read.parquet(path).agg(count(lit(1)).as("n_rows"))
 
-  /** Snapshot fingerprint of a table path: the (name, length, mtime)
-    * triple of every data file under it — kept as the FULL
-    * concatenated string, not a hash: a 32-bit hash of the entry list
-    * left a (remote) collision window where a same-file-count rewrite
-    * could serve a stale count (VERDICT r14 "What's wrong" #3); the
-    * verbatim key is a few hundred bytes per table and collision-free
-    * by construction. A rewrite changes part-file names (job UUIDs)
-    * and lengths, an append adds names — any content change moves the
-    * fingerprint. Cost is ONE filesystem LIST per table per status
-    * call: metadata-only, vs re-planning a footer-count query (~80 ms
-    * of DSv2 planning per table at every scale — the q16 floor this
-    * cache removes). */
-  private[graft] def snapshotFingerprint(
-      s: SparkSession, path: String): String = {
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(s.sessionState.newHadoopConf())
-    val st = fs.getFileStatus(p)
-    val entries =
-      if (st.isDirectory)
-        fs.listStatus(p).filterNot(_.getPath.getName.startsWith("_"))
-      else Array(st)
-    entries.map(e =>
-        s"${e.getPath.getName}:${e.getLen}:${e.getModificationTime}")
-      .sorted.mkString("|")
-  }
+  // path → (file listing, row count). Status calls re-pay only the
+  // LIST; the footer-count query (and its per-table DSv2 planning
+  // constant, ~80 ms at every scale) runs once per snapshot version.
+  private val footerCountCache = new java.util.concurrent
+    .ConcurrentHashMap[String, (Option[Seq[(String, Long, Long)]], Long)]
 
-  // path → (snapshot fingerprint, row count). Status calls re-pay
-  // only the LIST; the footer-count query (and its per-table DSv2
-  // planning constant) runs once per snapshot version.
-  private val footerCountCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Long)]
-
-  /** Footer row count of `path`, cached against its snapshot
-    * fingerprint — a changed file set recounts, an unchanged one is
-    * a pure metadata read. */
+  /** Footer row count of `path`, cached against its file listing
+    * ([[Tables.fileListing]], the verbatim (path, length, mtime) list
+    * — collision-free, unlike a hash of it) — a changed file set
+    * recounts, an unchanged one is a pure metadata read. */
   private[graft] def cachedFooterCount(
       s: SparkSession, path: String): Long = {
-    val fp = snapshotFingerprint(s, path)
+    val fp = Tables.fileListing(new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(s.sessionState.newHadoopConf()), path)
     val hit = footerCountCache.get(path)
     if (hit != null && hit._1 == fp) hit._2
     else {
@@ -2952,7 +2928,8 @@ object SparkEntry {
     * counts folded over a document stream as a mergeable monoid
     * ([[graft.streaming.Streams.incrementalLmModel]]): the final
     * model equals batch training with no corpus rescan, chunking-
-    * invariant (replay spec in StreamsSpec). */
+    * invariant (replay spec in StreamsSpec). State: one LsmState,
+    * each batch's bigram delta appended as a part. */
   private def p04(s: SparkSession, dir: String): DataFrame =
     graft.streaming.Streams.streamingLmModel(s, dir)
 
@@ -2973,7 +2950,8 @@ object SparkEntry {
     * behind both t13's stopword list and t08's idf, maintained at
     * ingest with no corpus rescan. Finished as the t13 stopword
     * report, which must reproduce the batch-derived list exactly
-    * (replay spec; t13's DuckDB oracle form). */
+    * (replay spec; t13's DuckDB oracle form). State: two LsmStates
+    * (df rows, doc count), each batch's deltas appended as parts. */
   private def p07(s: SparkSession, dir: String): DataFrame =
     graft.streaming.Streams.streamingStopwords(s, dir)
 
@@ -3073,7 +3051,7 @@ object SparkEntry {
     * batch's lateness computed against the stored per-type running
     * max, then monoid-folded; snapshot equals the batch audit under
     * ingest-ordered chunking (ordered-replay spec). Shares e18's
-    * DuckDB oracle. */
+    * DuckDB oracle. State: one LsmState of per-batch per-type deltas. */
   private def p13(s: SparkSession, dir: String): DataFrame =
     graft.streaming.Streams.streamingDisorderProfile(s, dir)
 
@@ -3084,7 +3062,8 @@ object SparkEntry {
     * so the snapshot equals the batch group table under any chunking
     * (replay spec); payload bytes hashed once at ingest, never
     * rescanned, never shuffled. Finished as m05's verdict table
-    * (shares its DuckDB oracle). */
+    * (shares its DuckDB oracle). State: one LsmState of per-batch
+    * signature deltas. */
   private def p12(s: SparkSession, dir: String): DataFrame =
     graft.streaming.Streams.streamingPayloadDedup(s, dir)
 
@@ -3096,7 +3075,7 @@ object SparkEntry {
     * the hashing trick — so unlike t21's vocabulary LM it broadcasts
     * for map-side scoring of new docs. Finished as the deployable
     * smoothed-ratio model (t22's arithmetic at read time; replay
-    * spec). */
+    * spec). State: one LsmState of per-batch bucket deltas. */
   private def p11(s: SparkSession, dir: String): DataFrame =
     graft.streaming.Streams.streamingDsirModel(s, dir)
 

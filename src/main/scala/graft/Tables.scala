@@ -72,4 +72,23 @@ object Tables {
     * DuckDB catalog, hangarbay/api.py:379 list_tables). */
   def registerAll(spark: SparkSession, dir: String): Unit =
     names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
+
+  /** (path, length, modification time) of every file under `path`,
+    * recursively (`path` itself when it is a file), sorted; None when
+    * `path` does not exist. The one driver-side fingerprint of a
+    * table's files — a Hadoop FileSystem listing, no Spark job, kept
+    * verbatim (no lossy digest): a rewrite changes part-file names
+    * and lengths and an append adds names, so any content change
+    * moves it. */
+  def fileListing(fs: org.apache.hadoop.fs.FileSystem,
+      path: String): Option[Seq[(String, Long, Long)]] =
+    try {
+      val it = fs.listFiles(new org.apache.hadoop.fs.Path(path), true)
+      val files = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      Some(files.result().sorted)
+    } catch { case _: java.io.FileNotFoundException => None }
 }

@@ -33,21 +33,16 @@ import graft.plans.PqCodebook
   * [[graft.plans.TopKPairs]] / [[graft.plans.ThresholdTopKPairs]];
   * the banded engines score within-bucket pairs in one partition
   * scorer over primitive arrays (the band-cell scorer below).
+  * Float-vector norms are the native self dot (`l2normNative`).
   * Higher-order functions remain, each an interpreted lambda per
   * element (Spark evaluates them as CodegenFallback), in: the banded
-  * tables' norms and int8 quantization, the cell-tiling sequences,
-  * [[quantizedKnn]], the MIPS paths, [[centroids]], and the
-  * [[dot]]/[[cosineHof]] portability baselines.
+  * tables' int8 quantization, the cell-tiling sequences,
+  * [[quantizedKnn]], the MIPS augmentation and [[centroids]].
   */
 object Similarity {
 
   /** Elementwise double cast (float parquet vectors → stable math). */
   private def asDouble(c: Column): Column = transform(c, _.cast("double"))
-
-  /** HOF dot product (zip_with/aggregate) — portability fallback;
-    * [[dotNative]] is the codegen path used in hot loops. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, _ * _), lit(0.0), _ + _)
 
   /** Fused-codegen dot product ([[graft.plans.DotProduct]]): one JIT
     * loop instead of an interpreted lambda per element. */
@@ -57,28 +52,21 @@ object Similarity {
       GraftBridge.expression(a), GraftBridge.expression(b)))
   }
 
-  def l2norm(a: Column): Column =
-    sqrt(aggregate(a, lit(0.0), (acc, x) => acc + x * x))
+  /** L2 norm as the native self dot product: the same left-to-right
+    * double accumulation (float elements widened first) and NULL rules
+    * as the `aggregate` form, in one codegen loop. */
+  private def l2normNative(v: Column): Column = sqrt(dotNative(v, v))
 
   /** Cosine similarity via the native codegen'd
     * [[graft.plans.CosineSim]] expression: one fused loop, stays in
     * whole-stage codegen. Double-precision left-to-right
-    * accumulation — numerically identical to [[cosineHof]] and to
-    * DuckDB's list_cosine_similarity on DOUBLE[]. */
+    * accumulation — numerically identical to the zip_with/aggregate
+    * composition (the test-side oracle) and to DuckDB's
+    * list_cosine_similarity on DOUBLE[]. */
   def cosine(a: Column, b: Column): Column = {
     import org.apache.spark.sql.GraftBridge
     GraftBridge.column(graft.plans.CosineSim(
       GraftBridge.expression(a), GraftBridge.expression(b)))
-  }
-
-  /** The same computation composed from built-in higher-order
-    * functions (zip_with + aggregate): three array traversals through
-    * lambda dispatch. Kept as the portability fallback and the
-    * benchmark baseline for the native expression. */
-  def cosineHof(a: Column, b: Column): Column = {
-    val ad = asDouble(a)
-    val bd = asDouble(b)
-    dot(ad, bd) / (l2norm(ad) * l2norm(bd))
   }
 
   /** Top-k per group via the bounded-heap aggregate
@@ -289,7 +277,7 @@ object Similarity {
     // stops re-deriving both norms per candidate (r15, guide §1.2 —
     // the norms were 2/3 of every pair's fused-loop arithmetic).
     v.select(col("vec_id"), col("v"),
-        l2norm(transform(col("v"), _.cast("double"))).as("__n"),
+        l2normNative(col("v")).as("__n"),
         posexplode(
           hyperplaneBuckets(col("v"), numTables, planesPerTable, dim, seed)))
       .select(col("vec_id"), col("v"), col("__n"), col("pos").as("tbl"),
@@ -776,7 +764,7 @@ object Similarity {
               round(x.cast("double") * 127.0 / col("__ma")))))
             .otherwise(lit(0.0)).cast("byte")).as("qv"),
         (col("__ma") / 127.0).as("__s"),
-        l2norm(transform(col("v"), _.cast("double"))).as("__n"),
+        l2normNative(col("v")).as("__n"),
         posexplode(
           hyperplaneBuckets(col("v"), numTables, planesPerTable, dim, seed)))
       .select(col("vec_id"), col("qv"), col("__s"), col("__n"),
@@ -951,10 +939,10 @@ object Similarity {
       seed: Long = 42L,
       probeBits: Int = 2): DataFrame = {
     val c0 = corpus.select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
-    val mRow = broadcast(c0.agg(max(l2norm(col("v"))).as("__m")))
+    val mRow = broadcast(c0.agg(max(l2normNative(col("v"))).as("__m")))
     val caug = c0.crossJoin(mRow).select(col("id"),
       concat(col("v"), array(sqrt(greatest(lit(0.0),
-        col("__m") * col("__m") - dot(col("v"), col("v")))))).as("va"))
+        col("__m") * col("__m") - dotNative(col("v"), col("v")))))).as("va"))
     val qaug = queries
       .select(col(idCol).as("id"), asDouble(col(vecCol)).as("v"))
       .select(col("id"), concat(col("v"), array(lit(0.0))).as("va"))
@@ -1369,10 +1357,6 @@ object Similarity {
   private def adcSum(table: Column, numSub: Int, codebookK: Int): Column =
     (0 until numSub).map(s =>
       element_at(table, col(s"__c$s") + (s * codebookK + 1))).reduce(_ + _)
-
-  /** L2 norm as the native self dot product: the same left-to-right
-    * double accumulation as the `aggregate` form, in one codegen loop. */
-  private def l2normNative(v: Column): Column = sqrt(dotNative(v, v))
 
   /** KNN over int8-quantized embeddings with exact re-scoring — the
     * memory-bound scale path: a 100 TB float corpus is 25 TB at int8,

@@ -14,8 +14,8 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   *
   * Math parity: accumulates left-to-right in doubles and returns
   * dot / (sqrt(na) * sqrt(nb)) — bit-identical to the
-  * zip_with/aggregate composition it replaces
-  * ([[graft.operators.Similarity.cosineHof]]), so oracle-checked
+  * zip_with/aggregate composition it replaces (kept as the test-side
+  * oracle `Oracles.cosineHof`), so oracle-checked
   * rankings are unchanged. Parity includes the edge cases: a NULL
   * element nulls the result, and arrays of UNEQUAL length return NULL
   * (zip_with pads the shorter side with NULLs, which nulls the HOF

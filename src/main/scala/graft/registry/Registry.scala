@@ -32,8 +32,8 @@ import graft.operators.Relational
   * Like the reference's one `load_data()` then many calls, an
   * instance resolves each published table and derived view once per
   * snapshot: the lazy frame is kept and reused while a driver-side
-  * listing of the table's files (path, length, modification time; no
-  * Spark job) is unchanged, and re-resolved on the next call after a
+  * listing of the table's files ([[graft.Tables.fileListing]]: path,
+  * length, modification time; no Spark job) is unchanged, and re-resolved on the next call after a
   * rewrite (e.g. [[RegistryNormalize.normalizeIncremental]]). Only
   * plans are kept — no cached data, files or threads — and only for
   * the instance's lifetime.
@@ -90,25 +90,12 @@ class Registry(
   private lazy val fs = new Path(dataDir)
     .getFileSystem(spark.sessionState.newHadoopConf())
 
-  /** (path, length, modification time) of every file under `dir`,
-    * sorted; None when `dir` does not exist. */
-  private def listing(dir: String): Option[Seq[(String, Long, Long)]] =
-    try {
-      val it = fs.listFiles(new Path(dir), true)
-      val files = Seq.newBuilder[(String, Long, Long)]
-      while (it.hasNext) {
-        val f = it.next()
-        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
-      }
-      Some(files.result().sorted)
-    } catch { case _: java.io.FileNotFoundException => None }
-
   /** A published table, re-read only when its files changed since the
     * last call; a missing table raises what `spark.read.parquet`
     * raises. */
   def table(name: String): DataFrame = {
     val dir = s"$dataDir/$name.parquet"
-    listing(dir) match {
+    graft.Tables.fileListing(fs, dir) match {
       case Some(files) => memo(name, files)(spark.read.parquet(dir))
       case None => spark.read.parquet(dir)
     }

@@ -5,9 +5,14 @@ import org.apache.spark.sql.types.StructType
 
 
 /** LSM-shaped durable fold state for `foreachBatch` pipelines — the
-  * storage half of every corpus-sized incremental fold here
+  * storage half of every incremental fold here: the corpus-sized ones
   * (p03/p06/p14/p15/p16/p17, e14's upsert, p08-p10's verdict
-  * accumulators, p05's IVF index).
+  * accumulators, p05's IVF index) and the small models (p04's LM,
+  * p07's document frequencies, p11's DSIR counts, p12's signatures,
+  * p13's disorder profile, p19's suite) alike — the one store whose
+  * `_latest` pointer a fold moves. (State bases written by the
+  * retired per-trigger `v<id>/model` snapshot layout of the small
+  * models are not read: start those folds on a fresh base.)
   *
   * WHY: the naive fold (union prior snapshot with the batch delta,
   * `mode("overwrite")` the whole thing) writes O(corpus) per
@@ -96,10 +101,8 @@ final class LsmState(
     spark: SparkSession,
     root: String,
     fold: DataFrame => DataFrame,
-    compactEvery: Int = 8,
-    retain: Int = 0) {
+    compactEvery: Int = 8) {
   require(compactEvery >= 1, s"compactEvery must be >= 1: $compactEvery")
-  require(retain >= 0, s"retain must be >= 0: $retain")
 
   // all control-file IO (pointer, manifest, part listing/cleanup)
   // goes through the Hadoop FileSystem resolved from the root's
@@ -282,11 +285,10 @@ final class LsmState(
       // O(state x versions) amplification a long-lived 100 TB fold
       // cannot afford. Safe for the fold itself (views resolve
       // through the pointer alone and the compacted frame was fully
-      // materialized by the write above); a deployment with DETACHED
-      // readers that hold a resolved snapshot across compactions
-      // sets retain >= 1 for a grace window.
-      StateIO.retireVersions(fs, root,
-        out.substring(out.lastIndexOf('/') + 1), retain)
+      // materialized by the write above); a DETACHED reader must not
+      // hold a resolved snapshot across a compaction (freshness
+      // contract above).
+      StateIO.retireVersions(fs, root, out.substring(out.lastIndexOf('/') + 1))
     }
 
   /** Final folded state — what callers hand to readers once the
@@ -388,24 +390,13 @@ private[graft] object StateIO {
     name.startsWith("v") && id.nonEmpty && id.forall(_.isDigit)
   }
 
-  private def versionId(name: String): Long =
-    name.stripSuffix("c").drop(1).toLong
-
-  /** The shared retirement sweep: delete versioned snapshot dirs
-    * under `dir` except `keep` and the `retain` newest superseded
-    * ones. retain=0 (the fold-owned default) keeps only the
-    * pointed-at snapshot; retain>0 leaves a grace window for
-    * DETACHED readers — a consumer that resolved the pointer and is
-    * still scanning the previous snapshot when the next compaction
-    * lands survives retain >= 1. Idempotent — callers run it after
-    * their pointer move, and a crash before it just leaves the stale
-    * dirs for the next sweep. */
-  def retireVersions(
-      fs: FileSystem, dir: String, keep: String, retain: Int = 0): Unit =
+  /** The shared retirement sweep: delete every versioned snapshot dir
+    * under `dir` except `keep`, the pointed-at one. Idempotent —
+    * callers run it after their pointer move, and a crash before it
+    * just leaves the stale dirs for the next sweep. */
+  def retireVersions(fs: FileSystem, dir: String, keep: String): Unit =
     listNames(fs, dir)
       .filter(n => n != keep && isVersionDir(n))
-      .sortBy(versionId)
-      .dropRight(retain)
       .foreach(n => delete(fs, s"$dir/$n"))
 }
 
@@ -562,7 +553,7 @@ private[graft] final class BandState(
     * own pointer move skips (the pointer already names its
     * generation). Bucketing is preserved, so the zero-index-side-
     * exchange probe plan is unchanged across generations. */
-  def maybeCompact(id: Long, compactEvery: Int = 8, retain: Int = 0): Unit =
+  def maybeCompact(id: Long, compactEvery: Int = 8): Unit =
     if ((id + 1) % compactEvery == 0) {
       val cur = liveTable
       val next = s"${table}_c$id"
@@ -578,16 +569,9 @@ private[graft] final class BandState(
           .sortBy(bucketCols.head, bucketCols.drop(1): _*)
           .mode("overwrite").option("path", location(next)).saveAsTable(next)
         StateIO.writeStringAtomic(spark, fs, ptrFile, next)
-        // retain, like LsmState's: newest superseded generations
-        // survive as a grace window for detached readers
-        generations().filterNot(_ == next)
-          .sortBy(genId).dropRight(retain)
-          .foreach(dropGeneration)
+        generations().filterNot(_ == next).foreach(dropGeneration)
       }
     }
-
-  private def genId(name: String): Long =
-    if (name == table) -1L else name.drop(table.length + 2).toLong
 
   /** Every generation of this fold's band table: catalog entries
     * UNION generation directories on disk — under the base, and in

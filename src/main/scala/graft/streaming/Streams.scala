@@ -15,11 +15,13 @@ import org.apache.spark.sql.types.StructType
   *     on the failure path;
   *   - [[run]]: the `foreachBatch` wiring — checkpoint at
   *     `$base/ckpt`, query named `graft_<key>_<uuid>`;
+  *   - [[appendFold]]: [[run]] for a fold whose whole state is one
+  *     [[LsmState]];
   *   - [[driver]]/[[tempBase]]/[[tableStream]]: the driver-side temp
   *     base, the parquet-table file source, and the stream partition
-  *     scope of the `streamingX` drivers;
-  *   - [[latest]]/[[snapshot]]: the `_latest` pointer of the
-  *     small-state snapshot folds. */
+  *     scope of the `streamingX` drivers.
+  * Durable fold state lives in [[LsmState]] (and [[BandState]] for
+  * band indexes); the harness keeps none of its own. */
 private[graft] object Fold {
 
   /** Start `w`, drain everything its source has available, stop. The
@@ -119,17 +121,6 @@ private[graft] object Fold {
     spark.conf.set(key, n.toString)
     try body finally spark.conf.set(key, prev)
   }
-
-  /** The snapshot a small-state fold under `base` last published
-    * (its `_latest` pointer), if any. */
-  def latest(spark: SparkSession, base: String): Option[String] =
-    StateIO.readString(StateIO.fs(spark, base), s"$base/_latest")
-      .map(_.trim).filter(_.nonEmpty)
-
-  /** [[latest]], required: a drained fold that never published. */
-  def snapshot(spark: SparkSession, base: String): String =
-    latest(spark, base).getOrElse(
-      sys.error("no snapshot: stream produced no batches and none recorded"))
 }
 
 
@@ -141,6 +132,11 @@ private[graft] object Fold {
   *     (swap the sink, drop the drain);
   *   - a checkpointed query keeps its checkpoint at `$base/ckpt`,
   *     beside the fold state it maintains under `base`;
+  *   - every `foreachBatch` fold keeps that state in ONE store kind:
+  *     [[LsmState]] (each batch's delta appended as a part, compacted
+  *     every `compactEvery` batches through the model's merge — the
+  *     small-model folds p04/p07/p11/p12/p13 included), plus
+  *     [[BandState]] for the band indexes;
   *   - `foreachBatch` folds are named `graft_<key>_<uuid>` (`p03`,
   *     `p15`, …): listeners and the benchmark key triggers on that
   *     prefix; memory-sink queries are named by their result table;
@@ -259,50 +255,6 @@ object Streams {
         }))
       futures.foreach(_.get()) // rethrows the first failure
     } finally pool.shutdown()
-  }
-
-  /** Publish batch `id`'s snapshot version: run `write` into
-    * `out = $base/v<id>`, then move the `$base/_latest` pointer —
-    * UNLESS the pointer already names `out`. That
-    * happens exactly when the batch replays after its pointer move
-    * but before its checkpoint commit (the crash window every
-    * foreachBatch fold here shares): the fold is already durable, so
-    * the replay must be a NO-OP — re-running it would read from and
-    * overwrite the published path (Spark rejects that) and, for
-    * count-monoid folds, double-count the replayed batch. Because
-    * every fold is lazy until `write` fires, skipping the write
-    * skips the whole recompute.
-    *
-    * Used by the SMALL-state folds only (p04/p07/p11/p12/p13:
-    * |alphabet²|-, vocabulary-, dim-, |signatures|- or |types|-row
-    * models) where rewriting the snapshot per batch IS O(batch)-ish
-    * because the state is bounded. Corpus-sized state goes through
-    * [[LsmState]], whose per-batch writes are O(batch) by
-    * construction. */
-  private def publishSnapshot(
-      spark: SparkSession, base: String, id: Long, retain: Int = 0)(
-      write: String => Unit): Unit = {
-    val (latestFile, out) = (s"$base/_latest", s"$base/v$id")
-    val fs = StateIO.fs(spark, latestFile)
-    val current = StateIO.readString(fs, latestFile)
-      .map(_.trim).getOrElse("")
-    if (current != out) {
-      write(out)
-      StateIO.writeStringAtomic(spark, fs, latestFile, out)
-    }
-    // retire superseded model snapshots (the same sweep LsmState's
-    // compaction runs): each is small, but one dir PER TRIGGER is
-    // O(batches) namespace growth — a year of 1-minute triggers is
-    // ~500k dirs on whatever filesystem holds the state. write(out)
-    // fully materialized the new snapshot (reading the predecessor
-    // happened during that write), so the predecessor is dead — to
-    // the FOLD. A deployment with DETACHED readers (a consumer that
-    // resolved the pointer and is still scanning the previous
-    // snapshot when this trigger lands) sets retain >= 1 for a grace
-    // window, the same escape hatch LsmState documents. The sweep
-    // runs on the skip path too: a batch replaying after its own
-    // pointer move still reaps whatever a pre-crash run left.
-    StateIO.retireVersions(fs, base, s"v$id", retain)
   }
 
   /** Load the events stream. Schema-adaptive like [[graft.Tables.load]]:
@@ -658,11 +610,12 @@ object Streams {
 
 
   // ---------------------------------------------------------------
-  // Per-batch MODEL DELTAS, shared by the standalone folds
-  // (p04/p07/p11/p12/p16) and the one-pass model suite (p19) so the
-  // two paths can never drift apart (the BandingConfig lesson).
-  // Each is a pure function of the batch frame: the monoid fold over
-  // deltas reproduces the batch model under any chunking.
+  // Per-batch MODEL DELTAS and their MERGES, shared by the standalone
+  // folds (p04/p07/p11/p12/p16) and the one-pass model suite (p19) so
+  // the two paths can never drift apart (the BandingConfig lesson).
+  // Each delta is a pure function of the batch frame; each merge is
+  // the monoid its model's LsmState folds the parts through, so the
+  // folded deltas reproduce the batch model under any chunking.
   // ---------------------------------------------------------------
 
   /** t12's char-bigram counts (length guard: sequence(1, 0) counts
@@ -681,6 +634,10 @@ object Streams {
     df.select(col("doc_id"), explode(array_distinct(
         graft.functions.TextFns.tokensLower(col("text")))).as("token"))
       .groupBy("token").agg(count(lit(1)).as("df"))
+
+  /** The batch's document count, the `n` beside [[dfDelta]]. */
+  private[graft] def countDelta(df: DataFrame): DataFrame =
+    df.agg(count(lit(1)).as("n"))
 
   /** t22's hashed-bigram target/raw counts (DSIR features). */
   private[graft] def dsirDelta(
@@ -717,6 +674,41 @@ object Streams {
       .agg(min(struct((-col("quality")).as("nq"),
         col("doc_id").as("id"))).as("m"))
 
+  /** [[lmDelta]]'s merge: counts summed per bigram. */
+  private[graft] def lmFold(m: DataFrame): DataFrame =
+    m.groupBy("bg").agg(sum(col("nb")).as("nb"))
+
+  /** [[dfDelta]]'s merge: document frequencies summed per token. */
+  private[graft] def dfFold(m: DataFrame): DataFrame =
+    m.groupBy("token").agg(sum(col("df")).as("df"))
+
+  /** [[countDelta]]'s merge: one row, the counts summed. */
+  private[graft] def countFold(m: DataFrame): DataFrame =
+    m.agg(sum(col("n")).as("n"))
+
+  /** [[dsirDelta]]'s merge: target and raw counts summed per bucket. */
+  private[graft] def dsirFold(m: DataFrame): DataFrame =
+    m.groupBy("b").agg(sum(col("ct")).as("ct"), sum(col("cr")).as("cr"))
+
+  /** [[sigDelta]]'s merge: copies summed, keeper the least doc id. */
+  private[graft] def sigFold(m: DataFrame): DataFrame =
+    m.groupBy("fp").agg(sum(col("n_copies")).as("n_copies"),
+      min(col("keeper")).as("keeper"))
+
+  /** [[keeperChamps]]' merge: the least (-quality, doc_id) struct. */
+  private[graft] def champFold(m: DataFrame): DataFrame =
+    m.groupBy("fp").agg(min(col("m")).as("m"))
+
+  /** p13's per-type disorder merge: event-time and lateness maxima,
+    * counts and lateness summed. */
+  private[graft] def disorderFold(m: DataFrame): DataFrame =
+    m.groupBy("event_type").agg(
+      max(col("max_us")).as("max_us"),
+      sum(col("n_events")).as("n_events"),
+      sum(col("n_late")).as("n_late"),
+      max(col("max_disorder_us")).as("max_disorder_us"),
+      sum(col("total_disorder_us")).as("total_disorder_us"))
+
   /** p04: incremental LM model maintenance — the char-bigram counts
     * behind t12's fluency score folded over a document stream via
     * foreachBatch. Bigram counts form a commutative monoid (merge =
@@ -725,25 +717,15 @@ object Streams {
     * the whole corpus with no rescan, regardless of micro-batch
     * chunking. At 100 TB the corpus scan IS the training cost — this
     * is the shape that amortizes it across ingest days. State is
-    * ≤ alphabet² rows (versioned dirs + atomic pointer, as e14). */
+    * the [[LsmState]] at `base` merged by [[lmFold]]: each batch
+    * appends its ≤ alphabet²-row delta as a part. */
   def incrementalLmModel(stream: DataFrame, base: String): DataFrame = {
-    val spark = stream.sparkSession
-    Fold.run(stream, base, "p04") { (batch, id) =>
-      val big = lmDelta(spread(batch))
-      val merged = Fold.latest(spark, base) match {
-        case None => big
-        case Some(p) =>
-          spark.read.parquet(p).unionByName(big)
-            .groupBy("bg").agg(sum(col("nb")).as("nb"))
-      }
-      // the model is bounded by alphabet² rows at ANY corpus scale,
-      // so a single snapshot file is correct even at 100 TB — and
-      // avoids an 8-tiny-file write+list+read roundtrip per batch
-      publishSnapshot(spark, base, id) { out =>
-        merged.coalesce(1).write.mode("overwrite").parquet(out)
-      }
-    }
-    spark.read.parquet(Fold.snapshot(spark, base))
+    val st = new LsmState(stream.sparkSession, base, lmFold)
+    // a delta is bounded by alphabet² rows at ANY corpus scale, so a
+    // single part file is correct even at 100 TB — and avoids an
+    // 8-tiny-file write+list+read roundtrip per batch
+    Fold.appendFold(stream, base, "p04", st)((batch, _) =>
+      lmDelta(spread(batch)).coalesce(1))
   }
 
   /** [[incrementalLmModel]] over the documents table, finished with
@@ -769,30 +751,21 @@ object Streams {
     * behind BOTH the corpus-derived stopword list (t13: df/N > 0.5)
     * and TF-IDF's idf (t08): maintain it once at ingest, derive
     * either report without a corpus rescan. State is vocabulary-
-    * sized: (token, df) rows + a one-row doc count (versioned dirs +
-    * atomic pointer, as p04). */
+    * sized: two [[LsmState]]s, the (token, df) rows at `$base/model`
+    * ([[dfFold]]) and the doc count at `$base/meta` ([[countFold]]),
+    * each appended per batch. */
   def incrementalDfModel(stream: DataFrame, base: String): DataFrame = {
     val spark = stream.sparkSession
+    val df = new LsmState(spark, s"$base/model", dfFold)
+    val n = new LsmState(spark, s"$base/meta", countFold)
     Fold.run(stream, base, "p07") { (batch, id) =>
       val b = spread(batch)
-      val delta = dfDelta(b)
-      val nDelta = b.agg(count(lit(1)).as("n"))
-      val (model, meta) = Fold.latest(spark, base) match {
-        case None => (delta, nDelta)
-        case Some(p) =>
-          (spark.read.parquet(s"$p/model").unionByName(delta)
-            .groupBy("token").agg(sum(col("df")).as("df")),
-            spark.read.parquet(s"$p/meta").unionByName(nDelta)
-              .agg(sum(col("n")).as("n")))
-      }
-      publishSnapshot(spark, base, id) { out =>
-        model.write.mode("overwrite").parquet(s"$out/model")
-        meta.write.mode("overwrite").parquet(s"$out/meta")
-      }
+      df.append(id, dfDelta(b))
+      n.append(id, countDelta(b))
+      df.maybeCompact(id)
+      n.maybeCompact(id)
     }
-    val snap = Fold.snapshot(spark, base)
-    spark.read.parquet(s"$snap/model")
-      .crossJoin(broadcast(spark.read.parquet(s"$snap/meta")))
+    df.result().crossJoin(broadcast(n.result()))
   }
 
   /** p11: incremental DSIR feature-model maintenance — t22's hashed-
@@ -802,14 +775,15 @@ object Streams {
     * the piece of DSIR that makes it deployable at ingest: unlike
     * t21's vocabulary-sized LM, the hashed model is BOUNDED at `dim`
     * rows by construction (the paper's point), so scoring new docs is
-    * a map-side broadcast of the current snapshot — no corpus rescan,
-    * no vocabulary shuffle. Versioned dirs + atomic pointer. */
+    * a map-side broadcast of the current model — no corpus rescan,
+    * no vocabulary shuffle. State is the [[LsmState]] at `base`
+    * merged by [[dsirFold]]. */
   def incrementalDsirModel(
       stream: DataFrame,
       base: String,
       targetSource: String = "src0",
       dim: Int = 64): DataFrame = {
-    val spark = stream.sparkSession
+    val st = new LsmState(stream.sparkSession, base, dsirFold)
     Fold.run(stream, base, "p11") { (batch, id) =>
       // cache before the sizing count (shared source read), and
       // size the trigger by the batch's row mass: the bigram
@@ -820,23 +794,14 @@ object Streams {
       try {
         val bs = raw.sparkSession
         withStreamPartitions(bs, rowParts(bs, raw.count(), costWeight = 4)) {
-          val delta = dsirDelta(spread(raw), targetSource, dim)
-          val merged = Fold.latest(spark, base) match {
-            case None => delta
-            case Some(p) =>
-              spark.read.parquet(p).unionByName(delta)
-                .groupBy("b")
-                .agg(sum(col("ct")).as("ct"), sum(col("cr")).as("cr"))
-          }
           // bounded at dim rows at ANY corpus scale: single-file
-          // snapshot, same rationale as the p04 LM model
-          publishSnapshot(spark, base, id) { out =>
-            merged.coalesce(1).write.mode("overwrite").parquet(out)
-          }
+          // part, same rationale as the p04 LM model
+          st.append(id, dsirDelta(spread(raw), targetSource, dim).coalesce(1))
         }
       } finally raw.unpersist(blocking = false)
+      st.maybeCompact(id)
     }
-    spark.read.parquet(Fold.snapshot(spark, base))
+    st.result()
   }
 
   /** [[incrementalDsirModel]] over the documents table, finished as
@@ -1380,7 +1345,7 @@ object Streams {
     * State is pure [[LsmState]] — the simplest fold here: no probe at
     * batch time at all. Each batch appends its scored docs and its
     * per-fp champions as O(batch) parts; the global election happens
-    * in the keeper fold (groupBy fp, min(m)) at compaction/read.
+    * in the keeper merge ([[champFold]]) at compaction/read.
     * Round 9 rewrote both the full doc table and the full keeper
     * table every batch. */
   def incrementalQualityKeeper(
@@ -1390,8 +1355,7 @@ object Streams {
     val spark = stream.sparkSession
     val docsSt = new LsmState(spark, s"$base/docs", identity, compactEvery)
     val keepersSt = new LsmState(
-      spark, s"$base/keepers",
-      _.groupBy("fp").agg(min(col("m")).as("m")), compactEvery)
+      spark, s"$base/keepers", champFold, compactEvery)
     Fold.run(stream, base, "p16") { (batch, id) =>
       val newDocs = keeperDocs(spread(batch))
       val batchKeepers = keeperChamps(newDocs)
@@ -1428,11 +1392,12 @@ object Streams {
     * delta from it ([[lmDelta]]/[[dfDelta]]/[[dsirDelta]]/
     * [[sigDelta]]/[[keeperDocs]] — the SAME delta functions the
     * standalone folds use, so the suite cannot drift from them), each
-    * into its own [[LsmState]] (per-key monoid folds at compaction/
-    * read). Because every per-model fold is a commutative monoid over
-    * these deltas, each maintained state EQUALS its standalone twin
-    * and the batch derivation under ANY chunking (equality replay
-    * spec across all five).
+    * into its own [[LsmState]] merged by that model's one merge
+    * ([[lmFold]]/[[dfFold]]/[[countFold]]/[[dsirFold]]/[[sigFold]]/
+    * [[champFold]], shared with the standalone folds). Because every
+    * merge is a commutative monoid over these deltas, each maintained
+    * state EQUALS its standalone twin and the batch derivation under
+    * ANY chunking (equality replay spec across all five).
     *
     * Returns the model frames by name; [[streamingModelSuite]]
     * finishes them as a manifest. */
@@ -1444,22 +1409,15 @@ object Streams {
       prefixBytes: Int = 32,
       compactEvery: Int = 8): Map[String, DataFrame] = {
     val spark = stream.sparkSession
-    val lmSt = new LsmState(spark, s"$base/lm",
-      _.groupBy("bg").agg(sum(col("nb")).as("nb")), compactEvery)
-    val dfSt = new LsmState(spark, s"$base/df",
-      _.groupBy("token").agg(sum(col("df")).as("df")), compactEvery)
-    val dfMeta = new LsmState(spark, s"$base/dfmeta",
-      _.agg(sum(col("n")).as("n")), compactEvery)
-    val dsirSt = new LsmState(spark, s"$base/dsir",
-      _.groupBy("b").agg(sum(col("ct")).as("ct"),
-        sum(col("cr")).as("cr")), compactEvery)
-    val sigSt = new LsmState(spark, s"$base/sig",
-      _.groupBy("fp").agg(sum(col("n_copies")).as("n_copies"),
-        min(col("keeper")).as("keeper")), compactEvery)
+    val lmSt = new LsmState(spark, s"$base/lm", lmFold, compactEvery)
+    val dfSt = new LsmState(spark, s"$base/df", dfFold, compactEvery)
+    val dfMeta = new LsmState(spark, s"$base/dfmeta", countFold, compactEvery)
+    val dsirSt = new LsmState(spark, s"$base/dsir", dsirFold, compactEvery)
+    val sigSt = new LsmState(spark, s"$base/sig", sigFold, compactEvery)
     val docsSt = new LsmState(spark, s"$base/keep_docs",
       identity, compactEvery)
     val champsSt = new LsmState(spark, s"$base/keep_champs",
-      _.groupBy("fp").agg(min(col("m")).as("m")), compactEvery)
+      champFold, compactEvery)
     Fold.run(stream, base, "p19") { (batch, id) =>
       // cache BEFORE the sizing count: the count that sizes the
       // shuffle and the spread that feeds the models share ONE
@@ -1481,7 +1439,7 @@ object Streams {
       runParallel(Seq(
         () => lmSt.append(id, lmDelta(b)),
         () => dfSt.append(id, dfDelta(b)),
-        () => dfMeta.append(id, b.agg(count(lit(1)).as("n"))),
+        () => dfMeta.append(id, countDelta(b)),
         () => dsirSt.append(id, dsirDelta(b, targetSource, dim)),
         () => sigSt.append(id, sigDelta(b, prefixBytes)),
         () => {
@@ -1599,21 +1557,24 @@ object Streams {
     * snapshot equals the batch profile when micro-batches partition
     * the stream in ingest (event_id) order — exactly the order a
     * file source replays and a partitioned log delivers (ordered-
-    * replay spec). O(batch) per increment; |types|-row state;
-    * versioned dirs + atomic pointer, as p07. */
+    * replay spec). O(batch) per increment; |types|-row state, the
+    * [[LsmState]] at `base` merged by [[disorderFold]].
+    *
+    * A batch seeds its lateness from the state EXCLUDING its own part
+    * (`view(except)`), so a replay before compaction recomputes the
+    * same delta; a replay after its own compaction rewrites a part
+    * the snapshot's `_folded` manifest already masks. */
   def incrementalDisorderProfile(
       stream: DataFrame,
       base: String): DataFrame = {
-    val spark = stream.sparkSession
-    Fold.run(stream, base, "p13") { (batch, id) =>
+    val st = new LsmState(stream.sparkSession, base, disorderFold)
+    Fold.appendFold(stream, base, "p13", st) { (batch, id) =>
       val b = spread(batch)
       val w = Window.partitionBy("event_type").orderBy("event_id")
         .rowsBetween(Window.unboundedPreceding, -1)
       val withUs = b.select(col("event_id"), col("event_type"),
         unix_micros(col("ts")).as("us"))
-      val prior = Fold.latest(spark, base)
-        .map(p => spark.read.parquet(s"$p/model"))
-      val seeded = prior match {
+      val seeded = st.view(except = Some(id)) match {
         case None => withUs.withColumn("__pmax", lit(-1L))
         case Some(m) => withUs.join(
           m.select(col("event_type"), col("max_us").as("__pmax")),
@@ -1628,27 +1589,13 @@ object Streams {
         .withColumn("late_us",
           when(col("__run") > col("us"), col("__run") - col("us"))
             .otherwise(lit(0L)))
-      val delta = late.groupBy("event_type").agg(
+      late.groupBy("event_type").agg(
         max(col("us")).as("max_us"),
         count(lit(1)).as("n_events"),
         sum(when(col("late_us") > 0, 1L).otherwise(0L)).as("n_late"),
         max(col("late_us")).as("max_disorder_us"),
         sum(col("late_us")).as("total_disorder_us"))
-      val model = prior match {
-        case None => delta
-        case Some(m) => m.unionByName(delta).groupBy("event_type").agg(
-          max(col("max_us")).as("max_us"),
-          sum(col("n_events")).as("n_events"),
-          sum(col("n_late")).as("n_late"),
-          max(col("max_disorder_us")).as("max_disorder_us"),
-          sum(col("total_disorder_us")).as("total_disorder_us"))
-      }
-      publishSnapshot(spark, base, id) { out =>
-        model.write.mode("overwrite").parquet(s"$out/model")
-      }
     }
-    val snap = Fold.snapshot(spark, base)
-    spark.read.parquet(s"$snap/model")
   }
 
   /** [[incrementalDisorderProfile]] over the events stream, finished
@@ -1671,29 +1618,17 @@ object Streams {
     * dedup state kept current at ingest, each payload hashed once,
     * map-side, on arrival — the bytes are never rescanned and never
     * shuffled (only the 16-byte signatures enter the fold). State is
-    * |distinct signatures| rows; versioned dirs + atomic pointer, as
-    * p07. Swap the [[graft.operators.Multimodal.PayloadDecoder]] for a
-    * real perceptual hash and the maintenance shape is unchanged. */
+    * |distinct signatures| rows, the [[LsmState]] at `base` merged by
+    * [[sigFold]]. Swap the [[graft.operators.Multimodal.PayloadDecoder]]
+    * for a real perceptual hash and the maintenance shape is
+    * unchanged. */
   def incrementalPayloadSig(
       stream: DataFrame,
       base: String,
       prefixBytes: Int = 32): DataFrame = {
-    val spark = stream.sparkSession
-    Fold.run(stream, base, "p12") { (batch, id) =>
-      val delta = sigDelta(spread(batch), prefixBytes)
-      val model = Fold.latest(spark, base) match {
-        case None => delta
-        case Some(p) =>
-          spark.read.parquet(s"$p/model").unionByName(delta)
-            .groupBy("fp").agg(sum(col("n_copies")).as("n_copies"),
-              min(col("keeper")).as("keeper"))
-      }
-      publishSnapshot(spark, base, id) { out =>
-        model.write.mode("overwrite").parquet(s"$out/model")
-      }
-    }
-    val snap = Fold.snapshot(spark, base)
-    spark.read.parquet(s"$snap/model")
+    val st = new LsmState(stream.sparkSession, base, sigFold)
+    Fold.appendFold(stream, base, "p12", st)((batch, _) =>
+      sigDelta(spread(batch), prefixBytes))
   }
 
   /** [[incrementalPayloadSig]] over the documents table, finished as
@@ -2079,10 +2014,7 @@ object Streams {
           .map(_.trim).getOrElse("")
         val parts = StateIO.listNames(fs, s"$dir/parts")
           .count(_.startsWith("b")).toLong
-        val versions = names.count { n =>
-          val id = n.stripSuffix("c").drop(1)
-          n.startsWith("v") && id.nonEmpty && id.forall(_.isDigit)
-        }.toLong
+        val versions = names.count(StateIO.isVersionDir).toLong
         val marks = StateIO.listNames(fs, s"$dir/band_marks")
           .count(_.startsWith("b")).toLong
         Some((rel, ptr, parts, versions, marks))

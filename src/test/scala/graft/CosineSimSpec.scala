@@ -14,7 +14,7 @@ class CosineSimSpec extends SparkSuite {
     val pairs = a.join(b, col("a_id") < col("b_id")).limit(5000)
     val diff = pairs.select(
         Similarity.cosine(col("va"), col("vb")).as("native"),
-        Similarity.cosineHof(col("va"), col("vb")).as("hof"))
+        Oracles.cosineHof(col("va"), col("vb")).as("hof"))
       .filter(col("native") =!= col("hof"))
       .count()
     assert(diff == 0, s"$diff pairs differ between native and HOF cosine")
@@ -35,7 +35,7 @@ class CosineSimSpec extends SparkSuite {
     val df = Seq((Seq[Option[Double]](Some(1.0), None),
       Seq[Option[Double]](Some(1.0), Some(2.0)))).toDF("a", "b")
     val native = df.select(Similarity.cosine(col("a"), col("b"))).head
-    val hof = df.select(Similarity.cosineHof(col("a"), col("b"))).head
+    val hof = df.select(Oracles.cosineHof(col("a"), col("b"))).head
     assert(native.isNullAt(0) && hof.isNullAt(0))
   }
 
@@ -43,7 +43,7 @@ class CosineSimSpec extends SparkSuite {
     import spark.implicits._
     val df = Seq((Seq(1.0, 2.0, 3.0), Seq(1.0, 2.0))).toDF("a", "b")
     val native = df.select(Similarity.cosine(col("a"), col("b"))).head
-    val hof = df.select(Similarity.cosineHof(col("a"), col("b"))).head
+    val hof = df.select(Oracles.cosineHof(col("a"), col("b"))).head
     assert(hof.isNullAt(0), "zip_with pads with nulls, so HOF must be NULL")
     assert(native.isNullAt(0), "native must match: NULL on length mismatch")
   }
@@ -57,10 +57,28 @@ class CosineSimSpec extends SparkSuite {
       transform(c, _.cast("double"))
     val diff = pairs.select(
         Similarity.dotNative(col("va"), col("vb")).as("native"),
-        Similarity.dot(asD(col("va")), asD(col("vb"))).as("hof"))
+        Oracles.dot(asD(col("va")), asD(col("vb"))).as("hof"))
       .filter(col("native") =!= col("hof"))
       .count()
     assert(diff == 0, s"$diff pairs differ between native and HOF dot")
+  }
+
+  test("native self dot norm is bit-identical to the HOF norm") {
+    // the banded tables' and MIPS's `__n`: sqrt of the native self
+    // dot over the raw float vector vs the aggregate over its doubles
+    import spark.implicits._
+    val emb = Tables.load(spark, sfDir, "embeddings").select(col("embedding"))
+    val odd = Seq(Seq(Option(1.0f), None), Seq.empty[Option[Float]])
+      .toDF("embedding")
+    val diff = emb.union(odd).union(Seq(None: Option[Seq[Float]])
+        .toDF("embedding")).select(
+        sqrt(Similarity.dotNative(col("embedding"), col("embedding")))
+          .as("native"),
+        Oracles.l2norm(transform(col("embedding"), _.cast("double")))
+          .as("hof"))
+      .filter(!(col("native") <=> col("hof")))
+      .count()
+    assert(diff == 0, s"$diff norms differ between native and HOF")
   }
 
   test("cosine_sim is SQL-callable once registered") {

@@ -33,12 +33,12 @@ class FoldSpec extends SparkSuite with SuiteTempDirs {
     assert(left.isEmpty, s"queries left active: ${left.map(_.name).toSeq}")
   }
 
-  test("a snapshot fold over an empty source raises the no-snapshot error") {
+  test("a model fold over an empty source raises the no-state error") {
     val empty = spark.readStream.schema(docSchema)
       .parquet(tmpDir("graft_fold_empty_src"))
     val err = intercept[RuntimeException] {
       Streams.incrementalLmModel(empty, tmpDir("graft_fold_empty"))
     }
-    assert(err.getMessage.startsWith("no snapshot:"), err.getMessage)
+    assert(err.getMessage.startsWith("no state at"), err.getMessage)
   }
 }

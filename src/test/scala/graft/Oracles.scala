@@ -6,11 +6,29 @@ import graft.operators.Similarity
 
 import scala.util.Random
 
-/** Equality oracles for exact k-NN, the banded embedding engines, the
+/** Equality oracles for the vector math, exact k-NN, the banded embedding engines, the
   * Lloyd driver combine and the product-quantization kernel: the
   * forms the production paths replaced, kept only so specs can pin
   * the replacements to them bit for bit. */
 object Oracles {
+
+  /** HOF dot product (zip_with/aggregate): the oracle
+    * [[Similarity.dotNative]] is pinned to. */
+  def dot(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, _ * _), lit(0.0), _ + _)
+
+  /** HOF L2 norm: the `aggregate` form of the native self dot. */
+  def l2norm(a: Column): Column =
+    sqrt(aggregate(a, lit(0.0), (acc, x) => acc + x * x))
+
+  /** Cosine composed from built-in higher-order functions (zip_with +
+    * aggregate): three array traversals through lambda dispatch. The
+    * oracle [[Similarity.cosine]] is pinned to bit for bit. */
+  def cosineHof(a: Column, b: Column): Column = {
+    val ad = transform(a, _.cast("double"))
+    val bd = transform(b, _.cast("double"))
+    dot(ad, bd) / (l2norm(ad) * l2norm(bd))
+  }
 
   /** Exact cosine top-k through a window over (query, sim) — which
     * sorts the WHOLE corpus per query in a single task. The equality

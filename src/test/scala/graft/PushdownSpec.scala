@@ -14,6 +14,11 @@ class PushdownSpec extends SparkSuite with SuiteTempDirs {
 
   protected val rootName = "graft_pushdown_spec"
 
+  /** The file-listing fingerprint q16's footer-count cache keys on. */
+  private def listing(path: String): Seq[(String, Long, Long)] =
+    Tables.fileListing(new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sessionState.newHadoopConf()), path).get
+
   private def scans(name: String): Seq[FileSourceScanExec] = {
     val plan = SparkEntry.queries(name)(spark, sfDir)
       .queryExecution.executedPlan match {
@@ -124,10 +129,10 @@ class PushdownSpec extends SparkSuite with SuiteTempDirs {
     // staleness: a rewrite changes the file set, so the fingerprint
     // moves and the count is recomputed — status never serves a
     // count for data that changed underneath it
-    val fp1 = SparkEntry.snapshotFingerprint(spark, path)
+    val fp1 = listing(path)
     Seq(1L, 2L, 3L, 4L, 5L).toDF("x")
       .repartition(2).write.mode("overwrite").parquet(path)
-    val fp2 = SparkEntry.snapshotFingerprint(spark, path)
+    val fp2 = listing(path)
     assert(fp1 != fp2, "rewrite must move the snapshot fingerprint")
     assert(SparkEntry.cachedFooterCount(spark, path) == 5L,
       "stale cached count served after a rewrite")
@@ -137,22 +142,23 @@ class PushdownSpec extends SparkSuite with SuiteTempDirs {
     // VERDICT r14 #5: the fingerprint used to be a 32-bit hash of the
     // entry list plus a file count — a colliding rewrite with the
     // same file count could serve a stale count. The fingerprint is
-    // now the verbatim name:len:mtime list, so ANY rewrite (same file
-    // count included) moves it by construction.
+    // the verbatim (path, length, mtime) list, so ANY rewrite (same
+    // file count included) moves it by construction.
     import spark.implicits._
     val dir = tmpDir("graft_q16_samecount")
     val path = s"$dir/t.parquet"
     Seq(1L, 2L, 3L).toDF("x")
       .repartition(1).write.mode("overwrite").parquet(path)
     assert(SparkEntry.cachedFooterCount(spark, path) == 3L)
-    val fp1 = SparkEntry.snapshotFingerprint(spark, path)
-    // the fingerprint is the full entry list, never a lossy digest
-    assert(fp1.contains(":"), fp1)
-    assert(fp1.split('|').forall(_.split(':').length == 3), fp1)
+    val fp1 = listing(path)
+    // the fingerprint is the full entry list, never a lossy digest:
+    // one (path, length, mtime) entry per file, the data file included
+    assert(fp1.exists(_._1.endsWith(".parquet")), fp1)
+    assert(fp1.forall(e => e._1.startsWith("file:") && e._3 > 0), fp1)
     // rewrite with the SAME file count (1 part file) but new content
     Seq(1L, 2L, 3L, 4L).toDF("x")
       .repartition(1).write.mode("overwrite").parquet(path)
-    val fp2 = SparkEntry.snapshotFingerprint(spark, path)
+    val fp2 = listing(path)
     assert(fp1 != fp2,
       "same-file-count rewrite must move the snapshot fingerprint")
     assert(SparkEntry.cachedFooterCount(spark, path) == 4L,

@@ -239,16 +239,17 @@ class StreamsSpec extends SparkSuite with SuiteTempDirs {
       .collect()
       .map(r => r.getAs[String]("bg") -> r.getAs[Long]("nb")).toMap
     assert(got == expect)
-    assertMultiBatchRetired(base)
+    assertMultiBatchParts(base)
   }
 
   test("incremental LM model: replay after pointer move does not double-count") {
     // The count-fold version of the p14 replay test: seed the state a
-    // committed batch 0 left behind (its counts published, pointer at
-    // v0) with NO checkpoint, so batch 0 replays. A fold that re-ran
-    // would ADD batch 0's counts to a snapshot that already includes
-    // them — a silently-wrong model, worse than the read-overwrite
-    // wedge. publishSnapshot must skip the replayed batch instead.
+    // batch 0 left behind after its own compaction (its counts in
+    // snapshot v0, whose `_folded` manifest names part b0, pointer at
+    // v0) with NO checkpoint, so batch 0 replays. A fold that counted
+    // the replayed part would ADD batch 0's counts to a snapshot that
+    // already includes them — a silently-wrong model. The manifest
+    // must mask the rewritten part instead.
     val docs = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
     val n = docs.count()
@@ -273,9 +274,11 @@ class StreamsSpec extends SparkSuite with SuiteTempDirs {
           |  ELSE array() END""".stripMargin)).as("bg"))
       .groupBy("bg").agg(count(lit(1)).as("nb"))
     val base = tmpDir("graft_p04_replay")
-    // what a committed batch 0 published, pointer included
+    // what batch 0's compaction left: snapshot, manifest, pointer
     bigrams(chunks(0)).coalesce(1).write
       .mode("overwrite").parquet(s"$base/v0")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(base, "v0", "_folded"), "b0")
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(base, "_latest"), s"$base/v0")
     val stream = spark.readStream.schema(docs.schema)
@@ -313,7 +316,8 @@ class StreamsSpec extends SparkSuite with SuiteTempDirs {
       assert(df == expect(tok), s"df mismatch for '$tok'")
       assert(n == expectN)
     }
-    assertMultiBatchRetired(base)
+    assertMultiBatchParts(s"$base/model")
+    assertMultiBatchParts(s"$base/meta")
   }
 
   test("incremental minhash pairs: multi-batch discovery equals batch d02") {
@@ -600,7 +604,7 @@ class StreamsSpec extends SparkSuite with SuiteTempDirs {
         (r.getAs[Long]("n"), r.getAs[Long]("nl"),
           r.getAs[Long]("mx"), r.getAs[Long]("tot"))).toMap
     assert(got == expect, "maintained disorder profile diverges from batch")
-    assertMultiBatchRetired(base)
+    assertMultiBatchParts(base)
   }
 
   test("incremental payload signatures: multi-batch fold equals batch dedup") {
@@ -622,7 +626,7 @@ class StreamsSpec extends SparkSuite with SuiteTempDirs {
       .map(r => r.getAs[String]("fp") ->
         (r.getAs[Long]("n_copies"), r.getAs[Long]("keeper"))).toMap
     assert(got == expect, "maintained signature table diverges from batch")
-    assertMultiBatchRetired(base)
+    assertMultiBatchParts(base)
   }
 
   test("incremental DSIR model: multi-batch fold equals batch counts") {
@@ -650,7 +654,7 @@ class StreamsSpec extends SparkSuite with SuiteTempDirs {
         (r.getAs[Long]("ct"), r.getAs[Long]("cr"))).toMap
     assert(got == expect,
       s"model diverged: ${(expect.toSet -- got.toSet).take(3)}")
-    assertMultiBatchRetired(base)
+    assertMultiBatchParts(base)
   }
 
   test("incremental semantic screen: multi-batch replay equals batch d14") {
@@ -853,20 +857,21 @@ class StreamsSpec extends SparkSuite with SuiteTempDirs {
     } finally bands.drop()
   }
 
-  /** Assert a publishSnapshot-based fold at `base` (1) processed
-    * multiple micro-batches — the durable pointer names v<id> with
-    * id > 0 — and (2) retired every superseded model snapshot, so
-    * exactly the pointed-at version dir remains (one dir per trigger
-    * forever would be O(batches) namespace growth). */
-  private def assertMultiBatchRetired(base: String): Unit = {
-    val ptr = java.nio.file.Files
-      .readString(java.nio.file.Paths.get(base, "_latest")).trim
-    val name = ptr.substring(ptr.lastIndexOf('/') + 1)
-    assert(name.drop(1).toLong > 0, s"expected multiple batches: $ptr")
-    val versions = new java.io.File(base).listFiles()
-      .map(_.getName).filter(_.startsWith("v")).toSeq
-    assert(versions == Seq(name),
-      s"superseded snapshots not retired: $versions")
+  /** Assert a small-model fold's [[graft.streaming.LsmState]] at
+    * `root` holds the LSM layout of a 3-batch drain below the
+    * compaction cadence: (1) one appended part per batch, and (2) no
+    * versioned snapshot dir and no pointer — the model is never
+    * rewritten per trigger. */
+  private def assertMultiBatchParts(root: String): Unit = {
+    val parts = Option(new java.io.File(s"$root/parts").listFiles())
+      .map(_.map(_.getName).filter(_.startsWith("b")).sorted.toSeq)
+      .getOrElse(Nil)
+    assert(parts == Seq("b0", "b1", "b2"), s"expected a part per batch: $parts")
+    val versions = new java.io.File(root).listFiles().map(_.getName)
+      .filter(graft.streaming.StateIO.isVersionDir).toSeq
+    assert(versions.isEmpty, s"snapshot written below the cadence: $versions")
+    assert(!new java.io.File(root, "_latest").exists(),
+      "pointer moved below the cadence")
   }
 
   /** Write `chunks` as single-file id-ordered sources with pinned
