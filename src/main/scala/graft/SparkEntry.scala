@@ -1127,8 +1127,8 @@ object SparkEntry {
     * recall floor + determinism asserted in SimilaritySpec. */
   private def s08(s: SparkSession, dir: String): DataFrame = {
     val emb = T(s, dir, "embeddings")
-    // library defaults = the round-12 tuned config (nprobe 8/10,
-    // 64-code residual books, recall@5 0.867 measured)
+    // library defaults = the round-13 tuned config (nprobe 10/10,
+    // 64-code residual books, recall@5 0.928 measured)
     Similarity.ivfPqKnn(emb, emb.filter(col("vec_id") < 10),
         "vec_id", "embedding", 5, numCells = 10)
       .orderBy("q_id", "rank")

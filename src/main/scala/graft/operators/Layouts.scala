@@ -1,11 +1,13 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Write-once / probe-many layout publishing — the ONE door every
   * persisted physical layout goes through (banded LSH, span index,
-  * IVF cells, FTS inverted index). The write itself is the shared
+  * the IVF-PQ code table — the one ANN layout — and the FTS inverted
+  * index). The write itself is the shared
   * bucket+sort+saveAsTable shape those layouts all use; the helper
   * additionally records a lineage manifest row per publish, so "what
   * layouts exist, over how many rows, bucketed how" is answerable
@@ -65,7 +67,7 @@ object Layouts {
     // manifest n_rows from the written files' parquet footers — a
     // driver-side metadata read (the count is exact either way), not
     // a per-publish Spark job; layouts publish often enough (spans,
-    // bands, IVF cells, FTS) that the count job was a measurable
+    // bands, IVF-PQ codes, FTS) that the count job was a measurable
     // fixed cost on every one of them
     val nRows = ExactDistinct.parquetRowCount(
       spark, tableLocation(spark, table))
@@ -75,7 +77,8 @@ object Layouts {
 
   /** Filesystem location of a managed table (the warehouse dir path
     * saveAsTable wrote). */
-  private def tableLocation(spark: SparkSession, table: String): String = {
+  private[operators] def tableLocation(spark: SparkSession,
+      table: String): String = {
     val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
     spark.sessionState.catalog.getTableMetadata(ident).location.toString
   }
@@ -117,20 +120,17 @@ object Layouts {
   /** Make `table` safely writable by saveAsTable: a fresh session's
     * catalog won't know a table even when a prior session left its
     * warehouse directory behind, and saveAsTable then refuses with
-    * LOCATION_ALREADY_EXISTS — clear the orphaned dir. A table the
-    * CURRENT catalog knows is left alone (mode("overwrite") handles
-    * it). Layout writers with bespoke sibling tables (IVF centroids,
-    * PQ books) go through this too. */
+    * LOCATION_ALREADY_EXISTS — clear the orphaned dir, through the
+    * warehouse's own Hadoop `FileSystem` (HDFS, S3 or local alike). A
+    * table the CURRENT catalog knows is left alone (mode("overwrite")
+    * handles it). Layout writers with bespoke sibling tables (IVF-PQ
+    * centroids and books) go through this too. */
   def ensureWritable(spark: SparkSession, table: String): Unit =
     if (!spark.catalog.tableExists(table)) {
-      val warehouse = spark.conf.get(
-        "spark.sql.warehouse.dir").stripPrefix("file:")
-      val stale = java.nio.file.Paths.get(warehouse, table)
-      if (java.nio.file.Files.isDirectory(stale)) {
-        val files = java.nio.file.Files.walk(stale)
-        try files.sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
-        finally files.close()
+      val stale = new Path(spark.conf.get("spark.sql.warehouse.dir"), table)
+      val fs = stale.getFileSystem(spark.sessionState.newHadoopConf())
+      if (fs.exists(stale) && fs.getFileStatus(stale).isDirectory) {
+        fs.delete(stale, true); ()
       }
     }
 

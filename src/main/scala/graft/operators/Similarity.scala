@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -99,6 +100,18 @@ object Similarity {
   private def rerankBudget(k: Int, candMult: Int, n: Long): Int =
     math.max(k * candMult, math.min(n / 16, 1L << 16).toInt)
 
+  /** One sizing job for the PQ paths that need the corpus size before
+    * any pass runs: (row count, vector dimension). The dimension is
+    * the first row's (it is uniform per corpus) and must split into
+    * `numSub` subspaces. */
+  private def corpusSize(corpus: DataFrame, vecCol: String,
+      numSub: Int): (Long, Int) = {
+    val sizing = corpus.agg(count(lit(1)), first(size(col(vecCol)))).head()
+    val dim = sizing.getInt(1)
+    require(dim % numSub == 0, s"dim $dim not divisible by $numSub")
+    (sizing.getLong(0), dim)
+  }
+
   /** Retention prune (rank ≤ k OR score > threshold) as ONE
     * bounded-state aggregate ([[graft.plans.ThresholdTopKPairs]]) —
     * the single-pass replacement for filter ∪ degree-join ∪ top-k
@@ -118,28 +131,82 @@ object Similarity {
         .toAggregateExpression())
   }
 
+  // ---- THE RANKING TAIL ---------------------------------------------
+  //
+  // Every vector-search engine ends in the same per-query top-k over
+  // (q_id, cand_id) rows: the bounded-heap aggregate, map-side k-row
+  // partials, no per-query sort. The exact engines rank every pair;
+  // the LSH/IVF engines rank their probed candidates by exact cosine;
+  // the quantized engines cut an approximate candidate set first
+  // ([[approxCandidates]]) and re-rank it exactly ([[exactRerank]]).
+
+  /** Per query, the top `k` of `scored` by (score desc, cand_id) as
+    * one `top` array of (score, id) structs. */
+  private def topPerQuery(scored: DataFrame, score: Column, k: Int,
+      dedupIds: Boolean): DataFrame =
+    scored.groupBy(col("q_id"))
+      .agg(topKAgg(score, col("cand_id"), k, dedupIds).as("top"))
+
+  /** The ranking tail: (q_id, rank, cand_id), rank 1..≤k per query.
+    * A NULL score (a ragged vector, or one with a null element) is
+    * dropped; a window `row_number` form would rank it last instead
+    * (SimilaritySpec pins the difference). */
+  private def rankTail(scored: DataFrame, score: Column, k: Int,
+      dedupIds: Boolean = false): DataFrame =
+    topPerQuery(scored, score, k, dedupIds)
+      .select(col("q_id"), posexplode(col("top")))
+      .select(col("q_id"), (col("pos") + 1).cast("long").as("rank"),
+        col("col.id").as("cand_id"))
+
+  /** Exact cosine top-k of (q_id, qv, cand_id, cv) pairs. */
+  private def cosineTail(pairs: DataFrame, k: Int,
+      dedupIds: Boolean = false): DataFrame =
+    rankTail(pairs, cosine(col("qv"), col("cv")), k, dedupIds)
+
+  /** Every (query, corpus row) pair but a query with itself, queries
+    * broadcast: (cand_id, cv, q_id, qv), each vector through `prep`. */
+  private def allPairs(corpus: DataFrame, queries: DataFrame,
+      idCol: String, vecCol: String,
+      prep: Column => Column = identity): DataFrame = {
+    val q = broadcast(
+      queries.select(col(idCol).as("q_id"), prep(col(vecCol)).as("qv")))
+    corpus.select(col(idCol).as("cand_id"), prep(col(vecCol)).as("cv"))
+      .join(q, col("cand_id") =!= col("q_id"))
+  }
+
+  /** The approximate candidate step of the quantized engines: per
+    * query the `budget` best (q_id, cand_id) of `pairs` by the
+    * `approx` score (an int8 byte dot or an ADC lookup sum). */
+  private def approxCandidates(pairs: DataFrame, approx: Column,
+      budget: Int): DataFrame =
+    topPerQuery(pairs.select(col("q_id"), approx.as("asim"), col("cand_id")),
+        col("asim"), budget, dedupIds = false)
+      .select(col("q_id"), explode(col("top")).as("c"))
+      .select(col("q_id"), col("c.id").as("cand_id"))
+
+  /** Exact re-rank of approximate (q_id, cand_id) candidates: join the
+    * candidates' (cand_id, cv) `vectors`, broadcast the queries, rank
+    * by cosine. `dedupIds` collapses a candidate surfaced more than
+    * once (a replicated layout) to its one best entry. */
+  private def exactRerank(cands: DataFrame, vectors: DataFrame,
+      queries: DataFrame, idCol: String, vecCol: String, k: Int,
+      dedupIds: Boolean = false): DataFrame =
+    cosineTail(cands.join(vectors, Seq("cand_id"))
+      .join(broadcast(
+        queries.select(col(idCol).as("q_id"), col(vecCol).as("qv"))),
+        Seq("q_id")), k, dedupIds)
+
   /** Exact cosine top-k: for each row of `queries`, the k nearest
     * rows of `corpus` (self excluded by id), ranked by (sim desc,
-    * cand_id). The per-query top-k is the bounded-heap aggregate
-    * (map-side k-row heaps, no per-query sort of the corpus); the
-    * window-sort form it replaced is `Oracles.knnBrute`, its
-    * test-side equality oracle. */
+    * cand_id), through the ranking tail. The window-sort form it
+    * replaced is `Oracles.knnBrute`, its test-side equality oracle. */
   def knnBruteAgg(
       corpus: DataFrame,
       queries: DataFrame,
       idCol: String,
       vecCol: String,
-      k: Int): DataFrame = {
-    val q = broadcast(
-      queries.select(col(idCol).as("q_id"), col(vecCol).as("qv")))
-    val c = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"))
-    c.join(q, col("cand_id") =!= col("q_id"))
-      .groupBy(col("q_id"))
-      .agg(topKAgg(cosine(col("qv"), col("cv")), col("cand_id"), k).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), (col("pos") + 1).cast("long").as("rank"),
-        col("col.id").as("cand_id"))
-  }
+      k: Int): DataFrame =
+    cosineTail(allPairs(corpus, queries, idCol, vecCol), k)
 
   /** The exploded (vec_id, tbl, bkt) multi-table hyperplane band
     * table — the ANN candidate-generation shuffle key, factored out
@@ -877,17 +944,9 @@ object Similarity {
       queries: DataFrame,
       idCol: String,
       vecCol: String,
-      k: Int): DataFrame = {
-    val q = broadcast(
-      queries.select(col(idCol).as("q_id"), col(vecCol).as("qv")))
-    val c = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"))
-    c.join(q, col("cand_id") =!= col("q_id"))
-      .groupBy(col("q_id"))
-      .agg(topKAgg(dotNative(col("qv"), col("cv")), col("cand_id"), k).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), (col("pos") + 1).cast("long").as("rank"),
-        col("col.id").as("cand_id"))
-  }
+      k: Int): DataFrame =
+    rankTail(allPairs(corpus, queries, idCol, vecCol),
+      dotNative(col("qv"), col("cv")), k)
 
   /** Exact Euclidean (L2) top-k — completes the metric family (cosine
     * [[knnBruteAgg]], inner product [[mipsBruteAgg]]): the bounded
@@ -903,19 +962,10 @@ object Similarity {
       idCol: String,
       vecCol: String,
       k: Int): DataFrame = {
-    val q = broadcast(
-      queries.select(col(idCol).as("q_id"), asDouble(col(vecCol)).as("qv")))
-    val c = corpus.select(col(idCol).as("cand_id"),
-      asDouble(col(vecCol)).as("cv"))
     val negD2 = -aggregate(
       zip_with(col("qv"), col("cv"), (x, y) => (x - y) * (x - y)),
       lit(0.0), _ + _)
-    c.join(q, col("cand_id") =!= col("q_id"))
-      .groupBy(col("q_id"))
-      .agg(topKAgg(negD2, col("cand_id"), k).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), (col("pos") + 1).cast("long").as("rank"),
-        col("col.id").as("cand_id"))
+    rankTail(allPairs(corpus, queries, idCol, vecCol, asDouble), negD2, k)
   }
 
   /** Approximate MIPS via the norm-augmentation reduction to cosine
@@ -974,7 +1024,8 @@ object Similarity {
     * |corpus| / 2^planes × (1 + planes + [planes·(planes−1)/2]).
     * Multi-probe trades candidate volume for recall without
     * rebuilding the index; deeper probes visit buckets in increasing
-    * hamming distance, which tracks increasing angle. */
+    * hamming distance, which tracks increasing angle. The window-sort
+    * form it replaced is `Oracles.lshAnnWindow`. */
   def lshAnn(
       corpus: DataFrame,
       queries: DataFrame,
@@ -1011,14 +1062,9 @@ object Similarity {
         bucket(col(vecCol)).as("qb"))
       .withColumn("probe",
         explode(array((col("qb") +: oneBit) ++ twoBit: _*))))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("cand_id"))
-    c.join(q, col("bucket") === col("probe") && col("cand_id") =!= col("q_id"))
-      .withColumn("sim", cosine(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank").cast("long").as("rank"),
-        col("cand_id"))
+    // the probes are distinct buckets, so a candidate joins once
+    cosineTail(c.join(q,
+      col("bucket") === col("probe") && col("cand_id") =!= col("q_id")), k)
   }
 
   /** Nearest-centroid column against FROZEN centroids (embedded as
@@ -1203,7 +1249,16 @@ object Similarity {
     * collect_list+array_sort shape). Spec'd against the oracle in
     * SimilaritySpec on degenerate fixtures. */
   private[graft] def lloydMeans(v: DataFrame,
-      centroids: Seq[Seq[Double]]): Map[Int, Seq[Double]] = {
+      centroids: Seq[Seq[Double]]): Map[Int, Seq[Double]] =
+    lloydRound(v, centroids)._1
+
+  /** [[lloydMeans]] plus the number of rows the round read, NULL
+    * vectors included — `count(*)` of `v` from the same job. Each
+    * partition reports its row count as one extra partial under cell
+    * `RowsCell`. */
+  private[graft] def lloydRound(v: DataFrame,
+      centroids: Seq[Seq[Double]]): (Map[Int, Seq[Double]], Long) = {
+    val RowsCell = -1
     val cents: Array[Array[Double]] = centroids.map(_.toArray).toArray
     val k = cents.length
     implicit val enc = Encoders.product[(Int, Int, Array[Double], Array[Long])]
@@ -1215,7 +1270,9 @@ object Similarity {
         sums(c) = java.util.Arrays.copyOf(sums(c), n)
         cnts(c) = java.util.Arrays.copyOf(cnts(c), n)
       }
+      var seen = 0L
       rows.foreach { r =>
+        seen += 1
         if (!r.isNullAt(1)) {
           val s = r.get(1).asInstanceOf[scala.collection.Seq[_]]
           val n = s.length
@@ -1270,14 +1327,16 @@ object Similarity {
           }
         }
       }
-      (0 until k).iterator.filter(c => cnts(c).exists(_ > 0L))
-        .map(c => (pid, c, sums(c), cnts(c)))
+      Iterator.single((pid, RowsCell, Array.emptyDoubleArray, Array(seen))) ++
+        (0 until k).iterator.filter(c => cnts(c).exists(_ > 0L))
+          .map(c => (pid, c, sums(c), cnts(c)))
     }.collect()
+    val (rowCounts, cellPartials) = partials.partition(_._2 == RowsCell)
     // combine per (cell, pos) in partition order — HashAggregate's
     // mapId-ordered merge; a partition that saw no value at a position
     // contributes nothing there
     val tot = scala.collection.mutable.HashMap.empty[Int, (Array[Double], Array[Long])]
-    partials.sortBy(t => (t._1, t._2)).foreach { case (_, c, s, n) =>
+    cellPartials.sortBy(t => (t._1, t._2)).foreach { case (_, c, s, n) =>
       val (ts0, tn0) =
         tot.getOrElse(c, (Array.emptyDoubleArray, Array.emptyLongArray))
       val len = math.max(ts0.length, s.length)
@@ -1286,9 +1345,9 @@ object Similarity {
       for (p <- s.indices if n(p) > 0L) { ts(p) += s(p); tn(p) += n(p) }
       tot(c) = (ts, tn)
     }
-    tot.map { case (c, (ts, tn)) =>
+    (tot.map { case (c, (ts, tn)) =>
       c -> ts.indices.filter(tn(_) > 0L).map(p => ts(p) / tn(p))
-    }.toMap
+    }.toMap, rowCounts.map(_._4(0)).sum)
   }
 
   /** K-means cell assignment — trains the IVF coarse codebook when no
@@ -1394,26 +1453,12 @@ object Similarity {
             (acc, x) => acc + x.cast("double") * x.cast("double"))).as(qn))
     val c = quant(corpus, "cand_id", "cv", "cqv", "cqn")
     val q = broadcast(quant(queries, "q_id", "qv", "qqv", "qqn"))
-    val cands = c.join(q, col("cand_id") =!= col("q_id"))
-      .select(col("q_id"),
-        (byteDot(col("cqv"), col("qqv")).cast("double") /
-          (col("cqn") * col("qqn"))).as("asim"),
-        col("cand_id"))
-      .groupBy("q_id")
-      .agg(topKAgg(col("asim"), col("cand_id"), k * candMult).as("top"))
-      .select(col("q_id"), explode(col("top")).as("c"))
-      .select(col("q_id"), col("c.id").as("cand_id"))
-    cands
-      .join(corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv")),
-        Seq("cand_id"))
-      .join(broadcast(
-        queries.select(col(idCol).as("q_id"), col(vecCol).as("qv"))),
-        Seq("q_id"))
-      .groupBy("q_id")
-      .agg(topKAgg(cosine(col("qv"), col("cv")), col("cand_id"), k).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), (col("pos") + 1).cast("long").as("rank"),
-        col("col.id").as("cand_id"))
+    val cands = approxCandidates(c.join(q, col("cand_id") =!= col("q_id")),
+      byteDot(col("cqv"), col("qqv")).cast("double") /
+        (col("cqn") * col("qqn")), k * candMult)
+    exactRerank(cands,
+      corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv")),
+      queries, idCol, vecCol, k)
   }
 
   /** The residual `x − c` of a collected vector (column `i` of `r`)
@@ -1511,12 +1556,7 @@ object Similarity {
       trainIters: Int = 10,
       candMult: Int = 64,
       seed: Long = 42L): DataFrame = {
-    // one sizing job answers dim AND n (dim is uniform per corpus)
-    val sizing = corpus
-      .agg(count(lit(1)), first(size(col(vecCol)))).head()
-    val corpusN = sizing.getLong(0) // sizes the re-rank
-    val dim = sizing.getInt(1)
-    require(dim % numSub == 0, s"dim $dim not divisible by $numSub")
+    val (corpusN, dim) = corpusSize(corpus, vecCol, numSub)
     val subDim = dim / numSub
     val sample = corpus
       .select(col(idCol).as("__id"), col(vecCol).cast("array<double>").as("__v"))
@@ -1558,27 +1598,14 @@ object Similarity {
       l2normNative(col(vecCol)).as("__qnorm"),
       pqAdcTable(col(vecCol), lit(0), pq).as("__t"))
 
-    val approx = adcSum(col("__t"), numSub, codebookK) /
-      (col("__anorm") * col("__qnorm"))
-    val cands = encoded.join(broadcast(qtabs), col("cand_id") =!= col("q_id"))
-      .select(col("q_id"), approx.as("asim"), col("cand_id"))
-      .groupBy("q_id")
-      .agg(topKAgg(col("asim"), col("cand_id"),
-        rerankBudget(k, candMult, corpusN)).as("top"))
-      .select(col("q_id"), explode(col("top")).as("c"))
-      .select(col("q_id"), col("c.id").as("cand_id"))
-
-    cands
-      .join(corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv")),
-        Seq("cand_id"))
-      .join(broadcast(
-        queries.select(col(idCol).as("q_id"), col(vecCol).as("qv"))),
-        Seq("q_id"))
-      .groupBy("q_id")
-      .agg(topKAgg(cosine(col("qv"), col("cv")), col("cand_id"), k).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), (col("pos") + 1).cast("long").as("rank"),
-        col("col.id").as("cand_id"))
+    val cands = approxCandidates(
+      encoded.join(broadcast(qtabs), col("cand_id") =!= col("q_id")),
+      adcSum(col("__t"), numSub, codebookK) /
+        (col("__anorm") * col("__qnorm")),
+      rerankBudget(k, candMult, corpusN))
+    exactRerank(cands,
+      corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv")),
+      queries, idCol, vecCol, k)
   }
 
   /** IVF-PQ: the coarse quantizer (k-means cells, [[kmeansCells]])
@@ -1627,13 +1654,6 @@ object Similarity {
       candMult: Int = 16,
       seed: Long = 42L,
       coarseIters: Int = 5): DataFrame = {
-    // one sizing job answers dim AND n (dim is uniform per corpus)
-    val sizing = corpus
-      .agg(count(lit(1)), first(size(col(vecCol)))).head()
-    val corpusN = sizing.getLong(0) // sizes the re-rank
-    val dim = sizing.getInt(1)
-    require(dim % numSub == 0, s"dim $dim not divisible by $numSub")
-    val subDim = dim / numSub
     // (No up-front corpus spread here, unlike pqKnn: kmeansCells
     // re-executes its input per Lloyd iteration, so a repartition
     // would be re-paid coarseIters times — measured NET-NEGATIVE,
@@ -1643,16 +1663,23 @@ object Similarity {
     // means of the final assignment as ONE driver-combined Lloyd round
     // ([[lloydMeans]], bit-equal to the per-(cell, pos) avg aggregate)
     // — a k·dim driver table, so the probe side below crosses a local
-    // relation instead of re-running a two-exchange aggregate.
+    // relation instead of re-running a two-exchange aggregate. No
+    // sizing job: the trained centroids (corpus rows, then their
+    // means) carry the dimension, uniform per corpus, and the same
+    // Lloyd round counts the corpus rows that size the re-rank.
     val centroidSeqs = trainCentroids(corpus, idCol, vecCol, numCells,
       maxIter = coarseIters, seed = seed)
+    val dim = centroidSeqs.head.length
+    require(dim % numSub == 0, s"dim $dim not divisible by $numSub")
+    val subDim = dim / numSub
+    val (meanSeqs, corpusN) =
+      lloydRound(corpus.select(col(idCol), col(vecCol)), centroidSeqs)
     val means: Map[Int, Array[Double]] =
-      lloydMeans(corpus.select(col(idCol), col(vecCol)), centroidSeqs)
-        .map { case (c, m) => c -> m.toArray }
+      meanSeqs.map { case (c, m) => c -> m.toArray }
     val cellIds = means.keys.toSeq.sorted
     val session = corpus.sparkSession
     import session.implicits._
-    val cents = broadcast(cellIds.map(c => (c, means(c))).toDF("cell", "centroid"))
+    val cents = cellIds.map(c => (c, means(c))).toDF("cell", "centroid")
     // The assignment is a per-row map against the driver-held trained
     // centroids, and the VECTOR RIDES THE ASSIGNED ROW (re-attaching
     // it by id would shuffle the whole corpus on a key unrelated to
@@ -1725,38 +1752,35 @@ object Similarity {
     // ADC tables against THAT cell's books — dot(q_s, c_j) no longer
     // decomposes cell-independently once books are local, so tables
     // live on the (q, cell) probe row
-    val wq = Window.partitionBy(col("q_id"))
-      .orderBy(col("csim").desc, col("cell"))
-    val qd = queries.select(col(idCol).as("q_id"), col(vecCol).as("qv"))
-      .crossJoin(cents)
-      .withColumn("csim", cosine(col("qv"), col("centroid")))
-      .withColumn("crank", row_number().over(wq))
-      .filter(col("crank") <= nprobe)
+    val qd = probeCells(queries, idCol, vecCol, cents, nprobe)
       .select(col("q_id"), col("cell"),
         dotNative(col("qv"), col("centroid")).as("__qdotc"),
         l2normNative(col("qv")).as("__qnorm"),
         pqAdcTable(col("qv"), col("cell"), pq).as("__t"))
-    val approx = (col("__qdotc") + adcSum(col("__t"), numSub, codebookK)) /
-      (col("__cnorm") * col("__qnorm"))
-    val cands = encoded.join(broadcast(qd), Seq("cell"))
-      .filter(col("cand_id") =!= col("q_id"))
-      .select(col("q_id"), approx.as("asim"), col("cand_id"))
-      .groupBy("q_id")
-      .agg(topKAgg(col("asim"), col("cand_id"),
-        rerankBudget(k, candMult, corpusN)).as("top"))
-      .select(col("q_id"), explode(col("top")).as("c"))
-      .select(col("q_id"), col("c.id").as("cand_id"))
-    cands
-      .join(corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv")),
-        Seq("cand_id"))
-      .join(broadcast(
-        queries.select(col(idCol).as("q_id"), col(vecCol).as("qv"))),
-        Seq("q_id"))
-      .groupBy("q_id")
-      .agg(topKAgg(cosine(col("qv"), col("cv")), col("cand_id"), k).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), (col("pos") + 1).cast("long").as("rank"),
-        col("col.id").as("cand_id"))
+    val cands = approxCandidates(
+      encoded.join(broadcast(qd), Seq("cell"))
+        .filter(col("cand_id") =!= col("q_id")),
+      (col("__qdotc") + adcSum(col("__t"), numSub, codebookK)) /
+        (col("__cnorm") * col("__qnorm")),
+      rerankBudget(k, candMult, corpusN))
+    exactRerank(cands,
+      corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv")),
+      queries, idCol, vecCol, k)
+  }
+
+  /** THE centroid probe: each query's top-`nprobe` cells of `cents`
+    * (cell, centroid), ranked by (cosine desc, cell), as (q_id, qv,
+    * cell, centroid, …). The centroid table is broadcast (it is
+    * k·dim numbers); the window sorts only |queries|·k rows. */
+  private def probeCells(queries: DataFrame, idCol: String, vecCol: String,
+      cents: DataFrame, nprobe: Int): DataFrame = {
+    val byCsim = Window.partitionBy(col("q_id"))
+      .orderBy(col("csim").desc, col("cell"))
+    queries.select(col(idCol).as("q_id"), col(vecCol).as("qv"))
+      .crossJoin(broadcast(cents))
+      .withColumn("csim", cosine(col("qv"), col("centroid")))
+      .withColumn("crank", row_number().over(byCsim))
+      .filter(col("crank") <= nprobe)
   }
 
   /** Per-cell mean centroids (the IVF coarse codebook), computed from
@@ -1769,40 +1793,6 @@ object Similarity {
       .groupBy(col("cell"))
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
         s => s.getField("m")).as("centroid"))
-
-  /** Write the IVF inverted file as a CELL-BUCKETED, cell-sorted
-    * table plus its frozen centroids (`<table>_centroids`) — the ANN
-    * analog of the LSH banded layout and the FTS token layout: train
-    * + assign + shuffle are paid ONCE per corpus snapshot, and every
-    * subsequent probe scans only the probed cells' buckets (bucket
-    * pruning; the index side never shuffles — the bounded query set
-    * broadcasts). At 100 TB the quantizer train/assign pass is the
-    * cost being amortized across every search that follows. */
-  def writeIvfLayout(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      table: String,
-      numCells: Int = 16,
-      numBuckets: Int = 16,
-      maxIter: Int = 10,
-      seed: Long = 42L): Unit = {
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val cents = trainCentroids(corpus, idCol, vecCol, numCells, maxIter, seed)
-    Layouts.publish(
-      corpus
-        .select(col(idCol).as("vec_id"), col(vecCol).as("embedding"))
-        .withColumn("cell", nearestCellCol(col("embedding"), cents)),
-      table, "ivf_cells", Seq("cell"), numBuckets,
-      props = Map("numCells" -> numCells.toString,
-        "maxIter" -> maxIter.toString, "seed" -> seed.toString,
-        "centroids_table" -> s"${table}_centroids"))
-    Layouts.ensureWritable(spark, s"${table}_centroids")
-    cents.zipWithIndex.map { case (c, i) => (i, c) }
-      .toDF("cell", "centroid")
-      .write.mode("overwrite").saveAsTable(s"${table}_centroids")
-  }
 
   /** Write-once IVF-PQ index layout — the publish-time home for the
     * √n-cells geometry that is unaffordable per query (the round-13
@@ -1857,13 +1847,7 @@ object Similarity {
       seed: Long = 42L): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    // one sizing job answers dim AND n (dim is uniform per corpus —
-    // the require below rejects a bad one either way)
-    val sizing = corpus
-      .agg(count(lit(1)), first(size(col(vecCol)))).head()
-    val n = sizing.getLong(0)
-    val dim = sizing.getInt(1)
-    require(dim % numSub == 0, s"dim $dim not divisible by $numSub")
+    val (n, dim) = corpusSize(corpus, vecCol, numSub)
     val subDim = dim / numSub
     val cellsN =
       if (numCells > 0) numCells
@@ -2062,29 +2046,17 @@ object Similarity {
       table: String): DataFrame = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val man = Layouts.manifest(spark)
-      .filter(col("layout") === table)
-      .select(col("n_rows"), col("num_buckets"), col("props")).head()
-    val priorRows = man.getLong(0)
-    val numBuckets = man.getInt(1)
-    val props = man.getString(2).split(";").map(_.split("=", 2))
-      .collect { case Array(k0, v) => k0 -> v }.toMap
+    val index = new IvfPqIndex(spark, table)
+    val priorRows = index.nRows
+    val numBuckets = index.numBuckets
+    val props = index.props
     val numCells = props("numCells").toInt
     val replicateMargin =
       props.getOrElse("replicateMargin", "0.0").toDouble
     val maxAssign = props.getOrElse("maxAssign", "4").toInt
     val baseErr = props.getOrElse("mean_code_err", "0").toDouble
-    // Row.getSeq yields mutable ArraySeq at runtime — materialize to
-    // immutable Vectors before anything re-encodes them (toDF/typedLit)
-    val cents: Seq[Seq[Double]] = spark.table(s"${table}_centroids")
-      .orderBy("cell").collect()
-      .map(_.getSeq[Double](1).toVector).toVector
-    val books: Array[Array[Array[Double]]] =
-      spark.table(s"${table}_books").collect()
-        .map(r => r.getInt(0) ->
-          r.getSeq[scala.collection.Seq[Double]](1)
-            .map(_.toArray).toArray)
-        .sortBy(_._1).map(_._2)
+    val cents = index.centroids
+    val books = index.books
     val encoded = encodeIvfPqCodes(
       assignIvfCells(batch, idCol, vecCol, cents, replicateMargin,
         maxAssign),
@@ -2151,36 +2123,59 @@ object Similarity {
     * maintenance — read the table, spill it once (Spark refuses to
     * overwrite a table from its own live scan), republish through the
     * same bucketed door with the manifest props carried over
-    * verbatim. At 100 TB this is one shuffle-free-per-bucket write
+    * verbatim. The spill is staged beside the table, on the table's
+    * own Hadoop `FileSystem` (HDFS, S3 or local alike), and deleted
+    * there. At 100 TB this is one shuffle-free-per-bucket write
     * pass, schedulable off-peak, amortized across the appends it
     * absorbs. Returns (files_before, files_after). */
   def compactIvfPqLayout(
       spark: org.apache.spark.sql.SparkSession,
       table: String): (Long, Long) = {
-    val man = Layouts.manifest(spark)
-      .filter(col("layout") === table)
-      .select(col("num_buckets"), col("props")).head()
-    val numBuckets = man.getInt(0)
-    val props = man.getString(1).split(";").map(_.split("=", 2))
-      .collect { case Array(k0, v) => k0 -> v }.toMap
+    val index = new IvfPqIndex(spark, table)
     def dataFiles(): Long = spark.table(table).inputFiles.length.toLong
     val before = dataFiles()
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft_compact").toString
+    val loc = new Path(Layouts.tableLocation(spark, table))
+    val stage = new Path(loc.getParent,
+      s"_${loc.getName}_compact_${java.util.UUID.randomUUID()}")
+    val fs = stage.getFileSystem(spark.sessionState.newHadoopConf())
     try {
-      spark.table(table).write.parquet(s"$tmp/codes")
-      val back = spark.read.parquet(s"$tmp/codes")
-        .repartition(numBuckets, col("cell"))
+      spark.table(table).write.parquet(stage.toString)
+      val back = spark.read.parquet(stage.toString)
+        .repartition(index.numBuckets, col("cell"))
       Layouts.publish(back, table, "ivfpq_codes", Seq("cell"),
-        numBuckets, props = props)
+        index.numBuckets, props = index.props)
       (before, dataFiles())
-    } finally {
-      val root = java.nio.file.Paths.get(tmp)
-      val files = java.nio.file.Files.walk(root)
-      try files.sorted(java.util.Comparator.reverseOrder())
-        .forEach(f => { java.nio.file.Files.deleteIfExists(f); () })
-      finally files.close()
-    }
+    } finally { fs.delete(stage, true); () }
+  }
+
+  /** A published [[writeIvfPqLayout]] index as the append, compact and
+    * probe paths read it: the manifest row (one small read) and, on
+    * request, the frozen centroids and global books (driver-tiny, one
+    * collect each). */
+  private final class IvfPqIndex(
+      spark: org.apache.spark.sql.SparkSession, table: String) {
+    private val man = Layouts.manifest(spark)
+      .filter(col("layout") === table)
+      .select(col("n_rows"), col("num_buckets"), col("props")).head()
+    val nRows: Long = man.getLong(0)
+    val numBuckets: Int = man.getInt(1)
+    val props: Map[String, String] = man.getString(2).split(";")
+      .map(_.split("=", 2)).collect { case Array(k0, v) => k0 -> v }.toMap
+
+    def centroidTable: DataFrame = spark.table(s"${table}_centroids")
+
+    /** Row.getSeq yields mutable ArraySeq at runtime — materialized to
+      * immutable Vectors before anything re-encodes them
+      * (toDF/typedLit). */
+    def centroids: Seq[Seq[Double]] = centroidTable
+      .orderBy("cell").collect()
+      .map(_.getSeq[Double](1).toVector).toVector
+
+    def books: Array[Array[Array[Double]]] =
+      spark.table(s"${table}_books").collect()
+        .map(r => r.getInt(0) ->
+          r.getSeq[scala.collection.Seq[Double]](1).map(_.toArray).toArray)
+        .sortBy(_._1).map(_._2)
   }
 
   /** Probe a [[writeIvfPqLayout]] index: rank the STORED frozen
@@ -2201,38 +2196,22 @@ object Similarity {
       k: Int,
       nprobe: Int = 0,
       candMult: Int = 16): DataFrame = {
-    val man = Layouts.manifest(spark)
-      .filter(col("layout") === table)
-      .select(col("n_rows"), col("props")).head()
-    val corpusN = man.getLong(0)
-    val props = man.getString(1).split(";").map(_.split("=", 2))
-      .collect { case Array(k0, v) => k0 -> v }.toMap
-    val numSub = props("numSub").toInt
+    val index = new IvfPqIndex(spark, table)
+    val numSub = index.props("numSub").toInt
     val np =
       if (nprobe > 0) nprobe
-      else props.getOrElse("nprobe_default",
-        math.max(1, props("numCells").toInt / 4).toString).toInt
+      else index.props.getOrElse("nprobe_default",
+        math.max(1, index.props("numCells").toInt / 4).toString).toInt
     // tiny driver read: the global books (numSub·codebookK·subDim
     // doubles) become the query-side ADC kernel's codebook
-    val books: Array[Array[Array[Double]]] =
-      spark.table(s"${table}_books").collect()
-        .map(r => r.getInt(0) ->
-          r.getSeq[scala.collection.Seq[Double]](1).map(_.toArray).toArray)
-        .sortBy(_._1).map(_._2)
-    val pq = PqCodebook(Seq(books), perCellBooks = false, centroids = null)
+    val pq = PqCodebook(Seq(index.books), perCellBooks = false,
+      centroids = null)
     val dim = queries.select(size(col(vecCol))).head.getInt(0)
     require(dim == numSub * pq.subDim,
       s"query dim $dim != index dim ${numSub * pq.subDim}")
-    val cents = broadcast(spark.table(s"${table}_centroids"))
-    val wq = Window.partitionBy(col("q_id"))
-      .orderBy(col("csim").desc, col("cell"))
     // probe rows carry q·centroid (the cell-dependent ADC term) and
     // the flat dot table (cell-INdependent — global books)
-    val probed = queries.select(col(idCol).as("q_id"), col(vecCol).as("qv"))
-      .crossJoin(cents)
-      .withColumn("csim", cosine(col("qv"), col("centroid")))
-      .withColumn("crank", row_number().over(wq))
-      .filter(col("crank") <= np)
+    val probed = probeCells(queries, idCol, vecCol, index.centroidTable, np)
       .select(col("q_id"), col("qv"), col("cell"),
         dotNative(col("qv"), col("centroid")).as("__qdotc"))
     val qd = probed.select(col("q_id"), col("cell"), col("__qdotc"),
@@ -2244,83 +2223,27 @@ object Similarity {
     val cells = probed.select(col("cell")).distinct()
       .collect().map(_.getInt(0)).toSeq
     val pruned = spark.table(table).filter(col("cell").isin(cells: _*))
-    val approx = (col("__qdotc") + adcSum(col("__t"), numSub, pq.codebookK)) /
-      (col("__cnorm") * col("__qnorm"))
-    val cands = pruned.join(broadcast(qd), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), approx.as("asim"), col("vec_id").as("cand_id"))
-      .groupBy("q_id")
-      .agg(topKAgg(col("asim"), col("cand_id"),
-        rerankBudget(k, candMult, corpusN)).as("top"))
-      .select(col("q_id"), explode(col("top")).as("c"))
-      .select(col("q_id"), col("c.id").as("cand_id"))
+      .withColumnRenamed("vec_id", "cand_id")
+    val cands = approxCandidates(
+      pruned.join(broadcast(qd), Seq("cell"))
+        .filter(col("cand_id") =!= col("q_id")),
+      (col("__qdotc") + adcSum(col("__t"), numSub, pq.codebookK)) /
+        (col("__cnorm") * col("__qnorm")),
+      rerankBudget(k, candMult, index.nRows))
     // exact rerank reads vectors from the SAME pruned bucketed scan —
-    // candidates only exist inside probed cells
-    cands
-      .join(pruned.select(col("vec_id").as("cand_id"),
-        col("embedding").as("cv")), Seq("cand_id"))
-      .join(broadcast(
-        queries.select(col(idCol).as("q_id"), col(vecCol).as("qv"))),
-        Seq("q_id"))
-      .groupBy("q_id")
-      // dedupIds: a replicated layout (replicateMargin > 0) can
-      // surface the same candidate from several probed cells — the
-      // best-wins id-unique heap makes replication output-invisible
-      .agg(topKAgg(cosine(col("qv"), col("cv")), col("cand_id"), k,
-        dedupIds = true).as("top"))
-      .select(col("q_id"), posexplode(col("top")))
-      .select(col("q_id"), (col("pos") + 1).cast("long").as("rank"),
-        col("col.id").as("cand_id"))
-  }
-
-  /** Probe a [[writeIvfLayout]] table: queries rank the STORED frozen
-    * centroids (no corpus aggregate at query time), the probed cell
-    * set — bounded by |queries|·nprobe — prunes the bucketed scan,
-    * and the exact rerank runs only inside the probed cells. Same
-    * candidate semantics as [[ivfAnn]] over the stored assignment. */
-  def ivfAnnFromLayout(
-      spark: org.apache.spark.sql.SparkSession,
-      table: String,
-      queries: DataFrame,
-      idCol: String,
-      vecCol: String,
-      k: Int,
-      nprobe: Int = 2): DataFrame = {
-    val cents = broadcast(spark.table(s"${table}_centroids"))
-    val wq = Window.partitionBy(col("q_id"))
-      .orderBy(col("csim").desc, col("cell"))
-    val probed = queries.select(col(idCol).as("q_id"), col(vecCol).as("qv"))
-      .crossJoin(cents)
-      .withColumn("csim", cosine(col("qv"), col("centroid")))
-      .withColumn("crank", row_number().over(wq))
-      .filter(col("crank") <= nprobe)
-      .select(col("q_id"), col("qv"), col("cell"))
-    // literal probe-cell set (bounded by |queries|*nprobe) so the
-    // bucketed scan prunes to the probed buckets
-    val cells = probed.select(col("cell")).distinct()
-      .collect().map(_.getInt(0)).toSeq
-    // the cell-pruned bucketed scan relies on the session-wide
-    // autoBucketedScan=false default (see [[Layouts]]) — the probe
-    // itself never mutates shared session conf
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("cand_id"))
-    spark.table(table)
-      .filter(col("cell").isin(cells: _*))
-      .select(col("vec_id").as("cand_id"), col("embedding").as("cv"),
-        col("cell"))
-      .join(broadcast(probed), Seq("cell"))
-      .filter(col("cand_id") =!= col("q_id"))
-      .withColumn("sim", cosine(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank").cast("long").as("rank"),
-        col("cand_id"))
+    // candidates only exist inside probed cells. dedupIds: a
+    // replicated layout (replicateMargin > 0) can surface the same
+    // candidate from several probed cells — the best-wins id-unique
+    // heap makes replication output-invisible
+    exactRerank(cands, pruned.select(col("cand_id"), col("embedding").as("cv")),
+      queries, idCol, vecCol, k, dedupIds = true)
   }
 
   /** IVF-style ANN: assign each query to its `nprobe` nearest
-    * centroids, search only those cells, exact-rerank. The corpus is
-    * pre-partitioned by cell (the inverted file); a probe touches
-    * nprobe/|cells| of the data. */
+    * centroids (the per-cell means of `cellCol`), search only those
+    * cells, exact-rerank. The corpus is pre-partitioned by cell (the
+    * inverted file); a probe touches nprobe/|cells| of the data. The
+    * window-sort form it replaced is `Oracles.ivfAnnWindow`. */
   def ivfAnn(
       corpus: DataFrame,
       queries: DataFrame,
@@ -2329,26 +2252,14 @@ object Similarity {
       cellCol: String,
       k: Int,
       nprobe: Int = 2): DataFrame = {
-    val cents = broadcast(centroids(corpus, cellCol, vecCol))
-    val wq = Window.partitionBy(col("q_id"))
-      .orderBy(col("csim").desc, col("cell"))
-    val probed = queries.select(col(idCol).as("q_id"), col(vecCol).as("qv"))
-      .crossJoin(cents)
-      .withColumn("csim", cosine(col("qv"), col("centroid")))
-      .withColumn("crank", row_number().over(wq))
-      .filter(col("crank") <= nprobe)
+    val probed = probeCells(queries, idCol, vecCol,
+        centroids(corpus, cellCol, vecCol), nprobe)
       .select(col("q_id"), col("qv"), col("cell"))
     val c = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"),
       col(cellCol).as("cell"))
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(col("sim").desc, col("cand_id"))
-    c.join(broadcast(probed),
-        Seq("cell")).filter(col("cand_id") =!= col("q_id"))
-      .withColumn("sim", cosine(col("qv"), col("cv")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank").cast("long").as("rank"),
-        col("cand_id"))
+    // a candidate lives in one cell, so it joins once
+    cosineTail(c.join(broadcast(probed), Seq("cell"))
+      .filter(col("cand_id") =!= col("q_id")), k)
   }
 
   /** Cross-modal cluster profile — the "what IS this cluster" report

@@ -1,12 +1,14 @@
 package graft
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Similarity
 
 import scala.util.Random
 
-/** Equality oracles for the vector math, exact k-NN, the banded embedding engines, the
+/** Equality oracles for the vector math, exact k-NN, the LSH and IVF
+  * window rankings, the banded embedding engines, the
   * Lloyd driver combine and the product-quantization kernel: the
   * forms the production paths replaced, kept only so specs can pin
   * the replacements to them bit for bit. */
@@ -43,14 +45,76 @@ object Oracles {
     val q = broadcast(
       queries.select(col(idCol).as("q_id"), col(vecCol).as("qv")))
     val c = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("q_id"))
+    windowTopK(c.join(q, col("cand_id") =!= col("q_id")), k)
+  }
+
+  /** The `row_number` window over (sim desc, cand_id) per query that
+    * the engines ranked (q_id, qv, cand_id, cv) pairs with before the
+    * shared ranking tail. Unlike the tail, it keeps a NULL-cosine
+    * candidate and ranks it last. */
+  private def windowTopK(pairs: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("q_id"))
       .orderBy(col("sim").desc, col("cand_id"))
-    c.join(q, col("cand_id") =!= col("q_id"))
-      .withColumn("sim", Similarity.cosine(col("qv"), col("cv")))
+    pairs.withColumn("sim", Similarity.cosine(col("qv"), col("cv")))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("q_id"), col("rank").cast("long").as("rank"),
         col("cand_id"))
+  }
+
+  /** [[Similarity.lshAnn]] in its window form: the same seeded bucket
+    * and multi-probe candidates, ranked by [[windowTopK]]. */
+  def lshAnnWindow(
+      corpus: DataFrame,
+      queries: DataFrame,
+      idCol: String,
+      vecCol: String,
+      k: Int,
+      numPlanes: Int = 5,
+      dim: Int = 64,
+      seed: Long = 42L,
+      probeBits: Int = 2): DataFrame = {
+    def bucket(v: Column): Column = element_at(
+      Similarity.hyperplaneBuckets(v, 1, numPlanes, dim, seed), 1)
+    val flips =
+      (if (probeBits >= 1) (0 until numPlanes).map(1 << _) else Nil) ++
+        (if (probeBits >= 2) for {
+          i <- 0 until numPlanes; j <- (i + 1) until numPlanes
+        } yield (1 << i) | (1 << j) else Nil)
+    val c = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"),
+      bucket(col(vecCol)).as("bucket"))
+    val q = broadcast(queries
+      .select(col(idCol).as("q_id"), col(vecCol).as("qv"),
+        bucket(col(vecCol)).as("qb"))
+      .withColumn("probe", explode(array(
+        col("qb") +: flips.map(m => col("qb").bitwiseXOR(lit(m))): _*))))
+    windowTopK(c.join(q,
+      col("bucket") === col("probe") && col("cand_id") =!= col("q_id")), k)
+  }
+
+  /** [[Similarity.ivfAnn]] in its window form: each query's top
+    * `nprobe` cell means by a `row_number` window over (csim desc,
+    * cell), then the probed cells' rows ranked by [[windowTopK]]. */
+  def ivfAnnWindow(
+      corpus: DataFrame,
+      queries: DataFrame,
+      idCol: String,
+      vecCol: String,
+      cellCol: String,
+      k: Int,
+      nprobe: Int = 2): DataFrame = {
+    val wq = Window.partitionBy(col("q_id"))
+      .orderBy(col("csim").desc, col("cell"))
+    val probed = queries.select(col(idCol).as("q_id"), col(vecCol).as("qv"))
+      .crossJoin(broadcast(Similarity.centroids(corpus, cellCol, vecCol)))
+      .withColumn("csim", Similarity.cosine(col("qv"), col("centroid")))
+      .withColumn("crank", row_number().over(wq))
+      .filter(col("crank") <= nprobe)
+      .select(col("q_id"), col("qv"), col("cell"))
+    val c = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"),
+      col(cellCol).as("cell"))
+    windowTopK(c.join(broadcast(probed), Seq("cell"))
+      .filter(col("cand_id") =!= col("q_id")), k)
   }
 
   /** Deterministic ±1 random hyperplanes (seeded). */

@@ -142,23 +142,37 @@ class ProductQuantizerSpec extends SparkSuite with AdaptiveSparkPlanHelper {
       case n => Seq(n)
     }
 
+  /** The executed plan of `df` holds no HOF vector math and no
+    * `__books` column. */
+  private def assertNoHofMath(name: String, df: DataFrame): Unit = {
+    assert(df.collect().nonEmpty, name)
+    val all = nodes(df.queryExecution.executedPlan)
+    val hof = all.flatMap(_.expressions.flatMap(_.collect {
+      case e @ (_: ArrayTransform | _: ZipWith | _: ArrayAggregate) => e.prettyName
+    }))
+    assert(hof.isEmpty, s"$name still plans ${hof.distinct}")
+    assert(!all.exists(_.output.exists(_.name == "__books")),
+      s"$name still carries a __books column")
+  }
+
+  private lazy val emb = Tables.load(spark, sfDir, "embeddings")
+  private lazy val queries = emb.filter(col("vec_id") < 10)
+
   test("ivfPqKnn and pqKnn plans hold no HOF vector math and no __books column") {
-    val emb = Tables.load(spark, sfDir, "embeddings")
-    val queries = emb.filter(col("vec_id") < 10)
-    val runs = Seq(
-      "ivfPqKnn" -> Similarity.ivfPqKnn(emb, queries, "vec_id", "embedding", 5,
-        sampleN = 512, trainIters = 2, coarseIters = 2),
-      "pqKnn" -> Similarity.pqKnn(emb, queries, "vec_id", "embedding", 5,
-        sampleN = 512, trainIters = 2))
-    for ((name, df) <- runs) {
-      assert(df.collect().nonEmpty, name)
-      val all = nodes(df.queryExecution.executedPlan)
-      val hof = all.flatMap(_.expressions.flatMap(_.collect {
-        case e @ (_: ArrayTransform | _: ZipWith | _: ArrayAggregate) => e.prettyName
-      }))
-      assert(hof.isEmpty, s"$name still plans ${hof.distinct}")
-      assert(!all.exists(_.output.exists(_.name == "__books")),
-        s"$name still carries a __books column")
-    }
+    assertNoHofMath("ivfPqKnn", Similarity.ivfPqKnn(emb, queries, "vec_id",
+      "embedding", 5, sampleN = 512, trainIters = 2, coarseIters = 2))
+    assertNoHofMath("pqKnn", Similarity.pqKnn(emb, queries, "vec_id",
+      "embedding", 5, sampleN = 512, trainIters = 2))
+  }
+
+  test("ivfPqAnnFromLayout plan holds no HOF vector math and no __books column") {
+    val table = "graft_pq_hof_spec"
+    Similarity.writeIvfPqLayout(emb, "vec_id", "embedding", table,
+      numCells = 10, numBuckets = 8, codebookK = 16, sampleN = 512,
+      trainIters = 2, coarseIters = 2)
+    try assertNoHofMath("ivfPqAnnFromLayout", Similarity.ivfPqAnnFromLayout(
+      spark, table, queries, "vec_id", "embedding", 5, nprobe = 6))
+    finally Seq("", "_centroids", "_books").foreach(t =>
+      spark.sql(s"DROP TABLE IF EXISTS $table$t"))
   }
 }

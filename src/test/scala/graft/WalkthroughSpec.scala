@@ -98,6 +98,22 @@ class WalkthroughSpec extends SparkSuite with SuiteTempDirs {
         "t02_quality_score", "s01_knn_brute"))
       assert(SparkEntry.queries(key)(spark, sfDir).limit(1).count() >= 0,
         key)
+    // ... and the write-once layouts with one probe each
+    val layoutTables = Seq("emb_ivfpq", "emb_ivfpq_centroids",
+      "emb_ivfpq_books", "doc_bands")
+    try {
+      import org.apache.spark.sql.functions.col
+      import graft.operators.{Dedup, Similarity}
+      val emb = Tables.load(spark, sfDir, "embeddings")
+      Similarity.writeIvfPqLayout(emb, "vec_id", "embedding", "emb_ivfpq")
+      val near = Similarity.ivfPqAnnFromLayout(spark, "emb_ivfpq",
+        emb.filter(col("vec_id") < 10), "vec_id", "embedding", 5)
+      assert(near.count() == 50)
+      val docs = Tables.load(spark, sfDir, "documents")
+      Dedup.writeBandedLayout(docs, col("doc_id"), col("text"), "doc_bands")
+      assert(Dedup.candidatePairsFromLayout(spark, "doc_bands").count() >= 0)
+    } finally
+      layoutTables.foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
 
     // §6 fold-state inspection: run one tiny incremental fold, then
     // `state` renders its control surface

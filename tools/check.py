@@ -2,11 +2,19 @@
 """Local mirror of the driver's correctness gate.
 
 Usage: python3 tools/check.py <verify_out_dir> <sf_dir> [query ...]
+       python3 tools/check.py <verify_out_dir> --against <other_verify_out_dir>
+                              [query ...]
 
 Reads <verify_out_dir>/<name>/ parquet (written by graft.Verify) and
 <verify_out_dir>/oracle_sql.json, runs each oracle in DuckDB against
 the sf_dir parquet tables, and compares values with columns sorted by
 name (and rows sorted for stability). Exit 1 on any mismatch.
+
+With --against, compares each named query's row multiset (every query
+either dump holds when none is named) with another Verify dump, e.g.
+one made at the parent commit, through the same canonical form. This
+covers the rows-only keys, which have no oracle. Exit 1 on any
+difference or on a query missing from either dump.
 """
 import json
 import sys
@@ -31,7 +39,36 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     return out.sort_values(by=list(out.columns)).reset_index(drop=True)
 
 
+def against(out_dir: Path, ref_dir: Path, only: set) -> int:
+    """Number of queries whose row multisets differ between two dumps."""
+    def names(d: Path) -> set:
+        return {p.name for p in d.iterdir() if p.is_dir()}
+    n_same = n_diff = 0
+    for name in sorted(only or (names(out_dir) | names(ref_dir))):
+        missing = [d for d in (out_dir, ref_dir) if not (d / name).is_dir()]
+        if missing:
+            print(f"DIFF  {name}: missing from {missing[0]}")
+            n_diff += 1
+            continue
+        a = canon(pd.read_parquet(out_dir / name))
+        b = canon(pd.read_parquet(ref_dir / name))
+        if list(a.columns) != list(b.columns):
+            print(f"DIFF  {name}: columns {list(a.columns)} vs {list(b.columns)}")
+            n_diff += 1
+        elif not a.equals(b):
+            print(f"DIFF  {name}: {len(a)} vs {len(b)} rows, multisets differ")
+            n_diff += 1
+        else:
+            print(f"SAME  {name}: {len(a)} rows")
+            n_same += 1
+    print(f"\n{n_same} same, {n_diff} differ")
+    return n_diff
+
+
 def main():
+    if len(sys.argv) > 3 and sys.argv[2] == "--against":
+        sys.exit(1 if against(Path(sys.argv[1]), Path(sys.argv[3]),
+                              set(sys.argv[4:])) else 0)
     out_dir, sf_dir = Path(sys.argv[1]), sys.argv[2]
     only = set(sys.argv[3:])
     oracles = json.loads((out_dir / "oracle_sql.json").read_text())
