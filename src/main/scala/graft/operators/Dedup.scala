@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.functions.{Normalize, TextFns}
 
@@ -13,10 +15,14 @@ import graft.functions.{Normalize, TextFns}
   * (semantic near-dup).
   *
   * Scale posture: every path is explode → hash-shuffle on a bounded
-  * composite key (hash / (band, band-signature) / 16-bit chunk) —
-  * never an all-pairs cross join. Pair enumeration only happens inside
-  * LSH/SimHash buckets whose size is controlled by the banding
-  * parameters; skew in a hot bucket is handled by AQE.
+  * composite key (hash / (band, band-signature) / 16-bit chunk / block
+  * key) — never an all-pairs cross join. Pair enumeration only happens
+  * inside LSH/SimHash buckets and fuzzy-match blocks, scored by the
+  * band-cell scorer ([[Similarity.survivorPairs]]), which splits a
+  * hot bucket into sub-blocks of maxBucketRows rows on average (spread
+  * by an id hash) and scores each pair of sub-blocks as one cell: a
+  * bucket of 10⁶ identical documents becomes many tasks of about
+  * maxBucketRows² pairs each, not one quadratic one.
   */
 object Dedup {
 
@@ -81,8 +87,12 @@ object Dedup {
     *
     * Signatures are split into `bands` bands of `rowsPerBand`; docs
     * colliding on any band's hashed sub-signature become candidates.
-    * The band table is exploded (numBands rows per doc), shuffled on
-    * (band, band_hash) — bounded-size buckets, no cross join.
+    * The band table is exploded (numBands rows per doc) and its
+    * (band, band_hash) buckets are scored by [[bandTablePairs]] — no
+    * cross join and no cached band table: the bucket-size count and
+    * the cell shuffle share the signature aggregate's exchange (AQE
+    * reuses it), and each re-runs only the signature merge and the
+    * banding above it.
     */
   def minHashCandidatePairs(
       df: DataFrame,
@@ -91,16 +101,28 @@ object Dedup {
       numHashes: Int = BandingConfig.numHashes,
       shingleSize: Int = BandingConfig.shingleSize,
       rowsPerBand: Int = BandingConfig.rowsPerBand): DataFrame =
-    // cache (lazy): the candidate self-join reads the band table for
-    // BOTH sides — uncached, every doc pays its MinHash signature
-    // aggregation twice (same rationale as the embedding-side
-    // generator; blocks are recomputable and LRU-evictable)
-    pairsFromBandTable(
-      minHashBandTable(df, idCol, textCol, numHashes, shingleSize,
-        rowsPerBand).cache())
+    bandTablePairs(minHashBandTable(df, idCol, textCol, numHashes,
+      shingleSize, rowsPerBand)).distinct()
+
+  /** Candidate pairs of a (doc_id, band, band_hash) band table through
+    * the band-cell scorer: every pair of distinct non-NULL ids sharing
+    * a band bucket, as (a_id, b_id) with a_id < b_id — one row per
+    * shared band, deduped by the caller. `maxBucketRows` caps a
+    * bucket's sub-blocks; `tableRows` bounds one band's rows when the
+    * caller knows it (see [[Similarity.cellSorted]]). */
+  private[graft] def bandTablePairs(bands: DataFrame,
+      maxBucketRows: Int = 2048,
+      tableRows: Long = Long.MaxValue): DataFrame =
+    Similarity.survivorPairs[Similarity.BandRow](
+        bands.select(col("doc_id").as("vec_id"), col("band").as("tbl"),
+          col("band_hash").as("bkt")),
+        maxBucketRows, Seq("vec_id"), r => new Similarity.BandRow(r.get(0)),
+        tableRows = tableRows) { (x, y) =>
+      if (Similarity.distinctIds(x, y)) Row(x.id, y.id) else null
+    }
 
   /** The exploded (doc_id, band, band_hash) band table — the LSH
-    * shuffle key, factored out so it can either feed the self-join
+    * shuffle key, factored out so it can either feed the scorer
     * directly ([[minHashCandidatePairs]]) or be written once as a
     * bucketed layout ([[writeBandedLayout]]). */
   def minHashBandTable(
@@ -125,7 +147,11 @@ object Dedup {
         col("bb.band_hash").as("band_hash"))
   }
 
-  private def pairsFromBandTable(banded: DataFrame): DataFrame = {
+  /** The band self-join: pairs of a (doc_id, band, band_hash) table
+    * sharing a bucket, distinct. It serves the stored layout
+    * ([[candidatePairsFromLayout]]) and is the specs' equality oracle
+    * for [[bandTablePairs]]. */
+  private[graft] def pairsFromBandTable(banded: DataFrame): DataFrame = {
     val a = banded.alias("a")
     val b = banded.alias("b")
     a.join(b,
@@ -142,7 +168,11 @@ object Dedup {
     * subsequent candidate generation against the saved layout
     * ([[candidatePairsFromLayout]]) plans its self-join with ZERO
     * exchanges — at 100 TB the banding explode+shuffle is paid once
-    * per corpus snapshot instead of once per dedup run. */
+    * per corpus snapshot instead of once per dedup run. This is why
+    * the stored form keeps a join rather than the band-cell scorer:
+    * the scorer's cell shuffle would re-pay exactly the exchange the
+    * bucketed table exists to avoid (BucketingSpec pins the
+    * exchange-free join). */
   def writeBandedLayout(
       df: DataFrame,
       idCol: Column,
@@ -160,7 +190,9 @@ object Dedup {
         "rowsPerBand" -> rowsPerBand.toString))
 
   /** Candidate pairs from a [[writeBandedLayout]] table — identical
-    * output to [[minHashCandidatePairs]], shuffle-free join. */
+    * output to [[minHashCandidatePairs]], through the band self-join,
+    * which reads the table's buckets in place (see
+    * [[writeBandedLayout]] for why it is not the scorer). */
   def candidatePairsFromLayout(
       spark: SparkSession, table: String): DataFrame =
     pairsFromBandTable(spark.table(table))
@@ -227,30 +259,28 @@ object Dedup {
     * owner names (hangarbay/address.py) precisely because
     * near-identical spellings abound; this finds the survivors.
     *
-    * Same scale shape as the LSH paths: one hash shuffle on the block
-    * key, pair volume bounded by block size (pick block keys the way
-    * you'd pick LSH bands — tight enough that a block fits a task),
-    * codegen'd levenshtein only within blocks, never all-pairs.
+    * Same scale shape as the LSH paths: the blocks are the band-cell
+    * scorer's buckets ([[Similarity.survivorPairs]]), keyed by the
+    * block keys as ONE struct (struct equality matches null fields to
+    * each other, so null block keys block together), so pair volume is
+    * bounded by block size (pick block keys the way you'd pick LSH
+    * bands — tight enough that a block fits a task) and never
+    * all-pairs. A HOT block — a common surname/city in real linkage
+    * data — above `maxBlockRows` splits into sub-blocks of
+    * `maxBlockRows` rows on average, spread by an id hash, scored cell
+    * by cell, result-invisibly (equality-spec'd in DedupSpec against
+    * an adversarial hot-block fixture).
     *
-    * Hot-block guard (result-invisible, like salting): one HOT block
-    * key — a common surname/city in real linkage data — would
-    * otherwise land its whole O(m²) verify in a single task. Blocks
-    * measured above `maxBlockRows` are split into g = ⌈m/maxBlockRows⌉
-    * deterministic sub-blocks (hash of id), and pairs are generated
-    * per unordered sub-block CELL (i ≤ j): a row with sub-block u
-    * joins on the left for cells (u, j≥u) and on the right for cells
-    * (i≤u, u), so every within-block pair lands in exactly one cell —
-    * the triangle partitioning of the all-pairs square. The m² verify
-    * then spreads over g(g+1)/2 shuffle keys at ≤ maxBlockRows² pairs
-    * each, at a replication cost of g+1 copies of each hot row —
-    * O(m²/maxBlockRows) shuffled rows, vanishing next to the m²
-    * distance evaluations they unlock. Cold blocks take g = 1, which
-    * degenerates to exactly the unguarded single-cell join (one copy
-    * per side, a.id < b.id), so the output pair set is IDENTICAL for
-    * any maxBlockRows (equality-spec'd in DedupSpec against an
-    * adversarial hot-block fixture). The size measurement itself is
-    * one narrow count aggregate on the block key — the same
-    * measure-first posture as [[Scale.adaptiveJoin]] / q43. */
+    * Per pair, in the cell loop: NULL names and ids never pair; the
+    * length gap rejects first (levenshtein(x, y) ≥ |len(x) − len(y)|,
+    * so a gap above maxDistance can never survive — two int compares
+    * before the DP); then the THRESHOLD-BOUNDED distance
+    * `UTF8String.levenshteinDistance(other, maxDistance)`, the call
+    * Spark's 3-argument `levenshtein` makes: the DP walks only the
+    * 2·maxDistance+1 diagonal band, O(len·d) per pair, −1 above the
+    * bound, and the exact distance for survivors — so `dist` is
+    * bit-identical to the unbounded form's. Output (a_id, b_id, dist
+    * bigint), a_id < b_id, one row per pair. */
   def fuzzyMatchPairs(
       df: DataFrame,
       idCol: Column,
@@ -258,107 +288,31 @@ object Dedup {
       blockKeys: Seq[Column],
       maxDistance: Int = 1,
       maxBlockRows: Int = 2048): DataFrame = {
-    require(maxBlockRows > 0, s"maxBlockRows must be positive: $maxBlockRows")
-    val base = df.select(Seq(idCol.as("id"), nameCol.as("name")) ++
-      blockKeys.zipWithIndex.map { case (c, i) => c.as(s"__blk$i") }: _*)
-    val blkIdx = blockKeys.indices
-    // measure: block sizes (narrow keys, map-side-combined count);
-    // joined back null-safely because the pair join below matches
-    // null block keys to each other (<=>) and the guard must see
-    // those blocks' sizes too
-    // fresh aliases on the count side: the groupBy keys would
-    // otherwise carry base's own attribute ids into the join
-    // condition (counts derives from base) — a self-join ambiguity
-    val counts = base.groupBy(blkIdx.map(i => col(s"__blk$i")): _*)
-      .agg(count(lit(1)).as("__m"))
-      .select(blkIdx.map(i => col(s"__blk$i").as(s"__cblk$i")) :+
-        col("__m"): _*)
-    val countCond = blkIdx
-      .map(i => col(s"__blk$i") <=> col(s"__cblk$i")).reduce(_ && _)
-    val withSub = base.join(counts, countCond)
-      .select(Seq(col("id"), col("name")) ++
-        blkIdx.map(i => col(s"__blk$i")) :+
-        when(col("__m") > maxBlockRows,
-          ceil(col("__m") / lit(maxBlockRows.toDouble)).cast("long"))
-          .otherwise(lit(1L)).as("__g"): _*)
-      .withColumn("__u", pmod(xxhash64(col("id")), col("__g")))
-    // left side owns the cell row-coordinate (i = u, j explodes up);
-    // right side owns the column (j = u, i explodes down) — each
-    // unordered pair of sub-blocks meets in exactly one (i, j) cell
-    val left = withSub
-      .withColumn("__j", explode(sequence(col("__u"), col("__g") - 1)))
-      .withColumnRenamed("__u", "__i").drop("__g")
-    val right = withSub
-      .withColumn("__i", explode(sequence(lit(0L), col("__u"))))
-      .withColumnRenamed("__u", "__j").drop("__g")
-    // The verify's parallelism must come from the (block, cell) HASH,
-    // not from the input's file splits: left to its own devices the
-    // planner broadcasts one side (the name table is dimension-sized)
-    // and runs the m²-pair join + levenshtein on the STREAM side's
-    // input partitions — a single-file corpus serializes the entire
-    // quadratic verify onto one task (measured: 42 s single-task vs
-    // 5 s spread, identical pair count). Explicit repartition(n, keys)
-    // on BOTH sides forces the shuffle, co-partitions the join, and —
-    // because n is user-specified — keeps AQE from coalescing the
-    // exchange back to one partition on input-byte statistics that
-    // are blind to the join's quadratic OUTPUT. The shuffled rows are
-    // the O(m²/maxBlockRows) replicated inputs, not pairs — the same
-    // bound as before.
-    //
-    // The block keys join as ONE struct column compared with === :
-    // struct equality is null-safe PER FIELD (null = null inside a
-    // struct is true, verified in DedupSpec), so the semantics match
-    // the previous per-column <=> — but the planner's null-safe
-    // rewrite (coalesce/isnull composite keys) never fires, the join
-    // keys equal the repartition keys VERBATIM, and no
-    // ENSURE_REQUIREMENTS exchange lands between repartition and
-    // join. That exchange was not benign: being byte-sized, AQE
-    // coalesced it to 2 partitions and re-serialized the verify
-    // (measured 42 s at 2 tasks vs 5 s at 32 on the same pair set).
-    val nParts = df.sparkSession.conf
-      .get("spark.sql.shuffle.partitions", "32").toInt
-    val withBk = (d: DataFrame) => d.withColumn("__bk",
-      struct(blkIdx.map(i => col(s"__blk$i")): _*))
-    val cellCols = Seq(col("__bk"), col("__i"), col("__j"))
-    val a = withBk(left).repartition(nParts, cellCols: _*).alias("a")
-    val b = withBk(right).repartition(nParts, cellCols: _*).alias("b")
-    val sameBlock = col("a.__bk") === col("b.__bk")
-    val sameCell = col("a.__i") === col("b.__i") &&
-      col("a.__j") === col("b.__j")
-    // diagonal cells (i = j) hold both orderings of each pair — keep
-    // one by id; off-diagonal cells hold each pair exactly once
-    val onceOnly = (col("a.__i") =!= col("a.__j")) ||
-      (col("a.id") < col("b.id"))
-    // edit-distance lower bound: levenshtein(x, y) >= |len(x)-len(y)|
-    // (every length-changing edit is one operation), so a candidate
-    // whose length gap exceeds maxDistance can never survive the
-    // dist filter — reject it on two length() calls before the
-    // O(len²) levenshtein runs. Result-invisible by the bound; on
-    // fixed-length corpora (d09's Customer#NNNNNNNNN names) it
-    // prunes nothing and costs nothing measurable, on real linkage
-    // data (variable-length names) it skips the quadratic verify for
-    // most of each block's candidate pairs.
-    val lenGapOk =
-      abs(length(col("a.name")) - length(col("b.name"))) <= maxDistance
-    a.join(b, sameBlock && sameCell && onceOnly && lenGapOk)
-      // Catalyst pushes the deterministic filter back through the
-      // Project by alias substitution, so levenshtein lands in BOTH
-      // the join condition and the projection (verified on the
-      // optimized plan) — the join-side evaluation bounds the cost at
-      // one bounded distance per candidate pair; the projection
-      // re-evaluates only for the dist ≤ maxDistance SURVIVORS, a
-      // vanishing fraction of candidates under any useful threshold.
-      // THRESHOLD-BOUNDED levenshtein (the 3-arg form): the DP walks
-      // only the 2·maxDistance+1 diagonal band and bails the moment
-      // the band's minimum exceeds the bound — O(len·d) per pair, not
-      // O(len²), and -1 above the bound. For survivors (dist ≤ d) the
-      // banded value IS the exact distance, so the emitted dist
-      // column is bit-identical to the unbounded form's.
-      .select(least(col("a.id"), col("b.id")).as("a_id"),
-        greatest(col("a.id"), col("b.id")).as("b_id"),
-        levenshtein(col("a.name"), col("b.name"), maxDistance)
-          .cast("long").as("dist"))
-      .filter(col("dist") >= 0 && col("dist") <= maxDistance)
+    val blocked = df.select(idCol.as("vec_id"),
+      nameCol.cast("string").as("name"),
+      lit(0).as("tbl"),
+      struct(blockKeys.zipWithIndex.map { case (c, i) => c.as(s"__blk$i") }: _*)
+        .as("bkt"))
+    Similarity.survivorPairs[NameRow](blocked, maxBlockRows,
+        Seq("vec_id", "name"),
+        r => new NameRow(r.get(0),
+          if (r.isNullAt(1)) null else UTF8String.fromString(r.getString(1))),
+        Some(StructField("dist", LongType))) { (x, y) =>
+      if (x.name == null || y.name == null ||
+          math.abs(x.len - y.len) > maxDistance || !Similarity.distinctIds(x, y))
+        null
+      else {
+        val d = x.name.levenshteinDistance(y.name, maxDistance)
+        if (d >= 0) Row(x.id, y.id, d.toLong) else null
+      }
+    }
+  }
+
+  /** A fuzzy-match band row: the name and its length in characters
+    * (what Spark's `length` counts). */
+  private final class NameRow(id: Any, val name: UTF8String)
+      extends Similarity.BandRow(id) {
+    val len: Int = if (name == null) 0 else name.numChars()
   }
 
   /** Per-doc 64-bit SimHash: each token votes ±1 on every bit of its
@@ -390,39 +344,39 @@ object Dedup {
 
   /** SimHash near-dup candidates: pairs sharing any 16-bit chunk
     * (classic 4-table banding ⇒ guaranteed recall for hamming ≤ 3),
-    * verified by exact hamming distance ≤ maxHamming via bit_count. */
+    * verified by exact hamming distance ≤ maxHamming. Output
+    * (a_id, b_id, hamming int), a_id < b_id, distinct. */
   def simHashCandidatePairs(
       df: DataFrame,
       idCol: Column,
       textCol: Column,
-      maxHamming: Int = 16): DataFrame = {
-    val sigs = simHashSignatures(df, idCol, textCol)
-    // cache (lazy): the banded self-join reads this frame for BOTH
-    // sides — uncached, every doc pays its SimHash signature
-    // (tokenize + per-bit vote) twice (same rationale as the MinHash
-    // and embedding pair generators)
-    val chunked = sigs.select(col("doc_id"), col("simhash"),
+      maxHamming: Int = 16): DataFrame =
+    simHashPairs(simHashSignatures(df, idCol, textCol), maxHamming)
+
+  /** [[simHashCandidatePairs]] over [[simHashSignatures]] rows: the
+    * (chunk, value) buckets go through the band-cell scorer, which
+    * scores `bit_count(a ^ b) ≤ maxHamming` in its cell loop, so only
+    * survivors reach the distinct (a pair sharing several chunks
+    * survives once per shared chunk). */
+  private[graft] def simHashPairs(sigs: DataFrame, maxHamming: Int,
+      maxBucketRows: Int = 2048): DataFrame = {
+    val chunked = sigs.select(col("doc_id").as("vec_id"), col("simhash"),
       explode(array((0 until 4).map(i =>
         struct(lit(i).as("ci"), col(s"chunk$i").as("cv"))): _*)).as("c"))
-      .select(col("doc_id"), col("simhash"),
-        col("c.ci").as("ci"), col("c.cv").as("cv"))
-      .cache()
-    val a = chunked.alias("a")
-    val b = chunked.alias("b")
-    a.join(b, col("a.ci") === col("b.ci") && col("a.cv") === col("b.cv") &&
-        col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
-        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash")))
-          .as("hamming"))
-      // filter BEFORE the distinct: the hamming test is per-row
-      // arithmetic inside the pair join's stage, so failing
-      // candidates die where they are born and only SURVIVORS reach
-      // the dedup exchange (the round-11 bucket-local rule; the
-      // distinct must still run after — a pair sharing several
-      // chunks survives once per shared chunk)
-      .filter(col("hamming") <= maxHamming)
-      .distinct()
+      .select(col("vec_id"), col("simhash"), col("c.ci").as("tbl"),
+        col("c.cv").as("bkt"))
+    Similarity.survivorPairs[SimRow](chunked, maxBucketRows,
+        Seq("vec_id", "simhash"), r => new SimRow(r.get(0), r.getLong(1)),
+        Some(StructField("hamming", IntegerType))) { (x, y) =>
+      val h = java.lang.Long.bitCount(x.h ^ y.h)
+      if (h <= maxHamming && Similarity.distinctIds(x, y)) Row(x.id, y.id, h)
+      else null
+    }.distinct()
   }
+
+  /** A SimHash band row: the 64-bit signature. */
+  private final class SimRow(id: Any, val h: Long)
+    extends Similarity.BandRow(id)
 
   /** n-gram Jaccard similarity between candidate pairs: pairs carry
     * (a_id, b_id); token sets are joined in from the corpus. Used to
@@ -546,7 +500,7 @@ object Dedup {
       maxChainHops: Int = 8,
       smallCutoff: Long = 2L << 20): DataFrame = {
     // symmetric (receiver, sender) edges: recv adopts labels[send].
-    // ONE-PASS symmetrization (the symTopK trick): each pair explodes
+    // ONE-PASS symmetrization: each pair explodes
     // into both directions in the same projection — the r13 two-branch
     // union evaluated the whole upstream PAIR PIPELINE once per
     // branch (no CSE across union arms), which for the LSH callers
@@ -633,9 +587,6 @@ object Dedup {
         .agg(max(col("leader_id") < col("old_label")).as("changed")).head()
       converged = row.isNullAt(0) || !row.getBoolean(0)
       roundMs += (System.nanoTime() - roundT0) / 1000000
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round=$i hops=$hops converged=$converged" +
-          f" t=${(System.nanoTime() - roundT0) / 1e9}%.2fs")
       labels = rewrap(cand)
       prevCache.unpersist(blocking = false)
       prevCache = cand
@@ -645,8 +596,7 @@ object Dedup {
     // Per-round wall-clock recorded as column metadata on the result:
     // the fixpoint's dominant cost is ROUNDS (each multiplies the
     // cluster's per-job scheduling overhead), so any run can be
-    // audited after the fact — labels.schema("leader_id").metadata —
-    // without rerunning under a debug flag.
+    // audited after the fact — labels.schema("leader_id").metadata.
     val meta = new org.apache.spark.sql.types.MetadataBuilder()
       .putString("cc_mode", "distributed-fixpoint")
       .putLong("cc_rounds", i.toLong)

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructType}
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField, StructType}
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -208,25 +208,6 @@ object Similarity {
       k: Int): DataFrame =
     cosineTail(allPairs(corpus, queries, idCol, vecCol), k)
 
-  /** The exploded (vec_id, tbl, bkt) multi-table hyperplane band
-    * table — the ANN candidate-generation shuffle key, factored out
-    * so it can feed the one-shot graph ([[knnGraphBucketed]]) or be
-    * accumulated incrementally
-    * ([[graft.streaming.Streams.incrementalKnnGraph]]). */
-  def embBandTable(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      numTables: Int = 12,
-      planesPerTable: Int = 4,
-      dim: Int = 64,
-      seed: Long = 42L): DataFrame = {
-    val v = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("v"))
-    v.select(col("vec_id"), posexplode(
-        hyperplaneBuckets(col("v"), numTables, planesPerTable, dim, seed)))
-      .select(col("vec_id"), col("pos").as("tbl"), col("col").as("bkt"))
-  }
-
   /** Bucket-bounded k-NN GRAPH over the whole corpus: every vector's
     * top-k nearest neighbors among its LSH bucket co-occupants — the
     * all-nodes neighbor graph SemDeDup-style cluster dedup and graph
@@ -297,9 +278,9 @@ object Similarity {
     prev.filterNot(p => dfs.exists(_ eq p)).foreach(_.unpersist(false))
   }
 
-  /** The vector-carrying band table (vec_id, v, __n, tbl, bkt) —
-    * [[embBandTable]] plus the vector and its norm riding each row,
-    * identical bucket assignment for identical params/seed. Vectors
+  /** The vector-carrying band table (vec_id, v, __n, tbl, bkt): the
+    * multi-table hyperplane bands with the vector and its norm riding
+    * each row. Vectors
     * ride the band rows so the band-cell scorer scores each bucket in
     * place: what shuffles is the banded corpus itself (n·numTables
     * rows × dim floats — linear in corpus size and independent of dup
@@ -353,48 +334,49 @@ object Similarity {
 
   // ---- THE BAND-CELL SCORER ---------------------------------------
   //
-  // The one pair engine behind every banded caller: the k-NN graph
-  // ([[knnGraphBucketed]]), the streaming graph and pair folds
-  // ([[graft.streaming.Streams.incrementalKnnGraph]],
-  // [[graft.streaming.Streams.incrementalEmbPairs]]) and the quantized
-  // near-dup prune ([[bucketLocalThresholdPairs]]). Band rows are
-  // tagged with their triangle cells, shuffled on (tbl, bkt, i, j) and
-  // sorted by cell ([[cellSorted]]); one cell loop ([[cellLoop]])
-  // buffers a cell at a time (≤ 2·maxBucketRows rows) and scores its
-  // pairs in a tight primitive loop. What shuffles is the band rows
-  // (linear in the corpus + hot-tile replication), never a candidate
-  // pair: a self-join form pushed every candidate through SMJ row
-  // materialization (~1 µs/pair — 170 CPU-s of plumbing per 1.6e8
-  // candidates at sf1.0 for ~10 CPU-s of dot products).
+  // The one in-memory pair engine behind every banded or blocked
+  // caller: the k-NN graph ([[knnGraphBucketed]]), the streaming graph
+  // and pair folds ([[graft.streaming.Streams.incrementalKnnGraph]],
+  // [[graft.streaming.Streams.incrementalEmbPairs]],
+  // [[graft.streaming.Streams.incrementalMinhashPairs]]), the quantized
+  // near-dup prune ([[bucketLocalThresholdPairs]]), MinHash and SimHash
+  // candidates ([[graft.operators.Dedup.minHashCandidatePairs]],
+  // [[graft.operators.Dedup.simHashCandidatePairs]]) and blocked fuzzy
+  // matching ([[graft.operators.Dedup.fuzzyMatchPairs]]). A band row is
+  // keyed by the caller's (tbl, bkt) pair, of any orderable type: a
+  // hyperplane table and bucket, a MinHash band and its hash, a SimHash
+  // chunk and its value, or a constant and a block-key struct (whose
+  // null fields match each other). Band rows are tagged with their
+  // triangle cells, shuffled on (tbl, bkt, i, j) and sorted by cell
+  // ([[cellSorted]]); one cell loop ([[cellLoop]]) buffers a cell at a
+  // time and scores its pairs in a tight primitive loop. What shuffles
+  // is the band rows (linear in the corpus + hot-tile replication),
+  // never a candidate pair: a self-join form pushed every candidate
+  // through SMJ row materialization (~1 µs/pair — 170 CPU-s of plumbing
+  // per 1.6e8 candidates at sf1.0 for ~10 CPU-s of dot products), and
+  // its bucket was one task however hot.
   //
   // Hot-bucket guard (result-invisible): bucket sizes are measured (one
-  // narrow count, broadcast back: O(tables·2^planes) rows), a bucket
-  // above maxBucketRows splits into g deterministic sub-blocks by id
-  // hash, and each unordered sub-block CELL (i ≤ j) scores once — a
-  // hot bucket becomes more tasks, not a bigger one. A row with
-  // sub-block u owns the ROW coordinate of cells (u, j), j ∈ [u, g)
-  // (side 0) and the COLUMN coordinate of cells (i, u), i ∈ [0, u)
-  // (side 1); a diagonal cell scores the unordered pairs of its side-0
-  // rows, an off-diagonal cell side 0 × side 1. Every within-bucket
-  // pair lands in exactly one cell per shared table, and cold buckets
-  // take g = 1, so the pair set is IDENTICAL for any cap.
+  // narrow count; only the buckets above maxBucketRows are broadcast
+  // back), a hot bucket splits into g = ⌈m/maxBucketRows⌉ deterministic
+  // sub-blocks by id hash, and each unordered sub-block CELL (i ≤ j)
+  // scores once — a hot bucket becomes more tasks, not a bigger one. A
+  // sub-block holds m/g ≤ maxBucketRows rows on average; the id hash
+  // spreads them binomially around that. A row with sub-block u owns
+  // the ROW coordinate of cells (u, j), j ∈ [u, g) (side 0) and the
+  // COLUMN coordinate of cells (i, u), i ∈ [0, u) (side 1); a diagonal
+  // cell scores the unordered pairs of its side-0 rows, an off-diagonal
+  // cell side 0 × side 1. Every within-bucket pair lands in exactly one
+  // cell per shared table, and cold buckets take g = 1, so the pair set
+  // is IDENTICAL for any cap.
   //
   // Two modes. Retention ([[symRetainedPartialsFromBanded]]) updates
   // per-node top-k / threshold buffers in place and emits only their
-  // partials. Threshold ([[survivorPairs]]) emits the pairs a bound or
-  // exact cosine keeps. Either way the Σm² pair stream never leaves
-  // the loop: a pair-EMITTING form was measured and rejected (pushing
-  // every candidate through a row encoder: s16 at sf1.0, 438 vs 151
-  // CPU-s).
-
-  /** Triangle-cell tags for one band row: array of (i, j, side). */
-  private def cellTags(u: Column, g: Column): Column = concat(
-    transform(sequence(u, g - 1), j =>
-      struct(u.cast("int").as("i"), j.cast("int").as("j"),
-        lit(0).as("s"))),
-    transform(slice(sequence(lit(0L), u), lit(1), u.cast("int")), i =>
-      struct(i.cast("int").as("i"), u.cast("int").as("j"),
-        lit(1).as("s"))))
+  // partials. Threshold ([[survivorPairs]]) emits the pairs the
+  // caller's scorer keeps, each with at most one value. Either way the
+  // Σm² candidate stream never leaves the loop: a pair-EMITTING form was
+  // measured and rejected (pushing every candidate through a row
+  // encoder: s16 at sf1.0, 438 vs 151 CPU-s).
 
   /** The `payload` columns of every band row (one of them `vec_id`),
     * once per triangle cell the row belongs to, followed by tbl, bkt,
@@ -410,8 +392,11 @@ object Similarity {
     * already knows (a streaming batch's count): at most maxBucketRows
     * means no bucket can be hot, so every bucket takes g = 1 without
     * the bucket-size measurement and its two jobs — the same g the
-    * measurement would give. */
-  private def cellSorted(banded: DataFrame, maxBucketRows: Int,
+    * measurement would give. The measurement broadcasts only the hot
+    * buckets, so its size is bounded by rows/maxBucketRows per table
+    * however many buckets a banding has (a MinHash band table has
+    * about one per row). */
+  private[graft] def cellSorted(banded: DataFrame, maxBucketRows: Int,
       payload: Seq[String], tableRows: Long = Long.MaxValue): DataFrame = {
     require(maxBucketRows > 0, s"maxBucketRows must be positive: $maxBucketRows")
     val nParts = banded.sparkSession.conf
@@ -422,31 +407,39 @@ object Similarity {
         banded.select(p ++ Seq(col("tbl"), col("bkt"), lit(1L).as("__g")): _*)
       else {
         // fresh names on the count side (counts derives from banded —
-        // self-join ambiguity otherwise)
-        val counts = banded.groupBy(col("tbl"), col("bkt"))
+        // self-join ambiguity otherwise); a cold bucket finds no hot
+        // row and keeps g = 1
+        val hot = banded.groupBy(col("tbl"), col("bkt"))
           .agg(count(lit(1)).as("__m"))
+          .filter(col("__m") > maxBucketRows)
           .select(col("tbl").as("__ctbl"), col("bkt").as("__cbkt"),
             col("__m"))
         banded
-          .join(broadcast(counts),
-            col("tbl") === col("__ctbl") && col("bkt") === col("__cbkt"))
+          .join(broadcast(hot),
+            col("tbl") === col("__ctbl") && col("bkt") === col("__cbkt"),
+            "left")
           .select(p ++ Seq(col("tbl"), col("bkt"),
             when(col("__m") > maxBucketRows,
               ceil(col("__m") / lit(maxBucketRows.toDouble)).cast("long"))
               .otherwise(lit(1L)).as("__g")): _*)
       }
+    // a row of sub-block u meets each sub-block t of its bucket in cell
+    // (min(t, u), max(t, u)): on side 0 when t ≥ u, side 1 when t < u
     sized
-      .withColumn("__u", pmod(xxhash64(col("vec_id")), col("__g")))
       .select(p ++ Seq(col("tbl"), col("bkt"),
-        explode(cellTags(col("__u"), col("__g"))).as("c")): _*)
-      .select(p ++ Seq(col("tbl"), col("bkt"), col("c.i").as("__i"),
-        col("c.j").as("__j"), col("c.s").as("__sd")): _*)
+        pmod(xxhash64(col("vec_id")), col("__g")).as("__u"),
+        explode(sequence(lit(0L), col("__g") - 1)).as("__t")): _*)
+      .select(p ++ Seq(col("tbl"), col("bkt"),
+        least(col("__t"), col("__u")).cast("int").as("__i"),
+        greatest(col("__t"), col("__u")).cast("int").as("__j"),
+        (col("__t") < col("__u")).cast("int").as("__sd")): _*)
       .repartition(nParts, col("tbl"), col("bkt"), col("__i"), col("__j"))
       .sortWithinPartitions("tbl", "bkt", "__i", "__j")
   }
 
   /** The one cell loop: streams [[cellSorted]] rows (whose cell columns
-    * start at `tblIdx`), buffers one cell at a time (side 0 → A, side
+    * start at `tblIdx`: tbl and bkt compared as values, then the int
+    * __i, __j and __sd), buffers one cell at a time (side 0 → A, side
     * 1 → B) and scores its pairs lazily — a diagonal cell the unordered
     * pairs of A, an off-diagonal cell A × B. `score` returns an output
     * or null; `afterCell` and `atEnd` emit what a stateful scorer
@@ -469,8 +462,9 @@ object Similarity {
       private var out: O = null
       private def cell(r: Row, c: Int): Int = r.getInt(tblIdx + c)
       private def sameCell(r: Row, h: Row): Boolean =
-        cell(r, 0) == cell(h, 0) && cell(r, 1) == cell(h, 1) &&
-          cell(r, 2) == cell(h, 2) && cell(r, 3) == cell(h, 3)
+        cell(r, 2) == cell(h, 2) && cell(r, 3) == cell(h, 3) &&
+          r.get(tblIdx) == h.get(tblIdx) &&
+          r.get(tblIdx + 1) == h.get(tblIdx + 1)
       private def loadCell(): Unit = {
         val h = buf.head
         a.clear(); b.clear()
@@ -512,8 +506,15 @@ object Similarity {
       }
     }
 
-  /** A parsed band row; `id` is `vec_id` as its Spark value. */
-  private abstract class BandRow(val id: Any)
+  /** A parsed band row; `id` is `vec_id` as its Spark value. The
+    * MinHash scorer needs nothing else. */
+  private[graft] class BandRow(val id: Any)
+
+  /** Whether two band rows may pair at all: both ids non-NULL and
+    * unequal — the `a.id < b.id` of the join forms the dedup scorers
+    * replaced. */
+  private[graft] def distinctIds(x: BandRow, y: BandRow): Boolean =
+    x.id != null && y.id != null && x.id != y.id
 
   /** Float payload (vec_id, v, __n). `v` is null when every pair of the
     * row scores NULL under CosineSim: a null vector, element or norm. */
@@ -700,24 +701,27 @@ object Similarity {
       .select(col("vec_id"), (col("pos") + 1).cast("long").as("rank"),
         col("col.id").as("nbr_id"), col("col.score").as("sim"))
 
-  /** Threshold mode: every pair `keep` accepts, as (a_id, b_id) with
-    * a_id < b_id — one row per shared bucket, deduped by the caller.
-    * Ids of any type ride the cell loop as their Spark values and leave
-    * it unordered through a Row encoder of the banded id type; the
-    * least/greatest projection orders them as Spark orders that type. */
-  private def survivorPairs[R <: BandRow](banded: DataFrame,
+  /** Threshold mode: every pair `pair` emits, as (a_id, b_id) with
+    * a_id < b_id plus the `value` column when there is one — one row
+    * per shared bucket, deduped by the caller. `pair` returns
+    * Row(x.id, y.id[, value]) or null to drop the pair. Ids of any type
+    * ride the cell loop as their Spark values and leave it unordered
+    * through a Row encoder of the banded id type; the least/greatest
+    * projection orders them as Spark orders that type. */
+  private[graft] def survivorPairs[R <: BandRow](banded: DataFrame,
       maxBucketRows: Int, payload: Seq[String], parse: Row => R,
-      keep: (R, R) => Boolean, tableRows: Long = Long.MaxValue): DataFrame = {
+      value: Option[StructField] = None, tableRows: Long = Long.MaxValue)(
+      pair: (R, R) => Row): DataFrame = {
     val id = banded.schema("vec_id")
-    val enc = Encoders.row(StructType(Seq(id.copy(name = "__x"),
-      id.copy(name = "__y"))))
+    val enc = Encoders.row(StructType(
+      Seq(id.copy(name = "__x"), id.copy(name = "__y")) ++ value))
     val tblIdx = payload.length
     cellSorted(banded, maxBucketRows, payload, tableRows)
       .mapPartitions((rows: Iterator[Row]) =>
-        cellLoop[R, Row](rows, tblIdx, parse,
-          (x, y) => if (keep(x, y)) Row(x.id, y.id) else null))(enc)
-      .select(least(col("__x"), col("__y")).as("a_id"),
-        greatest(col("__x"), col("__y")).as("b_id"))
+        cellLoop[R, Row](rows, tblIdx, parse, pair))(enc)
+      .select(Seq(least(col("__x"), col("__y")).as("a_id"),
+        greatest(col("__x"), col("__y")).as("b_id")) ++
+        value.map(f => col(f.name)): _*)
   }
 
   /** WITHIN-batch survivors for the incremental pair fold
@@ -730,10 +734,12 @@ object Similarity {
       banded: DataFrame, threshold: Double,
       maxBucketRows: Int, tableRows: Long = Long.MaxValue): DataFrame =
     survivorPairs[FRow](banded, maxBucketRows, Seq("vec_id", "v", "__n"),
-      parseFloat, (x, y) => scorable(x, y) && {
+        parseFloat, tableRows = tableRows) { (x, y) =>
+      if (scorable(x, y) && {
         val sim = pairCosine(x, y)
         sim > threshold || java.lang.Double.isNaN(sim)
-      }, tableRows)
+      }) Row(x.id, y.id) else null
+    }
 
   /** The quantized prune of [[bucketLocalThresholdPairs]]: pairs whose
     * rigorous upper bound clears the threshold (`ub > threshold` with
@@ -742,8 +748,8 @@ object Similarity {
   private def prunedPairs(qbanded: DataFrame, threshold: Double,
       maxBucketRows: Int): DataFrame =
     survivorPairs[QRow](qbanded, maxBucketRows,
-      Seq("vec_id", "qv", "__s", "__n", "__sa"), parseQuantized,
-      (x, y) => x.q != null && y.q != null && x.q.length == y.q.length && {
+        Seq("vec_id", "qv", "__s", "__n", "__sa"), parseQuantized) { (x, y) =>
+      if (x.q != null && y.q != null && x.q.length == y.q.length && {
         // ((Q + 0.5·(sa_a+sa_b)) + 0.25·d), scaled by s_a·s_b, over
         // n_a·n_b, plus 1e-6 — see bucketLocalThresholdPairs
         var q = 0L
@@ -754,7 +760,8 @@ object Similarity {
           (q.toDouble + 0.5 * (x.sa + y.sa).toDouble + 0.25 * d.toDouble) /
           (x.n * y.n) + 1e-6
         ub > threshold || java.lang.Double.isNaN(ub)
-      })
+      }) Row(x.id, y.id) else null
+    }
 
   /** THRESHOLD-mode banded pair engine (r15 — guide §2.3 "shuffle
     * keys and metadata instead of payloads", §8): same multi-table
@@ -856,80 +863,6 @@ object Similarity {
       .join(vc.select(col("vec_id").as("b_id"), col("v").as("__vb")), "b_id")
       .select(col("a_id"), col("b_id"),
         cosine(col("__va"), col("__vb")).as("sim"))
-  }
-
-  /** Symmetrize scored undirected pairs and take the per-node top-k:
-    * each pair's cosine is computed ONCE and exploded into both
-    * directions in the same pass (a two-branch union would evaluate
-    * the whole scoring subtree — joins + cosine — twice), then the
-    * bounded-heap aggregate keeps k rows per node with map-side
-    * partials. Shared by the in-memory, layout-probe, and
-    * incremental graph paths. */
-  private[graft] def symTopK(scored: DataFrame, k: Int,
-      dedupIds: Boolean = false): DataFrame =
-    scored
-      .select(explode(array(
-        struct(col("a_id").as("vec_id"), col("b_id").as("nbr_id"),
-          col("sim")),
-        struct(col("b_id").as("vec_id"), col("a_id").as("nbr_id"),
-          col("sim")))).as("e"))
-      .select(col("e.vec_id"), col("e.nbr_id"), col("e.sim"))
-      .groupBy(col("vec_id"))
-      .agg(topKAgg(col("sim"), col("nbr_id"), k, dedupIds).as("top"))
-      .select(col("vec_id"), posexplode(col("top")))
-      .select(col("vec_id"), (col("pos") + 1).cast("long").as("rank"),
-        col("col.id").as("nbr_id"), col("col.score").as("sim"))
-
-  /** Publish the ANN band table as a bucketed+sorted layout (the
-    * embedding analog of the MinHash banded layout): bands + vectors
-    * written once per corpus snapshot through [[Layouts.publish]];
-    * every subsequent graph build / candidate generation self-joins
-    * the stored bands with ZERO exchanges. `<table>_vecs` carries the
-    * vectors for the scoring join. */
-  def writeEmbBandedLayout(
-      corpus: DataFrame,
-      idCol: String,
-      vecCol: String,
-      table: String,
-      numBuckets: Int = 16,
-      numTables: Int = 12,
-      planesPerTable: Int = 4,
-      dim: Int = 64,
-      seed: Long = 42L): Unit = {
-    Layouts.publish(
-      embBandTable(corpus, idCol, vecCol, numTables, planesPerTable,
-        dim, seed),
-      table, "emb_bands", Seq("tbl", "bkt"), numBuckets,
-      props = Map("numTables" -> numTables.toString,
-        "planesPerTable" -> planesPerTable.toString,
-        "dim" -> dim.toString, "seed" -> seed.toString,
-        "vecs_table" -> s"${table}_vecs"))
-    Layouts.ensureWritable(corpus.sparkSession, s"${table}_vecs")
-    corpus.select(col(idCol).as("vec_id"), col(vecCol).as("v"))
-      .write.mode("overwrite").saveAsTable(s"${table}_vecs")
-  }
-
-  /** [[knnGraphBucketed]] served from a published
-    * [[writeEmbBandedLayout]] table — identical output, and the
-    * candidate self-join on the stored bands plans with no shuffle
-    * (both sides read the same bucketed layout). */
-  def knnGraphFromLayout(
-      spark: org.apache.spark.sql.SparkSession,
-      table: String,
-      k: Int): DataFrame = {
-    val banded = spark.table(table)
-    val v = spark.table(s"${table}_vecs")
-    val pairs = banded.alias("a").join(banded.alias("b"),
-        col("a.tbl") === col("b.tbl") && col("a.bkt") === col("b.bkt") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("a_id"), col("b.vec_id").as("b_id"))
-      .distinct()
-    val scored = pairs
-      .join(v.select(col("vec_id").as("a_id"), col("v").as("va")), "a_id")
-      .join(v.select(col("vec_id").as("b_id"), col("v").as("vb")), "b_id")
-      .select(col("a_id"), col("b_id"),
-        cosine(col("va"), col("vb")).as("sim"))
-    symTopK(scored, k)
   }
 
   /** Exact maximum-inner-product top-k (MIPS): retrieval/recommender
@@ -1069,12 +1002,17 @@ object Similarity {
 
   /** Nearest-centroid column against FROZEN centroids (embedded as
     * literals — pure map-side): argmax cosine via struct max, ties
-    * toward the smaller cell id. */
+    * toward the smaller cell id. The max of a non-empty array of
+    * non-null structs is never NULL; the coalesce declares the column
+    * non-nullable, so a join on `cell` infers no `isnotnull(cell)`
+    * filter, which would run the k cosines a second time per row
+    * below the projection that computes them. */
   private[graft] def nearestCellCol(vec: Column, centroids: Seq[Seq[Double]]): Column = {
     val scored = centroids.zipWithIndex.map { case (c, i) =>
       struct(cosine(vec, typedLit(c)).as("sim"), lit(-i).as("negCell"))
     }
-    (-array_max(array(scored: _*)).getField("negCell")).as("cell")
+    coalesce(-array_max(array(scored: _*)).getField("negCell"), lit(0))
+      .as("cell")
   }
 
   /** Embedding-space outlier/novelty score — the complement of the
@@ -1685,14 +1623,14 @@ object Similarity {
     // it by id would shuffle the whole corpus on a key unrelated to
     // where rows go — the guide's §8 anti-pattern). A cell with no
     // mean (only NULL or empty vectors) is dropped, as the inner join
-    // against the mean table used to. Cached: consumed by BOTH the
-    // driver-side residual sample and the distributed encode pass (no
-    // CSE across jobs — uncached, the assignment map would run twice).
+    // against the mean table used to. Not cached: the driver-side
+    // residual sample and the lazy encode pass each run the k·dim
+    // assignment map, and nothing of this call outlives it.
     val assignedAll = corpus.select(col(idCol).as("cand_id"),
       col(vecCol).as("cv"), nearestCellCol(col(vecCol), centroidSeqs))
-    val assigned = (
+    val assigned =
       if (centroidSeqs.indices.forall(means.contains)) assignedAll
-      else assignedAll.filter(col("cell").isin(cellIds: _*))).cache()
+      else assignedAll.filter(col("cell").isin(cellIds: _*))
     // ---- PQ codebooks Lloyd-trained PER CELL on bounded residual
     // samples (Jégou et al. §IV: "local" codebooks per Voronoi cell):
     // residual distributions differ across cells, so per-cell books

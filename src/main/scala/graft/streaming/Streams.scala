@@ -838,7 +838,9 @@ object Streams {
     * index maintained at ingest: each micro-batch's docs are banded
     * once (O(batch) hashing), probed against the ACCUMULATED band
     * table for cross-batch collisions (bucket-bounded equi-join),
-    * self-joined for within-batch ones, then appended to the index.
+    * scored by the band-cell scorer for within-batch ones
+    * ([[graft.operators.Dedup.bandTablePairs]]), then appended to the
+    * index.
     * A pair is discovered exactly when its LATER member arrives, so
     * the accumulated pair set equals the batch d02 pairs under ANY
     * chunking (replay spec) — near-dup candidates stream out at
@@ -858,7 +860,7 @@ object Streams {
     * Replay-idempotent: the pairs part overwrites by batch id; the
     * band append is marker-guarded. A replaying batch sees its own
     * pre-crash bands in the table — the probe then finds each
-    * within-batch pair twice (self-join + cross), which the per-batch
+    * within-batch pair twice (scorer + cross), which the per-batch
     * distinct collapses, so the rewritten part is identical. */
   def incrementalMinhashPairs(
       stream: DataFrame,
@@ -872,19 +874,17 @@ object Streams {
     val bands = new BandState(spark, base, Seq("band", "band_hash"))
     try Fold.run(stream, base, "p14") { (batch, id) =>
       val b = spread(batch)
-      // cache (lazy): within-batch self-join (both sides) and the
+      // cached: the within-batch scorer, the cross-probe and the
       // band append all read this frame — uncached, the batch pays
-      // its MinHash signatures 3x
+      // its MinHash signatures 3x. The one eager count materializes
+      // it and bounds a band's rows, so a batch of at most
+      // maxBucketRows docs skips the scorer's bucket-size measurement.
       val newBands = graft.operators.Dedup.minHashBandTable(
         b, col("doc_id"), col("text")).cache()
-      val within = {
-        val a = newBands.alias("a")
-        val bb = newBands.alias("b")
-        a.join(bb, col("a.band") === col("b.band") &&
-            col("a.band_hash") === col("b.band_hash") &&
-            col("a.doc_id") < col("b.doc_id"))
-          .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"))
-      }
+      val rows = newBands.queryExecution.toRdd.count() /
+        graft.operators.Dedup.BandingConfig.numBands
+      val within =
+        graft.operators.Dedup.bandTablePairs(newBands, tableRows = rows)
       val cross = bands.scan().map { ob =>
         newBands.alias("n").join(ob.alias("o"),
             col("n.band") === col("o.band") &&

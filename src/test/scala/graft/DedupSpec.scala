@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.operators.Dedup
+import graft.operators.{Dedup, Similarity}
 
 class DedupSpec extends SparkSuite {
   import spark.implicits._
@@ -706,6 +706,19 @@ class DedupSpec extends SparkSuite {
     assert(!brute.exists { case (x, y, _) => (x, y) == (1L, 6L) })
   }
 
+  test("fuzzyMatchPairs: an int or binary name is matched as its string form") {
+    val rows = Seq((1L, 1234), (2L, 1235), (3L, 1299), (4L, 12345), (5L, 1234))
+      .toDF("id", "num")
+    val brute = Set((1L, 2L, 1L), (1L, 4L, 1L), (1L, 5L, 0L), (2L, 4L, 1L),
+      (2L, 5L, 1L), (4L, 5L, 1L))
+    for (name <- Seq(col("num"), col("num").cast("string").cast("binary"))) {
+      val got = Dedup.fuzzyMatchPairs(rows, col("id"), name, Seq(lit("S")),
+          maxDistance = 1, maxBlockRows = 2)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(got == brute, s"name ${name}: ${got.diff(brute)} / ${brute.diff(got)}")
+    }
+  }
+
   test("exact-first cascade is result-invisible on real documents") {
     val real = Tables.load(spark, sfDir, "documents")
       .select(col("doc_id"), col("text"))
@@ -775,5 +788,105 @@ class DedupSpec extends SparkSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // nulls block together (null <=> null); the non-null row is alone
     assert(pairs == Set((1L, 2L)))
+  }
+
+  private def pairSet(df: org.apache.spark.sql.DataFrame): Set[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+
+  private def hammingSet(df: org.apache.spark.sql.DataFrame) =
+    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+
+  test("MinHash and SimHash pairs equal their band-join oracles") {
+    val real = Tables.load(spark, sfDir, "documents")
+      .select(col("doc_id"), col("text"))
+    for (d <- Seq(docs, real)) {
+      val bands = Dedup.minHashBandTable(d, col("doc_id"), col("text"))
+      val minhash = Dedup.minHashCandidatePairs(d, col("doc_id"), col("text"))
+      assert(minhash.count() == minhash.distinct().count())
+      assert(pairSet(minhash) == pairSet(Dedup.pairsFromBandTable(bands)))
+      val sigs = Dedup.simHashSignatures(d, col("doc_id"), col("text"))
+      val simhash = Dedup.simHashCandidatePairs(d, col("doc_id"), col("text"))
+      assert(simhash.schema.map(_.name) == Seq("a_id", "b_id", "hamming"))
+      assert(hammingSet(simhash) == hammingSet(Oracles.simHashJoinPairs(sigs, 16)))
+      assert(simhash.count() == hammingSet(simhash).size.toLong)
+      // a tight hamming bound and a small cap keep the same answer
+      assert(hammingSet(Dedup.simHashPairs(sigs, 3, maxBucketRows = 2)) ==
+        hammingSet(Oracles.simHashJoinPairs(sigs, 3)))
+    }
+  }
+
+  test("MinHash: a planted hot band splits into id-hash sub-block cells, pairs unchanged") {
+    val cap = 16
+    // 4·cap identical documents share every band bucket, beside the
+    // planted fixture's near-dups and an unrelated document
+    val hot = (0 until 4 * cap).map(i =>
+        (100L + i, "boilerplate footer copied onto every page of the site"))
+      .toDF("doc_id", "text").unionByName(docs)
+    val bands = Dedup.minHashBandTable(hot, col("doc_id"), col("text"))
+    val cells = Similarity.cellSorted(
+        bands.select(col("doc_id").as("vec_id"), col("band").as("tbl"),
+          col("band_hash").as("bkt")), cap, Seq("vec_id"))
+      .groupBy("tbl", "bkt", "__i", "__j", "__sd").count()
+      .collect()
+      .groupBy(r => (r.get(0), r.get(1)))
+      .filter(_._2.exists(_.getAs[Int]("__j") > 0))
+    // each band has one hot bucket, the 64 copies: it splits into
+    // g = ⌈64/16⌉ = 4 sub-blocks scored as 4·5/2 = 10 triangle cells
+    assert(cells.size == Dedup.BandingConfig.numBands)
+    cells.values.foreach { rows =>
+      assert(rows.map(_.getAs[Int]("__j")).max == 3)
+      assert(rows.map(r => (r.getAs[Int]("__i"), r.getAs[Int]("__j")))
+        .distinct.length == 10)
+      // a side is one id-hash sub-block: m/g = cap rows on average,
+      // spread binomially around it (an exact split would need each
+      // row's rank in its bucket)
+      val sizes = rows.filter(r => r.getAs[Int]("__i") == r.getAs[Int]("__j"))
+        .map(_.getAs[Long]("count"))
+      assert(sizes.length == 4 && sizes.sum == 4L * cap)
+      assert(sizes.max < 2L * cap, s"sub-block sizes ${sizes.sorted.toSeq}")
+    }
+    info(s"sub-block sizes at cap $cap: " +
+      cells.values.head.filter(r => r.getAs[Int]("__i") == r.getAs[Int]("__j"))
+        .sortBy(_.getAs[Int]("__i")).map(_.getAs[Long]("count")).mkString(", "))
+    val oracle = pairSet(Dedup.pairsFromBandTable(bands))
+    val hotPairs = (100L until 100L + 4 * cap).combinations(2)
+      .map(p => (p(0), p(1))).toSet
+    assert(hotPairs.subsetOf(oracle))
+    assert(pairSet(Dedup.bandTablePairs(bands, maxBucketRows = cap)) == oracle)
+    assert(pairSet(Dedup.bandTablePairs(bands)) == oracle)
+  }
+
+  test("duplicate and NULL ids never pair in the MinHash, SimHash and fuzzy scorers") {
+    val text = "the quick brown fox jumps over the lazy dog near the river bank"
+    val d = Seq((Option(1L), text), (Option(1L), text),
+        (Option.empty[Long], text), (Option(2L), text))
+      .toDF("doc_id", "text")
+    val bands = Dedup.minHashBandTable(d, col("doc_id"), col("text"))
+    for (cap <- Seq(1, 2048)) {
+      assert(pairSet(Dedup.bandTablePairs(bands, maxBucketRows = cap)) ==
+        Set((1L, 2L)))
+      assert(hammingSet(Dedup.simHashPairs(
+          Dedup.simHashSignatures(d, col("doc_id"), col("text")), 16,
+          maxBucketRows = cap)) == Set((1L, 2L, 0)))
+      val names = Seq((Option(1L), "alpha"), (Option(1L), "alpha"),
+          (Option.empty[Long], "alpha"), (Option(2L), "alphb"))
+        .toDF("id", "name")
+      val fuzzy = Dedup.fuzzyMatchPairs(names, col("id"), col("name"),
+          Seq(lit("S")), maxDistance = 1, maxBlockRows = cap)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+      assert(fuzzy == Set((1L, 2L, 1L)))
+    }
+  }
+
+  test("MinHash, SimHash and fuzzy pairs leave no cached relation behind") {
+    Similarity.releaseBandedCache()
+    spark.catalog.clearCache()
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    Dedup.minHashCandidatePairs(docs, col("doc_id"), col("text")).collect()
+    Dedup.simHashCandidatePairs(docs, col("doc_id"), col("text")).collect()
+    Dedup.fuzzyMatchPairs(docs, col("doc_id"), col("text"), Seq(lit(1)))
+      .collect()
+    assert(spark.sharedState.cacheManager.isEmpty, "a pair engine left a cache")
+    assert(spark.sparkContext.getPersistentRDDs.keySet.toSet == before)
   }
 }

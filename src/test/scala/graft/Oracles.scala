@@ -8,10 +8,12 @@ import graft.operators.Similarity
 import scala.util.Random
 
 /** Equality oracles for the vector math, exact k-NN, the LSH and IVF
-  * window rankings, the banded embedding engines, the
-  * Lloyd driver combine and the product-quantization kernel: the
-  * forms the production paths replaced, kept only so specs can pin
-  * the replacements to them bit for bit. */
+  * window rankings, the banded embedding engines, the SimHash band
+  * join, the Lloyd driver combine and the product-quantization kernel:
+  * the forms the production paths replaced, kept only so specs can pin
+  * the replacements to them bit for bit. (The MinHash band join stays
+  * in `Dedup.pairsFromBandTable`, which the stored layout reads
+  * through.) */
 object Oracles {
 
   /** HOF dot product (zip_with/aggregate): the oracle
@@ -138,6 +140,61 @@ object Oracles {
         .otherwise(lit(0))
     }.reduce(_ + _)
 
+  /** The exploded (vec_id, tbl, bkt) multi-table hyperplane band
+    * table — the bucket assignment of `Similarity.bandedWithVecs`
+    * without the vector, for the join oracles and the band-state
+    * probes of the streaming specs. */
+  def embBandTable(
+      corpus: DataFrame,
+      idCol: String,
+      vecCol: String,
+      numTables: Int = 12,
+      planesPerTable: Int = 4,
+      dim: Int = 64,
+      seed: Long = 42L): DataFrame = {
+    val v = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("v"))
+    v.select(col("vec_id"), posexplode(Similarity.hyperplaneBuckets(
+        col("v"), numTables, planesPerTable, dim, seed)))
+      .select(col("vec_id"), col("pos").as("tbl"), col("col").as("bkt"))
+  }
+
+  /** Symmetrize scored undirected pairs (a_id, b_id, sim) and take the
+    * per-node top-k through the bounded-heap aggregate, as
+    * (vec_id, rank, nbr_id, sim). */
+  def symTopK(scored: DataFrame, k: Int): DataFrame =
+    scored
+      .select(explode(array(
+        struct(col("a_id").as("vec_id"), col("b_id").as("nbr_id"),
+          col("sim")),
+        struct(col("b_id").as("vec_id"), col("a_id").as("nbr_id"),
+          col("sim")))).as("e"))
+      .select(col("e.vec_id"), col("e.nbr_id"), col("e.sim"))
+      .groupBy(col("vec_id"))
+      .agg(Similarity.topKAgg(col("sim"), col("nbr_id"), k).as("top"))
+      .select(col("vec_id"), posexplode(col("top")))
+      .select(col("vec_id"), (col("pos") + 1).cast("long").as("rank"),
+        col("col.id").as("nbr_id"), col("col.score").as("sim"))
+
+  /** The SimHash chunk self-join `Dedup.simHashCandidatePairs` used
+    * before the band-cell scorer: pairs sharing a (chunk, value)
+    * bucket, hamming-filtered, distinct — (a_id, b_id, hamming). */
+  def simHashJoinPairs(sigs: DataFrame, maxHamming: Int): DataFrame = {
+    val chunked = sigs.select(col("doc_id"), col("simhash"),
+      explode(array((0 until 4).map(i =>
+        struct(lit(i).as("ci"), col(s"chunk$i").as("cv"))): _*)).as("c"))
+      .select(col("doc_id"), col("simhash"),
+        col("c.ci").as("ci"), col("c.cv").as("cv"))
+    val a = chunked.alias("a")
+    val b = chunked.alias("b")
+    a.join(b, col("a.ci") === col("b.ci") && col("a.cv") === col("b.cv") &&
+        col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("a_id"), col("b.doc_id").as("b_id"),
+        bit_count(col("a.simhash").bitwiseXOR(col("b.simhash")))
+          .as("hamming"))
+      .filter(col("hamming") <= maxHamming)
+      .distinct()
+  }
+
   /** The candidate-JOIN form knnGraphBucketed used through round 10:
     * bare-id pairs → global distinct → two vector-fetch joins →
     * cosine → top-k. Output-identical to the band-cell scorer (the
@@ -157,7 +214,7 @@ object Oracles {
     val v = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("v"))
     // cache (lazy): the bucket self-join reads this frame for both
     // sides — same rationale as the near-dup pair generator
-    val banded = Similarity.embBandTable(corpus, idCol, vecCol, numTables,
+    val banded = embBandTable(corpus, idCol, vecCol, numTables,
       planesPerTable, dim, seed).cache()
     val pairs = banded.alias("a").join(banded.alias("b"),
         col("a.tbl") === col("b.tbl") && col("a.bkt") === col("b.bkt") &&
@@ -169,7 +226,7 @@ object Oracles {
       .join(v.select(col("vec_id").as("b_id"), col("v").as("vb")), "b_id")
       .select(col("a_id"), col("b_id"),
         Similarity.cosine(col("va"), col("vb")).as("sim"))
-    Similarity.symTopK(scored, k)
+    symTopK(scored, k)
   }
 
   /** The candidate-JOIN form embeddingNearDupPairsBucketed used

@@ -529,60 +529,6 @@ class SimilaritySpec extends SparkSuite {
     assert(recall >= 0.5, s"graph top-1 recall too low: $recall")
   }
 
-  test("emb banded layout: probe equals in-memory graph, self-join plans no shuffle") {
-    Similarity.writeEmbBandedLayout(emb, "vec_id", "embedding",
-      "graft_embband_spec", numBuckets = 8)
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      // identical graph from the published layout
-      val fromLayout = Similarity
-        .knnGraphFromLayout(spark, "graft_embband_spec", k = 5)
-        .collect()
-        .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("rank"),
-          r.getAs[Long]("nbr_id")))
-        .toSet
-      val direct = Similarity
-        .knnGraphBucketed(emb, "vec_id", "embedding", k = 5)
-        .collect()
-        .map(r => (r.getAs[Long]("vec_id"), r.getAs[Long]("rank"),
-          r.getAs[Long]("nbr_id")))
-        .toSet
-      assert(fromLayout == direct,
-        s"layout graph diverges: ${(fromLayout -- direct).take(3)} vs " +
-          s"${(direct -- fromLayout).take(3)}")
-      // the candidate self-join on the stored bands is exchange-free
-      val banded = spark.table("graft_embband_spec")
-      val join = banded.alias("a").join(banded.alias("b"),
-        org.apache.spark.sql.functions.col("a.tbl") ===
-          org.apache.spark.sql.functions.col("b.tbl") &&
-        org.apache.spark.sql.functions.col("a.bkt") ===
-          org.apache.spark.sql.functions.col("b.bkt") &&
-        org.apache.spark.sql.functions.col("a.vec_id") <
-          org.apache.spark.sql.functions.col("b.vec_id"))
-      join.collect()
-      // AQE wraps the final plan in a ResultQueryStage whose children
-      // list is empty, so a tree collect misses the join node — the
-      // rendered plan string sees through it
-      val exec = (join.queryExecution.executedPlan match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          a.executedPlan
-        case p => p
-      }).toString
-      assert(exec.contains("SortMergeJoin"),
-        s"expected a sort-merge self-join in:\n$exec")
-      assert(!exec.contains("Exchange"),
-        s"emb banded layout join still shuffles:\n$exec")
-      assert(exec.contains("Bucketed: true"),
-        s"expected bucketed scans in:\n$exec")
-    } finally {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
-      spark.sql("DROP TABLE IF EXISTS graft_embband_spec")
-      spark.sql("DROP TABLE IF EXISTS graft_embband_spec_vecs")
-      ()
-    }
-  }
-
   test("ivfAnn recall vs brute force (tuned nprobe)") {
     val ann = resultSet(
       Similarity.ivfAnn(emb, queries, "vec_id", "embedding", "label", 5,
@@ -618,6 +564,19 @@ class SimilaritySpec extends SparkSuite {
     val run2 = resultSet(Similarity.ivfPqKnn(
       emb, queries, "vec_id", "embedding", 5, numCells = 10, nprobe = 5))
     assert(run1 == run2, "IVF-PQ result not deterministic across runs")
+  }
+
+  test("ivfPqKnn leaves no cached relation or persistent RDD behind") {
+    Similarity.releaseBandedCache()
+    spark.catalog.clearCache()
+    val sc = spark.sparkContext
+    assert(spark.sharedState.cacheManager.isEmpty)
+    val before = sc.getPersistentRDDs.keySet.toSet
+    Similarity.ivfPqKnn(emb, queries, "vec_id", "embedding", 5).collect()
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "ivfPqKnn left a cached relation")
+    assert(sc.getPersistentRDDs.keySet.toSet == before,
+      s"ivfPqKnn left persistent RDDs: ${sc.getPersistentRDDs.keySet.toSet -- before}")
   }
 
   test("tuned production configs hold recall >= 0.9 on the sf0.1 " +

@@ -379,8 +379,7 @@ class StreamsSpec extends SparkSuite with SuiteTempDirs {
     // the broadcast threshold)
     val stored = new graft.streaming.BandState(spark, base, Seq("tbl", "bkt"))
       .scan().get
-    val probe = graft.operators.Similarity
-      .embBandTable(emb.limit(20), "vec_id", "embedding")
+    val probe = Oracles.embBandTable(emb.limit(20), "vec_id", "embedding")
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -1111,7 +1110,7 @@ class StreamsSpec extends SparkSuite with SuiteTempDirs {
       if (leftover == "_temporary") {
         // a committed task's band rows, which must not reach the index
         val task = loc.resolve("_temporary/0/task_000000000000_0000_m_000000")
-        graft.operators.Similarity.embBandTable(emb, "vec_id", "embedding")
+        Oracles.embBandTable(emb, "vec_id", "embedding")
           .select("vec_id", "tbl", "bkt").coalesce(1)
           .write.parquet(s"$base/seed")
         java.nio.file.Files.createDirectories(task)
@@ -1589,5 +1588,24 @@ class StreamsSpec extends SparkSuite with SuiteTempDirs {
     // shuffle, prune shuffle, part write, vector and band appends
     assert(cleanMax <= 5, s"a clean trigger ran $cleanMax jobs")
     assert(knnMax <= 8, s"a k-NN trigger ran $knnMax jobs")
+  }
+
+  test("a steady trigger of the MinHash pair fold runs a bounded number of jobs") {
+    val docs = Tables.load(spark, sfDir, "documents")
+      .select(col("doc_id"), col("text"))
+    val n = docs.select(max(col("doc_id"))).head.getLong(0)
+    val docDir = tmpDir("graft_jobs_p14_src")
+    landChunks((0 until 3).map(i => docs.filter(
+      col("doc_id") > n * i / 3 && col("doc_id") <= n * (i + 1) / 3)), docDir)
+    val (mean, most) = triggerJobs("p14") {
+      Streams.incrementalMinhashPairs(spark.readStream.schema(docs.schema)
+        .option("maxFilesPerTrigger", "1")
+        .option("pathGlobFilter", "chunk*.parquet").parquet(docDir),
+        tmpDir("graft_jobs_p14"))
+    }
+    info(f"jobs per trigger: minhash pairs $mean%.2f (max $most)")
+    // pinned at the count this layout runs; the band self-join form
+    // it replaced ran up to 10
+    assert(most <= 9, s"a MinHash pair trigger ran $most jobs")
   }
 }
