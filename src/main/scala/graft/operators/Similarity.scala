@@ -317,15 +317,17 @@ object Similarity {
       .get("spark.sql.shuffle.partitions", "32").toInt
     val v0 = corpus.select(col(idCol).as("vec_id"), col(vecCol).as("v"))
     val v = if (spread) v0.repartition(nParts) else v0
-    // __n = the vector's exact L2 norm, computed ONCE per corpus row
-    // (pre-explode, so numTables band rows share it) with the same
+    // __n = the vector's exact L2 norm, computed ONCE per corpus row in
+    // its own projection below the explode (an expression in the
+    // explode's own select runs in a Project above the Generate, once
+    // per band row), so the numTables band rows share it. Same
     // cast-then-accumulate order as [[graft.plans.CosineSim]]'s norm
     // loop: sqrt is exactly rounded, so dot/(a.__n · b.__n) downstream
     // is BIT-identical to CosineSim(a.v, b.v) while the Σm² pair pass
     // stops re-deriving both norms per candidate (r15, guide §1.2 —
     // the norms were 2/3 of every pair's fused-loop arithmetic).
-    v.select(col("vec_id"), col("v"),
-        l2normNative(col("v")).as("__n"),
+    v.select(col("vec_id"), col("v"), l2normNative(col("v")).as("__n"))
+      .select(col("vec_id"), col("v"), col("__n"),
         posexplode(
           hyperplaneBuckets(col("v"), numTables, planesPerTable, dim, seed)))
       .select(col("vec_id"), col("v"), col("__n"), col("pos").as("tbl"),
@@ -826,9 +828,12 @@ object Similarity {
     // per-ROW symmetric scale — map-side, no corpus-wide aggregate
     // (a global max would add a barrier job and couple rows at 100 TB)
     val maxAbs = aggregate(vd, lit(0.0), (acc, x) => greatest(acc, abs(x)))
+    // every per-vector value is computed below the explode, once per
+    // vector: the explode's own select evaluates its other items above
+    // the Generate, once per band row (numTables times)
     val qbanded = vc
       .select(col("vec_id"), col("v"), maxAbs.as("__ma"))
-      .select(col("vec_id"),
+      .select(col("vec_id"), col("v"),
         // all-zero rows quantize to zero codes at scale 0 (the
         // division would be 0/0); their bound degenerates to NaN and
         // the exact re-score decides, as documented above
@@ -838,12 +843,14 @@ object Similarity {
               round(x.cast("double") * 127.0 / col("__ma")))))
             .otherwise(lit(0.0)).cast("byte")).as("qv"),
         (col("__ma") / 127.0).as("__s"),
-        l2normNative(col("v")).as("__n"),
+        l2normNative(col("v")).as("__n"))
+      .select(col("vec_id"), col("v"), col("qv"), col("__s"), col("__n"),
+        aggregate(col("qv"), lit(0L),
+          (acc, x) => acc + abs(x.cast("long"))).as("__sa"))
+      .select(col("vec_id"), col("qv"), col("__s"), col("__n"), col("__sa"),
         posexplode(
           hyperplaneBuckets(col("v"), numTables, planesPerTable, dim, seed)))
-      .select(col("vec_id"), col("qv"), col("__s"), col("__n"),
-        aggregate(col("qv"), lit(0L),
-          (acc, x) => acc + abs(x.cast("long"))).as("__sa"),
+      .select(col("vec_id"), col("qv"), col("__s"), col("__n"), col("__sa"),
         col("pos").as("tbl"), col("col").as("bkt"))
       .cache()
     // eager materialization (one count, see liveBanded) — this one

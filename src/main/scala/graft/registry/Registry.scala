@@ -4,7 +4,6 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.functions.Normalize
 import graft.operators.Relational
 
 /** The user-facing registry API — Spark re-expression of the
@@ -23,11 +22,15 @@ import graft.operators.Relational
   *   hb.list_tables()    -> registry.listTables
   *   hb.schema(t)        -> registry.schemaOf(t)
   *
-  * Instead of materializing DuckDB/SQLite indexes, views are lazy
-  * DataFrames: the code books decode through literal map expressions,
-  * the FTS analog is a token inverted index (explode + hash shuffle) —
-  * both forms that scale out, where the reference's single-file
-  * databases cannot.
+  * Where the reference builds DuckDB/SQLite indexes, the published
+  * files are the index: normalize writes `aircraft`, `registrations`
+  * and `owners` with a lookup key column, each file sorted by it in
+  * small pages, so [[search]]'s key equality is pushed to the Parquet
+  * scan and reads about one page per file. Views are lazy DataFrames:
+  * the code books decode through literal map expressions, the FTS
+  * analog is a token inverted index (explode + hash shuffle) — both
+  * forms that scale out, where the reference's single-file databases
+  * cannot.
   *
   * Like the reference's one `load_data()` then many calls, an
   * instance resolves each published table and derived view once per
@@ -90,15 +93,28 @@ class Registry(
   private lazy val fs = new Path(dataDir)
     .getFileSystem(spark.sessionState.newHadoopConf())
 
-  /** A published table, re-read only when its files changed since the
-    * last call; a missing table raises what `spark.read.parquet`
-    * raises. */
-  def table(name: String): DataFrame = {
+  /** A published table as stored, re-read only when its files changed
+    * since the last call; a missing table raises what
+    * `spark.read.parquet` raises. */
+  private def stored(name: String): DataFrame = {
     val dir = s"$dataDir/$name.parquet"
     graft.Tables.fileListing(fs, dir) match {
-      case Some(files) => memo(name, files)(spark.read.parquet(dir))
+      case Some(files) => memo(s"$name.parquet", files)(spark.read.parquet(dir))
       case None => spark.read.parquet(dir)
     }
+  }
+
+  /** A published table: its [[Schemas]] columns, without the lookup
+    * key [[RegistryNormalize.KeyColumn]] that normalize stores. */
+  def table(name: String): DataFrame = {
+    val s = stored(name)
+    memo(name, Seq(s))(s.drop(RegistryNormalize.KeyColumn))
+  }
+
+  /** One of [[RegistryNormalize.keyedTables]] with its lookup key. */
+  private def keyed(name: String): DataFrame = {
+    val s = stored(name)
+    memo(s"$name.keyed", Seq(s))(RegistryNormalize.withLookupKey(s))
   }
 
   /** Freshness + integrity report — `status --watch`'s one decision
@@ -148,13 +164,26 @@ class Registry(
     memo("aircraft_decoded", Seq(a, m, r))(decodedView(a, m, r))
   }
 
-  private def decodedView(
-      a: DataFrame, m: DataFrame, r: DataFrame): DataFrame = {
+  /** [[aircraftDecoded]] plus the lookup key column, for [[search]]. */
+  private def keyedDecoded: DataFrame = {
+    val a = keyed("aircraft")
+    val m = table("aircraft_make_model")
+    val r = keyed("registrations")
+    memo("aircraft_decoded.keyed", Seq(a, m, r))(
+      decodedView(a, m, r, Seq(RegistryNormalize.KeyColumn)))
+  }
+
+  /** The view's columns, then `keys`: the registration side joins on
+    * `n_number` and `keys`, so a filter on a key also constrains (and
+    * is pushed to) the registrations scan. */
+  private def decodedView(a: DataFrame, m: DataFrame, r: DataFrame,
+      keys: Seq[String] = Nil): DataFrame = {
+    val on = "n_number" +: keys
     val withDims = a
       .join(broadcast(m.select(col("mfr_mdl_code"), col("maker"), col("model"))),
         Seq("mfr_mdl_code"), "left")
-      .join(broadcast(r.select(col("n_number"), col("cert_issue_date"))),
-        Seq("n_number"), "left")
+      .join(broadcast(r.select((on :+ "cert_issue_date").map(col): _*)),
+        on, "left")
     val decoded = Relational.decode(
       Relational.decode(withDims,
         "reg_status", Schemas.statusCodes, "reg_status_descr"),
@@ -164,7 +193,7 @@ class Registry(
     // descriptions surface as reg_status / airworthiness_class (raw
     // codes keep *_code names), unknown codes decode to NULL — so
     // reference-style SQL via query() runs unchanged
-    decoded.select(
+    decoded.select(Seq(
       col("n_number"), col("serial_no"), col("mfr_mdl_code"), col("maker"),
       col("model"), col("engine_code"), col("year_mfr"),
       col("airworthiness_class").as("airworthiness_code"),
@@ -174,22 +203,32 @@ class Registry(
       col("reg_status_descr").as("reg_status"),
       col("status_date"), col("reg_expiration"), col("cert_issue_date"),
       col("mode_s_code"), col("mode_s_code_hex"), col("is_deregistered"))
+      ++ keys.map(col): _*)
   }
 
   /** owners_clean view (publish.py:185-198). */
   def ownersClean: DataFrame = {
     val o = table("owners")
-    memo("owners_clean", Seq(o))(Relational.decode(o,
-        "owner_type", Schemas.ownerTypes, "owner_type_descr")
-      .select(col("n_number"),
+    memo("owners_clean", Seq(o))(ownersCleanView(o))
+  }
+
+  /** [[ownersClean]] plus the lookup key column, for [[search]]. */
+  private def keyedOwners: DataFrame = {
+    val o = keyed("owners")
+    memo("owners_clean.keyed", Seq(o))(
+      ownersCleanView(o, Seq(RegistryNormalize.KeyColumn)))
+  }
+
+  private def ownersCleanView(o: DataFrame, keys: Seq[String] = Nil): DataFrame =
+    Relational.decode(o, "owner_type", Schemas.ownerTypes, "owner_type_descr")
+      .select(Seq(col("n_number"),
         col("owner_type").as("owner_type_code"),
         col("owner_type_descr").as("owner_type"),
         col("owner_name_std").as("owner_name"),
         col("address_all_std").as("address"),
         col("city_std").as("city"),
         col("state_std").as("state"),
-        col("zip5").as("zip")))
-  }
+        col("zip5").as("zip")) ++ keys.map(col): _*)
 
   /** owners_summary roll-up (publish.py:58-67). */
   def ownersSummary: DataFrame = {
@@ -202,18 +241,30 @@ class Registry(
       .withColumnRenamed("any_flag", "any_trust_flag"))
   }
 
-  /** N-number lookup with owner enrichment (api.py:153-197). */
+  /** N-number lookup with owner enrichment (api.py:153-197): the rows
+    * of [[aircraftDecoded]] and [[ownersClean]] whose lookup key equals
+    * the request's. The filter is a plain equality on the stored key
+    * column, which the optimizer moves below the joins onto all three
+    * keyed tables (onto registrations through its join on the key) and
+    * each Parquet scan pushes down: a lookup reads the key's row group
+    * and page of each file, about [[RegistryNormalize]]'s
+    * `KeyedPageRows` rows per file, not the whole table. The views it
+    * filters are resolved once per snapshot, like [[aircraftDecoded]],
+    * so a request plans one filter and one join. A table published
+    * without the key column derives it on read and answers the same
+    * rows from a full scan. */
   def search(nNumber: String): DataFrame = {
     warnIfStale()
-    // trim BEFORE stripping the N prefix (api.py:171-174 order):
-    // " N221LA" must normalize to "221LA", not keep its N
-    val key = nNumber.trim.toUpperCase.replaceAll("^N", "")
-    val byKey = Normalize.normalizeKey(col("n_number")) === key
+    // api.py:171-174 strips the request before anything else; the key
+    // derivation then folds to one literal at planning time
+    val byKey = col(RegistryNormalize.KeyColumn) ===
+      RegistryNormalize.lookupKey(lit(nNumber.trim))
     // the owners side gets the key filter explicitly (not left to
     // constraint inference) and is broadcast: a one-stage plan instead
     // of a sort-merge join AQE only converts after two shuffle stages
-    aircraftDecoded.filter(byKey)
-      .join(broadcast(ownersClean.filter(byKey)), Seq("n_number"), "left")
+    val o = keyedOwners.filter(byKey).drop(RegistryNormalize.KeyColumn)
+    keyedDecoded.filter(byKey).drop(RegistryNormalize.KeyColumn)
+      .join(broadcast(o), Seq("n_number"), "left")
   }
 
   /** Fleet search: pipe-separated OR terms over owner names, optional

@@ -151,7 +151,9 @@ class RegistrySpec extends SparkSuite with SuiteTempDirs {
     val hit = registry.search("N221LA").collect()
     assert(hit.length == 1)
     assert(hit.head.getAs[String]("owner_name") == "LOS ANGELES POLICE DEPT")
-    assert(registry.search("221la").count() == 1)
+    for (k <- Seq("221la", " n221la ", "221LA"))
+      assert(registry.search(k).collect().map(_.getAs[String]("owner_name")).toSeq ==
+        Seq("LOS ANGELES POLICE DEPT"), k)
   }
 
   test("fleet does multi-term OR search with state filter") {
@@ -301,6 +303,173 @@ class RegistrySpec extends SparkSuite with SuiteTempDirs {
       assert(!plan.contains("SortMergeJoin") && !plan.contains("hashpartitioning"),
         s"expected broadcast joins only in:\n$plan")
     }
+  }
+
+  // ---- the keyed layout: a generated MASTER big enough to have pages
+
+  /** A raw snapshot of `Planes` aircraft in a seeded shuffled order,
+    * with one stored n_number in lowercase and one with its N prefix,
+    * and the small fixture's ACFTREF/ENGINE. */
+  private val Planes = 6000
+  private def writeGenerated(raw: String): Unit = {
+    val header = Files.readString(java.nio.file.Paths.get(s"${dirs._1}/MASTER.txt"))
+      .linesIterator.next()
+    val ids = new scala.util.Random(7).shuffle(
+      Seq("n7001x", "N7002Y") ++ (0 until Planes - 2).map(i => s"${10000 + i}K"))
+    val rows = ids.zipWithIndex.map { case (n, i) =>
+      s"$n,SN$i,C172,ENG1,${1960 + i % 60},4,V,20240101,20270101,20150601,1," +
+        s"5$i,A$i,OWNER $i,${i % 900} MAIN ST,,AUSTIN,TX,78701,${1 + i % 5}"
+    }
+    Files.writeString(java.nio.file.Paths.get(s"$raw/MASTER.txt"),
+      (header +: rows).mkString("", "\n", "\n"))
+    for (f <- Seq("ACFTREF.txt", "ENGINE.txt"))
+      Files.copy(java.nio.file.Paths.get(s"${dirs._1}/$f"),
+        java.nio.file.Paths.get(s"$raw/$f"))
+  }
+
+  private lazy val generated = {
+    val raw = tmpDir("graft_raw_gen")
+    writeGenerated(raw)
+    val pub = tmpDir("graft_pub_gen")
+    RegistryNormalize.normalize(spark, raw, pub)
+    (raw, pub, new Registry(spark, pub))
+  }
+
+  /** The file scans of an executed plan, by table directory name. */
+  private def fileScans(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[(String, org.apache.spark.sql.execution.FileSourceScanExec)] = {
+    import org.apache.spark.sql.execution._
+    p match {
+      case a: adaptive.AdaptiveSparkPlanExec => fileScans(a.executedPlan)
+      case s: adaptive.QueryStageExec => fileScans(s.plan)
+      case r: exchange.ReusedExchangeExec => fileScans(r.child)
+      case s: FileSourceScanExec =>
+        Seq(s.relation.location.rootPaths.head.getName.stripSuffix(".parquet") -> s)
+      case o => o.children.flatMap(fileScans)
+    }
+  }
+
+  private def partFiles(dir: String): Int =
+    new java.io.File(dir).listFiles().count(_.getName.endsWith(".parquet"))
+
+  test("search pushes the lookup key equality into each keyed table's scan") {
+    val (_, _, reg) = generated
+    val df = reg.search(" n10042k ")
+    assert(df.collect().map(_.getAs[String]("n_number")).toSeq == Seq("10042K"))
+    val scans = fileScans(df.queryExecution.executedPlan).toMap
+    RegistryNormalize.keyedTables.foreach { t =>
+      val pushed = scans(t).metadata("PushedFilters")
+      assert(pushed.contains(s"EqualTo(${RegistryNormalize.KeyColumn},10042K)"),
+        s"$t scan pushed $pushed")
+    }
+    val plans = Seq(df.queryExecution.optimizedPlan.toString,
+      df.queryExecution.executedPlan.toString)
+    assert(plans.forall(!_.contains("regexp_replace")),
+      s"a key derivation left in the search plan:\n${plans.mkString("\n")}")
+  }
+
+  test("a key lookup reads at most one page of each keyed file") {
+    val (_, pub, reg) = generated
+    for (key <- Seq("N10042K", "15997K", "N9K")) {
+      val df = reg.search(key)
+      val hit = df.collect().nonEmpty
+      val scans = fileScans(df.queryExecution.executedPlan)
+        .filter(s => RegistryNormalize.keyedTables(s._1))
+      // a miss's empty aircraft side lets AQE drop the join sides' scans
+      assert(hit == (key != "N9K"), key)
+      assert(scans.map(_._1).sorted == (if (hit) Seq("aircraft", "owners",
+        "registrations") else Seq("aircraft")), key)
+      scans.foreach { case (t, s) =>
+        val read = s.metrics("numOutputRows").value
+        val bound = RegistryNormalize.KeyedPageRows.toLong *
+          partFiles(s"$pub/$t.parquet")
+        assert(read <= bound && read < Planes,
+          s"$key: the $t scan read $read rows (bound $bound of $Planes)")
+      }
+    }
+  }
+
+  test("a stored n_number in lowercase or with its N prefix is found by any spelling") {
+    val (_, _, reg) = generated
+    for ((stored, spellings) <- Seq(
+        "n7001x" -> Seq("7001X", "N7001X", " n7001x ", "7001x"),
+        "N7002Y" -> Seq("7002Y", "N7002Y", " n7002y "))) {
+      spellings.foreach { k =>
+        assert(reg.search(k).collect().map(_.getAs[String]("n_number")).toSeq ==
+          Seq(stored), k)
+      }
+    }
+  }
+
+  test("a snapshot published without the key column answers the same rows") {
+    val (raw, _, reg) = generated
+    val legacy = tmpDir("graft_pub_legacy")
+    // the pre-key writer: typed tables in arrival order, no key column
+    val master = RegistryNormalize.readRaw(spark, s"$raw/MASTER.txt")
+    Seq("aircraft" -> RegistryNormalize.aircraft(master),
+        "registrations" -> RegistryNormalize.registrations(master),
+        "owners" -> RegistryNormalize.owners(master),
+        "aircraft_make_model" -> reg.table("aircraft_make_model"),
+        "engines" -> reg.table("engines"))
+      .foreach { case (t, df) => df.write.parquet(s"$legacy/$t.parquet") }
+    val old = new Registry(spark, legacy)
+    assert(!spark.read.parquet(s"$legacy/aircraft.parquet").columns
+      .contains(RegistryNormalize.KeyColumn))
+    def rows(r: Registry, k: String) =
+      r.search(k).collect().map(_.toSeq.map(String.valueOf)).toSeq.sortBy(_.mkString("|"))
+    for (k <- Seq("N10042K", " n7001x ", "7002Y", "N9K")) {
+      val want = rows(reg, k)
+      assert(rows(old, k) == want, k)
+      assert(want.nonEmpty || k == "N9K", k)
+    }
+    Registry.tableNames.foreach(t =>
+      assert(old.table(t).columns.toSeq == reg.table(t).columns.toSeq, t))
+  }
+
+  test("normalizeIncremental publishes the keyed, sorted layout") {
+    import org.apache.spark.sql.functions.col
+    val raw = tmpDir("graft_raw_gen_inc")
+    writeGenerated(raw)
+    val pub = tmpDir("graft_pub_gen_inc")
+    RegistryNormalize.normalizeIncremental(spark, raw, pub)
+    val master = java.nio.file.Paths.get(s"$raw/MASTER.txt")
+    Files.writeString(master, Files.readString(master) +
+      "N8000Q,SN8,C172,ENG1,2001,4,V,20240101,20270101,20150601,1,58,A8,NEW OWNER,1 ELM ST,,AUSTIN,TX,78701,1\n")
+    assert(RegistryNormalize.normalizeIncremental(spark, raw, pub) ==
+      RegistryNormalize.keyedTables.toSeq.sorted)
+    RegistryNormalize.keyedTables.foreach { t =>
+      val dir = s"$pub/$t.parquet"
+      val df = spark.read.parquet(dir)
+      assert(df.count() == Planes + 1, t)
+      assert(df.filter(!(col(RegistryNormalize.KeyColumn) <=>
+        graft.functions.Normalize.normalizeKey(col("n_number")))).isEmpty,
+        s"$t: a stored key differs from the n_number's")
+      new java.io.File(dir).listFiles().filter(_.getName.endsWith(".parquet"))
+        .foreach { f =>
+          val keys = spark.read.parquet(f.getPath)
+            .select(RegistryNormalize.KeyColumn).collect().map(_.getString(0)).toSeq
+          assert(keys == keys.sorted, s"$t: ${f.getName} is not sorted by key")
+        }
+    }
+    val reg = new Registry(spark, pub)
+    assert(reg.search("8000q").collect().map(_.getAs[String]("n_number")).toSeq ==
+      Seq("N8000Q"))
+  }
+
+  test("published tables and their schemas show the Schemas columns only") {
+    import graft.registry.Schemas
+    val want = Map("aircraft" -> Schemas.aircraft,
+      "registrations" -> Schemas.registrations, "owners" -> Schemas.owners,
+      "aircraft_make_model" -> Schemas.aircraftMakeModel,
+      "engines" -> Schemas.engines)
+    assert(want.keySet == Registry.tableNames.toSet)
+    for (reg <- Seq(registry, generated._3); (t, schema) <- want) {
+      assert(reg.table(t).columns.toSeq == schema.fieldNames.toSeq, t)
+      assert(reg.schemaOf(t).collect().map(_.getString(0)).toSeq ==
+        schema.fieldNames.toSeq, t)
+    }
+    assert(spark.read.parquet(s"${generated._2}/owners.parquet").columns
+      .contains(RegistryNormalize.KeyColumn))
   }
 
   test("a live Registry sees a table rewritten under it, reuses the rest") {

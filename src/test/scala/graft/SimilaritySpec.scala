@@ -799,4 +799,40 @@ class SimilaritySpec extends SparkSuite {
       .head
     assert(mism.isNullAt(0))
   }
+
+  test("band builds compute per-vector values below the explode, once per vector") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayAggregate, ArrayTransform, Expression}
+    import org.apache.spark.sql.execution.{GenerateExec, ProjectExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    def perVector(e: Expression) = e.find(x => x.isInstanceOf[ArrayTransform] ||
+      x.isInstanceOf[ArrayAggregate] || x.isInstanceOf[graft.plans.DotProduct])
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case o => o +: o.children.flatMap(nodes)
+    }
+    def hasGenerate(p: SparkPlan) = nodes(p).exists(_.isInstanceOf[GenerateExec])
+    // every Project above a Generate evaluates only per-band-row values
+    def aboveGenerate(p: SparkPlan): Seq[Expression] = nodes(p).flatMap {
+      case pr: ProjectExec if hasGenerate(pr.child) => pr.projectList.flatMap(perVector)
+      case _ => Nil
+    }
+    val banded = Similarity.bandedWithVecs(emb, "vec_id", "embedding", 12, 4, 64, 42L)
+      .queryExecution.sparkPlan
+    assert(hasGenerate(banded))
+    assert(aboveGenerate(banded).isEmpty, banded.toString)
+    val pairs = Similarity.bucketLocalThresholdPairs(emb, "vec_id", "embedding", 0.9)
+    try {
+      val builds = pairs.queryExecution.optimizedPlan.collect {
+        case r: InMemoryRelation if r.output.exists(_.name == "qv") =>
+          r.cacheBuilder.cachedPlan
+      }
+      assert(builds.nonEmpty, pairs.queryExecution.optimizedPlan.toString)
+      builds.distinct.foreach { b =>
+        assert(hasGenerate(b))
+        assert(aboveGenerate(b).isEmpty, b.toString)
+      }
+    } finally Similarity.releaseBandedCache()
+  }
 }
